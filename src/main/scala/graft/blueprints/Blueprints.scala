@@ -28,6 +28,13 @@ import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
   * enumerate an explicit destination name `name_N.ext` on every
   * regex match (upload_file.py:242-253), move only when more than
   * one file matched (move_file.py:168-173).
+  *
+  * A regex step is distributed end to end and costs a fixed number of
+  * Spark jobs whatever the match count: one per directory level of
+  * the walk ([[FileOps.listRecursive]]), at most two for the plan
+  * ([[FileOps.planMatched]]: a sample and a count, which also decides
+  * exit 200), and one act job that copies, renames or deletes over
+  * every core. The matched paths never collect to the driver.
   */
 object Blueprints {
 
@@ -146,22 +153,6 @@ object Blueprints {
   private[blueprints] def session(): SparkSession =
     GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .getOrCreate()
-
-  /** Upload/download regex semantics: explicit destination names are
-    * enumerated `name_N.ext` for every match (upload_file.py:242-253).
-    * Round 3: the plan is DISTRIBUTED end to end — matched paths flow
-    * from the walk into the copy partition-wise; the only driver
-    * traffic is the exit-200 count probe and (when enumerating)
-    * `orderedPrefix`'s per-partition offsets. At 10⁸ matches the old
-    * `.collect()` manifest died here while the copy itself would not.
-    */
-  private[blueprints] def planMatchedDF(
-      matched: org.apache.spark.sql.DataFrame, pattern: String,
-      destFolder: String, destName: Option[String],
-      enumerateAll: Boolean): org.apache.spark.sql.DataFrame = {
-    FileOps.requireMatchesDF(matched, pattern)
-    FileOps.planTransfersDF(matched, destFolder, destName, enumerateAll)
-  }
 }
 
 /** local → FTP (upload_file.py). */
@@ -176,12 +167,12 @@ object Upload {
       else PathUtils.combine(System.getProperty("user.dir"), a.sourceFolderName)
     if (a.matchType == "regex_match") {
       val manifest = FileOps.listRecursive(spark, s"file:$srcBase")
-      val plan = planMatchedDF(
+      val plan = FileOps.planMatched(
         FileOps.matchFullPath(manifest, a.sourceFileName),
         a.sourceFileName, a.destinationFolderName, a.destinationFileName,
         enumerateAll = true)
-      FileOps.bulkCopyDF(plan, "file:///", dst,
-        retries = a.retries, backoffMs = a.backoffMs, resume = a.resume)
+      FileOps.bulkCopy(spark, plan, "file:///", dst,
+        a.retries, a.backoffMs, a.resume)
     } else {
       val src = PathUtils.combine(srcBase, a.sourceFileName)
       // missing (or non-regular-file) single source is exit 200
@@ -219,12 +210,12 @@ object Download {
     if (a.matchType == "regex_match") {
       val manifest = FileOps.listRecursive(spark,
         if (srcFolder.isEmpty) src else s"$src/$srcFolder")
-      val plan = planMatchedDF(
+      val plan = FileOps.planMatched(
         FileOps.matchBasename(manifest, a.sourceFileName),
         a.sourceFileName, localBase, a.destinationFileName,
         enumerateAll = true)
-      FileOps.bulkCopyDF(plan, src, "file:",
-        retries = a.retries, backoffMs = a.backoffMs, resume = a.resume)
+      FileOps.bulkCopy(spark, plan, src, "file:",
+        a.retries, a.backoffMs, a.resume)
     } else {
       val p = PathUtils.combine(srcFolder, a.sourceFileName)
       // the reference maps a failed single download to exit 200
@@ -255,14 +246,11 @@ object Move {
       val manifest = FileOps.listRecursive(spark,
         if (srcFolder.isEmpty) uri else s"$uri/$srcFolder")
       // move enumerates only on multi-match (move_file.py:168-173)
-      val plan = planMatchedDF(
+      val plan = FileOps.planMatched(
         FileOps.matchFullPath(manifest, a.sourceFileName),
         a.sourceFileName, a.destinationFolderName, a.destinationFileName,
         enumerateAll = false)
-      FileOps.bulkMove(spark, uri,
-        plan.withColumn("dst", org.apache.spark.sql.functions
-          .concat(org.apache.spark.sql.functions.lit("/"),
-            org.apache.spark.sql.functions.col("dst"))),
+      FileOps.bulkMove(spark, uri, plan.map(t => t.copy(dst = "/" + t.dst)),
         retries = a.retries, backoffMs = a.backoffMs)
     } else {
       val src = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
@@ -288,9 +276,11 @@ object Delete {
     if (a.matchType == "regex_match") {
       val manifest = FileOps.listRecursive(spark,
         if (srcFolder.isEmpty) uri else s"$uri/$srcFolder")
-      val matched = FileOps.matchFullPath(manifest, a.sourceFileName)
-      FileOps.requireMatchesDF(matched, a.sourceFileName)
-      FileOps.bulkDeleteDF(spark, uri, matched)
+      // no destination, so the plan is only the count and the spread
+      val plan = FileOps.planMatched(
+        FileOps.matchFullPath(manifest, a.sourceFileName),
+        a.sourceFileName, "", None, enumerateAll = false)
+      FileOps.bulkDelete(spark, uri, plan.map(_.src))
     } else {
       val p = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
       // the reference maps a failed single delete to exit 200

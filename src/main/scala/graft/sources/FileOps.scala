@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.net.URI
+import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,21 +38,10 @@ object FileOps {
     * reference (upload_file.py / download_file.py main flow).
     */
   def requireMatches(matched: Seq[String], pattern: String): Seq[String] =
-    if (matched.isEmpty)
-      throw GraftFsError(ErrorCodes.NoMatchesFound,
-        s"no files found matching '$pattern'")
-    else matched
+    if (matched.isEmpty) throw noMatches(pattern) else matched
 
-  /** Distributed twin of [[requireMatches]]: one count aggregate — 8
-    * bytes to the driver instead of the matched path list.
-    */
-  def requireMatchesDF(matched: DataFrame, pattern: String): Long = {
-    val n = matched.count()
-    if (n == 0)
-      throw GraftFsError(ErrorCodes.NoMatchesFound,
-        s"no files found matching '$pattern'")
-    n
-  }
+  private def noMatches(pattern: String) =
+    GraftFsError(ErrorCodes.NoMatchesFound, s"no files found matching '$pattern'")
 
   case class FileEntry(path: String, size: Long, mtime: Long, is_dir: Boolean)
 
@@ -79,8 +70,10 @@ object FileOps {
     * The result STAYS distributed — the manifest is a DataFrame over
     * the walk's RDDs, never `.collect()`ed; at 10⁷–10⁸ files it feeds
     * bulkCopy partition-by-partition without materializing on the
-    * driver. Per level the only driver work is an isEmpty probe on the
-    * (tiny, dirs-only) frontier RDD.
+    * driver. Job budget: exactly one Spark job per directory level
+    * below the root — it lists the level into its persisted RDD and
+    * counts the level's directories, and that count both ends the walk
+    * and sizes the next frontier. The manifest is unordered.
     */
   def listRecursive(spark: SparkSession, rootUri: String): DataFrame = {
     import spark.implicits._
@@ -102,13 +95,15 @@ object FileOps {
         0L, st.getModificationTime, is_dir = true))
     val topDF = topEntries.toDF()
     val sc = spark.sparkContext
+    val width = math.max(1, math.min(64, sc.defaultParallelism))
     val levels = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[(String, FileEntry)]]
+      .empty[RDD[(String, FileEntry)]]
     // frontier carries FULL URIs (scheme + authority) so executors can
     // reopen the right FileSystem; FileEntry keeps the bare path
-    var frontier: org.apache.spark.rdd.RDD[String] =
+    var frontier: RDD[String] =
       sc.parallelize(dirs.map(_.getPath.toString), math.max(1, math.min(dirs.size, 64)))
-    while (!frontier.isEmpty()) {
+    var frontierDirs = dirs.size.toLong
+    while (frontierDirs > 0) {
       val level = frontier.mapPartitions { paths =>
         paths.flatMap { p =>
           val f = FileSystem.newInstance(new URI(p), conf.value)
@@ -124,16 +119,17 @@ object FileOps {
         }
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       levels += level
-      // next frontier: this level's directories, re-spread across
-      // tasks so a single hot directory's children parallelize
       val nextDirs = level.filter(_._2.is_dir).map(_._1)
+      frontierDirs = nextDirs.count() // this level's one job
+      // re-spread across tasks so a single hot directory's children
+      // parallelize
       frontier = nextDirs.repartition(
-        math.max(1, math.min(64, sc.defaultParallelism)))
+        math.max(1L, math.min(frontierDirs, width.toLong)).toInt)
     }
     val subtreeDF =
       if (levels.isEmpty) spark.emptyDataset[FileEntry].toDF()
       else sc.union(levels.map(_.map(_._2)).toSeq).toDF()
-    topDF.unionAll(subtreeDF).orderBy(col("path"))
+    topDF.unionAll(subtreeDF)
   }
 
   /** Regex basename matching (download_file.py:174) over a manifest. */
@@ -165,43 +161,73 @@ object FileOps {
     }
   }
 
-  /** Distributed transfer planning over a matched manifest — the
-    * driver-collect-free twin of [[planTransfers]]/the blueprints'
-    * enumerated plan: the matched paths STAY a DataFrame (at 10⁸
-    * matches the old collect died where the copy itself wouldn't).
-    * Enumeration semantics are preserved exactly: an explicit
-    * destination name is numbered by the file's GLOBAL PATH-SORTED
-    * rank via `Distributed.orderedPrefix` (range partition +
-    * broadcast prefix offsets — never a single-partition window);
-    * with `enumerateAll` (upload/download regex semantics,
-    * upload_file.py:242-253) every match is numbered, otherwise
-    * (move, move_file.py:168-173) only when more than one matched —
-    * `total_w` from the same pass decides, no extra count job.
-    * Without an explicit name each source keeps its basename.
+  /** The blueprints' transfer plan over a matched manifest, in a
+    * fixed number of Spark jobs whatever the match count; the matched
+    * paths never collect to the driver. Exit-200 when nothing matched.
+    *
+    * With an explicit destination name every file is numbered
+    * `name_N.ext` by its GLOBAL PATH-SORTED rank in Spark's string
+    * order (binary UTF-8, which is code point order, not Java's UTF-16
+    * `compareTo`). Two jobs: the range partitioner's sample, then one
+    * count per sorted partition, from which the driver derives each
+    * partition's rank offset and the match total. With `enumerateAll`
+    * (upload/download regex semantics, upload_file.py:242-253) every
+    * match is numbered, otherwise (move, move_file.py:168-173) only
+    * when more than one matched. Without a name each source keeps its
+    * basename, so order is irrelevant: one count job, then a
+    * round-robin spread.
+    *
+    * Either way the plan has about min(matches, defaultParallelism)
+    * partitions, so the act job that consumes it uses every core, and
+    * it reads the shuffle output the count job already wrote. The
+    * range bounds are fixed in the plan, so a retried act task reads
+    * the same partition in the same order and writes the same names.
+    */
+  def planMatched(matched: DataFrame, pattern: String,
+      destinationFolder: String, destinationFileName: Option[String],
+      enumerateAll: Boolean): RDD[Transfer] = {
+    val (plan, total) =
+      transferPlan(matched, destinationFolder, destinationFileName, enumerateAll)
+    if (total == 0) throw noMatches(pattern)
+    plan
+  }
+
+  /** [[planMatched]] as a (src, dst) DataFrame, without the exit-200
+    * check.
     */
   def planTransfersDF(matched: DataFrame, destinationFolder: String,
       destinationFileName: Option[String],
-      enumerateAll: Boolean): DataFrame = {
+      enumerateAll: Boolean): DataFrame =
+    matched.sparkSession.createDataFrame(transferPlan(matched,
+      destinationFolder, destinationFileName, enumerateAll)._1)
+
+  private def transferPlan(matched: DataFrame, folder: String,
+      name: Option[String], enumerateAll: Boolean): (RDD[Transfer], Long) = {
     val spark = matched.sparkSession
     import spark.implicits._
-    val paths = matched.select(col("path"))
-    destinationFileName match {
+    val paths = matched.select(col("path")).as[String].rdd
+    val width = spark.sparkContext.defaultParallelism
+    name match {
       case None =>
-        paths.as[String]
-          .map(p => (p, PathUtils.determineDestinationFullPath(
-            destinationFolder, None, p)))
-          .toDF("src", "dst")
+        val total = paths.count()
+        (paths.repartition(math.max(1L, math.min(total, width.toLong)).toInt)
+          .map(p => Transfer(p,
+            PathUtils.determineDestinationFullPath(folder, None, p))), total)
       case some =>
-        graft.operators.Distributed
-          .orderedPrefix(paths, Seq(col("path")), lit(1L))
-          .select(col("path"), col("rank"), col("total_w"))
-          .as[(String, Long, Long)]
-          .map { case (p, rank, total) =>
-            val idx = if (enumerateAll || total > 1) Some(rank.toInt) else None
-            (p, PathUtils.determineDestinationFullPath(
-              destinationFolder, some, p, idx))
+        implicit val utf8Order: Ordering[Array[Byte]] =
+          (x, y) => java.util.Arrays.compareUnsigned(x, y)
+        val sorted = paths.map(p => (p.getBytes(StandardCharsets.UTF_8), p))
+          .sortByKey(numPartitions = width)
+        val offsets = sorted.mapPartitions(it => Iterator(it.size.toLong))
+          .collect().scanLeft(0L)(_ + _)
+        val total = offsets.last
+        val numbered = enumerateAll || total > 1
+        (sorted.mapPartitionsWithIndex { (i, it) =>
+          it.zipWithIndex.map { case ((_, p), j) =>
+            Transfer(p, PathUtils.determineDestinationFullPath(folder, some,
+              p, if (numbered) Some((offsets(i) + j + 1).toInt) else None))
           }
-          .toDF("src", "dst")
+        }, total)
     }
   }
 
@@ -268,40 +294,28 @@ object FileOps {
       parallelism: Int = 32,
       retries: Int = 0,
       backoffMs: Long = 1000L,
-      resume: Boolean = false): Unit = {
-    if (transfers.isEmpty) return
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    spark.sparkContext
-      .parallelize(transfers, math.min(transfers.size, parallelism))
-      .foreachPartition(
-        copyPartition(conf, srcUriPrefix, dstUriPrefix, retries,
-          backoffMs, resume))
-  }
+      resume: Boolean = false): Unit =
+    if (transfers.nonEmpty)
+      bulkCopy(spark, spark.sparkContext.parallelize(transfers,
+        math.min(transfers.size, parallelism)), srcUriPrefix, dstUriPrefix,
+        retries, backoffMs, resume)
 
-  /** [[bulkCopy]] over a DISTRIBUTED transfer plan (src, dst rows) —
-    * the manifest path for the blueprint CLIs' regex flows: matched
-    * paths feed the copy partition-by-partition and never materialize
-    * on the driver.
+  /** [[bulkCopy]] over a distributed plan ([[planMatched]]): one act
+    * job, one task per plan partition.
     */
-  def bulkCopyDF(
-      transfers: DataFrame,
-      srcUriPrefix: String,
-      dstUriPrefix: String,
-      retries: Int = 0,
-      backoffMs: Long = 1000L,
-      resume: Boolean = false): Unit = {
-    val spark = transfers.sparkSession
-    import spark.implicits._
+  def bulkCopy(spark: SparkSession, plan: RDD[Transfer],
+      srcUriPrefix: String, dstUriPrefix: String, retries: Int,
+      backoffMs: Long, resume: Boolean): Unit = {
     val conf = new SerializableConfiguration(hadoopConf(spark))
-    transfers.select(col("src"), col("dst")).as[(String, String)]
-      .rdd.map { case (s, d) => Transfer(s, d) }
-      .foreachPartition(
-        copyPartition(conf, srcUriPrefix, dstUriPrefix, retries,
-          backoffMs, resume))
+    plan.foreachPartition(copyPartition(conf, srcUriPrefix, dstUriPrefix,
+      retries, backoffMs, resume))
   }
 
   /** One executor partition of a bulk copy: one source FS + one
     * destination FS, streamed byte copies with per-file retry/resume.
+    * No per-file parent probe: `create` makes missing parents (the
+    * Hadoop FileSystem contract, which the FTP/SFTP adapters honour on
+    * the connection that writes the file).
     */
   private def copyPartition(
       conf: SerializableConfiguration,
@@ -309,7 +323,7 @@ object FileOps {
       dstUriPrefix: String,
       retries: Int,
       backoffMs: Long,
-      resume: Boolean)(it: Iterator[Transfer]): Unit = {
+      resume: Boolean)(it: Iterator[Transfer]): Unit = if (it.hasNext) {
         // a bare-scheme prefix ("file:") needs a root path to be a URI
         def asUri(p: String) = new URI(if (p.endsWith(":")) p + "/" else p)
         val sfs = FileSystem.newInstance(asUri(srcUriPrefix), conf.value)
@@ -322,8 +336,6 @@ object FileOps {
             else s"$dstUriPrefix/${t.dst}"
           val dst = new Path(joined.replaceAll("(?<!:)//+", "/"))
           withRetries(retries, backoffMs) { () =>
-            val parent = dst.getParent
-            if (parent != null && !dfs.exists(parent)) dfs.mkdirs(parent)
             // resume probe: sizes re-checked on every attempt, so a
             // retry continues from wherever the last attempt died
             val dstLen =
@@ -453,51 +465,42 @@ object FileOps {
     * errors retry per file; the 202 itself never retries
     * ([[withRetries]]' taxonomy contract).
     */
-  def bulkMove(spark: SparkSession, uri: String, moves: DataFrame,
+  def bulkMove(spark: SparkSession, uri: String, moves: RDD[Transfer],
       retries: Int = 0, backoffMs: Long = 1000L): Unit = {
-    import spark.implicits._
     val conf = new SerializableConfiguration(hadoopConf(spark))
-    moves.select(col("src"), col("dst")).as[(String, String)]
-      .rdd.foreachPartition { it =>
-        val f = FileSystem.newInstance(new URI(uri), conf.value)
-        try it.foreach { case (src, dst) =>
-          withRetries(retries, backoffMs) { () =>
-            val dstPath = new Path(dst)
-            val parent = dstPath.getParent
-            if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-            val renamed =
-              try f.rename(new Path(src), dstPath)
-              catch { case _: java.io.FileNotFoundException => false }
-            if (!renamed)
-              throw GraftFsError(ErrorCodes.MoveError,
-                s"could not move $src -> $dst")
-          }
-        } finally f.close()
-      }
+    moves.foreachPartition { it =>
+      val f = FileSystem.newInstance(new URI(uri), conf.value)
+      // rename does not make parents; make each one once per partition
+      val made = scala.collection.mutable.HashSet.empty[Path]
+      try it.foreach { case Transfer(src, dst) =>
+        withRetries(retries, backoffMs) { () =>
+          val dstPath = new Path(dst)
+          val parent = dstPath.getParent
+          if (parent != null && !made(parent)) { f.mkdirs(parent); made += parent }
+          val renamed =
+            try f.rename(new Path(src), dstPath)
+            catch { case _: java.io.FileNotFoundException => false }
+          if (!renamed)
+            throw GraftFsError(ErrorCodes.MoveError,
+              s"could not move $src -> $dst")
+        }
+      } finally f.close()
+    }
   }
 
   /** Bulk delete, distributed — delete_file.py:76. */
   def bulkDelete(spark: SparkSession, uri: String, paths: Seq[String],
-      parallelism: Int = 32): Unit = {
-    if (paths.isEmpty) return
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    spark.sparkContext.parallelize(paths, math.min(paths.size, parallelism))
-      .foreachPartition { it: Iterator[String] =>
-        val f = FileSystem.newInstance(new URI(uri), conf.value)
-        f.setWriteChecksum(false); f.setVerifyChecksum(false)
-        try it.foreach(p => f.delete(new Path(p), false))
-        finally f.close()
-      }
-  }
+      parallelism: Int = 32): Unit =
+    if (paths.nonEmpty)
+      bulkDelete(spark, uri,
+        spark.sparkContext.parallelize(paths, math.min(paths.size, parallelism)))
 
-  /** [[bulkDelete]] over a distributed path manifest (`path` column) —
-    * matched paths never collect to the driver.
+  /** [[bulkDelete]] over distributed paths: one job, one FS handle per
+    * partition.
     */
-  def bulkDeleteDF(spark: SparkSession, uri: String,
-      paths: DataFrame): Unit = {
-    import spark.implicits._
+  def bulkDelete(spark: SparkSession, uri: String, paths: RDD[String]): Unit = {
     val conf = new SerializableConfiguration(hadoopConf(spark))
-    paths.select(col("path")).as[String].rdd.foreachPartition { it =>
+    paths.foreachPartition { it =>
       val f = FileSystem.newInstance(new URI(uri), conf.value)
       f.setWriteChecksum(false); f.setVerifyChecksum(false)
       try it.foreach(p => f.delete(new Path(p), false))

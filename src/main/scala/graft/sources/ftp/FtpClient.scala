@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets
 /** Minimal RFC 959 FTP client over raw sockets — the transport under
   * graft's FTP connector (the reference drives Python's ftplib; graft
   * speaks the same protocol surface: USER/PASS, TYPE I, PASV, RETR,
-  * STOR, NLST, MLSD, DELE, RNFR/RNTO, MKD, CWD, PWD, SIZE — see
+  * STOR, NLST, MLSD, DELE, RNFR/RNTO, MKD, CWD, PWD, SIZE, MDTM — see
   * ftp-blueprints download_file.py:210, upload_file.py:196).
   *
   * Passive mode only (the reference also forces PASV,
@@ -341,6 +341,14 @@ class FtpClient(host: String, port: Int, user: String, password: String,
   def size(path: String): Option[Long] = {
     val r = cmd(s"SIZE $path")
     if (r.code == 213) Some(r.text.trim.toLong) else None
+  }
+
+  /** MDTM (RFC 3659) — modification time in epoch ms; None when the
+    * server does not answer it.
+    */
+  def mdtm(path: String): Option[Long] = {
+    val r = cmd(s"MDTM $path")
+    if (r.code == 213) Some(parseMdtm(r.text.trim)) else None
   }
 
   def delete(path: String): Boolean = cmd(s"DELE $path").ok

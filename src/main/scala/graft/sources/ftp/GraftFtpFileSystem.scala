@@ -71,14 +71,27 @@ class GraftFtpFileSystem extends FileSystem {
     q.toUri.getPath match { case "" => "/"; case s => s }
   }
 
-  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
-    val st = getFileStatus(p) // throws if absent
-    if (st.isDirectory)
-      throw new java.io.IOException(s"cannot open directory $p")
+  /** A client handed to a stream that owns it: closed here only if
+    * building the stream fails.
+    */
+  private def withStreamClient[A](f: FtpClient => A): A = {
     val c = client()
-    val raw = c.retrieveStream(abs(p))
-    new FSDataInputStream(new SeekableFtpInput(raw, c, abs(p), st.getLen))
+    try f(c) catch { case e: Throwable => c.close(); throw e }
   }
+
+  /** A regular file's length, on the client that will transfer it. */
+  private def fileLen(c: FtpClient, p: Path): Long =
+    c.size(abs(p)).getOrElse {
+      if (c.cwd(abs(p))) throw new java.io.IOException(s"$p is a directory")
+      throw new FileNotFoundException(abs(p))
+    }
+
+  override def open(p: Path, bufferSize: Int): FSDataInputStream =
+    withStreamClient { c =>
+      val len = fileLen(c, p)
+      new FSDataInputStream(
+        new SeekableFtpInput(c.retrieveStream(abs(p)), c, abs(p), len))
+    }
 
   /** Seekable wrapper: FTP streams are forward-only, so seek reopens
     * the transfer RESUMED AT THE TARGET via REST — O(1) in the offset
@@ -135,15 +148,12 @@ class GraftFtpFileSystem extends FileSystem {
       progress: Progressable): FSDataOutputStream = {
     if (!overwrite && exists(p))
       throw new java.io.IOException(s"$p already exists")
-    val parent = p.getParent
-    if (parent != null) mkdirs(parent)
-    val c = client()
-    val raw: OutputStream = c.storeStream(abs(p))
-    new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
-      override def write(b: Array[Byte], off: Int, len: Int): Unit =
-        out.write(b, off, len)
-      override def close(): Unit = { super.close(); c.close() }
-    }, statistics)
+    val path = abs(p)
+    withStreamClient { c =>
+      val parent = path.take(path.lastIndexOf('/'))
+      if (parent.nonEmpty) c.makeDirs(parent)
+      outStream(c, c.storeStream(path), 0L)
+    }
   }
 
   /** Append = STOR resumed at the current size via REST — gives the
@@ -151,18 +161,19 @@ class GraftFtpFileSystem extends FileSystem {
     * upload continues from where it died instead of restarting).
     */
   override def append(p: Path, bufferSize: Int,
-      progress: Progressable): FSDataOutputStream = {
-    val st = getFileStatus(p) // throws FileNotFoundException if absent
-    if (st.isDirectory)
-      throw new java.io.IOException(s"cannot append to directory $p")
-    val c = client()
-    val raw: OutputStream = c.storeStream(abs(p), st.getLen)
+      progress: Progressable): FSDataOutputStream = withStreamClient { c =>
+    val len = fileLen(c, p) // throws FileNotFoundException if absent
+    outStream(c, c.storeStream(abs(p), len), len)
+  }
+
+  /** A STOR stream that releases its client when closed. */
+  private def outStream(c: FtpClient, raw: OutputStream,
+      start: Long): FSDataOutputStream =
     new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
       override def write(b: Array[Byte], off: Int, len: Int): Unit =
         out.write(b, off, len)
       override def close(): Unit = { super.close(); c.close() }
-    }, statistics, st.getLen)
-  }
+    }, statistics, start)
 
   override def rename(src: Path, dst: Path): Boolean =
     withClient(_.rename(abs(src), abs(dst)))
@@ -176,14 +187,14 @@ class GraftFtpFileSystem extends FileSystem {
           throw new java.io.IOException(s"$path not empty")
         children.forall(e => del(s"$path/${e.name}", e.isDir)) && c.rmd(path)
       }
-    try del(abs(p), getFileStatus(p).isDirectory)
+    try del(abs(p), status(c, p).isDirectory)
     catch { case _: FileNotFoundException => false }
   }
 
-  override def listStatus(p: Path): Array[FileStatus] = {
-    val st = getFileStatus(p)
-    if (!st.isDirectory) return Array(st)
-    withClient(_.mlsd(abs(p))).map { e =>
+  override def listStatus(p: Path): Array[FileStatus] = withClient { c =>
+    val st = status(c, p)
+    if (!st.isDirectory) Array(st)
+    else c.mlsd(abs(p)).map { e =>
       new FileStatus(e.size, e.isDir, 1, 65536, e.modifyMs,
         new Path(makeQualified(p), e.name))
     }.toArray
@@ -198,29 +209,23 @@ class GraftFtpFileSystem extends FileSystem {
     withClient { c => c.makeDirs(path); c.cwd(path) }
   }
 
-  override def getFileStatus(p: Path): FileStatus = {
+  override def getFileStatus(p: Path): FileStatus = withClient(status(_, p))
+
+  /** One path's status from control-channel round trips only: SIZE
+    * (a file), else CWD (a directory), plus MDTM when the server
+    * answers it. Listing the parent instead would open a data
+    * connection and transfer every sibling — O(n²) control traffic
+    * over a directory of n files, and a listing that races the
+    * sibling deletes of a parallel regex delete.
+    */
+  private def status(c: FtpClient, p: Path): FileStatus = {
     val path = abs(p)
     if (path == "/")
       return new FileStatus(0, true, 1, 65536, 0, makeQualified(p))
-    val parent = path.take(path.lastIndexOf('/')) match {
-      case "" => "/"; case s => s
-    }
-    val name = path.drop(path.lastIndexOf('/') + 1)
-    val entry = withClient { c =>
-      c.mlsd(parent).find(_.name == name) match {
-        case some @ Some(_) => some
-        case None =>
-          // MLSD-less fallback: SIZE probe (file) then CWD probe (dir)
-          c.size(path).map(sz => FtpClient.FtpEntry(name, isDir = false, sz, 0L))
-            .orElse(if (c.cwd(path)) Some(FtpClient.FtpEntry(name, isDir = true, 0, 0L))
-            else None)
-      }
-    }
-    entry match {
-      case Some(e) =>
-        new FileStatus(e.size, e.isDir, 1, 65536, e.modifyMs, makeQualified(p))
-      case None => throw new FileNotFoundException(path)
-    }
+    val size = c.size(path)
+    if (size.isEmpty && !c.cwd(path)) throw new FileNotFoundException(path)
+    new FileStatus(size.getOrElse(0L), size.isEmpty, 1, 65536,
+      c.mdtm(path).getOrElse(0L), makeQualified(p))
   }
 }
 

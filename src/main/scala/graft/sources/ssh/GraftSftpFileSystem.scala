@@ -68,41 +68,58 @@ class GraftSftpFileSystem extends FileSystem {
     q.toUri.getPath match { case "" => "/"; case s => s }
   }
 
-  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
-    val st = getFileStatus(p)
-    if (st.isDirectory) throw new IOException(s"cannot open directory $p")
+  /** A client handed to a stream that owns it: closed here only if
+    * building the stream fails.
+    */
+  private def withStreamClient[A](f: SftpClient => A): A = {
     val c = client()
-    val h = c.openRead(abs(p))
-    new FSDataInputStream(new SftpSeekableInput(c, h, st.getLen))
+    try f(c) catch { case e: Throwable => c.close(); throw e }
   }
 
-  /** Natively seekable: every read names its offset. */
-  private class SftpSeekableInput(c: SftpClient, h: Array[Byte], len: Long)
+  override def open(p: Path, bufferSize: Int): FSDataInputStream =
+    withStreamClient { c =>
+      val a = c.stat(abs(p)).getOrElse(throw new FileNotFoundException(abs(p)))
+      if (a.isDir) throw new IOException(s"cannot open directory $p")
+      new FSDataInputStream(
+        new SftpSeekableInput(c, abs(p), a.size.getOrElse(0L)))
+    }
+
+  /** Sequential reads stream through the client's pipelined reader
+    * ([[SftpClient.inputStream]], a window of READs in flight), opened
+    * at the current offset on first use and reopened there after a
+    * seek. Positioned reads name their offset in one native READ on a
+    * handle of their own — a parquet footer probe is one 8-byte read.
+    */
+  private class SftpSeekableInput(c: SftpClient, path: String, len: Long)
       extends java.io.InputStream with Seekable with PositionedReadable {
     private var pos = 0L
+    private var seq: java.io.InputStream = null // reader at `pos`
+    private var h: Array[Byte] = null // handle for positioned reads
     override def read(): Int = {
       val b = new Array[Byte](1)
       if (read(b, 0, 1) < 0) -1 else b(0) & 0xFF
     }
     override def read(b: Array[Byte], off: Int, l: Int): Int = {
       if (pos >= len) return -1
-      c.read(h, pos, math.min(l, 48 << 10)) match {
-        case Some(d) if d.nonEmpty =>
-          System.arraycopy(d, 0, b, off, d.length)
-          pos += d.length
-          d.length
-        case _ => -1
-      }
+      if (seq == null) seq = c.inputStream(path, pos, len)
+      val n = seq.read(b, off, l)
+      if (n > 0) pos += n
+      n
     }
-    override def close(): Unit = { c.closeHandle(h); c.close() }
+    private def dropReader(): Unit =
+      if (seq != null) { seq.close(); seq = null }
+    override def close(): Unit = {
+      try { dropReader(); if (h != null) c.closeHandle(h) } finally c.close()
+    }
     override def getPos: Long = pos
     override def seek(target: Long): Unit = {
       if (target > len) throw new java.io.EOFException(s"seek past EOF")
-      pos = target // next READ simply names the new offset
+      if (target != pos) { dropReader(); pos = target }
     }
     override def seekToNewSource(targetPos: Long): Boolean = false
     override def read(position: Long, buffer: Array[Byte], offset: Int,
         length: Int): Int = {
+      if (h == null) h = c.openRead(path)
       c.read(h, position, math.min(length, 48 << 10)) match {
         case Some(d) if d.nonEmpty =>
           System.arraycopy(d, 0, buffer, offset, d.length); d.length
@@ -127,29 +144,28 @@ class GraftSftpFileSystem extends FileSystem {
       progress: Progressable): FSDataOutputStream = {
     if (!overwrite && exists(p))
       throw new IOException(s"$p already exists")
-    val parent = p.getParent
-    if (parent != null) mkdirs(parent)
-    val c = client()
-    val raw = c.outputStream(abs(p))
-    new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
-      override def write(b: Array[Byte], off: Int, len: Int): Unit =
-        out.write(b, off, len)
-      override def close(): Unit = { super.close(); c.close() }
-    }, statistics)
+    withStreamClient { c =>
+      Option(p.getParent).foreach(makeDirs(c, _))
+      outStream(c, c.outputStream(abs(p)), 0L)
+    }
   }
 
   override def append(p: Path, bufferSize: Int,
-      progress: Progressable): FSDataOutputStream = {
-    val st = getFileStatus(p)
-    if (st.isDirectory) throw new IOException(s"cannot append to dir $p")
-    val c = client()
-    val raw = c.outputStream(abs(p), append = true, appendAt = st.getLen)
+      progress: Progressable): FSDataOutputStream = withStreamClient { c =>
+    val a = c.stat(abs(p)).getOrElse(throw new FileNotFoundException(abs(p)))
+    if (a.isDir) throw new IOException(s"cannot append to dir $p")
+    val len = a.size.getOrElse(0L)
+    outStream(c, c.outputStream(abs(p), append = true, appendAt = len), len)
+  }
+
+  /** A write stream that releases its client when closed. */
+  private def outStream(c: SftpClient, raw: java.io.OutputStream,
+      start: Long): FSDataOutputStream =
     new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
       override def write(b: Array[Byte], off: Int, len: Int): Unit =
         out.write(b, off, len)
       override def close(): Unit = { super.close(); c.close() }
-    }, statistics, st.getLen)
-  }
+    }, statistics, start)
 
   override def rename(src: Path, dst: Path): Boolean =
     withClient(_.rename(abs(src), abs(dst)))
@@ -164,14 +180,14 @@ class GraftSftpFileSystem extends FileSystem {
         children.forall(e =>
           del(s"$path/${e._1}", e._2.isDir)) && c.rmdir(path)
       }
-    try del(abs(p), getFileStatus(p).isDirectory)
+    try del(abs(p), status(c, p).isDirectory)
     catch { case _: FileNotFoundException => false }
   }
 
-  override def listStatus(p: Path): Array[FileStatus] = {
-    val st = getFileStatus(p)
-    if (!st.isDirectory) return Array(st)
-    withClient(_.readDir(abs(p))).map { case (name, a) =>
+  override def listStatus(p: Path): Array[FileStatus] = withClient { c =>
+    val st = status(c, p)
+    if (!st.isDirectory) Array(st)
+    else c.readDir(abs(p)).map { case (name, a) =>
       new FileStatus(a.size.getOrElse(0L), a.isDir, 1, 65536,
         a.mtimeSec.getOrElse(0L) * 1000L, new Path(makeQualified(p), name))
     }.toArray
@@ -181,24 +197,25 @@ class GraftSftpFileSystem extends FileSystem {
   override def getWorkingDirectory: Path = workingDir
 
   override def mkdirs(p: Path, permission: FsPermission): Boolean =
-    withClient { c =>
-      val path = abs(p)
-      if (path == "/") return true
-      // create each missing ancestor, root-down
-      val parts = path.split("/").filter(_.nonEmpty)
-      var cur = ""
-      parts.foreach { seg =>
-        cur = s"$cur/$seg"
-        if (c.stat(cur).isEmpty) c.mkdir(cur)
-      }
-      true
-    }
+    withClient(makeDirs(_, p))
 
-  override def getFileStatus(p: Path): FileStatus = {
+  /** Create each missing ancestor of `p` and `p` itself, root-down. */
+  private def makeDirs(c: SftpClient, p: Path): Boolean = {
+    var cur = ""
+    abs(p).split("/").filter(_.nonEmpty).foreach { seg =>
+      cur = s"$cur/$seg"
+      if (c.stat(cur).isEmpty) c.mkdir(cur)
+    }
+    true
+  }
+
+  override def getFileStatus(p: Path): FileStatus = withClient(status(_, p))
+
+  private def status(c: SftpClient, p: Path): FileStatus = {
     val path = abs(p)
     if (path == "/")
       return new FileStatus(0, true, 1, 65536, 0, makeQualified(p))
-    withClient(_.stat(path)) match {
+    c.stat(path) match {
       case Some(a) =>
         new FileStatus(a.size.getOrElse(0L), a.isDir, 1, 65536,
           a.mtimeSec.getOrElse(0L) * 1000L, makeQualified(p))

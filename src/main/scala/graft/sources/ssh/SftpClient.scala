@@ -403,8 +403,12 @@ final class SftpClient(host: String, port: Int = 22, user: String,
     * closed with the stream. A short read (a server returning fewer
     * bytes than asked, legal per the protocol) drains the window and
     * re-issues from the corrected offset — rare, and never wrong.
+    * A caller that knows the file's length passes it as `end`: no
+    * READ is issued past it, so a small file costs one READ rather
+    * than a window of EOF replies.
     */
-  def inputStream(path: String, start: Long = 0L): InputStream = {
+  def inputStream(path: String, start: Long = 0L,
+      end: Long = Long.MaxValue): InputStream = {
     val h = openRead(path)
     new InputStream {
       private val chunkLen = SftpClient.ChunkBytes
@@ -423,7 +427,8 @@ final class SftpClient(host: String, port: Int = 22, user: String,
         while (!inflight.isEmpty)
           awaitResponse(inflight.pollFirst()._1) // EOFs/stale — discard
       private def fill(): Boolean = {
-        while (!done && inflight.size < SftpClient.PipelineDepth) issue()
+        while (!done && inflight.size < SftpClient.PipelineDepth &&
+            nextOff < end) issue()
         if (inflight.isEmpty) return false
         val (id, reqOff) = inflight.pollFirst()
         val (rt, r) = awaitResponse(id)

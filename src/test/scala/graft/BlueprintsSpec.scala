@@ -100,6 +100,48 @@ class BlueprintsSpec extends SparkSpec {
     assert(!Files.exists(ftpRoot.resolve("data/del2.tmp")))
   }
 
+  test("job budget: a regex step runs one Spark job per walk level, <= 2 to " +
+      "plan and one to act") {
+    // depth-2 tree under budget/: a.csv, l1/b.csv, l1/l2/c.csv
+    val depth = 2
+    Files.createDirectories(ftpRoot.resolve("budget/l1/l2"))
+    Seq("budget/a.csv", "budget/l1/b.csv", "budget/l1/l2/c.csv")
+      .foreach(f => Files.writeString(ftpRoot.resolve(f), s"$f\n"))
+    val sc = spark.sparkContext
+    def jobsOf(step: => Int): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.graftspec.Listeners.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(step === 0)
+        org.apache.spark.graftspec.Listeners.drain(sc)
+        jobs.get()
+      } finally sc.removeSparkListener(listener)
+    }
+    val dst = Files.createTempDirectory("bp_budget")
+    val download = jobsOf(Download.run(spark, base(
+      "--source-file-name-match-type", "regex_match",
+      "--source-file-name", "\\.csv$",
+      "--source-folder-name", "budget",
+      "--destination-folder-name", dst.toString,
+      "--destination-file-name", "got.csv")))
+    assert(download <= depth + 3, s"regex Download ran $download Spark jobs")
+    assert((1 to 3).map(i => Files.readString(dst.resolve(s"got_$i.csv"))) ===
+      Seq("budget/a.csv\n", "budget/l1/b.csv\n", "budget/l1/l2/c.csv\n"))
+    val delete = jobsOf(Delete.run(spark, base(
+      "--file-name-match-type", "regex_match",
+      "--source-file-name", "\\.csv$",
+      "--source-folder-name", "budget")))
+    assert(delete <= depth + 2, s"regex Delete ran $delete Spark jobs")
+    assert(!Files.exists(ftpRoot.resolve("budget/l1/l2/c.csv")))
+  }
+
   test("exit 3: bad credentials (reference EXIT_CODE_INCORRECT_CREDENTIALS)") {
     val authRoot = Files.createTempDirectory("bp_auth")
     val authServer = new MiniFtpServer(authRoot, requiredPassword = Some("secret"))

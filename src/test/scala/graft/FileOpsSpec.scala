@@ -87,27 +87,31 @@ class FileOpsSpec extends SparkSpec {
   test("planTransfersDF (distributed, collect-free) preserves planTransfers' " +
       "enumeration semantics") {
     import spark.implicits._
-    val df = Seq("x/b.csv", "x/a.csv", "y/c.csv").toDF("path")
+    // U+FFFD sorts BEFORE the surrogate pair of U+1F600 in UTF-8 byte
+    // (code point) order, AFTER it in Java's UTF-16 String.compareTo
+    val df = Seq("x/b.csv", "x/a\uD83D\uDE00.csv", "x/a.csv", "y/c.csv",
+      "x/a\uFFFD.csv").toDF("path")
     def asPairs(p: org.apache.spark.sql.DataFrame) =
       p.collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-    // explicit name enumerates by GLOBAL PATH-SORTED rank
+    // explicit name enumerates by GLOBAL PATH-SORTED rank, in Spark's
+    // binary UTF-8 string order
+    val enumerated = Seq(
+      ("x/a.csv", "dst/out_1.csv"), ("x/a\uD83D\uDE00.csv", "dst/out_3.csv"),
+      ("x/a\uFFFD.csv", "dst/out_2.csv"), ("x/b.csv", "dst/out_4.csv"),
+      ("y/c.csv", "dst/out_5.csv"))
     assert(asPairs(FileOps.planTransfersDF(df, "dst", Some("out.csv"),
-      enumerateAll = true)) === Seq(
-      ("x/a.csv", "dst/out_1.csv"), ("x/b.csv", "dst/out_2.csv"),
-      ("y/c.csv", "dst/out_3.csv")))
+      enumerateAll = true)) === enumerated)
     // move semantics (enumerateAll=false): multi-match still enumerates…
     assert(asPairs(FileOps.planTransfersDF(df, "dst", Some("out.csv"),
-      enumerateAll = false)) === Seq(
-      ("x/a.csv", "dst/out_1.csv"), ("x/b.csv", "dst/out_2.csv"),
-      ("y/c.csv", "dst/out_3.csv")))
+      enumerateAll = false)) === enumerated)
     // …but a single match keeps the name verbatim
     assert(asPairs(FileOps.planTransfersDF(Seq("x/a.csv").toDF("path"),
       "dst", Some("out.csv"), enumerateAll = false)) ===
       Seq(("x/a.csv", "dst/out.csv")))
     // no explicit name → each source keeps its basename
     assert(asPairs(FileOps.planTransfersDF(df, "dst", None,
-      enumerateAll = true)).map(_._2) ===
-      Seq("dst/a.csv", "dst/b.csv", "dst/c.csv"))
+      enumerateAll = true)).map(_._2) === Seq("dst/a.csv",
+      "dst/a\uD83D\uDE00.csv", "dst/a\uFFFD.csv", "dst/b.csv", "dst/c.csv"))
   }
 
   test("bulkCopy distributes a regex-matched upload end to end") {
@@ -297,9 +301,94 @@ class FileOpsSpec extends SparkSpec {
     assert(got.length === 6400 && got.toSeq === (1L to 6400L))
   }
 
+  test("a retried act task writes exactly the planned enumerated names") {
+    // task retries need local[N,F]; the shared test session is local[4]
+    // (one attempt per task), so the plan and act run in a child JVM
+    val src = Files.createTempDirectory("graft_retry_src")
+    val dst = Files.createTempDirectory("graft_retry_dst")
+    val n = 12 // 3 per partition over 4: the failure lands mid-partition
+    (1 to n).foreach(i => Files.writeString(src.resolve(f"s$i%02d.dat"), s"file $i\n"))
+    import scala.jdk.CollectionConverters._
+    val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val opens = inherited.zipWithIndex.flatMap {
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case ("--add-opens", i) => Seq("--add-opens", inherited(i + 1))
+      case _ => Nil
+    }
+    val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
+      opens ++ Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.PlanRetryMain", src.toString, dst.toString)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() === 0, out.takeRight(4000))
+    val report = out.linesIterator.find(_.startsWith("retry-report ")).getOrElse(
+      fail(s"no report from the child:\n${out.takeRight(4000)}"))
+    assert(report === "retry-report injected=1 failedTasks=1")
+    val written = Files.list(dst).iterator().asScala.toSeq
+    // nothing missing, duplicated or renumbered: out_N holds the N-th
+    // source in path order, retried partition included
+    assert(written.map(_.getFileName.toString).sorted ===
+      (1 to n).map(i => s"out_$i.dat").sorted)
+    (1 to n).foreach { i =>
+      assert(Files.readString(dst.resolve(s"out_$i.dat")) === s"file $i\n")
+    }
+  }
+
   test("q60 manifest lists the scale dir") {
     val rows = FileOps.q60(spark, sf).collect()
     assert(rows.length === 10) // the ten tables
     assert(rows.forall(!_.getAs[Boolean]("is_dir")))
   }
+}
+
+/** Child-JVM body of the task-retry spec: a `local[4,2]` session (one
+  * retry per task) plans a regex download with an enumerated name and
+  * copies it to a destination whose filesystem fails one copy task,
+  * once, on its second file. Prints the injected and failed-task
+  * counts.
+  */
+object PlanRetryMain {
+  def main(args: Array[String]): Unit = {
+    val Array(src, dst) = args
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4,2]").config("spark.ui.enabled", "false").getOrCreate()
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.flaky.impl", classOf[FlakyLocalFs].getName)
+    sc.hadoopConfiguration.set("fs.flaky.impl.disable.cache", "true")
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason != org.apache.spark.Success) failed.incrementAndGet()
+    })
+    val plan = FileOps.planMatched(
+      FileOps.matchBasename(FileOps.listRecursive(spark, s"file:$src"), "\\.dat$"),
+      "\\.dat$", dst, Some("out.dat"), enumerateAll = true)
+    FileOps.bulkCopy(spark, plan, "file:", "flaky:", 0, 0L, false)
+    org.apache.spark.graftspec.Listeners.drain(sc)
+    println(s"retry-report injected=${FlakyLocalFs.injected.get} failedTasks=${failed.get}")
+    spark.stop()
+  }
+}
+
+/** Local filesystem under the `flaky:` scheme whose instance fails its
+  * second `create` — once per JVM.
+  */
+class FlakyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  private var creates = 0
+  override def getUri: java.net.URI = java.net.URI.create("flaky:///")
+  override def getScheme: String = "flaky"
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    creates += 1
+    if (creates == 2 && FlakyLocalFs.injected.compareAndSet(0, 1))
+      throw new java.io.IOException("injected copy failure")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FlakyLocalFs {
+  val injected = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -127,6 +127,49 @@ class FtpSpec extends SparkSpec {
       "seek re-streamed the prefix instead of sending REST")
   }
 
+  test("gftp stat and open stay on the control channel: no MLSD of the parent") {
+    withGftp()
+    val dir = Files.createDirectories(ftpRoot.resolve("siblings"))
+    (0 until 40).foreach(i =>
+      Files.writeString(dir.resolve(f"s$i%02d.dat"), s"sibling $i\n"))
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(
+      new java.net.URI(ftpUri), spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val before = server.mlsdCount.get()
+    try {
+      val st = fs.getFileStatus(p("/siblings/s07.dat"))
+      assert(st.isFile && st.getLen === "sibling 7\n".length.toLong)
+      // MDTM carries whole seconds
+      assert(st.getModificationTime ===
+        Files.getLastModifiedTime(dir.resolve("s07.dat")).toMillis / 1000 * 1000)
+      assert(fs.getFileStatus(p("/siblings")).isDirectory)
+      intercept[java.io.FileNotFoundException](fs.getFileStatus(p("/siblings/ghost")))
+      val in = fs.open(p("/siblings/s11.dat"))
+      try assert(new String(in.readAllBytes()) === "sibling 11\n") finally in.close()
+      intercept[java.io.FileNotFoundException](fs.open(p("/siblings/ghost")))
+      intercept[java.io.IOException](fs.open(p("/siblings")))
+    } finally fs.close()
+    assert(server.mlsdCount.get() === before,
+      "a per-file stat or open listed the parent directory")
+  }
+
+  test("regex Delete of 40 siblings over 4 partitions exits 0 well inside " +
+      "the 30 s socket timeout") {
+    assert(spark.sparkContext.defaultParallelism >= 4)
+    val dir = Files.createDirectories(ftpRoot.resolve("bulkdel"))
+    (0 until 40).foreach(i => Files.writeString(dir.resolve(f"d$i%02d.dat"), "x"))
+    val t0 = System.nanoTime()
+    val code = graft.blueprints.Delete.run(spark, Array(
+      "--host", "127.0.0.1", "--port", server.port.toString,
+      "--username", "u", "--password", "p",
+      "--file-name-match-type", "regex_match",
+      "--source-file-name", "d[0-9]+\\.dat$", "--source-folder-name", "bulkdel"))
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(code === 0)
+    assert(Files.list(dir).count() === 0L)
+    assert(secs < 10.0, f"regex delete took $secs%.1f s")
+  }
+
   test("bulkCopy resume: partial transfers complete via REST in both directions") {
     withGftp()
     val payload = Array.tabulate[Byte](40000)(i => (i % 251).toByte)

@@ -30,6 +30,11 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
     */
   val restCount = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** MLSD listings served — lets specs assert a per-file stat stayed
+    * on the control channel instead of listing the parent.
+    */
+  val mlsdCount = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** AUTH TLS upgrades served — lets specs assert the control
     * connection really was upgraded, not silently cleartext.
     */
@@ -146,7 +151,7 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
             else reply("530 Login incorrect")
           case "SYST" => reply("215 UNIX Type: L8")
           case "FEAT" =>
-            reply("211-Features:"); reply(" MLSD"); reply(" REST STREAM")
+            reply("211-Features:"); reply(" MLSD"); reply(" MDTM"); reply(" REST STREAM")
             if (tlsContext.isDefined) {
               reply(" AUTH TLS"); reply(" PBSZ"); reply(" PROT")
             }
@@ -245,6 +250,7 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
               reply("226 done")
             }
           case "MLSD" =>
+            mlsdCount.incrementAndGet()
             val t = resolve(arg)
             if (!Files.isDirectory(t)) reply("550 not a directory")
             else {
@@ -264,6 +270,10 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
             val t = resolve(arg)
             if (Files.isRegularFile(t)) reply(s"213 ${Files.size(t)}")
             else reply("550 not a file")
+          case "MDTM" =>
+            val t = resolve(arg)
+            if (Files.exists(t)) reply(s"213 ${mdtm(t)}")
+            else reply("550 no such file")
           case "DELE" =>
             val t = resolve(arg)
             if (Files.isRegularFile(t) && Files.deleteIfExists(t)) reply("250 deleted")
