@@ -1,5 +1,6 @@
 package graft.blueprints
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
@@ -29,12 +30,14 @@ import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
   * regex match (upload_file.py:242-253), move only when more than
   * one file matched (move_file.py:168-173).
   *
-  * A regex step is distributed end to end and costs a fixed number of
-  * Spark jobs whatever the match count: one per directory level of
-  * the walk ([[FileOps.listRecursive]]), at most two for the plan
-  * ([[FileOps.planMatched]]: a sample and a count, which also decides
-  * exit 200), and one act job that copies, renames or deletes over
-  * every core. The matched paths never collect to the driver.
+  * A regex step is RDD-only (no query plan), distributed end to end,
+  * and costs a fixed number of Spark jobs whatever the match count:
+  * one per directory level of the walk ([[FileOps.walk]]), at most two
+  * for the plan ([[FileOps.planMatched]]: a sample and a count, which
+  * also decides exit 200), and one act job that copies, renames or
+  * deletes over every core; no matched path collects to the driver.
+  * Tasks read the Hadoop conf from a broadcast (one per walk and act),
+  * freed with the walk's levels when the step ends, whatever its exit.
   */
 object Blueprints {
 
@@ -150,6 +153,19 @@ object Blueprints {
         }
     }
 
+  /** Walk `root`, hand the paths [[FileOps.matching]] keeps to `act`,
+    * then free the walk's levels and conf broadcast.
+    */
+  private[blueprints] def regexStep(spark: SparkSession, root: String, pattern: String,
+      basename: Boolean)(act: RDD[String] => Unit): Unit = {
+    val conf = FileOps.shipConf(spark)
+    try {
+      val entries = FileOps.walk(spark, root, conf)
+      try act(entries.filter(FileOps.matching(pattern, basename)).map(_.path))
+      finally FileOps.unpersist(entries)
+    } finally conf.destroy()
+  }
+
   private[blueprints] def session(): SparkSession =
     GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .getOrCreate()
@@ -166,13 +182,12 @@ object Upload {
       if (a.sourceFolderName.startsWith("/")) a.sourceFolderName
       else PathUtils.combine(System.getProperty("user.dir"), a.sourceFolderName)
     if (a.matchType == "regex_match") {
-      val manifest = FileOps.listRecursive(spark, s"file:$srcBase")
-      val plan = FileOps.planMatched(
-        FileOps.matchFullPath(manifest, a.sourceFileName),
-        a.sourceFileName, a.destinationFolderName, a.destinationFileName,
-        enumerateAll = true)
-      FileOps.bulkCopy(spark, plan, "file:///", dst,
-        a.retries, a.backoffMs, a.resume)
+      regexStep(spark, s"file:$srcBase", a.sourceFileName, basename = false) { m =>
+        val plan = FileOps.planMatched(m, a.sourceFileName,
+          a.destinationFolderName, a.destinationFileName, enumerateAll = true)
+        FileOps.bulkCopy(spark, plan, "file:///", dst,
+          a.retries, a.backoffMs, a.resume)
+      }
     } else {
       val src = PathUtils.combine(srcBase, a.sourceFileName)
       // missing (or non-regular-file) single source is exit 200
@@ -208,14 +223,13 @@ object Download {
       if (a.destinationFolderRaw.startsWith("/")) PathUtils.normPath(a.destinationFolderRaw)
       else PathUtils.combine(System.getProperty("user.dir"), a.destinationFolderName)
     if (a.matchType == "regex_match") {
-      val manifest = FileOps.listRecursive(spark,
-        if (srcFolder.isEmpty) src else s"$src/$srcFolder")
-      val plan = FileOps.planMatched(
-        FileOps.matchBasename(manifest, a.sourceFileName),
-        a.sourceFileName, localBase, a.destinationFileName,
-        enumerateAll = true)
-      FileOps.bulkCopy(spark, plan, src, "file:",
-        a.retries, a.backoffMs, a.resume)
+      regexStep(spark, if (srcFolder.isEmpty) src else s"$src/$srcFolder",
+          a.sourceFileName, basename = true) { m =>
+        val plan = FileOps.planMatched(m, a.sourceFileName, localBase,
+          a.destinationFileName, enumerateAll = true)
+        FileOps.bulkCopy(spark, plan, src, "file:",
+          a.retries, a.backoffMs, a.resume)
+      }
     } else {
       val p = PathUtils.combine(srcFolder, a.sourceFileName)
       // the reference maps a failed single download to exit 200
@@ -243,15 +257,14 @@ object Move {
     val uri = ftpUri(spark, a)
     val srcFolder = PathUtils.cleanFolderName(a.sourceFolderName)
     if (a.matchType == "regex_match") {
-      val manifest = FileOps.listRecursive(spark,
-        if (srcFolder.isEmpty) uri else s"$uri/$srcFolder")
-      // move enumerates only on multi-match (move_file.py:168-173)
-      val plan = FileOps.planMatched(
-        FileOps.matchFullPath(manifest, a.sourceFileName),
-        a.sourceFileName, a.destinationFolderName, a.destinationFileName,
-        enumerateAll = false)
-      FileOps.bulkMove(spark, uri, plan.map(t => t.copy(dst = "/" + t.dst)),
-        retries = a.retries, backoffMs = a.backoffMs)
+      regexStep(spark, if (srcFolder.isEmpty) uri else s"$uri/$srcFolder",
+          a.sourceFileName, basename = false) { m =>
+        // move enumerates only on multi-match (move_file.py:168-173)
+        val plan = FileOps.planMatched(m, a.sourceFileName,
+          a.destinationFolderName, a.destinationFileName, enumerateAll = false)
+        FileOps.bulkMove(spark, uri, plan.map(t => t.copy(dst = "/" + t.dst)),
+          retries = a.retries, backoffMs = a.backoffMs)
+      }
     } else {
       val src = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
       val dst = "/" + PathUtils.determineDestinationFullPath(
@@ -274,13 +287,13 @@ object Delete {
     val uri = ftpUri(spark, a)
     val srcFolder = PathUtils.cleanFolderName(a.sourceFolderName)
     if (a.matchType == "regex_match") {
-      val manifest = FileOps.listRecursive(spark,
-        if (srcFolder.isEmpty) uri else s"$uri/$srcFolder")
-      // no destination, so the plan is only the count and the spread
-      val plan = FileOps.planMatched(
-        FileOps.matchFullPath(manifest, a.sourceFileName),
-        a.sourceFileName, "", None, enumerateAll = false)
-      FileOps.bulkDelete(spark, uri, plan.map(_.src))
+      regexStep(spark, if (srcFolder.isEmpty) uri else s"$uri/$srcFolder",
+          a.sourceFileName, basename = false) { m =>
+        // no destination, so the plan is only the count and the spread
+        val plan = FileOps.planMatched(m, a.sourceFileName, "", None,
+          enumerateAll = false)
+        FileOps.bulkDelete(spark, uri, plan.map(_.src))
+      }
     } else {
       val p = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
       // the reference maps a failed single delete to exit 200

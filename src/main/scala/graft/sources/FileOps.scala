@@ -5,9 +5,11 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference blueprint surface (upload / download / move / delete
   * with exact or regex matching — ftp-blueprints
@@ -56,29 +58,37 @@ object FileOps {
   private def hadoopConf(spark: SparkSession): Configuration =
     spark.sessionState.newHadoopConf()
 
-  /** Recursive listing as a DataFrame — the Spark-shaped twin of the
-    * reference's `find_files_in_directory` walk (download_file.py:138).
-    * Only the root's direct children are listed on the driver (bounded
-    * by the root's fan-out); everything below walks on the executors
-    * as an iterative FRONTIER BFS: each level lists exactly one
-    * directory depth in parallel, and the directories it discovers are
+  /** The session's Hadoop conf, shipped once to every task that reads it. */
+  def shipConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf(spark)))
+
+  /** Recursive listing — the Spark-shaped twin of the reference's
+    * `find_files_in_directory` walk (download_file.py:138). Only the
+    * root's direct children are listed on the driver (bounded by the
+    * root's fan-out); everything below walks on the executors as an
+    * iterative FRONTIER BFS: each level lists exactly one directory
+    * depth in parallel, and the directories it discovers are
     * re-distributed as the next level's frontier. Unlike a per-subtree
     * recursive walk, parallelism is never bounded by the ROOT's
     * fan-out — a root with one giant child directory still fans out as
     * soon as that child's children are discovered (and no walk
     * recurses on a task stack, so a 10⁴-deep tree can't overflow it).
-    * The result STAYS distributed — the manifest is a DataFrame over
-    * the walk's RDDs, never `.collect()`ed; at 10⁷–10⁸ files it feeds
-    * bulkCopy partition-by-partition without materializing on the
-    * driver. Job budget: exactly one Spark job per directory level
+    * The result STAYS distributed and is a plain RDD, never
+    * `.collect()`ed and no query plan: at 10⁷–10⁸ files it feeds the
+    * plan partition-by-partition, and a blueprint step pays no Catalyst
+    * planning. Job budget: exactly one Spark job per directory level
     * below the root — it lists the level into its persisted RDD and
     * counts the level's directories, and that count both ends the walk
-    * and sizes the next frontier. The manifest is unordered.
+    * and sizes the next frontier. The level tasks read the Hadoop conf
+    * from one broadcast (the caller's `conf`, which must outlive the
+    * result). The manifest is unordered; [[unpersist]] frees its levels.
     */
-  def listRecursive(spark: SparkSession, rootUri: String): DataFrame = {
-    import spark.implicits._
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    val root = fs(rootUri, conf.value)
+  def walk(spark: SparkSession, rootUri: String): RDD[FileEntry] =
+    walk(spark, rootUri, shipConf(spark))
+
+  def walk(spark: SparkSession, rootUri: String,
+      conf: Broadcast[SerializableConfiguration]): RDD[FileEntry] = {
+    val root = fs(rootUri, conf.value.value)
     val top: Seq[FileStatus] =
       try root.listStatus(new Path(rootUri)).toSeq
       catch {
@@ -87,37 +97,23 @@ object FileOps {
             s"source path does not exist: $rootUri")
       }
       finally root.close()
-    val (dirs, files) = top.partition(_.isDirectory)
-    val topEntries = files.map(st => FileEntry(
-      st.getPath.toUri.getPath, st.getLen,
-      st.getModificationTime, is_dir = false)) ++
-      dirs.map(st => FileEntry(st.getPath.toUri.getPath,
-        0L, st.getModificationTime, is_dir = true))
-    val topDF = topEntries.toDF()
     val sc = spark.sparkContext
     val width = math.max(1, math.min(64, sc.defaultParallelism))
-    val levels = scala.collection.mutable.ArrayBuffer
-      .empty[RDD[(String, FileEntry)]]
+    val levels = scala.collection.mutable.ArrayBuffer.empty[RDD[(String, FileEntry)]]
     // frontier carries FULL URIs (scheme + authority) so executors can
     // reopen the right FileSystem; FileEntry keeps the bare path
+    val dirs = top.filter(_.isDirectory).map(_.getPath.toString)
     var frontier: RDD[String] =
-      sc.parallelize(dirs.map(_.getPath.toString), math.max(1, math.min(dirs.size, 64)))
+      sc.parallelize(dirs, math.max(1, math.min(dirs.size, 64)))
     var frontierDirs = dirs.size.toLong
     while (frontierDirs > 0) {
       val level = frontier.mapPartitions { paths =>
         paths.flatMap { p =>
-          val f = FileSystem.newInstance(new URI(p), conf.value)
-          val listed: Array[(String, FileEntry)] =
-            try f.listStatus(new Path(p)).map { st =>
-              (st.getPath.toString,
-                FileEntry(st.getPath.toUri.getPath,
-                  if (st.isDirectory) 0L else st.getLen,
-                  st.getModificationTime, st.isDirectory))
-            }
-            finally f.close()
-          listed
+          val f = FileSystem.newInstance(new URI(p), conf.value.value)
+          try f.listStatus(new Path(p)).map(st => (st.getPath.toString, entry(st)))
+          finally f.close()
         }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
       levels += level
       val nextDirs = level.filter(_._2.is_dir).map(_._1)
       frontierDirs = nextDirs.count() // this level's one job
@@ -126,20 +122,52 @@ object FileOps {
       frontier = nextDirs.repartition(
         math.max(1L, math.min(frontierDirs, width.toLong)).toInt)
     }
-    val subtreeDF =
-      if (levels.isEmpty) spark.emptyDataset[FileEntry].toDF()
-      else sc.union(levels.map(_.map(_._2)).toSeq).toDF()
-    topDF.unionAll(subtreeDF)
+    sc.union(sc.parallelize(top.map(entry), 1) +: levels.map(_.map(_._2)).toSeq)
   }
 
-  /** Regex basename matching (download_file.py:174) over a manifest. */
-  def matchBasename(manifest: DataFrame, pattern: String): DataFrame =
-    manifest.filter(!col("is_dir")
-      && regexp_like(element_at(split(col("path"), "/"), -1), lit(pattern)))
+  private def entry(st: FileStatus) = FileEntry(st.getPath.toUri.getPath,
+    if (st.isDirectory) 0L else st.getLen, st.getModificationTime, st.isDirectory)
 
-  /** Full-path regex matching (upload_file.py:147 semantics). */
+  /** Unpersist the nearest persisted RDDs in `rdd`'s lineage: over a
+    * [[walk]], exactly its levels.
+    */
+  def unpersist(rdd: RDD[_]): Unit =
+    if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+    else rdd.dependencies.foreach(d => unpersist(d.rdd))
+
+  /** [[walk]] as a DataFrame (path, size, mtime, is_dir): the
+    * manifest is a DataFrame over the walk's RDDs. Its persisted
+    * levels live as long as the DataFrame is reachable; nothing here
+    * unpersists them.
+    */
+  def listRecursive(spark: SparkSession, rootUri: String): DataFrame = {
+    import spark.implicits._
+    walk(spark, rootUri).toDF()
+  }
+
+  /** The one regex match rule over a manifest: regular files whose
+    * basename (download_file.py:174) or full path (upload_file.py:147)
+    * the pattern FINDS — Java `Pattern.find`, which is exactly what
+    * `regexp_like` runs. The pattern compiles here, on the driver.
+    */
+  def matching(pattern: String, basename: Boolean): FileEntry => Boolean = {
+    val re = java.util.regex.Pattern.compile(pattern)
+    e => !e.is_dir && re.matcher(
+      if (basename) e.path.substring(e.path.lastIndexOf('/') + 1) else e.path).find()
+  }
+
+  private def matchDF(manifest: DataFrame, rule: FileEntry => Boolean): DataFrame = {
+    import manifest.sparkSession.implicits._
+    manifest.as[FileEntry].filter(rule).toDF()
+  }
+
+  /** [[matching]] on the basename, over a [[listRecursive]] manifest. */
+  def matchBasename(manifest: DataFrame, pattern: String): DataFrame =
+    matchDF(manifest, matching(pattern, basename = true))
+
+  /** [[matching]] on the full path, over a [[listRecursive]] manifest. */
   def matchFullPath(manifest: DataFrame, pattern: String): DataFrame =
-    manifest.filter(!col("is_dir") && regexp_like(col("path"), lit(pattern)))
+    matchDF(manifest, matching(pattern, basename = false))
 
   /** Transfer spec: one source file → one destination path. */
   case class Transfer(src: String, dst: String)
@@ -161,7 +189,7 @@ object FileOps {
     }
   }
 
-  /** The blueprints' transfer plan over a matched manifest, in a
+  /** The blueprints' transfer plan over the matched paths, in a
     * fixed number of Spark jobs whatever the match count; the matched
     * paths never collect to the driver. Exit-200 when nothing matched.
     *
@@ -183,7 +211,7 @@ object FileOps {
     * range bounds are fixed in the plan, so a retried act task reads
     * the same partition in the same order and writes the same names.
     */
-  def planMatched(matched: DataFrame, pattern: String,
+  def planMatched(matched: RDD[String], pattern: String,
       destinationFolder: String, destinationFileName: Option[String],
       enumerateAll: Boolean): RDD[Transfer] = {
     val (plan, total) =
@@ -192,21 +220,18 @@ object FileOps {
     plan
   }
 
-  /** [[planMatched]] as a (src, dst) DataFrame, without the exit-200
-    * check.
+  /** [[planMatched]] over a manifest's `path` column, as a (src, dst)
+    * DataFrame, without the exit-200 check.
     */
   def planTransfersDF(matched: DataFrame, destinationFolder: String,
       destinationFileName: Option[String],
       enumerateAll: Boolean): DataFrame =
-    matched.sparkSession.createDataFrame(transferPlan(matched,
-      destinationFolder, destinationFileName, enumerateAll)._1)
+    matched.sparkSession.createDataFrame(transferPlan(matched.select(col("path"))
+      .rdd.map(_.getString(0)), destinationFolder, destinationFileName, enumerateAll)._1)
 
-  private def transferPlan(matched: DataFrame, folder: String,
+  private def transferPlan(paths: RDD[String], folder: String,
       name: Option[String], enumerateAll: Boolean): (RDD[Transfer], Long) = {
-    val spark = matched.sparkSession
-    import spark.implicits._
-    val paths = matched.select(col("path")).as[String].rdd
-    val width = spark.sparkContext.defaultParallelism
+    val width = paths.sparkContext.defaultParallelism
     name match {
       case None =>
         val total = paths.count()
@@ -305,10 +330,15 @@ object FileOps {
     */
   def bulkCopy(spark: SparkSession, plan: RDD[Transfer],
       srcUriPrefix: String, dstUriPrefix: String, retries: Int,
-      backoffMs: Long, resume: Boolean): Unit = {
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    plan.foreachPartition(copyPartition(conf, srcUriPrefix, dstUriPrefix,
-      retries, backoffMs, resume))
+      backoffMs: Long, resume: Boolean): Unit =
+    withConf(spark)(conf => plan.foreachPartition(copyPartition(conf,
+      srcUriPrefix, dstUriPrefix, retries, backoffMs, resume)))
+
+  /** One act job over a conf broadcast, destroyed when the job ends. */
+  private def withConf(spark: SparkSession)(
+      job: Broadcast[SerializableConfiguration] => Unit): Unit = {
+    val conf = shipConf(spark)
+    try job(conf) finally conf.destroy()
   }
 
   /** One executor partition of a bulk copy: one source FS + one
@@ -318,7 +348,7 @@ object FileOps {
     * the connection that writes the file).
     */
   private def copyPartition(
-      conf: SerializableConfiguration,
+      conf: Broadcast[SerializableConfiguration],
       srcUriPrefix: String,
       dstUriPrefix: String,
       retries: Int,
@@ -326,8 +356,8 @@ object FileOps {
       resume: Boolean)(it: Iterator[Transfer]): Unit = if (it.hasNext) {
         // a bare-scheme prefix ("file:") needs a root path to be a URI
         def asUri(p: String) = new URI(if (p.endsWith(":")) p + "/" else p)
-        val sfs = FileSystem.newInstance(asUri(srcUriPrefix), conf.value)
-        val dfs = FileSystem.newInstance(asUri(dstUriPrefix), conf.value)
+        val sfs = FileSystem.newInstance(asUri(srcUriPrefix), conf.value.value)
+        val dfs = FileSystem.newInstance(asUri(dstUriPrefix), conf.value.value)
         sfs.setVerifyChecksum(false)
         dfs.setWriteChecksum(false)
         try it.foreach { t =>
@@ -466,10 +496,9 @@ object FileOps {
     * ([[withRetries]]' taxonomy contract).
     */
   def bulkMove(spark: SparkSession, uri: String, moves: RDD[Transfer],
-      retries: Int = 0, backoffMs: Long = 1000L): Unit = {
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    moves.foreachPartition { it =>
-      val f = FileSystem.newInstance(new URI(uri), conf.value)
+      retries: Int = 0, backoffMs: Long = 1000L): Unit =
+    withConf(spark)(conf => moves.foreachPartition { it =>
+      val f = FileSystem.newInstance(new URI(uri), conf.value.value)
       // rename does not make parents; make each one once per partition
       val made = scala.collection.mutable.HashSet.empty[Path]
       try it.foreach { case Transfer(src, dst) =>
@@ -485,8 +514,7 @@ object FileOps {
               s"could not move $src -> $dst")
         }
       } finally f.close()
-    }
-  }
+    })
 
   /** Bulk delete, distributed — delete_file.py:76. */
   def bulkDelete(spark: SparkSession, uri: String, paths: Seq[String],
@@ -498,15 +526,13 @@ object FileOps {
   /** [[bulkDelete]] over distributed paths: one job, one FS handle per
     * partition.
     */
-  def bulkDelete(spark: SparkSession, uri: String, paths: RDD[String]): Unit = {
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    paths.foreachPartition { it =>
-      val f = FileSystem.newInstance(new URI(uri), conf.value)
+  def bulkDelete(spark: SparkSession, uri: String, paths: RDD[String]): Unit =
+    withConf(spark)(conf => paths.foreachPartition { it =>
+      val f = FileSystem.newInstance(new URI(uri), conf.value.value)
       f.setWriteChecksum(false); f.setVerifyChecksum(false)
       try it.foreach(p => f.delete(new Path(p), false))
       finally f.close()
-    }
-  }
+    })
 
   /** q60: file manifest of a scale-factor directory, paths relativized
     * for determinism. Rows-only (no portable SQL oracle for fs walks).

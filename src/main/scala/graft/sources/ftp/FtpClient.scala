@@ -4,6 +4,8 @@ import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream}
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets
 
+import graft.sources.QuickAck
+
 /** Minimal RFC 959 FTP client over raw sockets — the transport under
   * graft's FTP connector (the reference drives Python's ftplib; graft
   * speaks the same protocol surface: USER/PASS, TYPE I, PASV, RETR,
@@ -62,8 +64,10 @@ class FtpClient(host: String, port: Int, user: String, password: String,
     verifyHostname: Boolean = true) extends AutoCloseable {
   import FtpClient.{FtpEntry, FtpReply}
 
-  private var control: Socket = new Socket()
-  control.connect(new InetSocketAddress(host, port), timeoutMs)
+  // the TCP socket, beneath TLS under FTPS
+  private val plainControl = new Socket()
+  plainControl.connect(new InetSocketAddress(host, port), timeoutMs)
+  private var control: Socket = plainControl
   control.setSoTimeout(timeoutMs)
   private var in = new BufferedReader(
     new InputStreamReader(control.getInputStream, StandardCharsets.UTF_8))
@@ -141,6 +145,17 @@ class FtpClient(host: String, port: Int, user: String, password: String,
 
   def cmd(cmdLine: String): FtpReply = { send(cmdLine); readReply() }
 
+  /** A transfer command (RETR/STOR/NLST/MLSD). Its `1xx` preliminary
+    * reply is ACKed at once: the client sends nothing on the control
+    * connection until the completion reply, so a delayed ACK would
+    * hold that reply behind the server's Nagle for ~40 ms.
+    */
+  private def transferCmd(cmdLine: String): FtpReply = {
+    val r = cmd(cmdLine)
+    if (r.code / 100 == 1) QuickAck(plainControl)
+    r
+  }
+
   private def expect(r: FtpReply, codes: Int*): FtpReply = {
     if (!codes.contains(r.code))
       throw new java.io.IOException(
@@ -180,6 +195,8 @@ class FtpClient(host: String, port: Int, user: String, password: String,
     // trust_server_pasv_ipv4_address=False default)
     s.connect(new InetSocketAddress(host, p), timeoutMs)
     s.setSoTimeout(timeoutMs)
+    // a STOR's last small segment must not wait for the previous ACK
+    s.setTcpNoDelay(true)
     s
   }
 
@@ -213,7 +230,7 @@ class FtpClient(host: String, port: Int, user: String, password: String,
     val plain = pasv()
     val data = withDataSocket(plain) {
       if (offset > 0) expect(cmd(s"REST $offset"), 350)
-      expect(cmd(s"RETR $path"), 150, 125)
+      expect(transferCmd(s"RETR $path"), 150, 125)
       secureData(plain)
     }
     new java.io.FilterInputStream(data.getInputStream) {
@@ -238,11 +255,16 @@ class FtpClient(host: String, port: Int, user: String, password: String,
         }
         super.close(); data.close()
         if (sawEof) {
-          // the byte stream reached EOF — drain the completion reply
-          // but tolerate a server that already tore the session down
-          // (the data is complete either way)
-          try expect(readReply(), 226, 250)
-          catch { case _: java.io.IOException => () }
+          // the byte stream reached EOF — drain the completion reply.
+          // A server that already tore the session down leaves no
+          // reply (the gftp stream's SIZE check catches a short
+          // body); a non-2xx one (426: data connection ended early)
+          // means the body is short and fails the read
+          val done = try Some(readReply())
+            catch { case _: java.io.IOException => None }
+          done.filter(_.code / 100 != 2).foreach { r =>
+            throw new java.io.IOException(s"FTP RETR $path failed: ${r.code} ${r.text}")
+          }
         } else {
           // closed MID-transfer (seek reopens with REST): the control
           // state is undefined — a strict server kills the session on
@@ -265,7 +287,7 @@ class FtpClient(host: String, port: Int, user: String, password: String,
     val plain = pasv()
     val data = withDataSocket(plain) {
       if (offset > 0) expect(cmd(s"REST $offset"), 350)
-      expect(cmd(s"STOR $path"), 150, 125)
+      expect(transferCmd(s"STOR $path"), 150, 125)
       secureData(plain)
     }
     new java.io.FilterOutputStream(data.getOutputStream) {
@@ -284,7 +306,7 @@ class FtpClient(host: String, port: Int, user: String, password: String,
   def nlst(path: String): Seq[String] = {
     val plain = pasv()
     val data = withDataSocket(plain) {
-      expect(cmd(if (path.isEmpty) "NLST" else s"NLST $path"), 150, 125)
+      expect(transferCmd(if (path.isEmpty) "NLST" else s"NLST $path"), 150, 125)
       secureData(plain)
     }
     val r = new BufferedReader(new InputStreamReader(
@@ -302,7 +324,7 @@ class FtpClient(host: String, port: Int, user: String, password: String,
   def mlsd(path: String): Seq[FtpEntry] = {
     val plain = pasv()
     val data = withDataSocket(plain) {
-      val rep = cmd(if (path.isEmpty) "MLSD" else s"MLSD $path")
+      val rep = transferCmd(if (path.isEmpty) "MLSD" else s"MLSD $path")
       if (rep.code >= 400)
         throw new java.io.FileNotFoundException(
           s"$path: ${rep.code} ${rep.text}")

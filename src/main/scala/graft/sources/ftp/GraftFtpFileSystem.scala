@@ -98,19 +98,22 @@ class GraftFtpFileSystem extends FileSystem {
     * instead of a skip-read of `target` bytes. Parquet footer reads
     * over FTP are exactly this pattern (open → seek to EOF−8): with
     * skip-reads a footer probe streams the whole file; with REST it
-    * streams 8 bytes.
+    * streams 8 bytes. A stream that ends short of the SIZE it opened
+    * with fails instead of passing a truncated file on.
     */
   private class SeekableFtpInput(var in: InputStream, var c: FtpClient,
       path: String, len: Long)
       extends InputStream with Seekable with PositionedReadable {
     private var pos = 0L
     override def read(): Int = {
-      val b = in.read(); if (b >= 0) pos += 1; b
+      val b = in.read(); if (b >= 0) pos += 1 else checkEnd(); b
     }
     override def read(b: Array[Byte], off: Int, l: Int): Int = {
-      val n = in.read(b, off, l); if (n > 0) pos += n; n
+      val n = in.read(b, off, l); if (n > 0) pos += n else if (n < 0) checkEnd(); n
     }
-    override def close(): Unit = { in.close(); c.close() }
+    private def checkEnd(): Unit = if (pos < len)
+      throw new java.io.EOFException(s"$path ended at byte $pos of $len")
+    override def close(): Unit = try in.close() finally c.close()
     override def getPos: Long = pos
     override def seek(target: Long): Unit = {
       if (target == pos) return

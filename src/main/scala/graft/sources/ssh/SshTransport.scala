@@ -8,6 +8,8 @@ import java.security.KeyPair
 import javax.crypto.{Cipher, Mac}
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
+import graft.sources.QuickAck
+
 /** SSH2 transport layer (RFC 4253) over one socket, speaking exactly
   * [[SshCrypto]]'s suite — shared verbatim by [[SftpClient]] and the
   * embedded [[SshServer]]. Binary packet protocol with aes128-ctr +
@@ -29,7 +31,16 @@ final class SshTransport(sock: Socket, val isServer: Boolean,
     localIdent: String = "SSH-2.0-graft_0.1",
     rekeyBytes: Long = 1L << 30) {
 
-  private val in = new BufferedInputStream(sock.getInputStream, 64 << 10)
+  // the client ACKs every read at once: it mostly waits on the
+  // server, whose next segment Nagle holds until the last one is
+  // ACKed — a delayed ACK would stall each reply train ~40 ms
+  private val in = new BufferedInputStream(
+    if (isServer) sock.getInputStream
+    else new java.io.FilterInputStream(sock.getInputStream) {
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = super.read(b, off, len); QuickAck(sock); n
+      }
+    }, 64 << 10)
   private val out = new BufferedOutputStream(sock.getOutputStream, 64 << 10)
   private val rnd = new java.security.SecureRandom
 

@@ -142,6 +142,28 @@ class BlueprintsSpec extends SparkSpec {
     assert(!Files.exists(ftpRoot.resolve("budget/l1/l2/c.csv")))
   }
 
+  test("a regex step leaves nothing persisted, whatever its exit code") {
+    // the job-budget case's depth-2 tree, made afresh
+    Files.createDirectories(ftpRoot.resolve("budget/l1/l2"))
+    Seq("budget/a.csv", "budget/l1/b.csv", "budget/l1/l2/c.csv")
+      .foreach(f => Files.writeString(ftpRoot.resolve(f), s"$f\n"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def regex(pattern: String, extra: String*) = base(Seq(
+      "--source-file-name-match-type", "regex_match", "--file-name-match-type",
+      "regex_match", "--source-file-name", pattern) ++ extra: _*)
+    val dst = Files.createTempDirectory("bp_release")
+    assert(Download.run(spark, regex("\\.csv$", "--source-folder-name", "budget",
+      "--destination-folder-name", dst.toString)) === 0)
+    assert(Delete.run(spark, regex("\\.csv$", "--source-folder-name", "budget")) === 0)
+    assert(!Files.exists(ftpRoot.resolve("budget/l1/l2/c.csv")))
+    assert(Delete.run(spark, regex("\\.csv$", "--source-folder-name", "budget")) === 200)
+    assert(Upload.run(spark, regex(".*", "--source-folder-name", "/definitely/not/here")) ===
+      201)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"steps left RDDs persisted: ${sc.getPersistentRDDs -- before}")
+  }
+
   test("exit 3: bad credentials (reference EXIT_CODE_INCORRECT_CREDENTIALS)") {
     val authRoot = Files.createTempDirectory("bp_auth")
     val authServer = new MiniFtpServer(authRoot, requiredPassword = Some("secret"))

@@ -72,6 +72,43 @@ class FileOpsSpec extends SparkSpec {
       FileOps.listRecursive(spark, s"file:$root"), "inner").count() === 0)
     assert(FileOps.matchFullPath(
       FileOps.listRecursive(spark, s"file:$root"), "inner").count() === 1)
+    // one rule: the blueprints' RDD path, matchBasename/matchFullPath
+    // and Spark's own regexp_like (the rule before the RDD path) agree
+    Files.createDirectories(root.resolve("v1.2"))
+    Files.writeString(root.resolve("v1.2/e.csv"), "e\n")
+    // a non-ASCII name as a listed entry: creating it on disk would
+    // depend on the JVM's file-name encoding
+    val extra = Seq(FileOps.FileEntry(s"$root/sub/\u00fcber\u540d.csv", 2L, 0L, is_dir = false))
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val manifest = FileOps.listRecursive(spark, s"file:$root").unionAll(extra.toDF())
+    def paths(df: org.apache.spark.sql.DataFrame) =
+      df.select("path").collect().map(_.getString(0)).sorted.toSeq
+    val patterns = Seq(
+      "^[a-c]\\.csv$", // anchored
+      "inner", // a directory component only
+      "v1\\.2", // a dotted directory name
+      "\u540d", // a non-ASCII file name
+      s"^${java.util.regex.Pattern.quote(root.toString)}/sub/[^/]+$$")
+    for (p <- patterns; basename <- Seq(true, false)) {
+      val viaRdd = FileOps.walk(spark, s"file:$root").union(spark.sparkContext.parallelize(extra))
+        .filter(FileOps.matching(p, basename)).map(_.path).collect().sorted.toSeq
+      val subject = if (basename) element_at(split(col("path"), "/"), -1) else col("path")
+      assert(viaRdd === paths(manifest.filter(!col("is_dir") &&
+        regexp_like(subject, lit(p)))), s"pattern $p, basename $basename")
+      assert(viaRdd === paths(if (basename) FileOps.matchBasename(manifest, p)
+        else FileOps.matchFullPath(manifest, p)), s"pattern $p, basename $basename")
+    }
+    assert(paths(FileOps.matchBasename(manifest, "\u540d")) ===
+      Seq(s"$root/sub/\u00fcber\u540d.csv"))
+    assert(paths(FileOps.matchFullPath(manifest, "v1\\.2")) === Seq(s"$root/v1.2/e.csv"))
+    assert(paths(FileOps.matchBasename(manifest, "v1\\.2")).isEmpty)
+    // an invalid regex ends a regex blueprint with exit 1, before it
+    // touches the destination
+    assert(graft.blueprints.Upload.run(spark, Array(
+      "--host", "127.0.0.1", "--port", "1", "--username", "u", "--password", "p",
+      "--source-file-name-match-type", "regex_match", "--source-file-name", "([",
+      "--source-folder-name", root.toString)) === 1)
   }
 
   test("planTransfers enumerates only on multi-match with explicit name") {
@@ -221,13 +258,12 @@ class FileOpsSpec extends SparkSpec {
       (0 until 1000).foreach(i => Files.createFile(dir.resolve(f"f$i%04d")))
     }
     val df = FileOps.listRecursive(spark, s"file:$root")
-    // the subtree side of the union must be a distributed RDD scan;
-    // only the root's direct children (100 dirs) may be local
+    // the whole manifest, the root's direct children included, is a
+    // distributed RDD scan: no driver-side relation at all
     val locals = df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
     }
-    assert(locals.nonEmpty && locals.forall(_.data.length <= 100),
-      "driver-side relation bigger than the root's direct fan-out")
+    assert(locals.isEmpty, "the manifest holds a driver-side relation")
     val rdds = df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.ExternalRDD[_] => r
     }
@@ -361,8 +397,8 @@ object PlanRetryMain {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.reason != org.apache.spark.Success) failed.incrementAndGet()
     })
-    val plan = FileOps.planMatched(
-      FileOps.matchBasename(FileOps.listRecursive(spark, s"file:$src"), "\\.dat$"),
+    val plan = FileOps.planMatched(FileOps.walk(spark, s"file:$src")
+      .filter(FileOps.matching("\\.dat$", basename = true)).map(_.path),
       "\\.dat$", dst, Some("out.dat"), enumerateAll = true)
     FileOps.bulkCopy(spark, plan, "file:", "flaky:", 0, 0L, false)
     org.apache.spark.graftspec.Listeners.drain(sc)

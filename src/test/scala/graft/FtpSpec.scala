@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.ftp.MiniFtpServer
-import graft.sources.FileOps
+import graft.sources.{FileOps, QuickAck}
 import graft.sources.ftp.FtpClient
 
 class FtpSpec extends SparkSpec {
@@ -170,6 +170,57 @@ class FtpSpec extends SparkSpec {
     assert(secs < 10.0, f"regex delete took $secs%.1f s")
   }
 
+  test("gftp create + open round trips do not wait on delayed ACKs") {
+    assume(QuickAck.supported, "the platform has no TCP_QUICKACK")
+    withGftp()
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(
+      new java.net.URI(ftpUri), spark.sparkContext.hadoopConfiguration)
+    val body = Array.tabulate[Byte](1024)(_.toByte)
+    def roundTrip(i: Int): Unit = {
+      val p = new org.apache.hadoop.fs.Path(s"/acks/f$i.bin")
+      val out = fs.create(p)
+      out.write(body); out.close()
+      val in = fs.open(p)
+      try assert(java.util.Arrays.equals(in.readAllBytes(), body)) finally in.close()
+    }
+    try {
+      roundTrip(0) // untimed: first use loads the classes
+      val t0 = System.nanoTime()
+      (1 to 20).foreach(roundTrip)
+      val secs = (System.nanoTime() - t0) / 1e9
+      // a 150 left un-ACKed holds each 226 ~40 ms: ~1.8 s for these 40
+      assert(secs < 0.5, f"20 create + open round trips took $secs%.2f s")
+    } finally fs.close()
+  }
+
+  test("a short RETR fails the download; --retries heals it byte-identical") {
+    val files = Seq("a", "b", "c").map(n =>
+      s"/dir/$n.dat" -> Array.tabulate[Byte](1000)(i => (i * n.head).toByte)).toMap
+    val stub = new ShortRetrServer(files)
+    def download(extra: String*): (Int, java.nio.file.Path) = {
+      val dst = Files.createTempDirectory("graft_short")
+      (graft.blueprints.Download.run(spark, (Seq(
+        "--host", "127.0.0.1", "--port", stub.port.toString,
+        "--username", "u", "--password", "p",
+        "--source-file-name-match-type", "regex_match",
+        "--source-file-name", "\\.dat$", "--source-folder-name", "dir",
+        "--destination-folder-name", dst.toString) ++ extra).toArray), dst)
+    }
+    try {
+      stub.faults.set(1)
+      assert(download("--retries", "0")._1 !== 0,
+        "a download the server ended early (426) exited 0")
+      stub.faults.set(1)
+      val (code, dst) = download("--retries", "2", "--backoff-ms", "10")
+      assert(code === 0)
+      assert(stub.faults.get <= 0, "the stub never faulted")
+      files.foreach { case (p, bytes) =>
+        assert(java.util.Arrays.equals(
+          Files.readAllBytes(dst.resolve(p.drop(5))), bytes), p)
+      }
+    } finally stub.stop()
+  }
+
   test("bulkCopy resume: partial transfers complete via REST in both directions") {
     withGftp()
     val payload = Array.tabulate[Byte](40000)(i => (i % 251).toByte)
@@ -260,4 +311,65 @@ class FtpSpec extends SparkSpec {
     assert(back.count() === 3)
     assert(back.select("k").collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L))
   }
+}
+
+/** A stub FTP server with just enough verbs for a regex download of
+  * the files in `files` (all under /dir). While `faults` is positive,
+  * a RETR sends half the body, ends the data connection and answers
+  * 426, as a server whose transfer broke off does.
+  */
+final class ShortRetrServer(files: Map[String, Array[Byte]]) {
+  import java.net.{InetAddress, ServerSocket, Socket}
+  val faults = new java.util.concurrent.atomic.AtomicInteger
+  private val ss = new ServerSocket(0, 16, InetAddress.getLoopbackAddress)
+  def port: Int = ss.getLocalPort
+  def stop(): Unit = ss.close()
+  private val acceptor = new Thread(() => while (!ss.isClosed) {
+    try {
+      val s = ss.accept()
+      val t = new Thread(() => session(s)); t.setDaemon(true); t.start()
+    } catch { case _: java.io.IOException => () }
+  })
+  acceptor.setDaemon(true); acceptor.start()
+
+  private def session(s: Socket): Unit = try {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(s.getInputStream, "UTF-8"))
+    def reply(r: String): Unit = {
+      s.getOutputStream.write((r + "\r\n").getBytes("UTF-8")); s.getOutputStream.flush()
+    }
+    var data: ServerSocket = null
+    def send(body: Array[Byte]): Unit = {
+      val d = data.accept()
+      d.getOutputStream.write(body); d.close(); data.close()
+    }
+    reply("220 stub")
+    var line = in.readLine()
+    while (line != null) {
+      val arg = line.dropWhile(_ != ' ').trim
+      line.takeWhile(_ != ' ').toUpperCase match {
+        case "USER" => reply("331 password")
+        case "PASS" => reply("230 in")
+        case "TYPE" => reply("200 binary")
+        case "SIZE" => reply(files.get(arg).fold("550 not a file")(b => s"213 ${b.length}"))
+        case "CWD" => reply(if (arg == "/dir") "250 ok" else "550 no such directory")
+        case "PASV" =>
+          data = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
+          reply(s"227 passive (127,0,0,1,${data.getLocalPort / 256},${data.getLocalPort % 256})")
+        case "MLSD" =>
+          reply("150 listing")
+          send(files.map { case (p, b) => s"type=file;size=${b.length}; ${p.drop(5)}\r\n" }
+            .mkString.getBytes("UTF-8"))
+          reply("226 listed")
+        case "RETR" =>
+          val body = files(arg)
+          reply("150 sending")
+          if (faults.getAndDecrement() > 0) {
+            send(body.take(body.length / 2)); reply("426 transfer aborted")
+          } else { send(body); reply("226 sent") }
+        case "QUIT" => reply("221 bye"); s.close()
+        case _ => reply("502 not implemented")
+      }
+      line = if (s.isClosed) null else in.readLine()
+    }
+  } catch { case _: java.io.IOException => () } finally s.close()
 }

@@ -323,6 +323,31 @@ class SftpSpec extends SparkSpec {
     } finally { proxy.close(); srv.close() }
   }
 
+  test("the client ACKs at once: a 2 MB put and a 2 MB get each run at >= 40 MB/s on loopback") {
+    assume(graft.sources.QuickAck.supported, "the platform has no TCP_QUICKACK")
+    val root = freshDir()
+    val srv = startServer(root)
+    try {
+      val c = connect(srv)
+      try {
+        val payload = new Array[Byte](2 << 20)
+        new java.util.Random(11).nextBytes(payload)
+        // best of three, so one JIT or scheduling pause cannot pass
+        // for a stall; a delayed ACK slows every attempt (~6 MB/s)
+        def mbPerS(op: => Unit): Double = (1 to 3).map { _ =>
+          val t0 = System.nanoTime(); op
+          payload.length / 1e6 / ((System.nanoTime() - t0) / 1e9)
+        }.max
+        var got: Array[Byte] = null
+        val put = mbPerS { val o = c.outputStream("/ack.bin"); o.write(payload); o.close() }
+        val get = mbPerS { val i = c.inputStream("/ack.bin"); got = i.readAllBytes(); i.close() }
+        assert(got.sameElements(payload))
+        assert(put >= 40.0, f"put ran at $put%.1f MB/s")
+        assert(get >= 40.0, f"get ran at $get%.1f MB/s")
+      } finally c.close()
+    } finally srv.close()
+  }
+
   test("rekey under load: a transfer far past the rekey limit completes byte-identical, with reads in flight") {
     val root = freshDir()
     val srv = startServer(root)

@@ -39,4 +39,23 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"raw control bytes in source:\n  ${offenders.take(10).mkString("\n  ")}")
   }
+
+  test("every Hadoop conf shipped from graft.sources rides a broadcast") {
+    // a SerializableConfiguration captured in a task closure is
+    // serialized twice per job and deserialized by every task; a
+    // broadcast ships it once
+    import scala.jdk.CollectionConverters._
+    val sites = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/sources"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        "new SerializableConfiguration\\(".r.findAllMatchIn(text).map { m =>
+          val before = text.substring(0, m.start)
+          (s"$p:${before.count(_ == '\n') + 1}", before.stripTrailing.endsWith("broadcast("))
+        }
+      }.toSeq
+    assert(sites.nonEmpty, "no SerializableConfiguration site found")
+    val offenders = sites.collect { case (at, false) => at }
+    assert(offenders.isEmpty,
+      s"SerializableConfiguration outside a broadcast(...):\n  ${offenders.mkString("\n  ")}")
+  }
 }
