@@ -8,7 +8,7 @@ package graft
   * Usage: runMain graft.Plans <sfDir> <outDir> <tag> [q1,q2,...]
   * (no list = every registry query). Plans are captured WITHOUT
   * executing the final action — but queries with driver-side loops
-  * (pagerank rounds, CC propagation) run their loop's jobs while the
+  * (k-core peels, CC star rounds) run their loop's jobs while the
   * plan is CONSTRUCTED, so a dump is not free; it is still far
   * cheaper than the bench.
   */

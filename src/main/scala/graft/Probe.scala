@@ -6,8 +6,11 @@ import org.apache.spark.sql.functions._
 /** Phase-level measurement harness for the optimization rounds
   * (guide §1: measure first, noop sink, labeled jobs). Each scenario
   * times the sub-steps of one expensive query or session-cache fill
-  * so changes attack the measured phase, not a guess. Never part of
-  * the bench contract; results print to stderr.
+  * so changes attack the measured phase, not a guess. A registry query
+  * name as the scenario times that query twice: the cold run includes
+  * its session-cache fill (tri, wsym, ccLabels), the warm one reads
+  * the cache. Never part of the bench contract; results print to
+  * stderr.
   *
   * Usage: runMain graft.Probe <sfDir> <scenario>[,<scenario>...]
   */
@@ -49,52 +52,6 @@ object Probe {
     Console.err.println(s"[probe] warmup done: ${qs.mkString(",")}")
   }
 
-  /** The tri-fill phases, replicated from Graph.coPurchaseGraph. */
-  private def tri(spark: SparkSession, dir: String): Unit = {
-    warmup(spark, Seq("q122_triangles", "q135_ktruss"))
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    timed(spark, "tri/li-distinct")(noop(li))
-    val pairsPlan = li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("lo"), col("b.pk").as("hi"))
-      .distinct()
-    timed(spark, "tri/pairs-join-distinct")(noop(pairsPlan))
-    val pairs = timed(spark, "tri/pairs-checkpoint")(pairsPlan.localCheckpoint())
-    val nPairs = timed(spark, "tri/pairs-count")(pairs.count())
-    Console.err.println(s"[probe] nPairs = $nPairs")
-    val deg = pairs.select(col("lo").as("node"))
-      .unionAll(pairs.select(col("hi").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val oriented = pairs
-      .join(broadcast(deg).withColumnRenamed("node", "lo")
-        .withColumnRenamed("deg", "dlo"), Seq("lo"))
-      .join(broadcast(deg).withColumnRenamed("node", "hi")
-        .withColumnRenamed("deg", "dhi"), Seq("hi"))
-      .select(
-        when(col("dlo") < col("dhi") ||
-          (col("dlo") === col("dhi") && col("lo") < col("hi")),
-          col("lo")).otherwise(col("hi")).as("src"),
-        when(col("dlo") < col("dhi") ||
-          (col("dlo") === col("dhi") && col("lo") < col("hi")),
-          col("hi")).otherwise(col("lo")).as("dst"))
-      .repartition(col("src")).persist()
-    timed(spark, "tri/oriented-materialize")(noop(oriented))
-    val wedges = oriented.as("x").join(oriented.as("y"),
-        col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
-      .select(col("x.src").as("apex"),
-        col("x.dst").as("lo"), col("y.dst").as("hi"))
-    timed(spark, "tri/wedges-count-only") {
-      Console.err.println("  wedges = " + wedges.count())
-    }
-    val tris = wedges.join(broadcast(pairs), Seq("lo", "hi"))
-    timed2(spark, "tri/wedges+close-noop")(noop(tris))
-    val trisMat = timed(spark, "tri/tris-checkpoint")(tris.localCheckpoint())
-    Console.err.println(s"[probe] nTris = ${trisMat.count()}")
-    oriented.unpersist(blocking = false)
-  }
-
   /** photoTable generation vs decode split for q119/q71. */
   private def img(spark: SparkSession, dir: String): Unit = {
     import graft.operators.Multimodal
@@ -127,40 +84,6 @@ object Probe {
     Console.err.println(s"  buckets=${sizes.length} " +
       s"tombstoned=${sizes.count(_ > 1000)} maxdf=${sizes.max} " +
       s"pairsEmitted=${capped.map(d => d * (d - 1) / 2).sum}")
-  }
-
-  /** ccLabels fill phases: the q31 edge pass vs the propagation. */
-  private def cc(spark: SparkSession, dir: String): Unit = {
-    warmup(spark, Seq("q31_ngram_jaccard", "q35_dup_clusters"))
-    val edges = timed(spark, "cc/q31-edges") {
-      val e = graft.operators.Dedup.q31(spark, dir)
-        .select(col("ia"), col("ib")).localCheckpoint()
-      Console.err.println("  edges = " + e.count())
-      e
-    }
-    timed(spark, "cc/label-propagation") {
-      val sym = edges.unionAll(
-        edges.select(col("ib").as("ia"), col("ia").as("ib")))
-        .toDF("a", "b")
-      var labels = sym.select(col("a").as("node")).distinct()
-        .withColumn("comp", col("node")).localCheckpoint()
-      var labelSum = Long.MaxValue
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < 20) {
-        val viaEdges = sym.join(labels, sym("a") === labels("node"))
-          .select(col("b").as("node"), col("comp"))
-        val next = labels.select(col("node"), col("comp")).unionAll(viaEdges)
-          .groupBy(col("node")).agg(min(col("comp")).as("comp"))
-          .localCheckpoint()
-        val nextSum = next.agg(sum(col("comp"))).head.getLong(0)
-        converged = nextSum == labelSum
-        labelSum = nextSum
-        labels = next
-        rounds += 1
-      }
-      Console.err.println(s"  rounds = $rounds")
-    }
   }
 
   /** q76 phases: variant emission vs pair emission vs rejoin+sort. */
@@ -244,10 +167,8 @@ object Probe {
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     scenarios.foreach {
-      case "tri" => tri(spark, dir)
       case "img" => img(spark, dir)
       case "img2" => img2(spark, dir)
-      case "cc" => cc(spark, dir)
       case "fuzzy" => fuzzy(spark, dir)
       case "fuzzy2" => fuzzy2(spark, dir)
       case s if SparkEntry.queries.contains(s) => one(spark, dir, s)

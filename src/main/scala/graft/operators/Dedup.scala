@@ -720,23 +720,19 @@ object Dedup {
 
   /** q35: near-duplicate cluster assignment — connected components
     * over the exact-Jaccard pair graph (q31 edges), labels = min
-    * doc_id per component, plus cluster sizes. The Spark form is
-    * iterative min-label propagation: each round is one join + one
-    * min-aggregate over the (narrow) label relation, with
-    * `localCheckpoint` truncating the growing lineage; rounds needed =
-    * graph diameter (near-dup components are shallow — 4 rounds here).
-    * The driver-side loop only ever reads one convergence counter per
-    * round, never data. At 10⁹+ edges swap the propagation body for
-    * the large-star/small-star optimization (same join shape, halves
-    * round count on skewed stars). Oracle: DuckDB recursive-CTE
-    * transitive closure with MIN over reachable nodes.
+    * doc_id per component, plus cluster sizes. Below
+    * [[CcLocalMaxEdges]] the components come from a driver union-find;
+    * above it from [[ccLargeSmallStar]]'s star rounds (O(log n) rounds
+    * at any component diameter, the driver reading one checksum row
+    * per round, never data). Oracle: DuckDB recursive-CTE transitive
+    * closure with MIN over reachable nodes.
     */
   def q35(spark: SparkSession, dir: String): DataFrame =
     clusterLabels(spark, dir).orderBy(col("doc_id"))
 
   /** The q35 cluster-label relation `(doc_id, cluster_id,
     * cluster_size)`, session-cached (round 14): FOUR registry queries
-    * run the full q31 → min-label-propagation chain internally (q35,
+    * run the full q31 → connected-components chain internally (q35,
     * q36, q38, q79), each paying the shingle pass, the capped pair
     * emission AND the CC rounds per execution — the same
     * multi-consumer shape the verdict chain (q75 family) and the
@@ -748,12 +744,12 @@ object Dedup {
     * pins executor storage.
     */
   /** Edge-count bound under which [[clusterLabels]] computes the
-    * components on the driver (union-find) instead of by iterative
-    * min-label propagation — the BPE/q34/q135 local-vs-distributed
-    * dispatch discipline. The near-dup pair graph is TINY relative to
-    * the corpus (256 edges at sf0.1), and each propagation round is a
-    * join + aggregate + checkpoint + driver probe — pure job latency
-    * at that size. Labels (min reachable doc_id) and sizes are
+    * components on the driver (union-find) instead of by distributed
+    * star rounds — the BPE/q34/q135 local-vs-distributed dispatch
+    * discipline. The near-dup pair graph is TINY relative to the
+    * corpus (256 edges at sf0.1), and each star round is two
+    * aggregates + joins + checkpoints + a driver probe — pure job
+    * latency at that size. Labels (min reachable doc_id) and sizes are
     * identical by construction; DedupSpec pins arm equality.
     */
   private[graft] val CcLocalMaxEdges = 4000000L
@@ -768,12 +764,12 @@ object Dedup {
       val edges = q31(spark, dir).select(col("ia"), col("ib")).localCheckpoint()
       val nEdges = edges.count()
       if (nEdges <= localMaxEdges) ccLabelsLocal(spark, edges)
-      else ccLabelsPropagated(spark, edges)
+      else ccLabelsStar(edges)
     }
 
   /** Driver-local arm of [[clusterLabelsBounded]]: union-find with
-    * min-id roots — comp = min reachable node id, exactly the
-    * propagation fixpoint. NOTE: no `return` inside the cache build
+    * min-id roots — comp = min reachable node id, exactly the star
+    * rounds' labels. NOTE: no `return` inside the cache build
     * closure (a non-local return would unwind through the lazy
     * holder and void both the entry and the ledger record).
     */
@@ -795,7 +791,7 @@ object Dedup {
           val a = find(rows(k).getLong(0))
           val b = find(rows(k).getLong(1))
           if (a != b) {
-            // min id becomes the root so labels match min-propagation
+            // min id becomes the root so labels match the star rounds
             if (a < b) parent(b) = a else parent(a) = b
           }
           k += 1
@@ -822,62 +818,34 @@ object Dedup {
           .localCheckpoint()
   }
 
-  /** Distributed arm of [[clusterLabelsBounded]]: iterative min-label
-    * propagation with a loud non-convergence throw (at 10⁹+ edges
-    * swap in [[ccLargeSmallStar]]'s star rounds — same labels).
+  /** Distributed arm of [[clusterLabelsBounded]]: [[ccLargeSmallStar]]'s
+    * labels plus each component's size, pinned like the verdicts
+    * cache (heap at or below [[Graph.ResultPinMaxRows]] rows, a
+    * parquet temp above).
     */
-  private[graft] def ccLabelsPropagated(spark: SparkSession,
-      edges: DataFrame): DataFrame = {
-      val sym = edges.unionAll(
-        edges.select(col("ib").as("ia"), col("ia").as("ib")))
-        .toDF("a", "b")
-      var labels = sym.select(col("a").as("node")).distinct()
-        .withColumn("comp", col("node")).localCheckpoint()
-      // min-propagation strictly decreases sum(comp) until the fixpoint,
-      // so convergence is one scan-aggregate on the fresh labels — no
-      // join-with-previous needed
-      var labelSum = Long.MaxValue
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < 20) {
-        val viaEdges = sym.join(labels, sym("a") === labels("node"))
-          .select(col("b").as("node"), col("comp"))
-        val next = labels.select(col("node"), col("comp")).unionAll(viaEdges)
-          .groupBy(col("node")).agg(min(col("comp")).as("comp"))
-          .localCheckpoint()
-        val nextSum = next.agg(sum(col("comp"))).head.getLong(0)
-        converged = nextSum == labelSum
-        labelSum = nextSum
-        labels = next
-        rounds += 1
-      }
-      // a component with diameter > the round cap would return a silently
-      // partial clustering (and q36/q38 would inherit it) — make it loud
-      if (!converged)
-        throw new IllegalStateException(
-          s"q35 label propagation did not converge within $rounds rounds; " +
-            "raise the cap or switch to large-star/small-star")
-      val wComp = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("comp"))
-      val rel = labels
-        .withColumn("cluster_size", count(lit(1)).over(wComp))
-        .select(col("node").as("doc_id"), col("comp").as("cluster_id"),
-          col("cluster_size"))
-        .localCheckpoint()
-      val n = rel.count()
-      if (n <= graft.operators.Graph.ResultPinMaxRows) rel
-      else {
-        val spilled = graft.operators.Graph.pinByRows(rel, n, 0L, "ccLabels")
-        rel.unpersist(blocking = false)
-        spilled
-      }
+  private[graft] def ccLabelsStar(edges: DataFrame): DataFrame = {
+    val labels = ccLargeSmallStar(edges)
+    val wComp = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("comp"))
+    val rel = labels
+      .withColumn("cluster_size", count(lit(1)).over(wComp))
+      .select(col("node").as("doc_id"), col("comp").as("cluster_id"),
+        col("cluster_size"))
+      .localCheckpoint()
+    val n = rel.count()
+    if (n <= graft.operators.Graph.ResultPinMaxRows) rel
+    else {
+      val spilled = graft.operators.Graph.pinByRows(rel, n, 0L, "ccLabels")
+      rel.unpersist(blocking = false)
+      spilled
     }
+  }
 
   /** Connected components by alternating large-star/small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC '14) — the 10⁹-edge-scale alternative to [[q35]]'s
-    * min-label propagation. Propagation needs diameter-many rounds; a
-    * deep chain (rare but real in transitive near-dup graphs) blows
+    * SoCC '14) — [[q35]]'s distributed arm above [[CcLocalMaxEdges]].
+    * Min-label propagation would need diameter-many rounds; a deep
+    * chain (rare but real in transitive near-dup graphs) blows
     * through any fixed cap. Star rounds contract components in
     * O(log n) rounds regardless of diameter: large-star points every
     * higher-numbered neighbor at the neighborhood minimum, small-star
@@ -888,9 +856,9 @@ object Dedup {
     * edge relation (two 16-byte-row shuffles; AQE reuses the
     * exchange), `localCheckpoint` truncates lineage, and the driver
     * reads one checksum row per round — never data. Labels are
-    * identical to q35's (comp = min node id), spec'd both against
-    * q35 on the real near-dup graph and on a 300-node chain whose
-    * diameter no propagation cap would survive.
+    * identical to the driver union-find's (comp = min node id),
+    * spec'd on the real near-dup graph, a planted graph and a
+    * 300-node chain whose diameter no propagation cap would survive.
     */
   def ccLargeSmallStar(edgesIn: DataFrame, maxRounds: Int = 50): DataFrame =
     ccStarWithRounds(edgesIn, maxRounds)._1

@@ -22,6 +22,15 @@ import graft.Tables
   * every customer) without salting because the per-round join is
   * key-balanced after the edge pre-aggregation collapses multi-edges
   * into one weighted row.
+  *
+  * Driver-local regime: at or below [[BroadcastEdgeMaxRows]] edges
+  * every graph kernel runs on the driver over one [[LocalGraph]]
+  * (ascending ids, CSR over the symmetric closure, edge weights). Each
+  * session-cache entry (`wsym`, `tri`) counts its edge relation once
+  * at fill time and builds that graph beside the stored count
+  * ([[sized]]); a query dispatches by comparing the stored count with
+  * its bound, so choosing the arm costs a warm query no Spark job. The
+  * `*On` spec entry points size their input through the same helper.
   */
 object Graph {
 
@@ -72,59 +81,17 @@ object Graph {
       localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
     // one row per trading pair, session-cached (round 14) — the
     // fact-table join + aggregate used to re-run per execution
-    val pairs = purchasePairs(spark, dir)
+    val g = coPurchaseWeighted(spark, dir)
     // round 15: below the edge bound the whole fixpoint runs on the
     // driver (the q135/BPE local-vs-distributed dispatch — in this
     // regime the rank relation broadcasts every round anyway, and the
     // five chained rounds were paying scheduler latency to move a
     // node-sized int64 vector). Identical arithmetic; GraphSpec's
     // imperative twin and the forced-distributed arm pin equality.
-    if (pairs.count() <= localMaxEdges)
-      return pagerankLocal(spark, pairs, iters, personalized = false)
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"),
-        col("w"))
-      .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst"),
-        col("w")))
-    val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("deg"))
-    // (src, dst, w, deg) — the one relation every round joins,
-    // HASH-PARTITIONED ON src by the explicit repartition. Round 14:
-    // the persist/unpersist pair is gone along with the per-round
-    // checkpoints — with all five rounds in ONE plan, every round's
-    // join references the structurally identical ew subtree, so
-    // ReuseExchange computes the repartition exchange once and later
-    // rounds read its shuffle files (the same one-edge-shuffle-total
-    // guarantee the persisted relation gave, without pinning executor
-    // storage; at 1e9 nodes shuffle files spill to disk gracefully
-    // where a pinned relation would evict).
-    val ew = edges.join(deg, Seq("src"))
-      .repartition(col("src"))
-
-    val base = (15L * PrScale) / DampDen
-    // the rounds CHAIN without materialization barriers (round 14):
-    // each round's ranks feed exactly ONE consumer (the next round),
-    // so there is no multi-consumer re-expansion to guard against
-    // (the q75 codegen lesson does not apply) and no per-round driver
-    // read (unlike q35/q124's convergence probes) — per-round
-    // localCheckpoint was 5 extra materialization jobs + scheduler
-    // barriers per execution. All five rounds now run as ONE job whose
-    // stages pipeline; AQE still broadcasts the node-sized ranks side
-    // per round from runtime stage stats.
-    var ranks = deg.select(col("src").as("node"), lit(PrScale).as("pr"))
-    for (_ <- 1 to iters) {
-      ranks = ew.join(ranks, ew("src") === ranks("node"))
-        .selectExpr("dst",
-          s"w * (($DampNum * pr) div ($DampDen * deg)) AS contrib")
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("inflow"))
-        .select(col("dst").as("node"), (lit(base) + col("inflow")).as("pr"))
-    }
-    ranks
-      .select(col("node"),
-        when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
-          .as("kind"),
-        (col("node") / 2).cast("long").as("key"),
-        col("pr"))
-      .orderBy(col("pr").desc, col("node"))
+    val local = g.localUpTo(localMaxEdges)
+    if (local.isDefined)
+      return pagerankLocal(spark, local.get, iters, personalized = false)
+    pagerankRounds(purchasePairs(g), iters, personalized = false)
   }
 
   /** q125: PERSONALIZED PageRank over the purchase graph — teleport
@@ -155,43 +122,76 @@ object Graph {
     */
   def q125(spark: SparkSession, dir: String, iters: Int = 5,
       localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
-    val pairs = purchasePairs(spark, dir) // session-cached, see q121
-    if (pairs.count() <= localMaxEdges) // see q121's dispatch note
-      return pagerankLocal(spark, pairs, iters, personalized = true)
+    val g = coPurchaseWeighted(spark, dir) // session-cached, see q121
+    val local = g.localUpTo(localMaxEdges) // see q121's dispatch note
+    if (local.isDefined)
+      return pagerankLocal(spark, local.get, iters, personalized = true)
+    pagerankRounds(purchasePairs(g), iters, personalized = true)
+  }
+
+  /** The distributed rounds of [[q121]] and, `personalized`, [[q125]]
+    * over the weighted pair relation `(cnode, snode, w)`.
+    */
+  private def pagerankRounds(pairs: DataFrame, iters: Int,
+      personalized: Boolean): DataFrame = {
     val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"),
         col("w"))
       .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst"),
         col("w")))
     val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("deg"))
-    // one reused exchange across the chained rounds — see q121's note
+    // (src, dst, w, deg) — the one relation every round joins,
+    // HASH-PARTITIONED ON src by the explicit repartition. Round 14:
+    // the persist/unpersist pair is gone along with the per-round
+    // checkpoints — with all five rounds in ONE plan, every round's
+    // join references the structurally identical ew subtree, so
+    // ReuseExchange computes the repartition exchange once and later
+    // rounds read its shuffle files (the same one-edge-shuffle-total
+    // guarantee the persisted relation gave, without pinning executor
+    // storage; at 1e9 nodes shuffle files spill to disk gracefully
+    // where a pinned relation would evict).
     val ew = edges.join(deg, Seq("src"))
       .repartition(col("src"))
     val baseUnit = (15L * PrScale) / DampDen
-    // node-sized (node, base) relation: teleport mass lands on seeds
-    // only; built once, CHECKPOINTED (it stays multi-consumer — the
-    // initial vector plus every round's base join — so the barrier
+    // q125's node-sized (node, base) relation: teleport mass lands on
+    // seeds only; built once, CHECKPOINTED (it stays multi-consumer —
+    // the initial vector plus every round's base join — so the barrier
     // still guards against re-expansion), joined back every round
     // (`div` keeps the suppkey recovery in int64 — `/` would go
-    // double). The per-round ranks checkpoints are gone (round 14):
-    // each round feeds exactly one consumer, so the rounds chain into
-    // one job exactly as in q121.
-    val baseRel = deg.select(col("src").as("node"))
-      .withColumn("base",
-        when(expr("node % 2 = 1 AND ((node - 1) div 2) % 10 = 3"),
-          lit(baseUnit)).otherwise(lit(0L)))
-      .localCheckpoint()
-    var ranks = baseRel
-      .select(col("node"),
+    // double)
+    val baseRel =
+      if (!personalized) None
+      else Some(deg.select(col("src").as("node"))
+        .withColumn("base",
+          when(expr("node % 2 = 1 AND ((node - 1) div 2) % 10 = 3"),
+            lit(baseUnit)).otherwise(lit(0L)))
+        .localCheckpoint())
+    // the rounds CHAIN without materialization barriers (round 14):
+    // each round's ranks feed exactly ONE consumer (the next round),
+    // so there is no multi-consumer re-expansion to guard against
+    // (the q75 codegen lesson does not apply) and no per-round driver
+    // read (unlike q35/q124's convergence probes) — per-round
+    // localCheckpoint was 5 extra materialization jobs + scheduler
+    // barriers per execution. All five rounds now run as ONE job whose
+    // stages pipeline; AQE still broadcasts the node-sized ranks side
+    // per round from runtime stage stats.
+    var ranks = baseRel match {
+      case None => deg.select(col("src").as("node"), lit(PrScale).as("pr"))
+      case Some(b) => b.select(col("node"),
         when(col("base") > 0, lit(PrScale)).otherwise(lit(0L)).as("pr"))
+    }
     for (_ <- 1 to iters) {
       val inflow = ew.join(ranks, ew("src") === ranks("node"))
         .selectExpr("dst",
           s"w * (($DampNum * pr) div ($DampDen * deg)) AS contrib")
         .groupBy(col("dst"))
         .agg(sum(col("contrib")).as("inflow"))
-      ranks = inflow
-        .join(baseRel, inflow("dst") === baseRel("node"))
-        .select(col("node"), (col("base") + col("inflow")).as("pr"))
+      ranks = baseRel match {
+        case None =>
+          inflow.select(col("dst").as("node"),
+            (lit(baseUnit) + col("inflow")).as("pr"))
+        case Some(b) => inflow.join(b, inflow("dst") === b("node"))
+          .select(col("node"), (col("base") + col("inflow")).as("pr"))
+      }
     }
     ranks
       .select(col("node"),
@@ -246,60 +246,44 @@ object Graph {
   }
 
   /** Driver-local arm of [[q121]]/[[q125]]: the identical int64
-    * update over dense-indexed edge arrays — contrib(u→v) =
-    * w × ((85·pr(u)) div (100·deg(u))), pr'(v) = base(v) + Σ inflow —
-    * with the personalized variant differing only in the initial
-    * vector and the seed-restricted base, exactly as the distributed
-    * rounds. Integer sums are order-independent, so the arms are
-    * bit-identical (spec-pinned, plus GraphSpec's pre-existing
-    * imperative twins).
+    * update over the [[LocalGraph]]'s CSR rows — contrib(u→v) =
+    * w × ((85·pr(u)) div (100·deg(u))) with deg(u) the row's weight
+    * sum, pr'(v) = base(v) + Σ inflow — with the personalized variant
+    * differing only in the initial vector and the seed-restricted
+    * base, exactly as the distributed rounds. Integer sums are
+    * order-independent, so the arms are bit-identical (spec-pinned,
+    * plus GraphSpec's pre-existing imperative twins).
     */
-  private def pagerankLocal(spark: SparkSession, pairs: DataFrame,
+  private def pagerankLocal(spark: SparkSession, g: LocalGraph,
       iters: Int, personalized: Boolean): DataFrame = {
     import spark.implicits._
-    val rows = pairs.select(col("cnode"), col("snode"), col("w"))
-      .queryExecution.executedPlan.executeCollect()
-    val nP = rows.length
-    val id2ix = new scala.collection.mutable.LongMap[Int](nP * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def ix(id: Long): Int = {
-      val got = id2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = ids.length; id2ix(id) = i; ids += id; i }
-    }
-    val eSrc = new Array[Int](2 * nP)
-    val eDst = new Array[Int](2 * nP)
-    val eW = new Array[Long](2 * nP)
-    var k = 0
-    while (k < nP) {
-      val c = ix(rows(k).getLong(0)); val s = ix(rows(k).getLong(1))
-      val w = rows(k).getLong(2)
-      eSrc(2 * k) = c; eDst(2 * k) = s; eW(2 * k) = w
-      eSrc(2 * k + 1) = s; eDst(2 * k + 1) = c; eW(2 * k + 1) = w
-      k += 1
-    }
-    val nN = ids.length
+    val nN = g.nNodes
     val deg = new Array[Long](nN)
-    k = 0
-    while (k < 2 * nP) { deg(eSrc(k)) += eW(k); k += 1 }
+    var i = 0
+    while (i < nN) {
+      var p = g.off(i)
+      while (p < g.off(i + 1)) { deg(i) += g.wt(p); p += 1 }
+      i += 1
+    }
     val baseUnit = (15L * PrScale) / DampDen
     def isSeed(id: Long): Boolean = id % 2 == 1 && ((id - 1) / 2) % 10 == 3
     val base = new Array[Long](nN)
     var pr = new Array[Long](nN)
-    var i = 0
+    i = 0
     while (i < nN) {
       if (!personalized) { base(i) = baseUnit; pr(i) = PrScale }
-      else if (isSeed(ids(i))) { base(i) = baseUnit; pr(i) = PrScale }
+      else if (isSeed(g.ids(i))) { base(i) = baseUnit; pr(i) = PrScale }
       i += 1
     }
     var it = 0
     while (it < iters) {
       val next = new Array[Long](nN)
-      k = 0
-      while (k < 2 * nP) {
-        val s = eSrc(k)
-        next(eDst(k)) += eW(k) * ((DampNum * pr(s)) / (DampDen * deg(s)))
-        k += 1
+      i = 0
+      while (i < nN) {
+        val q = (DampNum * pr(i)) / (DampDen * deg(i))
+        var p = g.off(i)
+        while (p < g.off(i + 1)) { next(g.adj(p)) += g.wt(p) * q; p += 1 }
+        i += 1
       }
       i = 0
       while (i < nN) { next(i) += base(i); i += 1 }
@@ -309,7 +293,7 @@ object Graph {
     val out = Vector.newBuilder[(Long, String, Long, Long)]
     i = 0
     while (i < nN) {
-      val id = ids(i)
+      val id = g.ids(i)
       out += ((id, if (id % 2 == 0) "cust" else "supp", id / 2, pr(i)))
       i += 1
     }
@@ -348,8 +332,8 @@ object Graph {
     * bound caps the volume.
     */
   def q122(spark: SparkSession, dir: String): DataFrame = {
-    val (_, tris, _) = coPurchaseGraph(spark, dir)
-    triangleCountsFrom(tris)
+    triangleCountsFrom(coPurchaseGraph(spark, dir).tris)
+      .orderBy(col("part"))
   }
 
   /** Edge-relation bound under which the wedge-closing join
@@ -361,7 +345,8 @@ object Graph {
     * join shuffles on the (lo, hi) pair key — the m^1.5 bound caps
     * that volume, and a 100 TB edge set was never broadcastable.
     * Dispatch is by edge COUNT — deterministic for a given graph,
-    * the q34 dispatch discipline.
+    * the q34 dispatch discipline. The same bound gates the driver-local
+    * arms: at or below it a cache fill builds the [[LocalGraph]].
     */
   private[graft] val BroadcastEdgeMaxRows = 4000000L
 
@@ -408,17 +393,142 @@ object Graph {
       spark.read.parquet(p)
     }
 
+  /** The driver-local graph every sub-bound kernel runs over. `ids`
+    * ascend, and a node's dense index is its position in them; row u
+    * of the CSR is `adj(off(u) until off(u + 1))`, the dense indices of
+    * u's neighbours in the symmetric closure, sorted, with `wt` the
+    * parallel weights (1 for an unweighted input). Every input row
+    * lands once in each endpoint's row — no dedup, each weight stays
+    * on its edge — so a kernel sees exactly the multiset its
+    * distributed arm reads. The input row count lives beside it, in
+    * [[Sized]].
+    */
+  private[graft] final class LocalGraph(val ids: Array[Long],
+      val off: Array[Int], val adj: Array[Int], val wt: Array[Long]) {
+    def nNodes: Int = ids.length
+
+    /** Dense index of `id`; negative when `id` is no node. */
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+  }
+
+  private[graft] object LocalGraph {
+
+    /** One `executeCollect` of the `(a, b)` or `(a, b, w)` columns —
+      * the first two or three, by position. InternalRows with
+      * primitive `getLong`: the external Row conversion was the
+      * driver arms' dominant cost.
+      */
+    def apply(edges: DataFrame): LocalGraph = {
+      val cols = edges.columns.take(3)
+      val rows = edges.select(cols.map(col): _*)
+        .queryExecution.executedPlan.executeCollect()
+      val nR = rows.length
+      // slot 2r is row r's a→b, slot 2r+1 its b→a; slot d's source is
+      // end(d) and its target end(d ^ 1)
+      val ends = new Array[Long](2 * nR)
+      var r = 0
+      while (r < nR) {
+        ends(2 * r) = rows(r).getLong(0); ends(2 * r + 1) = rows(r).getLong(1)
+        r += 1
+      }
+      val sorted = ends.clone()
+      java.util.Arrays.sort(sorted)
+      var n = 0
+      var d = 0
+      while (d < sorted.length) {
+        if (n == 0 || sorted(d) != sorted(n - 1)) { sorted(n) = sorted(d); n += 1 }
+        d += 1
+      }
+      val ids = java.util.Arrays.copyOf(sorted, n)
+      val ix = new Array[Int](2 * nR)
+      d = 0
+      while (d < ix.length) {
+        ix(d) = java.util.Arrays.binarySearch(ids, ends(d)); d += 1
+      }
+      val off = new Array[Int](n + 1)
+      d = 0
+      while (d < ix.length) { off(ix(d) + 1) += 1; d += 1 }
+      var u = 0
+      while (u < n) { off(u + 1) += off(u); u += 1 }
+      // counting sort of the slots by target, then a stable scatter by
+      // source: every row comes out sorted by neighbour index (a node's
+      // in- and out-slot counts agree, so `off` buckets both passes)
+      val fill = new Array[Int](n)
+      val byTarget = new Array[Int](ix.length)
+      d = 0
+      while (d < ix.length) {
+        val t = ix(d ^ 1); byTarget(off(t) + fill(t)) = d; fill(t) += 1
+        d += 1
+      }
+      java.util.Arrays.fill(fill, 0)
+      val adj = new Array[Int](ix.length)
+      val wt = new Array[Long](ix.length)
+      val weighted = cols.length == 3
+      var k = 0
+      while (k < byTarget.length) {
+        val sl = byTarget(k); val src = ix(sl)
+        val p = off(src) + fill(src); fill(src) += 1
+        adj(p) = ix(sl ^ 1)
+        wt(p) = if (weighted) rows(sl >> 1).getLong(2) else 1L
+        k += 1
+      }
+      new LocalGraph(ids, off, adj, wt)
+    }
+  }
+
+  /** An edge relation with its row count and — when that count was at
+    * most the bound it was [[sized]] against — its [[LocalGraph]]. The
+    * value a `wsym` cache entry holds, and the edge half of a `tri`
+    * one.
+    */
+  private[graft] final case class Sized(edges: DataFrame, nEdges: Long,
+      local: Option[LocalGraph]) {
+
+    /** The driver-local graph when the stored count is at most `bound`:
+      * the dispatch every production graph query makes, with no Spark
+      * job (`bound = 0` forces the distributed arm).
+      */
+    def localUpTo(bound: Long): Option[LocalGraph] =
+      local.filter(_ => nEdges <= bound)
+  }
+
+  /** The one dispatch helper: count `edges` once, and build the
+    * [[LocalGraph]] only when the count is at most `localMaxEdges`.
+    */
+  private[graft] def sized(edges: DataFrame, localMaxEdges: Long): Sized = {
+    val n = edges.count()
+    Sized(edges, n, if (n <= localMaxEdges) Some(LocalGraph(edges)) else None)
+  }
+
+  /** A `tri` cache entry: the sized canonical edge relation, its
+    * materialized triangle relation `(apex, lo, hi)` and that
+    * relation's row count.
+    */
+  private final case class Triangles(graph: Sized, tris: DataFrame,
+      nTris: Long)
+
+  /** Enumerate `g`'s triangles, pin them via [[pinByRows]] (triangle
+    * count proxied by the edge count for the dispatch — same order for
+    * sparse graphs; both arms scale-safe regardless) and count them.
+    */
+  private def trianglesOf(g: Sized): Triangles = {
+    val (tris, oriented) = triangleEnum(g)
+    val pinned = pinByRows(tris, g.nEdges, ResultPinMaxRows, "tris")
+    oriented.unpersist(blocking = false)
+    Triangles(g, pinned, pinned.count())
+  }
+
   /** Session-scoped cache of the co-purchase graph's edge relation
     * AND its materialized triangle relation, keyed by (session, dir)
     * — the r11 verdict's shared-wedge item: [[q122]] and [[q127]]
     * both consume the SAME oriented-wedge enumeration, and
     * re-enumerating it per query was the single biggest avoidable
     * cost in the graph family (sf1: ~53 s combined, roughly half of
-    * it duplicate work). The cache holds `(pairs, tris, nPairs)` with
-    * both relations materialized via [[pinByRows]] (triangle count
-    * proxied by the edge count for the dispatch — same order for
-    * sparse graphs; both arms scale-safe regardless), so the second
-    * consumer aggregates straight from the materialized triangles.
+    * it duplicate work). The cache holds a [[Triangles]]: the edge
+    * relation sized once (count plus, below the bound, its
+    * [[LocalGraph]]) and the triangle relation materialized by
+    * [[trianglesOf]] with its count, so the second consumer
+    * aggregates straight from the materialized triangles.
     *
     * Round 13: storage moved to [[graft.SessionCaches]] — keys are
     * `sessionUUID` (identity-hash keys could collide after GC and
@@ -448,12 +558,11 @@ object Graph {
     * the fact-table join + aggregate per bench run; now q121, q124,
     * q125, q126, q129 and q130 all share ONE fill per (session, dir).
     */
-  private def purchasePairs(spark: SparkSession, dir: String): DataFrame =
-    coPurchaseWeighted(spark, dir)
-      .select(col("a").as("cnode"), col("b").as("snode"), col("w"))
+  private def purchasePairs(g: Sized): DataFrame =
+    g.edges.select(col("a").as("cnode"), col("b").as("snode"), col("w"))
 
   private def coPurchaseGraph(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, Long) =
+      dir: String): Triangles =
     graft.SessionCaches.getOrBuild(spark, "tri", dir) {
       val li = Tables(spark, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -465,22 +574,17 @@ object Graph {
         .select(col("a.pk").as("lo"), col("b.pk").as("hi"))
         .distinct()
         .localCheckpoint()
-      val nPairs = pairs.count()
-      val (tris, oriented) = triangleEnum(pairs, BroadcastEdgeMaxRows)
-      val trisMat = pinByRows(tris, nPairs, ResultPinMaxRows, "tris")
-      oriented.unpersist(blocking = false)
-      (pairs, trisMat, nPairs)
+      trianglesOf(sized(pairs, BroadcastEdgeMaxRows))
     }
 
   /** [[q122]]'s corner aggregation over a triangle relation: every
     * triangle credits its three corners via one explode; node-sized
-    * output.
+    * `(part, triangles)` output, shared with [[q131]].
     */
   private def triangleCountsFrom(tris: DataFrame): DataFrame =
     tris
       .select(explode(array(col("apex"), col("lo"), col("hi"))).as("part"))
       .groupBy(col("part")).agg(count(lit(1)).as("triangles"))
-      .orderBy(col("part"))
 
   /** [[q122]]'s core over an arbitrary canonical `(lo, hi)` edge
     * relation (lo < hi, deduplicated) — spec entry point for planted
@@ -489,13 +593,11 @@ object Graph {
   private[graft] def trianglesOn(pairs: DataFrame,
       broadcastMaxRows: Long = BroadcastEdgeMaxRows,
       checkpointResult: Boolean = true): DataFrame = {
-    val (tris, oriented) = triangleEnum(pairs, broadcastMaxRows)
+    val (tris, oriented) = triangleEnum(sized(pairs, broadcastMaxRows))
     // the node-sized result materializes behind a checkpoint so the
     // wedge cache can be released before returning (plan specs skip
     // the checkpoint to inspect the join shape)
-    val agg = tris
-      .select(explode(array(col("apex"), col("lo"), col("hi"))).as("part"))
-      .groupBy(col("part")).agg(count(lit(1)).as("triangles"))
+    val agg = triangleCountsFrom(tris)
     val counts = if (checkpointResult) {
       val c = agg.localCheckpoint()
       oriented.unpersist(blocking = false)
@@ -512,21 +614,23 @@ object Graph {
   }
 
   /** The triangle enumeration shared by [[q122]], [[q127]] and
-    * [[q135]]: returns the triangle corner relation
+    * [[q135]] over a [[sized]] canonical `(lo, hi)` edge relation:
+    * returns the triangle corner relation
     * `(apex, lo, hi)` (lo < hi; apex the (deg,id)-minimum corner)
     * and a second relation callers unpersist once their aggregate
     * materializes (the persisted oriented edge relation in the
     * shuffle arm; a no-op placeholder in the broadcast arm).
     *
-    * Below `broadcastMaxRows` the enumeration is adjacency-merge
+    * When `g` carries its [[LocalGraph]] (at most the bound it was
+    * sized against) the enumeration is adjacency-merge
     * ("compact-forward", Latapy '08): the old arm already shipped the
     * FULL edge set to every task as a broadcast hash relation (built
     * on the driver), yet still materialized the O(m^1.5) wedge stream
     * through a 41M-row join probe at sf0.1 — 5.4 s of the 9.2 s tri
     * fill, measured round 15. Same driver/executor memory class, but
-    * the wedge stream never exists: each canonical edge (lo, hi)
-    * orients to (u, v) via the degree map and two-pointer-merges the
-    * sorted out-adjacency arrays adj⁺(u) ∩ adj⁺(v) — every match is a
+    * the wedge stream never exists: each oriented edge (u, v)
+    * two-pointer-merges the sorted out-adjacency rows
+    * adj⁺(u) ∩ adj⁺(v) — every match is a
     * triangle, each triangle found exactly once (w ∈ adj⁺(u) ∩ adj⁺(v)
     * exists only for the oriented edge (u, v) with v → w; the probe at
     * (u, w) cannot see v because orientation is antisymmetric). Rows
@@ -537,11 +641,11 @@ object Graph {
     * oriented-wedge self-join + Bloom-screened closing join runs as
     * before (O(m^1.5) wedges, shuffle volume ~triangles + fpp·wedges).
     */
-  private def triangleEnum(pairs: DataFrame,
-      broadcastMaxRows: Long): (DataFrame, DataFrame) = {
-    val nPairsEarly = pairs.count()
-    if (nPairsEarly <= broadcastMaxRows)
-      return (trianglesByAdjacencyMerge(pairs), pairs.limit(0))
+  private def triangleEnum(g: Sized): (DataFrame, DataFrame) = {
+    val pairs = g.edges
+    if (g.local.isDefined)
+      return (trianglesByAdjacencyMerge(pairs.sparkSession, g.local.get),
+        pairs.limit(0))
     val deg = pairs.select(col("lo").as("node"))
       .unionAll(pairs.select(col("hi").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -580,7 +684,7 @@ object Graph {
     // shuffle volume cut to ~triangles + fpp·wedges.
     val bloom = pairs
       .select(xxhash64(col("lo"), col("hi")).as("k"))
-      .stat.bloomFilter("k", math.max(1000L, nPairsEarly), WedgeBloomFpp)
+      .stat.bloomFilter("k", math.max(1000L, g.nEdges), WedgeBloomFpp)
     // the probe key is the same xxhash64(lo, hi) (seed 42) the
     // bloom was built over — constructed as a raw Catalyst tree so
     // the custom expression nests without a registered SQL name
@@ -596,66 +700,58 @@ object Graph {
     (tris, oriented)
   }
 
-  /** The below-broadcast-bound triangle enumeration: driver-built
-    * degree + sorted out-adjacency maps (the same edge relation the
-    * old arm collected to the driver to BUILD the broadcast hash
-    * join), one map stage over the canonical edges, two-pointer merge
-    * of adj⁺(u) ∩ adj⁺(v) per edge. No wedge stream, no join — the
-    * emitted rows are exactly the wedge arm's `(apex, lo, hi)`.
+  /** The below-broadcast-bound triangle enumeration: the oriented
+    * out-rows adj⁺(u) filtered from the [[LocalGraph]]'s sorted CSR
+    * rows on the driver (u → v when (deg, id)(u) < (deg, id)(v);
+    * index order is id order, so each filtered row stays sorted),
+    * broadcast to one map stage over node ranges, two-pointer merge of
+    * adj⁺(u) ∩ adj⁺(v) per oriented edge. No wedge stream, no join —
+    * the emitted rows are exactly the wedge arm's `(apex, lo, hi)`.
     */
-  private def trianglesByAdjacencyMerge(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
+  private def trianglesByAdjacencyMerge(spark: SparkSession,
+      g: LocalGraph): DataFrame = {
     import spark.implicits._
-    val edges = pairs.select(col("lo"), col("hi"))
-      .as[(Long, Long)].collect()
-    val deg = new scala.collection.mutable.LongMap[Int](edges.length * 2)
-    edges.foreach { case (l, h) =>
-      deg(l) = deg.getOrElse(l, 0) + 1
-      deg(h) = deg.getOrElse(h, 0) + 1
+    val n = g.nNodes
+    def deg(u: Int): Int = g.off(u + 1) - g.off(u)
+    def before(u: Int, v: Int): Boolean =
+      deg(u) < deg(v) || (deg(u) == deg(v) && u < v)
+    val outOff = new Array[Int](n + 1)
+    val outAdj = new scala.collection.mutable.ArrayBuilder.ofInt
+    var u = 0
+    while (u < n) {
+      var p = g.off(u)
+      while (p < g.off(u + 1)) {
+        if (before(u, g.adj(p))) outAdj += g.adj(p)
+        p += 1
+      }
+      outOff(u + 1) = outAdj.length
+      u += 1
     }
-    // (deg, id)-orientation: u -> v when deg(u) < deg(v), id tiebreak
-    @inline def orientLoFirst(l: Long, h: Long): Boolean = {
-      val dl = deg(l); val dh = deg(h)
-      dl < dh || (dl == dh && l < h)
-    }
-    val outDeg = new scala.collection.mutable.LongMap[Int](edges.length)
-    edges.foreach { case (l, h) =>
-      val u = if (orientLoFirst(l, h)) l else h
-      outDeg(u) = outDeg.getOrElse(u, 0) + 1
-    }
-    val adj = new scala.collection.mutable.LongMap[Array[Long]](outDeg.size)
-    val fill = new scala.collection.mutable.LongMap[Int](outDeg.size)
-    outDeg.foreachEntry((u, d) => adj(u) = new Array[Long](d))
-    edges.foreach { case (l, h) =>
-      val (u, v) = if (orientLoFirst(l, h)) (l, h) else (h, l)
-      val i = fill.getOrElse(u, 0)
-      adj(u)(i) = v
-      fill(u) = i + 1
-    }
-    adj.foreachValue(java.util.Arrays.sort)
-    val bc = spark.sparkContext.broadcast((deg, adj))
-    val empty = Array.emptyLongArray
-    pairs.select(col("lo"), col("hi")).as[(Long, Long)]
-      .mapPartitions { it =>
-        val (degM, adjM) = bc.value
-        it.flatMap { case (l, h) =>
-          val dl = degM(l); val dh = degM(h)
-          val (u, v) =
-            if (dl < dh || (dl == dh && l < h)) (l, h) else (h, l)
-          val au = adjM.getOrElse(u, empty)
-          val av = adjM.getOrElse(v, empty)
+    val bc = spark.sparkContext.broadcast((g.ids, outOff, outAdj.result()))
+    spark.range(0L, n.toLong, 1L, spark.sparkContext.defaultParallelism)
+      .as[Long]
+      .mapPartitions { us =>
+        val (ids, oo, oa) = bc.value
+        us.flatMap { ul =>
+          val u = ul.toInt
           val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-          var i = 0
-          var j = 0
-          while (i < au.length && j < av.length) {
-            val x = au(i); val y = av(j)
-            if (x == y) {
-              // triangle u→v, u→w, v→w with w = x; closing pair in
-              // canonical id order, apex = the (deg,id)-min corner u
-              if (v < x) out += ((u, v, x)) else out += ((u, x, v))
-              i += 1; j += 1
-            } else if (x < y) i += 1
-            else j += 1
+          var e = oo(u)
+          while (e < oo(u + 1)) {
+            val v = oa(e)
+            var i = oo(u)
+            var j = oo(v)
+            while (i < oo(u + 1) && j < oo(v + 1)) {
+              val x = oa(i); val y = oa(j)
+              if (x == y) {
+                // triangle u→v, u→w, v→w with w = x; closing pair in
+                // canonical id order, apex = the (deg,id)-min corner u
+                if (v < x) out += ((ids(u), ids(v), ids(x)))
+                else out += ((ids(u), ids(x), ids(v)))
+                i += 1; j += 1
+              } else if (x < y) i += 1
+              else j += 1
+            }
+            e += 1
           }
           out
         }
@@ -689,8 +785,8 @@ object Graph {
     * edge-sized result.
     */
   def q127(spark: SparkSession, dir: String): DataFrame = {
-    val (pairs, tris, nPairs) = coPurchaseGraph(spark, dir)
-    edgeJaccardFrom(pairs, tris, nPairs, ResultPinMaxRows)
+    val t = coPurchaseGraph(spark, dir)
+    edgeJaccardFrom(t.graph.edges, t.tris, t.graph.nEdges, ResultPinMaxRows)
   }
 
   /** [[q127]]'s support/Jaccard aggregation over an edge relation and
@@ -748,9 +844,9 @@ object Graph {
   private[graft] def edgeJaccardOn(pairs: DataFrame,
       broadcastMaxRows: Long = BroadcastEdgeMaxRows,
       pinMaxRows: Long = ResultPinMaxRows): DataFrame = {
-    val (tris, oriented) = triangleEnum(pairs, broadcastMaxRows)
-    val out =
-      edgeJaccardFrom(pairs, tris, pairs.count(), pinMaxRows)
+    val g = sized(pairs, broadcastMaxRows)
+    val (tris, oriented) = triangleEnum(g)
+    val out = edgeJaccardFrom(pairs, tris, g.nEdges, pinMaxRows)
     oriented.unpersist(blocking = false)
     out
   }
@@ -903,8 +999,8 @@ object Graph {
     * wedges, Bloom-screened). Degree join is node-sized.
     */
   def q131(spark: SparkSession, dir: String): DataFrame = {
-    val (pairs, tris, _) = coPurchaseGraph(spark, dir)
-    clusteringFrom(pairs, tris)
+    val t = coPurchaseGraph(spark, dir)
+    clusteringFrom(t.graph.edges, t.tris)
   }
 
   /** [[q131]]'s normalization over an edge relation and its triangle
@@ -915,10 +1011,7 @@ object Graph {
     val deg = pairs.select(col("lo").as("part"))
       .unionAll(pairs.select(col("hi").as("part")))
       .groupBy(col("part")).agg(count(lit(1)).as("deg"))
-    val triCnt = tris
-      .select(explode(array(col("apex"), col("lo"), col("hi"))).as("part"))
-      .groupBy(col("part")).agg(count(lit(1)).as("triangles"))
-    deg.join(triCnt, Seq("part"), "left")
+    deg.join(triangleCountsFrom(tris), Seq("part"), "left")
       .na.fill(0L, Seq("triangles"))
       .select(col("part"), col("deg"), col("triangles"),
         expr("deg * (deg - 1) div 2").as("wedges"),
@@ -933,7 +1026,7 @@ object Graph {
     */
   private[graft] def clusteringOn(pairs: DataFrame,
       broadcastMaxRows: Long = BroadcastEdgeMaxRows): DataFrame = {
-    val (tris, oriented) = triangleEnum(pairs, broadcastMaxRows)
+    val (tris, oriented) = triangleEnum(sized(pairs, broadcastMaxRows))
     val out = clusteringFrom(pairs, tris).localCheckpoint()
     oriented.unpersist(blocking = false)
     out.orderBy(col("part"))
@@ -1067,7 +1160,8 @@ object Graph {
     */
   def q129(spark: SparkSession, dir: String, k: Long = 60L,
       rounds: Int = 4): DataFrame =
-    kcoreOn(coPurchaseWeighted(spark, dir), k, rounds, strict = true)
+    kcore(coPurchaseWeighted(spark, dir), k, rounds, BroadcastEdgeMaxRows,
+      strict = true)
 
   /** The weighted customer–supplier purchase graph [[q129]] and
     * [[q130]] peel: node ids disambiguated by parity (customer = 2·ck,
@@ -1078,12 +1172,15 @@ object Graph {
     * groupBy per query; now the first consumer materializes the edge
     * relation once per (session, dir) via the same [[pinByRows]] size
     * dispatch (heap at or below [[ResultPinMaxRows]], parquet temp
-    * above — a 100 TB edge relation must never pin executor memory).
-    * Deterministic for a given dir ⇒ results bit-identical warm or
-    * cold; the *On spec entry points bypass the cache entirely.
+    * above — a 100 TB edge relation must never pin executor memory),
+    * [[sized]] at fill time: the entry keeps the edge count and, below
+    * [[BroadcastEdgeMaxRows]], the [[LocalGraph]] every driver-local
+    * kernel of the six consumers runs over. Deterministic for a given
+    * dir ⇒ results bit-identical warm or cold; the *On spec entry
+    * points bypass the cache entirely.
     */
   private def coPurchaseWeighted(spark: SparkSession,
-      dir: String): DataFrame =
+      dir: String): Sized =
     graft.SessionCaches.getOrBuild(spark, "wsym", dir) {
       val li = Tables(spark, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
@@ -1093,13 +1190,13 @@ object Graph {
         .groupBy((col("ck") * 2).as("a"), (col("sk") * 2 + 1).as("b"))
         .agg(count(lit(1)).as("w"))
         .localCheckpoint()
-      val n = w.count()
-      if (n <= ResultPinMaxRows) w
+      val g = sized(w, BroadcastEdgeMaxRows)
+      if (g.nEdges <= ResultPinMaxRows) g
       else {
         // re-pin the big arm to a parquet temp and release the heap
-        val spilled = pinByRows(w, n, 0L, "wsym")
+        val spilled = pinByRows(w, g.nEdges, 0L, "wsym")
         w.unpersist(blocking = false)
-        spilled
+        g.copy(edges = spilled)
       }
     }
 
@@ -1196,12 +1293,17 @@ object Graph {
   private[graft] def kcoreOn(pairs: DataFrame, k: Long, rounds: Int,
       broadcastMaxRows: Long = BroadcastEdgeMaxRows,
       strict: Boolean = false,
-      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
+      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame =
+    kcore(sized(pairs, localMaxEdges), k, rounds, broadcastMaxRows, strict)
+
+  private def kcore(g: Sized, k: Long, rounds: Int,
+      broadcastMaxRows: Long, strict: Boolean): DataFrame = {
     // round 15: below the edge bound the peel runs on the driver —
     // the q135/q121 dispatch note; each distributed round was a
     // filter + checkpoint + count + join + sum over node-sized sets
-    if (pairs.count() <= localMaxEdges)
-      return kcoreLocalOn(pairs, k, rounds, strict)
+    if (g.local.isDefined)
+      return kcoreLocal(g.edges.sparkSession, g.local.get, k, rounds, strict)
+    val pairs = g.edges
     val sym = pairs.select(col("a").as("node"), col("b").as("peer"),
         col("w"))
       .unionAll(pairs.select(col("b").as("node"), col("a").as("peer"),
@@ -1220,106 +1322,80 @@ object Graph {
     wd.orderBy(col("node"))
   }
 
-  /** Dense-indexed weighted symmetric graph with the [[peelToCore]]
-    * loop on primitive arrays — the driver-local arm shared by
-    * [[kcoreOn]] and [[coreLevelsOn]]. Mirrors the distributed loop
-    * exactly: the within-subgraph weighted-degree relation has a row
-    * only for alive nodes with ≥ 1 alive peer (the join's semantics —
-    * tracked as `has`), next = {alive with a row and wdeg ≥ k},
-    * converged when nothing drops, strict throws the same message.
+  /** The [[peelToCore]] loop on the [[LocalGraph]]'s primitive
+    * arrays — the driver-local arm shared by [[kcoreOn]] and
+    * [[coreLevelsOn]]. Mirrors the distributed loop exactly: the
+    * within-subgraph weighted-degree relation has a row only for alive
+    * nodes with ≥ 1 alive peer (the join's semantics — tracked as
+    * `has`), next = {alive with a row and wdeg ≥ k}, converged when
+    * nothing drops, strict throws the same message. Returns
+    * (aliveAfter, wdeg, has) — the wdeg/has pair covers aliveAfter by
+    * the loop invariant.
     */
-  private final class WGraphLocal(pairs: DataFrame) {
-    private val rows = pairs.select(col("a"), col("b"), col("w"))
-      .queryExecution.executedPlan.executeCollect()
-    private val id2ix = new scala.collection.mutable.LongMap[Int](rows.length * 2)
-    private val idsBuf = new scala.collection.mutable.ArrayBuffer[Long]()
-    private def ix(id: Long): Int = {
-      val got = id2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = idsBuf.length; id2ix(id) = i; idsBuf += id; i }
-    }
-    private val nP = rows.length
-    private val eA = new Array[Int](nP)
-    private val eB = new Array[Int](nP)
-    private val eW = new Array[Long](nP)
-    locally {
-      var k = 0
-      while (k < nP) {
-        eA(k) = ix(rows(k).getLong(0)); eB(k) = ix(rows(k).getLong(1))
-        eW(k) = rows(k).getLong(2)
-        k += 1
-      }
-    }
-    val ids: Array[Long] = idsBuf.toArray
-    val nNodes: Int = ids.length
-
-    /** (wdeg, hasAlivePeer) within the alive-induced subgraph. */
+  private def peelLocal(g: LocalGraph, alive0: Array[Boolean], k: Long,
+      rounds: Int,
+      strict: Boolean): (Array[Boolean], Array[Long], Array[Boolean]) = {
+    val nNodes = g.nNodes
+    // (wdeg, hasAlivePeer) within the alive-induced subgraph
     def wdegWithin(alive: Array[Boolean]): (Array[Long], Array[Boolean]) = {
       val wd = new Array[Long](nNodes)
       val has = new Array[Boolean](nNodes)
-      var k = 0
-      while (k < nP) {
-        val a = eA(k); val b = eB(k)
-        if (alive(a) && alive(b)) {
-          wd(a) += eW(k); wd(b) += eW(k)
-          has(a) = true; has(b) = true
+      var u = 0
+      while (u < nNodes) {
+        if (alive(u)) {
+          var p = g.off(u)
+          while (p < g.off(u + 1)) {
+            if (alive(g.adj(p))) { wd(u) += g.wt(p); has(u) = true }
+            p += 1
+          }
         }
-        k += 1
+        u += 1
       }
       (wd, has)
     }
-
-    /** [[peelToCore]] verbatim on arrays; returns
-      * (aliveAfter, wdeg, has) — the wdeg/has pair covers aliveAfter
-      * by the loop invariant.
-      */
-    def peel(alive0: Array[Boolean], k: Long, rounds: Int,
-        strict: Boolean): (Array[Boolean], Array[Long], Array[Boolean]) = {
-      var alive = alive0
-      var n: Long = alive0.count(identity).toLong
-      var (wd, has) = wdegWithin(alive)
-      var converged = false
-      var i = 0
-      while (i < rounds && !converged) {
-        val next = new Array[Boolean](nNodes)
-        var m = 0L
-        var e = 0
-        while (e < nNodes) {
-          if (alive(e) && has(e) && wd(e) >= k) { next(e) = true; m += 1 }
-          e += 1
-        }
-        if (m == n) converged = true
-        else {
-          alive = next
-          val r = wdegWithin(alive)
-          wd = r._1; has = r._2
-          n = m
-        }
-        i += 1
+    var alive = alive0
+    var n: Long = alive0.count(identity).toLong
+    var (wd, has) = wdegWithin(alive)
+    var converged = false
+    var i = 0
+    while (i < rounds && !converged) {
+      val next = new Array[Boolean](nNodes)
+      var m = 0L
+      var e = 0
+      while (e < nNodes) {
+        if (alive(e) && has(e) && wd(e) >= k) { next(e) = true; m += 1 }
+        e += 1
       }
-      if (strict && !converged) {
-        var m = 0L
-        var e = 0
-        while (e < nNodes) {
-          if (alive(e) && has(e) && wd(e) >= k) m += 1
-          e += 1
-        }
-        if (m != n)
-          throw new IllegalStateException(
-            s"k-core peel (k=$k) not converged within $rounds rounds — " +
-              "raise the round budget (and the oracle twin's unroll) " +
-              "for this graph")
+      if (m == n) converged = true
+      else {
+        alive = next
+        val r = wdegWithin(alive)
+        wd = r._1; has = r._2
+        n = m
       }
-      (alive, wd, has)
+      i += 1
     }
+    if (strict && !converged) {
+      var m = 0L
+      var e = 0
+      while (e < nNodes) {
+        if (alive(e) && has(e) && wd(e) >= k) m += 1
+        e += 1
+      }
+      if (m != n)
+        throw new IllegalStateException(
+          s"k-core peel (k=$k) not converged within $rounds rounds — " +
+            "raise the round budget (and the oracle twin's unroll) " +
+            "for this graph")
+    }
+    (alive, wd, has)
   }
 
-  private def kcoreLocalOn(pairs: DataFrame, k: Long, rounds: Int,
-      strict: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
+  private def kcoreLocal(spark: SparkSession, g: LocalGraph, k: Long,
+      rounds: Int, strict: Boolean): DataFrame = {
     import spark.implicits._
-    val g = new WGraphLocal(pairs)
-    val (alive, wd, has) = g.peel(Array.fill(g.nNodes)(true), k, rounds, strict)
+    val (alive, wd, has) =
+      peelLocal(g, Array.fill(g.nNodes)(true), k, rounds, strict)
     val out = Vector.newBuilder[(Long, Long)]
     var i = 0
     while (i < g.nNodes) {
@@ -1330,15 +1406,13 @@ object Graph {
       .orderBy(col("node"))
   }
 
-  private def coreLevelsLocalOn(pairs: DataFrame, ladder: Seq[Long],
-      rounds: Int, strict: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
+  private def coreLevelsLocal(spark: SparkSession, g: LocalGraph,
+      ladder: Seq[Long], rounds: Int, strict: Boolean): DataFrame = {
     import spark.implicits._
-    val g = new WGraphLocal(pairs)
     val level = new Array[Long](g.nNodes)
     var alive = Array.fill(g.nNodes)(true)
     ladder.foreach { k =>
-      alive = g.peel(alive, k, rounds, strict)._1
+      alive = peelLocal(g, alive, k, rounds, strict)._1
       var i = 0
       while (i < g.nNodes) { if (alive(i)) level(i) = k; i += 1 }
     }
@@ -1421,8 +1495,8 @@ object Graph {
     * rung survivors + one max aggregate.
     */
   def q130(spark: SparkSession, dir: String): DataFrame =
-    coreLevelsOn(coPurchaseWeighted(spark, dir), CorenessLadder,
-      CorenessRounds, strict = true)
+    coreLevels(coPurchaseWeighted(spark, dir), CorenessLadder,
+      CorenessRounds, BroadcastEdgeMaxRows, strict = true)
 
   /** [[q130]]'s core over an arbitrary weighted `(a, b, w)` edge
     * relation — spec entry point for planted graphs. The ladder must
@@ -1431,11 +1505,18 @@ object Graph {
   private[graft] def coreLevelsOn(pairs: DataFrame, ladder: Seq[Long],
       rounds: Int, broadcastMaxRows: Long = BroadcastEdgeMaxRows,
       strict: Boolean = false,
-      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
+      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame =
+    coreLevels(sized(pairs, localMaxEdges), ladder, rounds,
+      broadcastMaxRows, strict)
+
+  private def coreLevels(g: Sized, ladder: Seq[Long], rounds: Int,
+      broadcastMaxRows: Long, strict: Boolean): DataFrame = {
     require(ladder.nonEmpty && ladder.zip(ladder.tail).forall {
       case (a, b) => a < b }, s"ladder must ascend strictly: $ladder")
-    if (pairs.count() <= localMaxEdges) // see kcoreOn's dispatch note
-      return coreLevelsLocalOn(pairs, ladder, rounds, strict)
+    if (g.local.isDefined) // see kcore's dispatch note
+      return coreLevelsLocal(g.edges.sparkSession, g.local.get, ladder,
+        rounds, strict)
+    val pairs = g.edges
     val sym = pairs.select(col("a").as("node"), col("b").as("peer"),
         col("w"))
       .unionAll(pairs.select(col("b").as("node"), col("a").as("peer"),
@@ -1535,16 +1616,15 @@ object Graph {
     */
   def q124(spark: SparkSession, dir: String, maxHops: Int = 12,
       localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
-    // the weighted pair aggregate's key set IS the distinct pair set
-    val pairs = purchasePairs(spark, dir).select(col("cnode"), col("snode"))
+    val g = coPurchaseWeighted(spark, dir)
     // round 15: below the edge bound the level loop runs on the
     // driver (the q121/q135 dispatch note) — each distributed level
     // was a join + distinct + anti-join + checkpoint + isEmpty probe
     // over a frontier of a few thousand 8-byte ids
-    if (pairs.count() <= localMaxEdges) {
-      val local = bfsLocal(spark, pairs, maxHops)
-      if (local.isDefined) return local.get
-    }
+    val local = g.localUpTo(localMaxEdges).flatMap(bfsLocal(spark, _, maxHops))
+    if (local.isDefined) return local.get
+    // the weighted pair aggregate's key set IS the distinct pair set
+    val pairs = purchasePairs(g).select(col("cnode"), col("snode"))
     val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
       .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
       .repartition(col("src")).localCheckpoint()
@@ -1571,55 +1651,19 @@ object Graph {
     settled.orderBy(col("hops"), col("node"))
   }
 
-  /** Driver-local arm of [[q124]]: level-synchronous BFS over a
-    * dense-indexed CSR adjacency from the seed (the smallest odd
-    * node), levels capped at `maxHops` exactly like the distributed
-    * loop. Returns None when the graph has no supplier node (the
-    * distributed arm's null-seed degenerate keeps that path).
+  /** Driver-local arm of [[q124]]: level-synchronous BFS over the
+    * [[LocalGraph]]'s CSR rows from the seed (the first odd id, i.e.
+    * the smallest supplier node), levels capped at `maxHops` exactly
+    * like the distributed loop. Returns None when the graph has no
+    * supplier node (the distributed arm's null-seed degenerate keeps
+    * that path).
     */
-  private def bfsLocal(spark: SparkSession, pairs: DataFrame,
+  private def bfsLocal(spark: SparkSession, g: LocalGraph,
       maxHops: Int): Option[DataFrame] = {
     import spark.implicits._
-    val rows = pairs.select(col("cnode"), col("snode"))
-      .queryExecution.executedPlan.executeCollect()
-    val nP = rows.length
-    val id2ix = new scala.collection.mutable.LongMap[Int](nP * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def ix(id: Long): Int = {
-      val got = id2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = ids.length; id2ix(id) = i; ids += id; i }
-    }
-    val eA = new Array[Int](nP); val eB = new Array[Int](nP)
-    var k = 0
-    while (k < nP) {
-      eA(k) = ix(rows(k).getLong(0)); eB(k) = ix(rows(k).getLong(1))
-      k += 1
-    }
-    val nN = ids.length
-    var seed = -1
-    var seedId = Long.MaxValue
-    var i = 0
-    while (i < nN) {
-      if (ids(i) % 2 == 1 && ids(i) < seedId) { seedId = ids(i); seed = i }
-      i += 1
-    }
+    val nN = g.nNodes
+    val seed = g.ids.indexWhere(_ % 2 == 1)
     if (seed < 0) return None
-    // CSR over the symmetric closure
-    val degC = new Array[Int](nN)
-    k = 0
-    while (k < nP) { degC(eA(k)) += 1; degC(eB(k)) += 1; k += 1 }
-    val off = new Array[Int](nN + 1)
-    i = 0
-    while (i < nN) { off(i + 1) = off(i) + degC(i); i += 1 }
-    val adj = new Array[Int](2 * nP)
-    val fill = new Array[Int](nN)
-    k = 0
-    while (k < nP) {
-      adj(off(eA(k)) + fill(eA(k))) = eB(k); fill(eA(k)) += 1
-      adj(off(eB(k)) + fill(eB(k))) = eA(k); fill(eB(k)) += 1
-      k += 1
-    }
     val hops = Array.fill(nN)(-1)
     hops(seed) = 0
     var frontier = Array(seed)
@@ -1630,9 +1674,9 @@ object Graph {
       var f = 0
       while (f < frontier.length) {
         val u = frontier(f)
-        var p = off(u)
-        while (p < off(u + 1)) {
-          val v = adj(p)
+        var p = g.off(u)
+        while (p < g.off(u + 1)) {
+          val v = g.adj(p)
           if (hops(v) < 0) { hops(v) = level; next += v }
           p += 1
         }
@@ -1641,9 +1685,9 @@ object Graph {
       frontier = next.toArray
     }
     val out = Vector.newBuilder[(Long, Int)]
-    i = 0
+    var i = 0
     while (i < nN) {
-      if (hops(i) >= 0) out += ((ids(i), hops(i)))
+      if (hops(i) >= 0) out += ((g.ids(i), hops(i)))
       i += 1
     }
     Some(spark.createDataset(out.result()).toDF("node", "hops")
@@ -1760,18 +1804,19 @@ object Graph {
   private[graft] def hitsFixed(spark: SparkSession, dir: String,
       iters: Int, broadcastMaxRows: Long,
       localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
-    // the session-cached weighted pair relation under the bijective
-    // re-keying (cnode = cust×2, snode = supp×2+1 ⇒ COUNT per pair
-    // invariant; `div` keeps int64) — already materialized, so the
-    // per-query persist/unpersist pair is gone with the rebuild
-    val pairs = purchasePairs(spark, dir)
-      .selectExpr("cnode div 2 AS cust", "(snode - 1) div 2 AS supp", "w")
+    val g = coPurchaseWeighted(spark, dir)
     // round 15: below the edge bound the mutual-reinforcement rounds
     // run on the driver (the q121/q135 dispatch note) — each
     // distributed half-round was a join + sum + 1-row total +
     // checkpoint over node-sized int64 vectors
-    if (purchasePairs(spark, dir).count() <= localMaxEdges)
-      return hitsLocal(spark, pairs, iters)
+    val local = g.localUpTo(localMaxEdges)
+    if (local.isDefined) return hitsLocal(spark, local.get, iters)
+    // the session-cached weighted pair relation under the bijective
+    // re-keying (cnode = cust×2, snode = supp×2+1 ⇒ COUNT per pair
+    // invariant; `div` keeps int64) — already materialized, so the
+    // per-query persist/unpersist pair is gone with the rebuild
+    val pairs = purchasePairs(g)
+      .selectExpr("cnode div 2 AS cust", "(snode - 1) div 2 AS supp", "w")
     def renorm(df: DataFrame, key: String, raw: String,
         out: String): DataFrame = {
       val tot = df.agg(sum(col(raw)).as("t"))
@@ -1806,146 +1851,55 @@ object Graph {
   }
 
   /** Driver-local arm of [[q126]]: the identical int64-grid
-    * mutual-reinforcement rounds over dense-indexed arrays —
-    * araw(s) = Σ w·h(c), renorm x ↦ x div max(1, Σx div SCALE),
-    * then the hub half-round; integer sums are order-free so the
-    * arms are bit-identical (spec-pinned).
+    * mutual-reinforcement rounds over the [[LocalGraph]], sides by
+    * parity (hubs the even customer nodes, keyed `cnode div 2`;
+    * authorities the odd supplier nodes, keyed `(snode - 1) div 2`) —
+    * araw(s) = Σ w·h(c) over s's row, renorm x ↦ x div max(1, Σx div
+    * SCALE) within the side, then the hub half-round; integer sums are
+    * order-free so the arms are bit-identical (spec-pinned).
     */
-  private def hitsLocal(spark: SparkSession, pairs: DataFrame,
+  private def hitsLocal(spark: SparkSession, g: LocalGraph,
       iters: Int): DataFrame = {
     import spark.implicits._
-    val rows = pairs.select(col("cust"), col("supp"), col("w"))
-      .queryExecution.executedPlan.executeCollect()
-    val nP = rows.length
-    val c2ix = new scala.collection.mutable.LongMap[Int](nP)
-    val s2ix = new scala.collection.mutable.LongMap[Int](nP)
-    val custIds = new scala.collection.mutable.ArrayBuffer[Long]()
-    val suppIds = new scala.collection.mutable.ArrayBuffer[Long]()
-    def cix(id: Long): Int = {
-      val got = c2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = custIds.length; c2ix(id) = i; custIds += id; i }
-    }
-    def six(id: Long): Int = {
-      val got = s2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = suppIds.length; s2ix(id) = i; suppIds += id; i }
-    }
-    val eC = new Array[Int](nP); val eS = new Array[Int](nP)
-    val eW = new Array[Long](nP)
-    var k = 0
-    while (k < nP) {
-      eC(k) = cix(rows(k).getLong(0)); eS(k) = six(rows(k).getLong(1))
-      eW(k) = rows(k).getLong(2)
-      k += 1
-    }
-    val nC = custIds.length; val nS = suppIds.length
-    def renorm(x: Array[Long]): Array[Long] = {
+    val nN = g.nNodes
+    def isHub(i: Int): Boolean = g.ids(i) % 2 == 0
+    // one half-round: x(v) = Σ w·from(u) over v's row, for the nodes
+    // of one side, renormalized within that side
+    def half(from: Array[Long], hubs: Boolean): Array[Long] = {
+      val x = new Array[Long](nN)
       var t = 0L
-      var i = 0
-      while (i < x.length) { t += x(i); i += 1 }
+      var v = 0
+      while (v < nN) {
+        if (isHub(v) == hubs) {
+          var p = g.off(v)
+          while (p < g.off(v + 1)) { x(v) += g.wt(p) * from(g.adj(p)); p += 1 }
+          t += x(v)
+        }
+        v += 1
+      }
       val d = math.max(1L, t / HitsScale)
-      i = 0
-      while (i < x.length) { x(i) = x(i) / d; i += 1 }
+      v = 0
+      while (v < nN) { x(v) = x(v) / d; v += 1 }
       x
     }
-    var hub = Array.fill(nC)(HitsScale)
+    var hub = Array.tabulate(nN)(i => if (isHub(i)) HitsScale else 0L)
     var auth: Array[Long] = null
     var it = 0
     while (it < iters) {
-      val araw = new Array[Long](nS)
-      k = 0
-      while (k < nP) { araw(eS(k)) += eW(k) * hub(eC(k)); k += 1 }
-      auth = renorm(araw)
-      val hraw = new Array[Long](nC)
-      k = 0
-      while (k < nP) { hraw(eC(k)) += eW(k) * auth(eS(k)); k += 1 }
-      hub = renorm(hraw)
+      auth = half(hub, hubs = false)
+      hub = half(auth, hubs = true)
       it += 1
     }
     val out = Vector.newBuilder[(String, Long, Long)]
     var i = 0
-    while (i < nC) { out += (("hub", custIds(i), hub(i))); i += 1 }
-    i = 0
-    while (i < nS) { out += (("auth", suppIds(i), auth(i))); i += 1 }
+    while (i < nN) {
+      val id = g.ids(i)
+      if (isHub(i)) out += (("hub", id / 2, hub(i)))
+      else out += (("auth", (id - 1) / 2, auth(i)))
+      i += 1
+    }
     spark.createDataset(out.result()).toDF("kind", "key", "score")
       .orderBy(col("kind"), col("score").desc, col("key"))
-  }
-
-  /** [[q126]]'s convergence-tracked variant (round 12, the r11 §7f
-    * candidate): the same int64-grid mutual-reinforcement rounds, but
-    * the driver STOPS when the joint hub+auth RANKING is unchanged
-    * between consecutive rounds — rank order is what consumers read
-    * (top-k hubs/authorities), and it stabilizes before the grid
-    * scores do. Returns `(scores, roundsRun)`.
-    *
-    * Stopping probe, exactly (no hash shortcuts): rank both sides'
-    * scores jointly (`rank() OVER (ORDER BY score DESC, kind, key)` —
-    * a node-sized global sort, NOT edge-sized; the same cost class as
-    * the final orderBy every graph query already pays), join this
-    * round's ranks to the previous round's on (kind, key), and count
-    * rank changes — one node-sized join + a 1-row count per round,
-    * driver sees a single long. The FIXED-round [[q126]] remains the
-    * oracle gate twin: this variant is library API for pipelines that
-    * want "iterate to stability" semantics with a bounded budget
-    * (`maxIters` throws rather than silently returning an
-    * unstabilized ranking — the q129 strict discipline).
-    */
-  def hitsConverged(spark: SparkSession, dir: String,
-      maxIters: Int = 12): (DataFrame, Int) = {
-    val pairs = purchasePairs(spark, dir) // session-cached, see hitsFixed
-      .selectExpr("cnode div 2 AS cust", "(snode - 1) div 2 AS supp", "w")
-    def renorm(df: DataFrame, key: String, raw: String,
-        out: String): DataFrame = {
-      val tot = df.agg(sum(col(raw)).as("t"))
-      df.crossJoin(broadcast(tot))
-        .selectExpr(key,
-          s"$raw div greatest(1L, t div ${HitsScale}L) AS $out")
-    }
-    def scores(hub: DataFrame, auth: DataFrame): DataFrame =
-      hub.select(lit("hub").as("kind"), col("cust").as("key"),
-          col("h").as("score"))
-        .unionAll(auth.select(lit("auth").as("kind"),
-          col("supp").as("key"), col("a").as("score")))
-    def ranking(sc: DataFrame): DataFrame =
-      sc.select(col("kind"), col("key"),
-        rank().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("kind"), col("key")))
-          .as("rnk")).localCheckpoint()
-    var hub = pairs.select(col("cust")).distinct()
-      .withColumn("h", lit(HitsScale))
-      .localCheckpoint()
-    // the q126 dispatch: broadcast the node-sized rank side below the
-    // bound so the pair relation never exchanges
-    val useBroadcast = hub.count() <= BroadcastEdgeMaxRows
-    def side(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df
-    var auth: DataFrame = null
-    var prevRank: DataFrame = null
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxIters) {
-      val araw = pairs.join(side(hub), Seq("cust"))
-        .select(col("supp"), (col("w") * col("h")).as("c"))
-        .groupBy(col("supp")).agg(sum(col("c")).as("araw"))
-      auth = renorm(araw, "supp", "araw", "a").localCheckpoint()
-      val hraw = pairs.join(side(auth), Seq("supp"))
-        .select(col("cust"), (col("w") * col("a")).as("c"))
-        .groupBy(col("cust")).agg(sum(col("c")).as("hraw"))
-      hub = renorm(hraw, "cust", "hraw", "h").localCheckpoint()
-      rounds += 1
-      val curRank = ranking(scores(hub, auth))
-      if (prevRank != null)
-        stable = curRank.as("c")
-          .join(prevRank.as("p"), Seq("kind", "key"))
-          .filter(col("c.rnk") =!= col("p.rnk")).isEmpty
-      prevRank = curRank
-    }
-    if (!stable) throw new IllegalStateException(
-      s"HITS ranking not stabilized within $maxIters rounds — raise " +
-        "the budget for this graph")
-    (scores(hub, auth)
-      .orderBy(col("kind"), col("score").desc, col("key")), rounds)
   }
 
   val q126Sql: String = {
@@ -2043,8 +1997,8 @@ object Graph {
     * driver.
     */
   def q135(spark: SparkSession, dir: String): DataFrame = {
-    val (pairs, tris, _) = coPurchaseGraph(spark, dir)
-    trussOn(pairs, Some(tris), TrussRounds, strict = true)
+    truss(coPurchaseGraph(spark, dir), TrussRounds, BroadcastEdgeMaxRows,
+      strict = true)
   }
 
   /** The triangle relation as canonical EDGE TRIPLES — the peeling
@@ -2100,7 +2054,7 @@ object Graph {
 
   /** [[q135]]'s core over an arbitrary canonical `(lo, hi)` edge
     * relation — spec entry point for planted graphs (enumerates
-    * fresh when `cachedTris` is None). Round 1 recomputes support in
+    * fresh, no session cache). Round 1 recomputes support in
     * full (the median floor just halved the edge set); later rounds
     * are DECREMENTAL — identical arithmetic, applied as subtraction —
     * and the loop invariant (suppRel = current survivors with support
@@ -2114,27 +2068,27 @@ object Graph {
     * about stability.
     */
   private[graft] def trussOn(pairs: DataFrame,
-      cachedTris: Option[DataFrame] = None,
       rounds: Int = TrussRounds,
       broadcastMaxRows: Long = BroadcastEdgeMaxRows,
-      strict: Boolean = false): DataFrame = {
-    val nEdges = pairs.count()
+      strict: Boolean = false): DataFrame =
+    truss(trianglesOf(sized(pairs, broadcastMaxRows)), rounds,
+      broadcastMaxRows, strict)
+
+  private def truss(t: Triangles, rounds: Int, broadcastMaxRows: Long,
+      strict: Boolean): DataFrame = {
+    val pairs = t.graph.edges
+    val nEdges = t.graph.nEdges
     if (nEdges == 0)
       return pairs.select(col("lo"), col("hi"), lit(0L).as("supp"),
         lit(0L).as("thr"))
     // the ONE enumeration — free when the session tri-cache is warm;
     // every peeling round below filters it, never re-enumerates
-    val tris0 = cachedTris.getOrElse {
-      val (t, oriented) = triangleEnum(pairs, broadcastMaxRows)
-      val m = pinByRows(t, nEdges, ResultPinMaxRows, "truss-tris")
-      oriented.unpersist(blocking = false)
-      m
-    }
+    val tris0 = t.tris
     // round 15: below the broadcast bound the peel itself runs ON THE
     // DRIVER (the BPE/q34 local-vs-distributed dispatch discipline).
     // In this regime the edge relation already rides to the driver —
-    // it builds the alive-set broadcasts (and the tri fill's adjacency
-    // broadcast) — and the 4-round synchronous peel was paying ~20
+    // it builds the alive-set broadcasts (and the tri fill's
+    // [[LocalGraph]]) — and the 4-round synchronous peel was paying ~20
     // sequential Spark jobs (checkpoints, semi-joins, convergence
     // probes) to move a few hundred thousand int64s per round: 5.8 s
     // at sf0.1 where the arithmetic is ~10M array ops. The triangle
@@ -2144,11 +2098,8 @@ object Graph {
     // Identical arithmetic, budget and strict-throw semantics —
     // GraphSpec pins arm equality on planted graphs, the oracle the
     // real ones at two SFs.
-    if (nEdges <= broadcastMaxRows) {
-      val nTris = tris0.count()
-      if (nTris <= ResultPinMaxRows)
-        return trussLocal(pairs, tris0, nEdges, rounds, strict)
-    }
+    if (t.graph.local.isDefined && t.nTris <= ResultPinMaxRows)
+      return trussLocal(t.graph.local.get, tris0, rounds, strict)
     val sup0 = pairs.join(edgeSupportCounts(tris0, "supp"),
         Seq("lo", "hi"), "left")
       .na.fill(0L, Seq("supp"))
@@ -2269,71 +2220,41 @@ object Graph {
   }
 
   /** Driver-local synchronous peel — [[trussOn]]'s below-bound arm.
-    * Edges index into two sorted primitive arrays (binary search per
-    * triangle edge, done once); each round is one pass over the
-    * triangle index triples (alive×3 → credit 3 edges) and one pass
-    * over the edge arrays. Threshold, round counting, early exit,
-    * budget and strict-throw semantics mirror the distributed rounds
-    * exactly (including the rounds=0 count-only verification
-    * degenerate); the output relation is re-parallelized and sorted
-    * like the distributed arm's.
+    * A canonical edge (lo < hi) is a [[LocalGraph]] slot whose
+    * neighbour sorts after its row; a triangle's edge is found by
+    * binary search within the `lo` row (done once per triangle edge);
+    * each round is one pass over the triangle index triples (alive×3
+    * → credit 3 edges) and one pass over the edges. Threshold, round
+    * counting, early exit, budget and strict-throw semantics mirror
+    * the distributed rounds exactly (including the rounds=0
+    * count-only verification degenerate); the output relation is
+    * re-parallelized and sorted like the distributed arm's.
     */
-  private def trussLocal(pairs: DataFrame, tris: DataFrame,
-      nEdges: Long, rounds: Int, strict: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
+  private def trussLocal(g: LocalGraph, tris: DataFrame, rounds: Int,
+      strict: Boolean): DataFrame = {
+    val spark = tris.sparkSession
     import spark.implicits._
-    val m = nEdges.toInt
-    // executeCollect: InternalRows, primitive getLong — the external
-    // Row/tuple conversion was the local arm's dominant cost
-    val es = pairs.select(col("lo"), col("hi"))
-      .queryExecution.executedPlan.executeCollect()
-    // group-contiguous primitive layout: edges bucketed by lo via a
-    // counting scatter, hi sorted within each lo-group — an edge
-    // lookup is then one hash probe plus a binary search over a
-    // CONTIGUOUS few-entry slice (the flat lexicographic search paid
-    // ~250 ns/lookup in cache misses across two 10 MB arrays,
-    // 1.45 s of the local arm at sf0.1)
-    val eLo = new Array[Long](m); val eHi = new Array[Long](m)
-    // lo -> (group start << 32 | group length), one probe per lookup
-    val grp = new scala.collection.mutable.LongMap[Long](m)
-    var k = 0
-    while (k < m) {
-      val lo = es(k).getLong(0)
-      grp(lo) = grp.getOrElse(lo, 0L) + 1L
-      k += 1
-    }
-    var acc = 0L
-    grp.foreachKey { lo =>
-      val c = grp(lo); grp(lo) = (acc << 32) | c; acc += c
-    }
-    val fillAt = new scala.collection.mutable.LongMap[Int](grp.size)
-    k = 0
-    while (k < m) {
-      val lo = es(k).getLong(0)
-      val at = (grp(lo) >>> 32).toInt + fillAt.getOrElse(lo, 0)
-      eLo(at) = lo; eHi(at) = es(k).getLong(1)
-      fillAt(lo) = fillAt.getOrElse(lo, 0) + 1
-      k += 1
-    }
-    grp.foreachValue { sl =>
-      val st = (sl >>> 32).toInt
-      java.util.Arrays.sort(eHi, st, st + (sl & 0xFFFFFFFFL).toInt)
+    // number the canonical slots: edge e joins nodes eLo(e) < eHi(e)
+    val edgeAt = new Array[Int](g.adj.length)
+    val eLo = new Array[Int](g.adj.length / 2)
+    val eHi = new Array[Int](g.adj.length / 2)
+    var m = 0
+    var u = 0
+    while (u < g.nNodes) {
+      var p = g.off(u)
+      while (p < g.off(u + 1)) {
+        if (g.adj(p) > u) { edgeAt(p) = m; eLo(m) = u; eHi(m) = g.adj(p); m += 1 }
+        p += 1
+      }
+      u += 1
     }
     def idx(lo: Long, hi: Long): Int = {
-      val sl = grp.getOrElse(lo, -1L)
-      if (sl < 0) throw new IllegalStateException(
+      val l = g.indexOf(lo); val h = g.indexOf(hi)
+      val p = if (l < 0 || h < 0) -1
+        else java.util.Arrays.binarySearch(g.adj, g.off(l), g.off(l + 1), h)
+      if (p < 0) throw new IllegalStateException(
         s"triangle edge ($lo,$hi) missing from the edge relation")
-      var a = (sl >>> 32).toInt
-      var b = a + (sl & 0xFFFFFFFFL).toInt - 1
-      while (a <= b) {
-        val mid = (a + b) >>> 1
-        val c = java.lang.Long.compare(eHi(mid), hi)
-        if (c == 0) return mid
-        else if (c < 0) a = mid + 1
-        else b = mid - 1
-      }
-      throw new IllegalStateException(
-        s"triangle edge ($lo,$hi) missing from the edge relation")
+      edgeAt(p)
     }
     val ts = tris.select(col("apex"), col("lo"), col("hi"))
       .queryExecution.executedPlan.executeCollect()
@@ -2341,7 +2262,7 @@ object Graph {
     val te1 = new Array[Int](nT)
     val te2 = new Array[Int](nT)
     val te3 = new Array[Int](nT)
-    k = 0
+    var k = 0
     while (k < nT) {
       val r = ts(k)
       val a = r.getLong(0); val l = r.getLong(1); val h = r.getLong(2)
@@ -2376,7 +2297,7 @@ object Graph {
     // #{e : supp(e) <= v} >= ceil(m/2) = the rank-target order stat
     val sorted = sup0.clone()
     java.util.Arrays.sort(sorted)
-    val thr = sorted(((nEdges + 1L) / 2L).toInt - 1)
+    val thr = sorted((m + 1) / 2 - 1)
     val alive = new Array[Boolean](m)
     k = 0; while (k < m) { alive(k) = sup0(k) >= thr; k += 1 }
     // INVARIANT mirrors the distributed loop: curSupp = every current
@@ -2407,7 +2328,7 @@ object Graph {
     k = 0
     while (k < m) {
       if (alive(k) && curSupp(k) >= thr)
-        out += ((eLo(k), eHi(k), curSupp(k), thr))
+        out += ((g.ids(eLo(k)), g.ids(eHi(k)), curSupp(k), thr))
       k += 1
     }
     spark.createDataset(out.result()).toDF("lo", "hi", "supp", "thr")

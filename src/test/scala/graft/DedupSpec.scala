@@ -69,23 +69,29 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("clusterLabels arms agree: driver union-find bit-equals min-label propagation") {
-    // round 15: below CcLocalMaxEdges the labels come from a driver
-    // union-find with min-id roots — pin bit-equality (doc_id,
-    // cluster_id, cluster_size) against the distributed propagation
-    // on the real near-dup graph plus a planted multi-component graph
+  test("clusterLabels arms agree: driver union-find bit-equals the star rounds") {
+    // below CcLocalMaxEdges the labels come from a driver union-find
+    // with min-id roots, above it from the distributed star rounds —
+    // pin bit-equality (doc_id, cluster_id, cluster_size) on the real
+    // near-dup graph, a planted multi-component graph and a 300-node
+    // chain (299 hops: deeper than any fixed propagation cap)
     val edges = Dedup.q31(spark, sf)
       .select(org.apache.spark.sql.functions.col("ia"),
         org.apache.spark.sql.functions.col("ib")).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows(Dedup.ccLabelsLocal(spark, edges)) ===
-      rows(Dedup.ccLabelsPropagated(spark, edges)))
+      rows(Dedup.ccLabelsStar(edges)))
     import spark.implicits._
     val planted = Seq((7L, 3L), (3L, 9L), (12L, 15L), (20L, 21L),
       (21L, 22L), (22L, 20L)).toDF("ia", "ib").localCheckpoint()
     assert(rows(Dedup.ccLabelsLocal(spark, planted)) ===
-      rows(Dedup.ccLabelsPropagated(spark, planted)))
+      rows(Dedup.ccLabelsStar(planted)))
+    val chain = spark.range(299).selectExpr("id AS ia", "id + 1 AS ib")
+      .localCheckpoint()
+    val chainRows = rows(Dedup.ccLabelsStar(chain))
+    assert(chainRows === rows(Dedup.ccLabelsLocal(spark, chain)))
+    assert(chainRows === (0L to 299L).map(n => (n, 0L, 300L)).toSet)
   }
 
   test("large-star/small-star CC matches q35's labels and conquers a deep chain in log rounds") {
@@ -98,8 +104,8 @@ class DedupSpec extends SparkSpec {
     val prop = Dedup.q35(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(star === prop)
-    // a 300-node chain has diameter 299: q35's propagation would need
-    // 299 rounds (its cap throws at 20); star rounds are logarithmic
+    // a 300-node chain has diameter 299: min-label propagation would
+    // need 299 rounds; star rounds are logarithmic
     val chain = spark.range(299).selectExpr("id AS x", "id + 1 AS y")
     val (lab, rounds) = Dedup.ccStarWithRounds(chain)
     assert(rounds <= 15, s"expected O(log n) rounds, took $rounds")

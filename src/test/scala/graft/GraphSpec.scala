@@ -66,6 +66,38 @@ class GraphSpec extends SparkSpec {
       Graph.q124(spark, sf, localMaxEdges = 0L).collect().map(_.toSeq).toSeq)
   }
 
+  test("warm graph dispatch is jobless: q121/q124/q125/q126/q129/q130 decide and compute their arm without a Spark job") {
+    // the first run fills the wsym cache (edge count + LocalGraph); a
+    // second BUILD of the DataFrame must read the stored count and run
+    // its driver kernel with no count(), no edge collect — zero jobs
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val queries = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "q121" -> (() => Graph.q121(spark, sf)),
+      "q124" -> (() => Graph.q124(spark, sf)),
+      "q125" -> (() => Graph.q125(spark, sf)),
+      "q126" -> (() => Graph.q126(spark, sf)),
+      "q129" -> (() => Graph.q129(spark, sf)),
+      "q130" -> (() => Graph.q130(spark, sf)))
+    sc.addSparkListener(listener)
+    val ran = try queries.map { case (q, build) =>
+      build().collect()
+      org.apache.spark.graftspec.Listeners.drain(sc)
+      val before = jobs.get()
+      build()
+      org.apache.spark.graftspec.Listeners.drain(sc)
+      q -> (jobs.get() - before)
+    } finally sc.removeSparkListener(listener)
+    assert(ran.forall(_._2 == 0),
+      s"Spark jobs run by building the warm DataFrame: ${ran.mkString(", ")}")
+  }
+
   test("q121 is bit-identical at different parallelism") {
     val a = Graph.q121(spark, sf).collect().map(_.toSeq)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -629,24 +661,6 @@ class GraphSpec extends SparkSpec {
       .contains("FileScan parquet"),
       "pinMaxRows=0 did not dispatch the result to a parquet temp")
     assert(spilled.collect().map(_.toSeq).toSeq === pinned.toSeq)
-  }
-
-  test("hitsConverged: stops when rank order stabilizes, matches the fixed-round twin at that depth") {
-    val (sc, rounds) = Graph.hitsConverged(spark, sf, maxIters = 12)
-    assert(rounds >= 2 && rounds < 12, s"suspicious round count $rounds")
-    val got = sc.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2)))
-    // scores at the stop equal q126 run to exactly that many rounds —
-    // the converged variant is the same computation, just self-paced
-    val twin = Graph.q126(spark, sf, iters = rounds).collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq === twin.toSeq)
-    // ... and one MORE round leaves the ranking unchanged (the stop
-    // really was stability, not budget exhaustion)
-    val next = Graph.q126(spark, sf, iters = rounds + 1).collect().map(r =>
-      (r.getString(0), r.getLong(1)))
-    assert(next.toSeq === got.map(t => (t._1, t._2)).toSeq,
-      "ranking moved after the claimed stabilization point")
   }
 
   test("q131 clustering: planted exact values; cross-checks q122; arms agree; cache path equal") {

@@ -58,4 +58,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"SerializableConfiguration outside a broadcast(...):\n  ${offenders.mkString("\n  ")}")
   }
+
+  test("operators/Graph.scala reads relations to the driver in at most two places") {
+    // LocalGraph's edge read and trussLocal's triangle read: every
+    // driver-local graph kernel runs over the one LocalGraph a cache
+    // entry builds, so a third site is a per-kernel graph build
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/operators/Graph.scala"))
+    val sites = "executeCollect\\(".r.findAllMatchIn(text)
+      .map(m => text.substring(0, m.start).count(_ == '\n') + 1).toSeq
+    assert(sites.nonEmpty, "no executeCollect site found")
+    assert(sites.size <= 2,
+      s"executeCollect( at Graph.scala lines ${sites.mkString(", ")}")
+  }
 }
