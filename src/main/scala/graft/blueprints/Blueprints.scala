@@ -10,7 +10,7 @@ import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
 /** The reference blueprints' unit of use is a CLI job — these four
   * mains mirror them flag for flag (upload_file.py:11-48 argparse),
   * exit with the reference's code taxonomy (exit_codes.py:1-4), and
-  * run the transfer itself distributed through [[FileOps]]:
+  * run the transfer itself through [[FileOps]]' per-file bodies:
   *
   * {{{
   * graft.blueprints.Upload \
@@ -38,6 +38,14 @@ import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
   * deletes over every core; no matched path collects to the driver.
   * Tasks read the Hadoop conf from a broadcast (one per walk and act),
   * freed with the walk's levels when the step ends, whatever its exit.
+  *
+  * An exact-match step runs on the driver, like the reference's single
+  * FTP call (move_file.py:96, delete_file.py:76): a regular-file
+  * pre-check ([[FileOps.isFile]], exit 200 when it fails; Move's
+  * rename failure is its 202), then the same per-file body the regex
+  * act distributes, called once with the session's Hadoop conf. It
+  * starts no Spark job, and the pre-check and the transfer resolve
+  * every path in the same process.
   */
 object Blueprints {
 
@@ -191,17 +199,16 @@ object Upload {
     } else {
       val src = PathUtils.combine(srcBase, a.sourceFileName)
       // missing (or non-regular-file) single source is exit 200
-      // like Download/Delete — without the pre-check the
-      // executor-side FileNotFound surfaces as a generic exit 1
-      // outside the reference taxonomy
+      // like Download/Delete — without the pre-check the copy's
+      // FileNotFound surfaces as a generic exit 1 outside the
+      // reference taxonomy
       if (!FileOps.isFile(spark, "file:///", src))
         throw GraftFsError(ErrorCodes.NoMatchesFound,
           s"no local file at $src")
-      val transfers = Seq(Transfer(src,
+      FileOps.copyFiles(spark.sessionState.newHadoopConf(), "file:///", dst,
+        a.retries, a.backoffMs, a.resume)(Iterator(Transfer(src,
         PathUtils.determineDestinationFullPath(
-          a.destinationFolderName, a.destinationFileName, src)))
-      FileOps.bulkCopy(spark, transfers, "file:///", dst,
-        retries = a.retries, backoffMs = a.backoffMs, resume = a.resume)
+          a.destinationFolderName, a.destinationFileName, src))))
     }
   }
 
@@ -233,15 +240,14 @@ object Download {
     } else {
       val p = PathUtils.combine(srcFolder, a.sourceFileName)
       // the reference maps a failed single download to exit 200
-      // (download_file.py:296)
-      if (!FileOps.exists(spark, src, s"/$p"))
+      // (download_file.py:296); a directory is not a file to download
+      if (!FileOps.isFile(spark, src, s"/$p"))
         throw GraftFsError(ErrorCodes.NoMatchesFound,
           s"no file at $p on ${a.host}")
-      val transfers = Seq(Transfer(s"/$p",
+      FileOps.copyFiles(spark.sessionState.newHadoopConf(), src, "file:",
+        a.retries, a.backoffMs, a.resume)(Iterator(Transfer(s"/$p",
         PathUtils.determineDestinationFullPath(
-          localBase, a.destinationFileName, p)))
-      FileOps.bulkCopy(spark, transfers, src, "file:",
-        retries = a.retries, backoffMs = a.backoffMs, resume = a.resume)
+          localBase, a.destinationFileName, p))))
     }
   }
 
@@ -269,9 +275,8 @@ object Move {
       val src = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
       val dst = "/" + PathUtils.determineDestinationFullPath(
         a.destinationFolderName, a.destinationFileName, src)
-      FileOps.withRetries(a.retries, a.backoffMs) { () =>
-        FileOps.move(spark, uri, src, dst)
-      }
+      FileOps.moveFiles(spark.sessionState.newHadoopConf(), uri,
+        a.retries, a.backoffMs)(Iterator(Transfer(src, dst)))
     }
   }
 
@@ -297,11 +302,11 @@ object Delete {
     } else {
       val p = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
       // the reference maps a failed single delete to exit 200
-      // (delete_file.py:151)
-      if (!FileOps.exists(spark, uri, p))
+      // (delete_file.py:151); a directory is not a file to delete
+      if (!FileOps.isFile(spark, uri, p))
         throw GraftFsError(ErrorCodes.NoMatchesFound,
           s"no file at $p on ${a.host}")
-      FileOps.bulkDelete(spark, uri, Seq(p))
+      FileOps.deleteFiles(spark.sessionState.newHadoopConf(), uri)(Iterator(p))
     }
   }
 

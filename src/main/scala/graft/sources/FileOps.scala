@@ -15,10 +15,13 @@ import org.apache.spark.storage.StorageLevel
   * with exact or regex matching — ftp-blueprints
   * {upload,download,move,delete}_file.py) re-expressed over
   * `org.apache.hadoop.fs.FileSystem`, so one implementation serves
-  * file://, hdfs://, s3a://, and graft's own FTP connector, and every
-  * bulk operation distributes over Spark executors (one FS connection
-  * per partition — 1000 executors ⇒ 1000 parallel transfer streams,
-  * no driver bottleneck).
+  * file://, hdfs://, s3a://, and graft's own FTP connector. Each verb
+  * (copy, move, delete) has one per-file body over an iterator of
+  * files and a plain Hadoop conf, opening one FS handle per call.
+  * A regex step's act distributes that body over Spark executors (one
+  * call per partition — 1000 executors ⇒ 1000 parallel transfer
+  * streams, no driver bottleneck); an exact-match step calls it once
+  * on the driver and starts no Spark job.
   */
 object FileOps {
 
@@ -36,12 +39,9 @@ object FileOps {
     val MoveError = 202
   }
 
-  /** Guard: a matching stage that found nothing is exit-200 in the
-    * reference (upload_file.py / download_file.py main flow).
+  /** A matching stage that found nothing is exit-200 in the reference
+    * (upload_file.py / download_file.py main flow).
     */
-  def requireMatches(matched: Seq[String], pattern: String): Seq[String] =
-    if (matched.isEmpty) throw noMatches(pattern) else matched
-
   private def noMatches(pattern: String) =
     GraftFsError(ErrorCodes.NoMatchesFound, s"no files found matching '$pattern'")
 
@@ -156,38 +156,14 @@ object FileOps {
       if (basename) e.path.substring(e.path.lastIndexOf('/') + 1) else e.path).find()
   }
 
-  private def matchDF(manifest: DataFrame, rule: FileEntry => Boolean): DataFrame = {
-    import manifest.sparkSession.implicits._
-    manifest.as[FileEntry].filter(rule).toDF()
-  }
-
   /** [[matching]] on the basename, over a [[listRecursive]] manifest. */
-  def matchBasename(manifest: DataFrame, pattern: String): DataFrame =
-    matchDF(manifest, matching(pattern, basename = true))
-
-  /** [[matching]] on the full path, over a [[listRecursive]] manifest. */
-  def matchFullPath(manifest: DataFrame, pattern: String): DataFrame =
-    matchDF(manifest, matching(pattern, basename = false))
+  def matchBasename(manifest: DataFrame, pattern: String): DataFrame = {
+    import manifest.sparkSession.implicits._
+    manifest.as[FileEntry].filter(matching(pattern, basename = true)).toDF()
+  }
 
   /** Transfer spec: one source file → one destination path. */
   case class Transfer(src: String, dst: String)
-
-  /** Plan destination names for a set of matched sources: explicit
-    * destination name is enumerated `name_N.ext` on multi-match
-    * (upload_file.py:242-253), otherwise each source keeps its
-    * basename under the destination folder.
-    */
-  def planTransfers(
-      sources: Seq[String],
-      destinationFolder: String,
-      destinationFileName: Option[String]): Seq[Transfer] = {
-    val multi = sources.lengthCompare(1) > 0
-    sources.zipWithIndex.map { case (src, i) =>
-      Transfer(src, PathUtils.determineDestinationFullPath(
-        destinationFolder, destinationFileName, src,
-        if (multi && destinationFileName.isDefined) Some(i + 1) else None))
-    }
-  }
 
   /** The blueprints' transfer plan over the matched paths, in a
     * fixed number of Spark jobs whatever the match count; the matched
@@ -256,6 +232,13 @@ object FileOps {
     }
   }
 
+  /** Ceiling for one backoff sleep: the doubling stops here, so a
+    * large --retries keeps retrying at 30 s intervals instead of
+    * overflowing the shift (backoffMs << 54 goes negative and
+    * Thread.sleep throws) or sleeping for days.
+    */
+  val MaxBackoffMs = 30000L
+
   /** Retry a transient-failure-prone action up to `attempts` extra
     * times with exponential backoff (backoffMs, 2×, 4×, …). Typed
     * [[GraftFsError]]s are NEVER retried — the reference's taxonomy
@@ -264,13 +247,6 @@ object FileOps {
     * delay the correct exit code. The production transfer-job twin of
     * the blueprint CLIs' `--retries/--backoff-ms` flags.
     */
-  /** Ceiling for one backoff sleep: the doubling stops here, so a
-    * large --retries keeps retrying at 30 s intervals instead of
-    * overflowing the shift (backoffMs << 54 goes negative and
-    * Thread.sleep throws) or sleeping for days.
-    */
-  val MaxBackoffMs = 30000L
-
   def withRetries[A](attempts: Int, backoffMs: Long)(f: () => A): A = {
     var attempt = 0
     var lastErr: Throwable = null
@@ -289,16 +265,18 @@ object FileOps {
     throw lastErr
   }
 
-  /** Distributed bulk copy between any two Hadoop filesystems: the
-    * transfer list is partitioned across executors; each partition
-    * opens one source FS + one destination FS and streams bytes.
+  /** The copy body: streams each transfer's bytes between any two
+    * Hadoop filesystems over one source FS + one destination FS.
     * `dstUriPrefix` anchors relative destinations (e.g.
-    * "file:/tmp/out" or "gftp://host:21").
+    * "file:/tmp/out" or "gftp://host:21"). No per-file parent probe:
+    * `create` makes missing parents (the Hadoop FileSystem contract,
+    * which the FTP/SFTP adapters honour on the connection that writes
+    * the file).
     *
     * `retries` re-runs an individual FILE's copy on transient errors
     * (fresh source/destination streams each attempt; `create`
     * overwrites, so a half-written destination is replaced, making
-    * per-file retry idempotent). The FS handles are per-partition; a
+    * per-file retry idempotent). The FS handles are per-call; a
     * connection-level failure surfaces on the next stream open and is
     * retried the same way.
     *
@@ -311,97 +289,71 @@ object FileOps {
     * each attempt re-probes the sizes and continues from wherever the
     * previous attempt stopped.
     */
-  def bulkCopy(
-      spark: SparkSession,
-      transfers: Seq[Transfer],
-      srcUriPrefix: String,
-      dstUriPrefix: String,
-      parallelism: Int = 32,
-      retries: Int = 0,
-      backoffMs: Long = 1000L,
-      resume: Boolean = false): Unit =
-    if (transfers.nonEmpty)
-      bulkCopy(spark, spark.sparkContext.parallelize(transfers,
-        math.min(transfers.size, parallelism)), srcUriPrefix, dstUriPrefix,
-        retries, backoffMs, resume)
+  def copyFiles(conf: Configuration, srcUriPrefix: String, dstUriPrefix: String,
+      retries: Int, backoffMs: Long, resume: Boolean)(
+      transfers: Iterator[Transfer]): Unit = if (transfers.hasNext) {
+    // a bare-scheme prefix ("file:") needs a root path to be a URI
+    def asUri(p: String) = if (p.endsWith(":")) p + "/" else p
+    val sfs = fs(asUri(srcUriPrefix), conf)
+    val dfs = fs(asUri(dstUriPrefix), conf)
+    try transfers.foreach { t =>
+      // absolute destinations append directly to the scheme/root
+      val joined = if (t.dst.startsWith("/")) s"$dstUriPrefix${t.dst}"
+        else s"$dstUriPrefix/${t.dst}"
+      val dst = new Path(joined.replaceAll("(?<!:)//+", "/"))
+      withRetries(retries, backoffMs) { () =>
+        // resume probe: sizes re-checked on every attempt, so a
+        // retry continues from wherever the last attempt died
+        val dstLen =
+          if (!resume) -1L
+          else try {
+            val s = dfs.getFileStatus(dst)
+            if (s.isFile) s.getLen else -1L
+          } catch { case _: java.io.FileNotFoundException => -1L }
+        val srcLen =
+          if (dstLen > 0) sfs.getFileStatus(new Path(t.src)).getLen
+          else -1L
+        if (dstLen > 0 && dstLen == srcLen) () // already complete
+        else if (dstLen > 0 && dstLen < srcLen) {
+          val in = sfs.open(new Path(t.src))
+          try {
+            in.seek(dstLen) // REST offset over gftp, O(1)
+            // ChecksumFileSystem (local) can't append; its raw fs can
+            val afs = dfs match {
+              case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+                c.getRawFileSystem
+              case f => f
+            }
+            val out = afs.append(dst)
+            try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
+            finally out.close()
+          } finally in.close()
+        } else {
+          val in = sfs.open(new Path(t.src))
+          try {
+            val out = dfs.create(dst, true)
+            try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
+            finally out.close()
+          } finally in.close()
+        }
+      }
+    } finally { sfs.close(); dfs.close() }
+  }
 
-  /** [[bulkCopy]] over a distributed plan ([[planMatched]]): one act
-    * job, one task per plan partition.
+  /** [[copyFiles]] over a distributed plan ([[planMatched]]): one act
+    * job, one call per plan partition.
     */
   def bulkCopy(spark: SparkSession, plan: RDD[Transfer],
       srcUriPrefix: String, dstUriPrefix: String, retries: Int,
       backoffMs: Long, resume: Boolean): Unit =
-    withConf(spark)(conf => plan.foreachPartition(copyPartition(conf,
-      srcUriPrefix, dstUriPrefix, retries, backoffMs, resume)))
+    withConf(spark)(conf => plan.foreachPartition(it => copyFiles(conf.value.value,
+      srcUriPrefix, dstUriPrefix, retries, backoffMs, resume)(it)))
 
   /** One act job over a conf broadcast, destroyed when the job ends. */
   private def withConf(spark: SparkSession)(
       job: Broadcast[SerializableConfiguration] => Unit): Unit = {
     val conf = shipConf(spark)
     try job(conf) finally conf.destroy()
-  }
-
-  /** One executor partition of a bulk copy: one source FS + one
-    * destination FS, streamed byte copies with per-file retry/resume.
-    * No per-file parent probe: `create` makes missing parents (the
-    * Hadoop FileSystem contract, which the FTP/SFTP adapters honour on
-    * the connection that writes the file).
-    */
-  private def copyPartition(
-      conf: Broadcast[SerializableConfiguration],
-      srcUriPrefix: String,
-      dstUriPrefix: String,
-      retries: Int,
-      backoffMs: Long,
-      resume: Boolean)(it: Iterator[Transfer]): Unit = if (it.hasNext) {
-        // a bare-scheme prefix ("file:") needs a root path to be a URI
-        def asUri(p: String) = new URI(if (p.endsWith(":")) p + "/" else p)
-        val sfs = FileSystem.newInstance(asUri(srcUriPrefix), conf.value.value)
-        val dfs = FileSystem.newInstance(asUri(dstUriPrefix), conf.value.value)
-        sfs.setVerifyChecksum(false)
-        dfs.setWriteChecksum(false)
-        try it.foreach { t =>
-          // absolute destinations append directly to the scheme/root
-          val joined = if (t.dst.startsWith("/")) s"$dstUriPrefix${t.dst}"
-            else s"$dstUriPrefix/${t.dst}"
-          val dst = new Path(joined.replaceAll("(?<!:)//+", "/"))
-          withRetries(retries, backoffMs) { () =>
-            // resume probe: sizes re-checked on every attempt, so a
-            // retry continues from wherever the last attempt died
-            val dstLen =
-              if (!resume) -1L
-              else try {
-                val s = dfs.getFileStatus(dst)
-                if (s.isFile) s.getLen else -1L
-              } catch { case _: java.io.FileNotFoundException => -1L }
-            val srcLen =
-              if (dstLen > 0) sfs.getFileStatus(new Path(t.src)).getLen
-              else -1L
-            if (dstLen > 0 && dstLen == srcLen) () // already complete
-            else if (dstLen > 0 && dstLen < srcLen) {
-              val in = sfs.open(new Path(t.src))
-              try {
-                in.seek(dstLen) // REST offset over gftp, O(1)
-                // ChecksumFileSystem (local) can't append; its raw fs can
-                val afs = dfs match {
-                  case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-                    c.getRawFileSystem
-                  case f => f
-                }
-                val out = afs.append(dst)
-                try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-                finally out.close()
-              } finally in.close()
-            } else {
-              val in = sfs.open(new Path(t.src))
-              try {
-                val out = dfs.create(dst, true)
-                try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-                finally out.close()
-              } finally in.close()
-            }
-          }
-        } finally { sfs.close(); dfs.close() }
   }
 
   /** Small-file compaction — the table-maintenance pass a data lake
@@ -447,17 +399,10 @@ object FileOps {
     nOut
   }
 
-  /** Existence probe through any registered FS (driver-side, one
-    * metadata call — the CLI twins' pre-check for single-file ops).
-    */
-  def exists(spark: SparkSession, uri: String, path: String): Boolean = {
-    val f = fs(uri, hadoopConf(spark))
-    try f.exists(new Path(path)) finally f.close()
-  }
-
   /** True only for an existing REGULAR FILE — the pre-check for
-    * single-file transfers, where a directory passing a bare exists()
-    * probe would still fail downstream with a non-taxonomy error.
+    * single-file transfers and deletes, where a directory passing a
+    * bare exists() probe would still fail downstream with a
+    * non-taxonomy error, or be removed.
     */
   def isFile(spark: SparkSession, uri: String, path: String): Boolean = {
     val f = fs(uri, hadoopConf(spark))
@@ -466,73 +411,58 @@ object FileOps {
     finally f.close()
   }
 
-  /** Single-file move (rename) — move_file.py:96; a failed rename is
-    * the reference's exit-202 condition (move_file.py:102).
+  /** The move (rename) body — move_file.py:96: one FS handle, parent
+    * dirs auto-created, and a failed rename throws the reference's
+    * exit-202 taxonomy error (move_file.py:102). Transient errors
+    * retry per file; the 202 itself never retries ([[withRetries]]'
+    * taxonomy contract).
     */
-  def move(spark: SparkSession, uri: String, src: String, dst: String): Boolean = {
-    val f = fs(uri, hadoopConf(spark))
-    try {
-      val dstPath = new Path(dst)
-      val parent = dstPath.getParent
-      if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-      // some FileSystem impls signal a missing source by exception,
-      // others by returning false — both are the reference's exit-202
-      val renamed =
-        try f.rename(new Path(src), dstPath)
-        catch { case _: java.io.FileNotFoundException => false }
-      if (!renamed)
-        throw GraftFsError(ErrorCodes.MoveError,
-          s"could not move $src -> $dst")
-      true
+  def moveFiles(conf: Configuration, uri: String, retries: Int,
+      backoffMs: Long)(moves: Iterator[Transfer]): Unit = {
+    val f = fs(uri, conf)
+    // rename does not make parents; make each one once per call
+    val made = scala.collection.mutable.HashSet.empty[Path]
+    try moves.foreach { case Transfer(src, dst) =>
+      withRetries(retries, backoffMs) { () =>
+        val dstPath = new Path(dst)
+        val parent = dstPath.getParent
+        if (parent != null && !made(parent)) { f.mkdirs(parent); made += parent }
+        // some FileSystem impls signal a missing source by exception,
+        // others by returning false — both are the reference's exit-202
+        val renamed =
+          try f.rename(new Path(src), dstPath)
+          catch { case _: java.io.FileNotFoundException => false }
+        if (!renamed)
+          throw GraftFsError(ErrorCodes.MoveError,
+            s"could not move $src -> $dst")
+      }
     } finally f.close()
   }
 
-  /** Distributed bulk move (rename) over a (src, dst) plan — the
-    * manifest path for the Move blueprint's regex flow: one FS handle
-    * per partition, parent dirs auto-created (move_file.py:96), a
-    * failed rename throws the reference's exit-202 taxonomy error
-    * (surfaces through the Spark job to the CLI shell). Transient
-    * errors retry per file; the 202 itself never retries
-    * ([[withRetries]]' taxonomy contract).
+  /** [[moveFiles]] over a (src, dst) plan — the Move blueprint's regex
+    * flow: one act job, one call per partition; a 202 surfaces through
+    * the Spark job to the CLI shell.
     */
   def bulkMove(spark: SparkSession, uri: String, moves: RDD[Transfer],
       retries: Int = 0, backoffMs: Long = 1000L): Unit =
-    withConf(spark)(conf => moves.foreachPartition { it =>
-      val f = FileSystem.newInstance(new URI(uri), conf.value.value)
-      // rename does not make parents; make each one once per partition
-      val made = scala.collection.mutable.HashSet.empty[Path]
-      try it.foreach { case Transfer(src, dst) =>
-        withRetries(retries, backoffMs) { () =>
-          val dstPath = new Path(dst)
-          val parent = dstPath.getParent
-          if (parent != null && !made(parent)) { f.mkdirs(parent); made += parent }
-          val renamed =
-            try f.rename(new Path(src), dstPath)
-            catch { case _: java.io.FileNotFoundException => false }
-          if (!renamed)
-            throw GraftFsError(ErrorCodes.MoveError,
-              s"could not move $src -> $dst")
-        }
-      } finally f.close()
-    })
+    withConf(spark)(conf => moves.foreachPartition(it =>
+      moveFiles(conf.value.value, uri, retries, backoffMs)(it)))
 
-  /** Bulk delete, distributed — delete_file.py:76. */
-  def bulkDelete(spark: SparkSession, uri: String, paths: Seq[String],
-      parallelism: Int = 32): Unit =
-    if (paths.nonEmpty)
-      bulkDelete(spark, uri,
-        spark.sparkContext.parallelize(paths, math.min(paths.size, parallelism)))
+  /** The delete body — delete_file.py:76: one FS handle, one
+    * non-recursive delete per path.
+    */
+  def deleteFiles(conf: Configuration, uri: String)(paths: Iterator[String]): Unit = {
+    val f = fs(uri, conf)
+    try paths.foreach(p => f.delete(new Path(p), false))
+    finally f.close()
+  }
 
-  /** [[bulkDelete]] over distributed paths: one job, one FS handle per
+  /** [[deleteFiles]] over distributed paths: one job, one call per
     * partition.
     */
   def bulkDelete(spark: SparkSession, uri: String, paths: RDD[String]): Unit =
-    withConf(spark)(conf => paths.foreachPartition { it =>
-      val f = FileSystem.newInstance(new URI(uri), conf.value.value)
-      f.setWriteChecksum(false); f.setVerifyChecksum(false)
-      try it.foreach(p => f.delete(new Path(p), false))
-      finally f.close()
-    })
+    withConf(spark)(conf => paths.foreachPartition(it =>
+      deleteFiles(conf.value.value, uri)(it)))
 
   /** q60: file manifest of a scale-factor directory, paths relativized
     * for determinism. Rows-only (no portable SQL oracle for fs walks).

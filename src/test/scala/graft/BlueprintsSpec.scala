@@ -140,6 +140,28 @@ class BlueprintsSpec extends SparkSpec {
       "--source-folder-name", "budget")))
     assert(delete <= depth + 2, s"regex Delete ran $delete Spark jobs")
     assert(!Files.exists(ftpRoot.resolve("budget/l1/l2/c.csv")))
+    // an exact-match step runs its pre-check and its per-file body on
+    // the driver: no Spark job
+    def exact(extra: String*) = base(Seq("--source-file-name-match-type",
+      "exact_match", "--file-name-match-type", "exact_match") ++ extra: _*)
+    val src = Files.createTempDirectory("bp_budget_src")
+    Files.writeString(src.resolve("e.csv"), "exact\n")
+    assert(jobsOf(Upload.run(spark, exact("--source-file-name", "e.csv",
+      "--source-folder-name", src.toString, "--destination-folder-name", "budget/ex"))) === 0,
+      "exact Upload")
+    assert(Files.readString(ftpRoot.resolve("budget/ex/e.csv")) === "exact\n")
+    assert(jobsOf(Download.run(spark, exact("--source-file-name", "e.csv",
+      "--source-folder-name", "budget/ex", "--destination-folder-name", dst.toString,
+      "--destination-file-name", "ex.csv"))) === 0, "exact Download")
+    assert(Files.readString(dst.resolve("ex.csv")) === "exact\n")
+    assert(jobsOf(Move.run(spark, exact("--source-file-name", "e.csv",
+      "--source-folder-name", "budget/ex", "--destination-folder-name", "budget/ex2"))) === 0,
+      "exact Move")
+    assert(Files.readString(ftpRoot.resolve("budget/ex2/e.csv")) === "exact\n")
+    assert(!Files.exists(ftpRoot.resolve("budget/ex/e.csv")))
+    assert(jobsOf(Delete.run(spark, exact("--source-file-name", "e.csv",
+      "--source-folder-name", "budget/ex2"))) === 0, "exact Delete")
+    assert(!Files.exists(ftpRoot.resolve("budget/ex2/e.csv")))
   }
 
   test("a regex step leaves nothing persisted, whatever its exit code") {
@@ -190,6 +212,24 @@ class BlueprintsSpec extends SparkSpec {
       "--source-file-name", "ghost.csv",
       "--source-folder-name", "data"))
     assert(code2 === 200)
+  }
+
+  test("exit 200: exact Download or Delete of a directory, which stays in place") {
+    // download_file.py:296 / delete_file.py:151: a single file that is
+    // not there to transfer is exit 200, and a directory is not a file
+    val dst = Files.createTempDirectory("bp_dir")
+    assert(Download.run(spark, base(
+      "--source-file-name-match-type", "exact_match",
+      "--source-file-name", "sub",
+      "--source-folder-name", "data",
+      "--destination-folder-name", dst.toString)) === 200)
+    assert(!Files.exists(dst.resolve("sub")))
+    Files.createDirectories(ftpRoot.resolve("data/empty_dir"))
+    assert(Delete.run(spark, base(
+      "--file-name-match-type", "exact_match",
+      "--source-file-name", "empty_dir",
+      "--source-folder-name", "data")) === 200)
+    assert(Files.isDirectory(ftpRoot.resolve("data/empty_dir")))
   }
 
   test("exit 201: invalid source path (EXIT_CODE_INVALID_FILE_PATH)") {

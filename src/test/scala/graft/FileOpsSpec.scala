@@ -70,10 +70,8 @@ class FileOpsSpec extends SparkSpec {
     // basename-only: a pattern matching the folder must not hit
     assert(FileOps.matchBasename(
       FileOps.listRecursive(spark, s"file:$root"), "inner").count() === 0)
-    assert(FileOps.matchFullPath(
-      FileOps.listRecursive(spark, s"file:$root"), "inner").count() === 1)
-    // one rule: the blueprints' RDD path, matchBasename/matchFullPath
-    // and Spark's own regexp_like (the rule before the RDD path) agree
+    // one rule: the blueprints' RDD path, matchBasename and Spark's own
+    // regexp_like (the rule before the RDD path) agree
     Files.createDirectories(root.resolve("v1.2"))
     Files.writeString(root.resolve("v1.2/e.csv"), "e\n")
     // a non-ASCII name as a listed entry: creating it on disk would
@@ -90,18 +88,22 @@ class FileOpsSpec extends SparkSpec {
       "v1\\.2", // a dotted directory name
       "\u540d", // a non-ASCII file name
       s"^${java.util.regex.Pattern.quote(root.toString)}/sub/[^/]+$$")
-    for (p <- patterns; basename <- Seq(true, false)) {
-      val viaRdd = FileOps.walk(spark, s"file:$root").union(spark.sparkContext.parallelize(extra))
+    def viaRdd(p: String, basename: Boolean) =
+      FileOps.walk(spark, s"file:$root").union(spark.sparkContext.parallelize(extra))
         .filter(FileOps.matching(p, basename)).map(_.path).collect().sorted.toSeq
+    for (p <- patterns; basename <- Seq(true, false)) {
+      val got = viaRdd(p, basename)
       val subject = if (basename) element_at(split(col("path"), "/"), -1) else col("path")
-      assert(viaRdd === paths(manifest.filter(!col("is_dir") &&
+      assert(got === paths(manifest.filter(!col("is_dir") &&
         regexp_like(subject, lit(p)))), s"pattern $p, basename $basename")
-      assert(viaRdd === paths(if (basename) FileOps.matchBasename(manifest, p)
-        else FileOps.matchFullPath(manifest, p)), s"pattern $p, basename $basename")
+      if (basename)
+        assert(got === paths(FileOps.matchBasename(manifest, p)), s"pattern $p")
     }
+    // full-path matching: the folder and the dotted directory do hit
+    assert(viaRdd("inner", basename = false) === Seq(s"$root/sub/inner/d.csv"))
     assert(paths(FileOps.matchBasename(manifest, "\u540d")) ===
       Seq(s"$root/sub/\u00fcber\u540d.csv"))
-    assert(paths(FileOps.matchFullPath(manifest, "v1\\.2")) === Seq(s"$root/v1.2/e.csv"))
+    assert(viaRdd("v1\\.2", basename = false) === Seq(s"$root/v1.2/e.csv"))
     assert(paths(FileOps.matchBasename(manifest, "v1\\.2")).isEmpty)
     // an invalid regex ends a regex blueprint with exit 1, before it
     // touches the destination
@@ -111,13 +113,15 @@ class FileOpsSpec extends SparkSpec {
       "--source-folder-name", root.toString)) === 1)
   }
 
-  test("planTransfers enumerates only on multi-match with explicit name") {
-    val t1 = FileOps.planTransfers(Seq("x/a.csv"), "dst", Some("out.csv"))
+  test("planMatched enumerates only on multi-match with explicit name") {
+    def plan(paths: Seq[String], name: Option[String]) =
+      FileOps.planMatched(spark.sparkContext.parallelize(paths), "x", "dst",
+        name, enumerateAll = false).collect().sortBy(_.src).toSeq
+    val t1 = plan(Seq("x/a.csv"), Some("out.csv"))
     assert(t1.map(_.dst) === Seq("dst/out.csv"))
-    val t2 = FileOps.planTransfers(Seq("x/a.csv", "y/b.csv"), "dst",
-      Some("out.csv"))
+    val t2 = plan(Seq("y/b.csv", "x/a.csv"), Some("out.csv"))
     assert(t2.map(_.dst) === Seq("dst/out_1.csv", "dst/out_2.csv"))
-    val t3 = FileOps.planTransfers(Seq("x/a.csv", "y/b.csv"), "dst", None)
+    val t3 = plan(Seq("x/a.csv", "y/b.csv"), None)
     assert(t3.map(_.dst) === Seq("dst/a.csv", "dst/b.csv"))
   }
 
@@ -154,11 +158,11 @@ class FileOpsSpec extends SparkSpec {
   test("bulkCopy distributes a regex-matched upload end to end") {
     val root = mkTree()
     val dst = Files.createTempDirectory("graft_dst")
-    val matched = FileOps.matchBasename(
-      FileOps.listRecursive(spark, s"file:$root"), "\\.csv$")
-      .select("path").collect().map(_.getString(0)).toSeq.sorted
-    val plan = FileOps.planTransfers(matched, "up", None)
-    FileOps.bulkCopy(spark, plan, s"file:$root", s"file:$dst")
+    val entries = FileOps.walk(spark, s"file:$root")
+    val plan = FileOps.planMatched(entries.filter(FileOps.matching("\\.csv$",
+      basename = true)).map(_.path), "\\.csv$", "up", None, enumerateAll = true)
+    FileOps.bulkCopy(spark, plan, s"file:$root", s"file:$dst", 0, 0L, false)
+    FileOps.unpersist(entries)
     val copied = Files.list(dst.resolve("up")).toArray.map(_.toString).sorted
     assert(copied.map(p => Paths.get(p).getFileName.toString).toSeq
       === Seq("a.csv", "c.csv", "d.csv"))
@@ -217,12 +221,13 @@ class FileOpsSpec extends SparkSpec {
 
   test("move renames and delete removes, through the FS API") {
     val root = mkTree()
-    assert(FileOps.move(spark, s"file:$root", s"$root/b.txt",
-      s"$root/moved/renamed.txt"))
+    val conf = spark.sessionState.newHadoopConf()
+    FileOps.moveFiles(conf, s"file:$root", 0, 0L)(Iterator(
+      FileOps.Transfer(s"$root/b.txt", s"$root/moved/renamed.txt")))
     assert(Files.exists(root.resolve("moved/renamed.txt")))
     assert(!Files.exists(root.resolve("b.txt")))
-    FileOps.bulkDelete(spark, s"file:$root",
-      Seq(s"$root/a.csv", s"$root/sub/c.csv"))
+    FileOps.deleteFiles(conf, s"file:$root")(
+      Iterator(s"$root/a.csv", s"$root/sub/c.csv"))
     assert(!Files.exists(root.resolve("a.csv")))
     assert(!Files.exists(root.resolve("sub/c.csv")))
   }
@@ -230,12 +235,12 @@ class FileOpsSpec extends SparkSpec {
   test("reference error taxonomy: 200 no-matches, 201 bad path, 202 move error") {
     val root = mkTree()
     // 200: a matching stage with zero hits
-    val hits = FileOps.matchBasename(
-      FileOps.listRecursive(spark, s"file:$root"), "\\.nope$")
-      .select("path").collect().map(_.getString(0)).toSeq
+    val entries = FileOps.walk(spark, s"file:$root")
     val e200 = intercept[FileOps.GraftFsError] {
-      FileOps.requireMatches(hits, "\\.nope$")
+      FileOps.planMatched(entries.filter(FileOps.matching("\\.nope$",
+        basename = true)).map(_.path), "\\.nope$", "", None, enumerateAll = false)
     }
+    FileOps.unpersist(entries)
     assert(e200.code === FileOps.ErrorCodes.NoMatchesFound)
     // 201: listing a source folder that does not exist
     val e201 = intercept[FileOps.GraftFsError] {
@@ -244,7 +249,8 @@ class FileOpsSpec extends SparkSpec {
     assert(e201.code === FileOps.ErrorCodes.InvalidFilePath)
     // 202: renaming a file that is not there
     val e202 = intercept[FileOps.GraftFsError] {
-      FileOps.move(spark, s"file:$root", s"$root/ghost.txt", s"$root/out.txt")
+      FileOps.moveFiles(spark.sessionState.newHadoopConf(), s"file:$root", 0, 0L)(
+        Iterator(FileOps.Transfer(s"$root/ghost.txt", s"$root/out.txt")))
     }
     assert(e202.code === FileOps.ErrorCodes.MoveError)
   }

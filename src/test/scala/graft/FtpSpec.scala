@@ -229,27 +229,24 @@ class FtpSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft_resume")
     val dstFile = outDir.resolve("big.bin")
     Files.write(dstFile, payload.take(15000))
+    def resumed(t: FileOps.Transfer, srcUri: String, dstUri: String): Unit =
+      FileOps.bulkCopy(spark, spark.sparkContext.parallelize(Seq(t), 1),
+        srcUri, dstUri, 0, 0L, resume = true)
     val before = server.restCount.get()
-    FileOps.bulkCopy(spark,
-      Seq(FileOps.Transfer("/data/big.bin", dstFile.toString)),
-      ftpUri, "file:", resume = true)
+    resumed(FileOps.Transfer("/data/big.bin", dstFile.toString), ftpUri, "file:")
     assert(java.util.Arrays.equals(Files.readAllBytes(dstFile), payload),
       "resumed download corrupted the file")
     assert(server.restCount.get() > before, "source seek did not use REST")
     // already-complete destination: second resume is a no-op that
     // leaves the bytes intact
-    FileOps.bulkCopy(spark,
-      Seq(FileOps.Transfer("/data/big.bin", dstFile.toString)),
-      ftpUri, "file:", resume = true)
+    resumed(FileOps.Transfer("/data/big.bin", dstFile.toString), ftpUri, "file:")
     assert(java.util.Arrays.equals(Files.readAllBytes(dstFile), payload))
     // upload: remote destination holds a 10000-byte prefix; resume
     // appends the tail via REST+STOR (gftp append)
     Files.write(ftpRoot.resolve("data/up.bin"), payload.take(10000))
     val local = outDir.resolve("up_src.bin")
     Files.write(local, payload)
-    FileOps.bulkCopy(spark,
-      Seq(FileOps.Transfer(local.toString, "/data/up.bin")),
-      "file:", ftpUri, resume = true)
+    resumed(FileOps.Transfer(local.toString, "/data/up.bin"), "file:", ftpUri)
     assert(java.util.Arrays.equals(
       Files.readAllBytes(ftpRoot.resolve("data/up.bin")), payload),
       "resumed upload corrupted the remote file")
@@ -269,13 +266,13 @@ class FtpSpec extends SparkSpec {
 
   test("download blueprint: regex match over FTP tree → distributed copy to local") {
     withGftp()
-    val manifest = FileOps.listRecursive(spark, ftpUri)
-    val matched = FileOps.matchBasename(manifest, "\\.csv$")
-      .select("path").collect().map(_.getString(0)).toSeq.sorted
-    assert(matched === Seq("/data/one.csv", "/data/two.csv"))
+    val entries = FileOps.walk(spark, ftpUri)
+    val matched = entries.filter(FileOps.matching("\\.csv$", basename = true)).map(_.path)
+    assert(matched.collect().sorted.toSeq === Seq("/data/one.csv", "/data/two.csv"))
     val dst = Files.createTempDirectory("graft_dl")
-    FileOps.bulkCopy(spark,
-      FileOps.planTransfers(matched, "got", None), ftpUri, s"file:$dst")
+    FileOps.bulkCopy(spark, FileOps.planMatched(matched, "\\.csv$", "got", None,
+      enumerateAll = true), ftpUri, s"file:$dst", 0, 0L, false)
+    FileOps.unpersist(entries)
     assert(Files.readString(dst.resolve("got/one.csv")) === "id,v\n1,a\n2,b\n")
     assert(Files.readString(dst.resolve("got/two.csv")) === "id,v\n3,c\n")
   }
@@ -285,10 +282,9 @@ class FtpSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft_ul")
     Files.writeString(src.resolve("x.csv"), "a\n")
     Files.writeString(src.resolve("y.csv"), "b\n")
-    val files = Seq(s"$src/x.csv", s"$src/y.csv")
-    FileOps.bulkCopy(spark,
-      FileOps.planTransfers(files, "up/in", Some("out.csv")),
-      s"file:$src", ftpUri)
+    val files = spark.sparkContext.parallelize(Seq(s"$src/y.csv", s"$src/x.csv"))
+    FileOps.bulkCopy(spark, FileOps.planMatched(files, "\\.csv$", "up/in",
+      Some("out.csv"), enumerateAll = true), s"file:$src", ftpUri, 0, 0L, false)
     assert(Files.readString(ftpRoot.resolve("up/in/out_1.csv")) === "a\n")
     assert(Files.readString(ftpRoot.resolve("up/in/out_2.csv")) === "b\n")
   }
@@ -296,9 +292,11 @@ class FtpSpec extends SparkSpec {
   test("move + delete blueprints over FTP") {
     withGftp()
     Files.writeString(ftpRoot.resolve("data/mv.txt"), "m\n")
-    assert(FileOps.move(spark, ftpUri, "/data/mv.txt", "/moved/mv2.txt"))
+    val conf = spark.sessionState.newHadoopConf()
+    FileOps.moveFiles(conf, ftpUri, 0, 0L)(
+      Iterator(FileOps.Transfer("/data/mv.txt", "/moved/mv2.txt")))
     assert(Files.readString(ftpRoot.resolve("moved/mv2.txt")) === "m\n")
-    FileOps.bulkDelete(spark, ftpUri, Seq("/moved/mv2.txt"))
+    FileOps.deleteFiles(conf, ftpUri)(Iterator("/moved/mv2.txt"))
     assert(!Files.exists(ftpRoot.resolve("moved/mv2.txt")))
   }
 

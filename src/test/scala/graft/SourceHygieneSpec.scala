@@ -59,6 +59,27 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"SerializableConfiguration outside a broadcast(...):\n  ${offenders.mkString("\n  ")}")
   }
 
+  test("every public def in sources/FileOps.scala has a caller outside the specs") {
+    // a public function only specs call is a twin of the production
+    // path, checked in place of it; callers count in the program and in
+    // the benchmark harness, with comments stripped
+    import scala.jdk.CollectionConverters._
+    def code(p: java.nio.file.Path) = java.nio.file.Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)(^|\\s)//.*$", "$1")
+    val fileOps = code(java.nio.file.Paths.get("src/main/scala/graft/sources/FileOps.scala"))
+    val defs = "(?m)^  def (\\w+)".r.findAllMatchIn(fileOps).map(_.group(1)).toSeq.distinct
+    assert(defs.contains("bulkCopy"), s"FileOps defs not found: $defs")
+    val callers = Seq("src/main", "perfbench/harness").map(java.nio.file.Paths.get(_))
+      .filter(java.nio.file.Files.isDirectory(_))
+      .flatMap(r => java.nio.file.Files.walk(r).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).map(code))
+    val uncalled = defs.filterNot { d =>
+      val use = s"(?<!def )\\b$d\\b".r
+      callers.exists(use.findFirstIn(_).isDefined)
+    }
+    assert(uncalled.isEmpty, s"FileOps defs called only from specs: ${uncalled.mkString(", ")}")
+  }
+
   test("operators/Graph.scala reads relations to the driver in at most two places") {
     // LocalGraph's edge read and trussLocal's triangle read: every
     // driver-local graph kernel runs over the one LocalGraph a cache
