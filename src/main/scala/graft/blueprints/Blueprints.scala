@@ -1,10 +1,12 @@
 package graft.blueprints
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
-import graft.sources.{FileOps, PathUtils}
+import graft.sources.{FileOps, PathUtils, SerializableConfiguration}
 import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
 
 /** The reference blueprints' unit of use is a CLI job — these four
@@ -30,22 +32,28 @@ import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
   * regex match (upload_file.py:242-253), move only when more than
   * one file matched (move_file.py:168-173).
   *
-  * A regex step is RDD-only (no query plan), distributed end to end,
-  * and costs a fixed number of Spark jobs whatever the match count:
-  * one per directory level of the walk ([[FileOps.walk]]), at most two
-  * for the plan ([[FileOps.planMatched]]: a sample and a count, which
-  * also decides exit 200), and one act job that copies, renames or
-  * deletes over every core; no matched path collects to the driver.
-  * Tasks read the Hadoop conf from a broadcast (one per walk and act),
-  * freed with the walk's levels when the step ends, whatever its exit.
+  * A regex step makes one dispatch decision ([[Blueprints.regexStep]]).
+  * A tree of at most [[FileOps.LocalMaxEntries]] entries whose matched
+  * bytes, for a copy, are at most [[FileOps.LocalMaxBytes]] runs on the
+  * driver like the reference: the walk lists it over one FS handle,
+  * [[FileOps.planLocal]] plans it, and the verb's per-file body acts on
+  * it in one call with the session's Hadoop conf. It starts no Spark
+  * job. Above the bounds the step is RDD-only (no query plan),
+  * distributed end to end, and costs a fixed number of Spark jobs
+  * whatever the match count: one per directory level the walk hands to
+  * the executors ([[FileOps.walk]]), at most two for the plan
+  * ([[FileOps.planMatched]]: a sample and a count, which also decides
+  * exit 200), and one act job that copies, renames or deletes over
+  * every core; no matched path collects to the driver. Its tasks read
+  * the Hadoop conf from one broadcast, freed with the walk's levels when
+  * the step ends, whatever its exit.
   *
   * An exact-match step runs on the driver, like the reference's single
   * FTP call (move_file.py:96, delete_file.py:76): a regular-file
   * pre-check ([[FileOps.isFile]], exit 200 when it fails; Move's
-  * rename failure is its 202), then the same per-file body the regex
-  * act distributes, called once with the session's Hadoop conf. It
-  * starts no Spark job, and the pre-check and the transfer resolve
-  * every path in the same process.
+  * rename failure is its 202), then the same per-file body, called once
+  * with the session's Hadoop conf. It starts no Spark job, and the
+  * pre-check and the transfer resolve every path in the same process.
   */
 object Blueprints {
 
@@ -84,6 +92,12 @@ object Blueprints {
           "missing required flag --source-file-name-match-type")))
     require(matchType == "exact_match" || matchType == "regex_match",
       s"match type must be exact_match|regex_match, got $matchType")
+    // FTPS (RFC 4217) and SFTP (SSH2) — beyond the reference (plain
+    // ftplib.FTP), because production credentialed file movement is
+    // overwhelmingly one of those two
+    val protocol = m.getOrElse("--protocol", "ftp").toLowerCase
+    require(protocol == "ftp" || protocol == "ftps" || protocol == "sftp",
+      s"--protocol must be ftp|ftps|sftp, got $protocol")
     Args(
       matchType = matchType,
       sourceFileName = req("--source-file-name"),
@@ -93,7 +107,8 @@ object Blueprints {
       destinationFolderRaw = m.getOrElse("--destination-folder-name", ""),
       destinationFileName = m.get("--destination-file-name"),
       host = req("--host"),
-      port = m.getOrElse("--port", "21").toInt,
+      // each protocol's well-known port
+      port = m.get("--port").fold(if (protocol == "sftp") 22 else 21)(_.toInt),
       username = m.get("--username")
         .orElse(sys.env.get("FTP_USERNAME")).getOrElse("anonymous"),
       password = m.get("--password")
@@ -104,15 +119,7 @@ object Blueprints {
       retries = m.getOrElse("--retries", "0").toInt,
       backoffMs = m.getOrElse("--backoff-ms", "1000").toLong,
       resume = m.get("--resume").exists(_.toBoolean),
-      // FTPS (RFC 4217) and SFTP (SSH2) — beyond the reference (plain
-      // ftplib.FTP), because production credentialed file movement is
-      // overwhelmingly one of those two
-      protocol = {
-        val p = m.getOrElse("--protocol", "ftp").toLowerCase
-        require(p == "ftp" || p == "ftps" || p == "sftp",
-          s"--protocol must be ftp|ftps|sftp, got $p")
-        p
-      },
+      protocol = protocol,
       tlsInsecure = m.get("--tls-insecure").exists(_.toBoolean),
       truststore = m.get("--truststore"),
       truststorePassword = m.get("--truststore-password"))
@@ -161,17 +168,42 @@ object Blueprints {
         }
     }
 
-  /** Walk `root`, hand the paths [[FileOps.matching]] keeps to `act`,
-    * then free the walk's levels and conf broadcast.
+  /** One regex step: walk `root`, plan the paths [[FileOps.matching]]
+    * keeps (`a`'s pattern, destination name and `folder`), and run
+    * `act`, the verb's per-file body given a Hadoop conf, over the plan.
+    * The one dispatch decision: a tree the walk listed whole on the
+    * driver (at most `maxEntries` entries) whose matched bytes are at
+    * most `maxBytes` is planned on the driver and acted on in one call
+    * with the session's conf, and starts no Spark job; any other tree is
+    * planned on the executors and acted on in one call per plan
+    * partition. The conf is broadcast only when a Spark job needs it,
+    * and the broadcast and the walk's levels are freed when the step
+    * ends.
     */
-  private[blueprints] def regexStep(spark: SparkSession, root: String, pattern: String,
-      basename: Boolean)(act: RDD[String] => Unit): Unit = {
-    val conf = FileOps.shipConf(spark)
-    try {
-      val entries = FileOps.walk(spark, root, conf)
-      try act(entries.filter(FileOps.matching(pattern, basename)).map(_.path))
-      finally FileOps.unpersist(entries)
-    } finally conf.destroy()
+  private[blueprints] def regexStep(spark: SparkSession, a: Args, root: String,
+      basename: Boolean, folder: String, enumerateAll: Boolean, maxEntries: Long,
+      maxBytes: Long)(act: Configuration => Iterator[Transfer] => Unit): Unit = {
+    val keep = FileOps.matching(a.sourceFileName, basename)
+    val conf = spark.sessionState.newHadoopConf()
+    var shipped = Option.empty[Broadcast[SerializableConfiguration]]
+    def ship() = shipped.getOrElse {
+      val b = FileOps.shipConf(spark)
+      shipped = Some(b)
+      b
+    }
+    def distributed(matched: RDD[String]): Unit = FileOps.actOn(FileOps.planMatched(
+      matched, a.sourceFileName, folder, a.destinationFileName, enumerateAll), ship())(act)
+    try FileOps.walk(spark, root, conf, () => ship(), maxEntries) match {
+      case Left(tree) =>
+        val matched = tree.filter(keep)
+        if (matched.map(_.size).sum <= maxBytes)
+          act(conf)(FileOps.planLocal(matched.map(_.path), a.sourceFileName, folder,
+            a.destinationFileName, enumerateAll).iterator)
+        else distributed(spark.sparkContext.parallelize(matched.map(_.path)))
+      case Right(entries) =>
+        try distributed(entries.filter(keep).map(_.path))
+        finally FileOps.unpersist(entries)
+    } finally shipped.foreach(_.destroy())
   }
 
   private[blueprints] def session(): SparkSession =
@@ -179,22 +211,42 @@ object Blueprints {
       .getOrCreate()
 }
 
+/** One blueprint CLI: its flags parsed by [[Blueprints.parse]], its
+  * step run under [[Blueprints.exitCode]].
+  */
+abstract class Blueprint {
+
+  /** The step, with the regex step's bounds (see [[Blueprints.regexStep]]). */
+  protected def step(spark: SparkSession, a: Blueprints.Args, maxEntries: Long,
+      maxBytes: Long): Unit
+
+  def run(spark: SparkSession, argv: Array[String]): Int = runBounded(spark, argv)
+
+  /** [[run]] with the regex step's driver-arm bounds; a bound of 0 keeps
+    * a regex step over a non-empty tree on the executors.
+    */
+  def runBounded(spark: SparkSession, argv: Array[String],
+      localMaxEntries: Long = FileOps.LocalMaxEntries,
+      localMaxBytes: Long = FileOps.LocalMaxBytes): Int =
+    Blueprints.exitCode(step(spark, Blueprints.parse(argv), localMaxEntries, localMaxBytes))
+
+  def main(argv: Array[String]): Unit = sys.exit(run(Blueprints.session(), argv))
+}
+
 /** local → FTP (upload_file.py). */
-object Upload {
+object Upload extends Blueprint {
   import Blueprints._
 
-  def run(spark: SparkSession, argv: Array[String]): Int = exitCode {
-    val a = parse(argv)
+  protected def step(spark: SparkSession, a: Args, maxEntries: Long,
+      maxBytes: Long): Unit = {
     val dst = ftpUri(spark, a)
     val srcBase =
       if (a.sourceFolderName.startsWith("/")) a.sourceFolderName
       else PathUtils.combine(System.getProperty("user.dir"), a.sourceFolderName)
     if (a.matchType == "regex_match") {
-      regexStep(spark, s"file:$srcBase", a.sourceFileName, basename = false) { m =>
-        val plan = FileOps.planMatched(m, a.sourceFileName,
-          a.destinationFolderName, a.destinationFileName, enumerateAll = true)
-        FileOps.bulkCopy(spark, plan, "file:///", dst,
-          a.retries, a.backoffMs, a.resume)
+      regexStep(spark, a, s"file:$srcBase", basename = false, a.destinationFolderName,
+          enumerateAll = true, maxEntries, maxBytes) { conf =>
+        FileOps.copyFiles(conf, "file:///", dst, a.retries, a.backoffMs, a.resume)
       }
     } else {
       val src = PathUtils.combine(srcBase, a.sourceFileName)
@@ -211,16 +263,14 @@ object Upload {
           a.destinationFolderName, a.destinationFileName, src))))
     }
   }
-
-  def main(argv: Array[String]): Unit = sys.exit(run(session(), argv))
 }
 
 /** FTP → local (download_file.py). Regex matches the basename. */
-object Download {
+object Download extends Blueprint {
   import Blueprints._
 
-  def run(spark: SparkSession, argv: Array[String]): Int = exitCode {
-    val a = parse(argv)
+  protected def step(spark: SparkSession, a: Args, maxEntries: Long,
+      maxBytes: Long): Unit = {
     val src = ftpUri(spark, a)
     val srcFolder = PathUtils.cleanFolderName(a.sourceFolderName)
     // the reference downloads relative to the CWD (download_file.py:
@@ -230,12 +280,9 @@ object Download {
       if (a.destinationFolderRaw.startsWith("/")) PathUtils.normPath(a.destinationFolderRaw)
       else PathUtils.combine(System.getProperty("user.dir"), a.destinationFolderName)
     if (a.matchType == "regex_match") {
-      regexStep(spark, if (srcFolder.isEmpty) src else s"$src/$srcFolder",
-          a.sourceFileName, basename = true) { m =>
-        val plan = FileOps.planMatched(m, a.sourceFileName, localBase,
-          a.destinationFileName, enumerateAll = true)
-        FileOps.bulkCopy(spark, plan, src, "file:",
-          a.retries, a.backoffMs, a.resume)
+      regexStep(spark, a, if (srcFolder.isEmpty) src else s"$src/$srcFolder",
+          basename = true, localBase, enumerateAll = true, maxEntries, maxBytes) { conf =>
+        FileOps.copyFiles(conf, src, "file:", a.retries, a.backoffMs, a.resume)
       }
     } else {
       val p = PathUtils.combine(srcFolder, a.sourceFileName)
@@ -250,26 +297,24 @@ object Download {
           localBase, a.destinationFileName, p))))
     }
   }
-
-  def main(argv: Array[String]): Unit = sys.exit(run(session(), argv))
 }
 
 /** FTP-internal rename (move_file.py). */
-object Move {
+object Move extends Blueprint {
   import Blueprints._
 
-  def run(spark: SparkSession, argv: Array[String]): Int = exitCode {
-    val a = parse(argv)
+  protected def step(spark: SparkSession, a: Args, maxEntries: Long,
+      maxBytes: Long): Unit = {
     val uri = ftpUri(spark, a)
     val srcFolder = PathUtils.cleanFolderName(a.sourceFolderName)
     if (a.matchType == "regex_match") {
-      regexStep(spark, if (srcFolder.isEmpty) uri else s"$uri/$srcFolder",
-          a.sourceFileName, basename = false) { m =>
-        // move enumerates only on multi-match (move_file.py:168-173)
-        val plan = FileOps.planMatched(m, a.sourceFileName,
-          a.destinationFolderName, a.destinationFileName, enumerateAll = false)
-        FileOps.bulkMove(spark, uri, plan.map(t => t.copy(dst = "/" + t.dst)),
-          retries = a.retries, backoffMs = a.backoffMs)
+      // move enumerates only on multi-match (move_file.py:168-173); a
+      // rename moves no bytes, so only the entry bound applies
+      regexStep(spark, a, if (srcFolder.isEmpty) uri else s"$uri/$srcFolder",
+          basename = false, a.destinationFolderName, enumerateAll = false, maxEntries,
+          Long.MaxValue) { conf => moves =>
+        FileOps.moveFiles(conf, uri, a.retries, a.backoffMs)(
+          moves.map(t => t.copy(dst = "/" + t.dst)))
       }
     } else {
       val src = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
@@ -279,25 +324,22 @@ object Move {
         a.retries, a.backoffMs)(Iterator(Transfer(src, dst)))
     }
   }
-
-  def main(argv: Array[String]): Unit = sys.exit(run(session(), argv))
 }
 
 /** FTP delete (delete_file.py). */
-object Delete {
+object Delete extends Blueprint {
   import Blueprints._
 
-  def run(spark: SparkSession, argv: Array[String]): Int = exitCode {
-    val a = parse(argv)
+  protected def step(spark: SparkSession, a: Args, maxEntries: Long,
+      maxBytes: Long): Unit = {
     val uri = ftpUri(spark, a)
     val srcFolder = PathUtils.cleanFolderName(a.sourceFolderName)
     if (a.matchType == "regex_match") {
-      regexStep(spark, if (srcFolder.isEmpty) uri else s"$uri/$srcFolder",
-          a.sourceFileName, basename = false) { m =>
-        // no destination, so the plan is only the count and the spread
-        val plan = FileOps.planMatched(m, a.sourceFileName, "", None,
-          enumerateAll = false)
-        FileOps.bulkDelete(spark, uri, plan.map(_.src))
+      // the plan's destinations go unused, and a delete moves no bytes,
+      // so only the entry bound applies
+      regexStep(spark, a, if (srcFolder.isEmpty) uri else s"$uri/$srcFolder",
+          basename = false, "", enumerateAll = false, maxEntries, Long.MaxValue) {
+        conf => plan => FileOps.deleteFiles(conf, uri)(plan.map(_.src))
       }
     } else {
       val p = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
@@ -309,6 +351,4 @@ object Delete {
       FileOps.deleteFiles(spark.sessionState.newHadoopConf(), uri)(Iterator(p))
     }
   }
-
-  def main(argv: Array[String]): Unit = sys.exit(run(session(), argv))
 }

@@ -3,8 +3,12 @@ package graft.sources
 import java.net.URI
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,10 +22,14 @@ import org.apache.spark.storage.StorageLevel
   * file://, hdfs://, s3a://, and graft's own FTP connector. Each verb
   * (copy, move, delete) has one per-file body over an iterator of
   * files and a plain Hadoop conf, opening one FS handle per call.
-  * A regex step's act distributes that body over Spark executors (one
-  * call per partition — 1000 executors ⇒ 1000 parallel transfer
-  * streams, no driver bottleneck); an exact-match step calls it once
-  * on the driver and starts no Spark job.
+  * A tree of at most [[LocalMaxEntries]] entries (and, for a copy, at
+  * most [[LocalMaxBytes]] matched bytes) is walked, planned and acted
+  * on by the driver, in one call of that body and no Spark job, as
+  * the reference moves a handful of files in one process. Above the
+  * bounds the walk, the plan and the act are distributed: one body
+  * call per plan partition, so 1000 executors ⇒ 1000 parallel transfer
+  * streams, no driver bottleneck; an exact-match step is one call on
+  * the driver.
   */
 object FileOps {
 
@@ -45,6 +53,29 @@ object FileOps {
   private def noMatches(pattern: String) =
     GraftFsError(ErrorCodes.NoMatchesFound, s"no files found matching '$pattern'")
 
+  /** Most entries (files and directories) a walk lists on the driver
+    * before it hands off to the executors, and so the most a regex
+    * step plans and acts on there. Set at the smallest crossover of a
+    * regex Upload or Download over FTP or SFTP (CHANGES.md has the
+    * table; a 4-vCPU VM): SFTP Download, where the driver's serial
+    * per-file sessions cost more than the distributed arm's 3-5 Spark
+    * jobs from about 9 files on.
+    */
+  val LocalMaxEntries = 8L
+
+  /** Most matched bytes a copy streams on the driver: about what one
+    * driver SFTP stream (~100 MB/s on the same VM) moves in the
+    * distributed arm's ~100 ms of job latency. Above it the files
+    * stream in parallel on the executors.
+    */
+  val LocalMaxBytes = 8L << 20
+
+  /** Directories one listing call covers in a walk's level task: one
+    * connection per call on the FTP and SFTP adapters, and a bound on
+    * the statuses a task holds at once.
+    */
+  private val ListBatch = 256
+
   case class FileEntry(path: String, size: Long, mtime: Long, is_dir: Boolean)
 
   private def fs(uri: String, conf: Configuration): FileSystem = {
@@ -63,56 +94,70 @@ object FileOps {
     spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf(spark)))
 
   /** Recursive listing — the Spark-shaped twin of the reference's
-    * `find_files_in_directory` walk (download_file.py:138). Only the
-    * root's direct children are listed on the driver (bounded by the
-    * root's fan-out); everything below walks on the executors as an
-    * iterative FRONTIER BFS: each level lists exactly one directory
-    * depth in parallel, and the directories it discovers are
-    * re-distributed as the next level's frontier. Unlike a per-subtree
-    * recursive walk, parallelism is never bounded by the ROOT's
-    * fan-out — a root with one giant child directory still fans out as
-    * soon as that child's children are discovered (and no walk
-    * recurses on a task stack, so a 10⁴-deep tree can't overflow it).
-    * The result STAYS distributed and is a plain RDD, never
+    * `find_files_in_directory` walk (download_file.py:138). The driver
+    * lists the tree breadth-first, one directory per call over one FS
+    * handle, while the entries seen stay at or under `localMaxEntries`;
+    * a tree that fits comes back whole (`Left`) and no Spark job ran.
+    * The first time the bound is passed the walk hands off (`Right`):
+    * the entries listed so far seed the manifest, and the directories
+    * not yet listed are the first level of an iterative FRONTIER BFS on
+    * the executors. Each level lists its frontier in parallel, one FS
+    * handle per task, and the directories it discovers are
+    * re-distributed as the next level's frontier, so parallelism is
+    * never bounded by the ROOT's fan-out (a root with one giant child
+    * directory fans out as soon as that child's children are found) and
+    * no walk recurses on a task stack. No directory is listed twice or
+    * skipped. The distributed manifest is a plain RDD, never
     * `.collect()`ed and no query plan: at 10⁷–10⁸ files it feeds the
-    * plan partition-by-partition, and a blueprint step pays no Catalyst
-    * planning. Job budget: exactly one Spark job per directory level
-    * below the root — it lists the level into its persisted RDD and
+    * plan partition-by-partition. Job budget: exactly one Spark job per
+    * distributed level — it lists the level into its persisted RDD and
     * counts the level's directories, and that count both ends the walk
     * and sizes the next frontier. The level tasks read the Hadoop conf
-    * from one broadcast (the caller's `conf`, which must outlive the
-    * result). The manifest is unordered; [[unpersist]] frees its levels.
+    * from `ship()`, called only at the hand-off (its broadcast must
+    * outlive the result). A missing root is exit 201. The manifest is
+    * unordered; [[unpersist]] frees its levels.
     */
-  def walk(spark: SparkSession, rootUri: String): RDD[FileEntry] =
-    walk(spark, rootUri, shipConf(spark))
-
-  def walk(spark: SparkSession, rootUri: String,
-      conf: Broadcast[SerializableConfiguration]): RDD[FileEntry] = {
-    val root = fs(rootUri, conf.value.value)
-    val top: Seq[FileStatus] =
-      try root.listStatus(new Path(rootUri)).toSeq
+  def walk(spark: SparkSession, rootUri: String, conf: Configuration,
+      ship: () => Broadcast[SerializableConfiguration],
+      localMaxEntries: Long): Either[Seq[FileEntry], RDD[FileEntry]] = {
+    val listed = ArrayBuffer.empty[FileStatus]
+    // unlisted directories as FULL URIs (scheme + authority), so
+    // executors reopen the right FileSystem; FileEntry keeps the bare
+    // path
+    val open = mutable.Queue.empty[String]
+    val f = fs(rootUri, conf)
+    def list(dir: String): Unit = {
+      val sts = f.listStatus(new Path(dir))
+      listed ++= sts
+      open ++= sts.iterator.filter(_.isDirectory).map(_.getPath.toString)
+    }
+    try {
+      try list(rootUri)
       catch {
         case _: java.io.FileNotFoundException =>
           throw GraftFsError(ErrorCodes.InvalidFilePath,
             s"source path does not exist: $rootUri")
       }
-      finally root.close()
+      while (open.nonEmpty && listed.size <= localMaxEntries) list(open.dequeue())
+    } finally f.close()
+    if (open.isEmpty && listed.size <= localMaxEntries) Left(listed.map(entry).toSeq)
+    else Right(walkLevels(spark, rootUri, listed.map(entry).toSeq, open.toSeq, ship()))
+  }
+
+  /** [[walk]]'s distributed arm: `seed` plus a frontier BFS from `dirs`. */
+  private def walkLevels(spark: SparkSession, rootUri: String, seed: Seq[FileEntry],
+      dirs: Seq[String], conf: Broadcast[SerializableConfiguration]): RDD[FileEntry] = {
     val sc = spark.sparkContext
     val width = math.max(1, math.min(64, sc.defaultParallelism))
-    val levels = scala.collection.mutable.ArrayBuffer.empty[RDD[(String, FileEntry)]]
-    // frontier carries FULL URIs (scheme + authority) so executors can
-    // reopen the right FileSystem; FileEntry keeps the bare path
-    val dirs = top.filter(_.isDirectory).map(_.getPath.toString)
-    var frontier: RDD[String] =
-      sc.parallelize(dirs, math.max(1, math.min(dirs.size, 64)))
+    val levels = ArrayBuffer.empty[RDD[(String, FileEntry)]]
+    var frontier: RDD[String] = sc.parallelize(dirs, math.max(1, math.min(dirs.size, width)))
     var frontierDirs = dirs.size.toLong
     while (frontierDirs > 0) {
       val level = frontier.mapPartitions { paths =>
-        paths.flatMap { p =>
-          val f = FileSystem.newInstance(new URI(p), conf.value.value)
-          try f.listStatus(new Path(p)).map(st => (st.getPath.toString, entry(st)))
-          finally f.close()
-        }
+        val f = fs(rootUri, conf.value.value)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => f.close())
+        paths.grouped(ListBatch).flatMap(b => f.listStatus(b.map(new Path(_)).toArray))
+          .map(st => (st.getPath.toString, entry(st)))
       }.persist(StorageLevel.MEMORY_AND_DISK)
       levels += level
       val nextDirs = level.filter(_._2.is_dir).map(_._1)
@@ -122,7 +167,7 @@ object FileOps {
       frontier = nextDirs.repartition(
         math.max(1L, math.min(frontierDirs, width.toLong)).toInt)
     }
-    sc.union(sc.parallelize(top.map(entry), 1) +: levels.map(_.map(_._2)).toSeq)
+    sc.union(sc.parallelize(seed, 1) +: levels.map(_.map(_._2)).toSeq)
   }
 
   private def entry(st: FileStatus) = FileEntry(st.getPath.toUri.getPath,
@@ -135,14 +180,16 @@ object FileOps {
     if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
     else rdd.dependencies.foreach(d => unpersist(d.rdd))
 
-  /** [[walk]] as a DataFrame (path, size, mtime, is_dir): the
-    * manifest is a DataFrame over the walk's RDDs. Its persisted
-    * levels live as long as the DataFrame is reachable; nothing here
-    * unpersists them.
+  /** [[walk]] as a DataFrame (path, size, mtime, is_dir): a local
+    * relation when the tree fits under `localMaxEntries`, else a
+    * DataFrame over the walk's RDDs, whose persisted levels live as long
+    * as the DataFrame is reachable; nothing here unpersists them.
     */
-  def listRecursive(spark: SparkSession, rootUri: String): DataFrame = {
+  def listRecursive(spark: SparkSession, rootUri: String,
+      localMaxEntries: Long = LocalMaxEntries): DataFrame = {
     import spark.implicits._
-    walk(spark, rootUri).toDF()
+    walk(spark, rootUri, hadoopConf(spark), () => shipConf(spark), localMaxEntries)
+      .fold(_.toDF(), _.toDF())
   }
 
   /** The one regex match rule over a manifest: regular files whose
@@ -165,21 +212,45 @@ object FileOps {
   /** Transfer spec: one source file → one destination path. */
   case class Transfer(src: String, dst: String)
 
-  /** The blueprints' transfer plan over the matched paths, in a
-    * fixed number of Spark jobs whatever the match count; the matched
-    * paths never collect to the driver. Exit-200 when nothing matched.
-    *
-    * With an explicit destination name every file is numbered
-    * `name_N.ext` by its GLOBAL PATH-SORTED rank in Spark's string
-    * order (binary UTF-8, which is code point order, not Java's UTF-16
-    * `compareTo`). Two jobs: the range partitioner's sample, then one
-    * count per sorted partition, from which the driver derives each
-    * partition's rank offset and the match total. With `enumerateAll`
-    * (upload/download regex semantics, upload_file.py:242-253) every
-    * match is numbered, otherwise (move, move_file.py:168-173) only
-    * when more than one matched. Without a name each source keeps its
-    * basename, so order is irrelevant: one count job, then a
-    * round-robin spread.
+  /** The blueprints' transfer plan over the matched paths. Both arms
+    * ([[planMatched]] on the executors, [[planLocal]] on the driver)
+    * order by [[utf8Order]] and name by [[transfer]]. With an explicit
+    * destination name every file is numbered `name_N.ext` by its
+    * GLOBAL PATH-SORTED rank in Spark's string order (binary UTF-8,
+    * which is code point order, not Java's UTF-16 `compareTo`). With
+    * `enumerateAll` (upload/download regex semantics,
+    * upload_file.py:242-253) every match is numbered, otherwise (move,
+    * move_file.py:168-173) only when more than one matched. Without a
+    * name each source keeps its basename. Exit-200 when nothing matched.
+    */
+  private implicit val utf8Order: Ordering[Array[Byte]] =
+    (x, y) => java.util.Arrays.compareUnsigned(x, y)
+
+  private def utf8(p: String) = p.getBytes(StandardCharsets.UTF_8)
+
+  /** The plan's entry for `p`, the `rank`-th (from 1) matched path in
+    * [[utf8Order]] of `total`; without a name the rank is unused.
+    */
+  private def transfer(folder: String, name: Option[String], enumerateAll: Boolean,
+      total: Long)(p: String, rank: Long): Transfer =
+    Transfer(p, PathUtils.determineDestinationFullPath(folder, name, p,
+      if (enumerateAll || total > 1) Some(rank.toInt) else None))
+
+  /** The transfer plan on the driver, over matched paths it holds. */
+  def planLocal(matched: Seq[String], pattern: String, destinationFolder: String,
+      destinationFileName: Option[String], enumerateAll: Boolean): Seq[Transfer] = {
+    if (matched.isEmpty) throw noMatches(pattern)
+    val named = transfer(destinationFolder, destinationFileName, enumerateAll,
+      matched.size) _
+    matched.sortBy(utf8).zipWithIndex.map { case (p, i) => named(p, i + 1L) }
+  }
+
+  /** The transfer plan on the executors, in a fixed number of Spark
+    * jobs whatever the match count; the matched paths never collect to
+    * the driver. With a name, two jobs: the range partitioner's sample,
+    * then one count per sorted partition, from which the driver derives
+    * each partition's rank offset and the match total. Without one,
+    * order is irrelevant: one count job, then a round-robin spread.
     *
     * Either way the plan has about min(matches, defaultParallelism)
     * partitions, so the act job that consumes it uses every core, and
@@ -211,24 +282,17 @@ object FileOps {
     name match {
       case None =>
         val total = paths.count()
+        val named = transfer(folder, None, enumerateAll, total) _
         (paths.repartition(math.max(1L, math.min(total, width.toLong)).toInt)
-          .map(p => Transfer(p,
-            PathUtils.determineDestinationFullPath(folder, None, p))), total)
+          .map(named(_, 0L)), total)
       case some =>
-        implicit val utf8Order: Ordering[Array[Byte]] =
-          (x, y) => java.util.Arrays.compareUnsigned(x, y)
-        val sorted = paths.map(p => (p.getBytes(StandardCharsets.UTF_8), p))
-          .sortByKey(numPartitions = width)
+        val sorted = paths.map(p => (utf8(p), p)).sortByKey(numPartitions = width)
         val offsets = sorted.mapPartitions(it => Iterator(it.size.toLong))
           .collect().scanLeft(0L)(_ + _)
-        val total = offsets.last
-        val numbered = enumerateAll || total > 1
+        val named = transfer(folder, some, enumerateAll, offsets.last) _
         (sorted.mapPartitionsWithIndex { (i, it) =>
-          it.zipWithIndex.map { case ((_, p), j) =>
-            Transfer(p, PathUtils.determineDestinationFullPath(folder, some,
-              p, if (numbered) Some((offsets(i) + j + 1).toInt) else None))
-          }
-        }, total)
+          it.zipWithIndex.map { case ((_, p), j) => named(p, offsets(i) + j + 1) }
+        }, offsets.last)
     }
   }
 
@@ -340,21 +404,14 @@ object FileOps {
     } finally { sfs.close(); dfs.close() }
   }
 
-  /** [[copyFiles]] over a distributed plan ([[planMatched]]): one act
-    * job, one call per plan partition.
+  /** A verb's per-file `body` ([[copyFiles]], [[moveFiles]],
+    * [[deleteFiles]]) over a distributed plan ([[planMatched]]): one act
+    * job, one body call per plan partition, each with the Hadoop conf
+    * from `conf`.
     */
-  def bulkCopy(spark: SparkSession, plan: RDD[Transfer],
-      srcUriPrefix: String, dstUriPrefix: String, retries: Int,
-      backoffMs: Long, resume: Boolean): Unit =
-    withConf(spark)(conf => plan.foreachPartition(it => copyFiles(conf.value.value,
-      srcUriPrefix, dstUriPrefix, retries, backoffMs, resume)(it)))
-
-  /** One act job over a conf broadcast, destroyed when the job ends. */
-  private def withConf(spark: SparkSession)(
-      job: Broadcast[SerializableConfiguration] => Unit): Unit = {
-    val conf = shipConf(spark)
-    try job(conf) finally conf.destroy()
-  }
+  def actOn(plan: RDD[Transfer], conf: Broadcast[SerializableConfiguration])(
+      body: Configuration => Iterator[Transfer] => Unit): Unit =
+    plan.foreachPartition(it => body(conf.value.value)(it))
 
   /** Small-file compaction — the table-maintenance pass a data lake
     * runs continuously: a directory of many small parquet files is
@@ -439,15 +496,6 @@ object FileOps {
     } finally f.close()
   }
 
-  /** [[moveFiles]] over a (src, dst) plan — the Move blueprint's regex
-    * flow: one act job, one call per partition; a 202 surfaces through
-    * the Spark job to the CLI shell.
-    */
-  def bulkMove(spark: SparkSession, uri: String, moves: RDD[Transfer],
-      retries: Int = 0, backoffMs: Long = 1000L): Unit =
-    withConf(spark)(conf => moves.foreachPartition(it =>
-      moveFiles(conf.value.value, uri, retries, backoffMs)(it)))
-
   /** The delete body — delete_file.py:76: one FS handle, one
     * non-recursive delete per path.
     */
@@ -456,13 +504,6 @@ object FileOps {
     try paths.foreach(p => f.delete(new Path(p), false))
     finally f.close()
   }
-
-  /** [[deleteFiles]] over distributed paths: one job, one call per
-    * partition.
-    */
-  def bulkDelete(spark: SparkSession, uri: String, paths: RDD[String]): Unit =
-    withConf(spark)(conf => paths.foreachPartition(it =>
-      deleteFiles(conf.value.value, uri)(it)))
 
   /** q60: file manifest of a scale-factor directory, paths relativized
     * for determinism. Rows-only (no portable SQL oracle for fs walks).

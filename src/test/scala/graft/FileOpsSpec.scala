@@ -89,7 +89,7 @@ class FileOpsSpec extends SparkSpec {
       "\u540d", // a non-ASCII file name
       s"^${java.util.regex.Pattern.quote(root.toString)}/sub/[^/]+$$")
     def viaRdd(p: String, basename: Boolean) =
-      FileOps.walk(spark, s"file:$root").union(spark.sparkContext.parallelize(extra))
+      DistributedWalk(spark, s"file:$root").union(spark.sparkContext.parallelize(extra))
         .filter(FileOps.matching(p, basename)).map(_.path).collect().sorted.toSeq
     for (p <- patterns; basename <- Seq(true, false)) {
       val got = viaRdd(p, basename)
@@ -158,10 +158,12 @@ class FileOpsSpec extends SparkSpec {
   test("bulkCopy distributes a regex-matched upload end to end") {
     val root = mkTree()
     val dst = Files.createTempDirectory("graft_dst")
-    val entries = FileOps.walk(spark, s"file:$root")
+    val entries = DistributedWalk(spark, s"file:$root")
     val plan = FileOps.planMatched(entries.filter(FileOps.matching("\\.csv$",
       basename = true)).map(_.path), "\\.csv$", "up", None, enumerateAll = true)
-    FileOps.bulkCopy(spark, plan, s"file:$root", s"file:$dst", 0, 0L, false)
+    val (from, to) = (s"file:$root", s"file:$dst")
+    FileOps.actOn(plan, FileOps.shipConf(spark))(
+      FileOps.copyFiles(_, from, to, 0, 0L, false))
     FileOps.unpersist(entries)
     val copied = Files.list(dst.resolve("up")).toArray.map(_.toString).sorted
     assert(copied.map(p => Paths.get(p).getFileName.toString).toSeq
@@ -235,7 +237,7 @@ class FileOpsSpec extends SparkSpec {
   test("reference error taxonomy: 200 no-matches, 201 bad path, 202 move error") {
     val root = mkTree()
     // 200: a matching stage with zero hits
-    val entries = FileOps.walk(spark, s"file:$root")
+    val entries = DistributedWalk(spark, s"file:$root")
     val e200 = intercept[FileOps.GraftFsError] {
       FileOps.planMatched(entries.filter(FileOps.matching("\\.nope$",
         basename = true)).map(_.path), "\\.nope$", "", None, enumerateAll = false)
@@ -263,7 +265,7 @@ class FileOpsSpec extends SparkSpec {
       Files.createDirectories(dir)
       (0 until 1000).foreach(i => Files.createFile(dir.resolve(f"f$i%04d")))
     }
-    val df = FileOps.listRecursive(spark, s"file:$root")
+    val df = FileOps.listRecursive(spark, s"file:$root", localMaxEntries = 0)
     // the whole manifest, the root's direct children included, is a
     // distributed RDD scan: no driver-side relation at all
     val locals = df.queryExecution.analyzed.collect {
@@ -303,7 +305,7 @@ class FileOpsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = FileOps.listRecursive(spark, s"file:$root")
+      val df = FileOps.listRecursive(spark, s"file:$root", localMaxEntries = 0)
       val files = df.filter("not is_dir").collect()
       assert(files.length === depth)
       assert(df.filter("is_dir").count() === depth.toLong)
@@ -319,6 +321,58 @@ class FileOpsSpec extends SparkSpec {
       assert(taskCount.get() > depth,
         s"walk ran only ${taskCount.get()} tasks for a $depth-level tree")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("walk hands off to the executors at any bound, losing and repeating no entry") {
+    val root = mkTree()
+    Files.createDirectories(root.resolve("sub/inner/deeper"))
+    Files.writeString(root.resolve("sub/inner/deeper/e.csv"), "9\n")
+    Files.writeString(root.resolve("sub/f.csv"), "10\n")
+    def walked(bound: Long) = FileOps.walk(spark, s"file:$root",
+      spark.sessionState.newHadoopConf(), () => FileOps.shipConf(spark), bound)
+    val whole = walked(Long.MaxValue) match {
+      case Left(entries) => entries.sortBy(_.path)
+      case Right(_) => fail("an unbounded walk left the driver")
+    }
+    assert(whole.map(_.path.stripPrefix(s"$root/")) === Seq("a.csv", "b.txt", "sub",
+      "sub/c.csv", "sub/f.csv", "sub/inner", "sub/inner/d.csv", "sub/inner/deeper",
+      "sub/inner/deeper/e.csv"))
+    // the root lists 3 entries, sub/ 3 more, inner/ 2 and deeper/ 1:
+    // the bounds below 9 are crossed after each of the four directories
+    (0L until whole.size.toLong).foreach { bound =>
+      walked(bound) match {
+        case Left(_) => fail(s"bound $bound: a ${whole.size}-entry tree stayed on the driver")
+        case Right(rdd) =>
+          assert(rdd.collect().sortBy(_.path).toSeq === whole, s"bound $bound")
+          FileOps.unpersist(rdd)
+      }
+    }
+    assert(walked(whole.size.toLong).isLeft)
+  }
+
+  test("a distributed walk level lists its partition on one FTP login") {
+    val root = Files.createTempDirectory("graft_logins")
+    val dirs = 40
+    (0 until dirs).foreach { d =>
+      Files.createDirectories(root.resolve(f"d$d%02d"))
+      Files.writeString(root.resolve(f"d$d%02d/f.txt"), "x")
+    }
+    val server = new graft.ftp.MiniFtpServer(root)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.gftp.impl", "graft.sources.ftp.GraftFtpFileSystem")
+    conf.set("fs.gftp.impl.disable.cache", "true")
+    try {
+      val before = server.loginCount.get()
+      val entries = DistributedWalk(spark, s"gftp://u:p@127.0.0.1:${server.port}/")
+      assert(entries.count() === 2L * dirs)
+      FileOps.unpersist(entries)
+      // the root on the driver, then one level of 40 directories spread
+      // over min(40, defaultParallelism) tasks
+      val partitions = math.min(dirs, spark.sparkContext.defaultParallelism)
+      val logins = server.loginCount.get() - before
+      assert(logins <= partitions + 1L,
+        s"$logins logins to list $dirs directories over $partitions partitions")
+    } finally server.stop()
   }
 
   test("compactParquet sizes nested partitioned layouts, not just flat dirs") {
@@ -351,19 +405,8 @@ class FileOpsSpec extends SparkSpec {
     val n = 12 // 3 per partition over 4: the failure lands mid-partition
     (1 to n).foreach(i => Files.writeString(src.resolve(f"s$i%02d.dat"), s"file $i\n"))
     import scala.jdk.CollectionConverters._
-    val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val opens = inherited.zipWithIndex.flatMap {
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case ("--add-opens", i) => Seq("--add-opens", inherited(i + 1))
-      case _ => Nil
-    }
-    val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
-      opens ++ Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
-        "graft.PlanRetryMain", src.toString, dst.toString)
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-    assert(proc.waitFor() === 0, out.takeRight(4000))
+    val (exit, out) = ChildJvm.run("graft.PlanRetryMain", Seq(src.toString, dst.toString))
+    assert(exit === 0, out.takeRight(4000))
     val report = out.linesIterator.find(_.startsWith("retry-report ")).getOrElse(
       fail(s"no report from the child:\n${out.takeRight(4000)}"))
     assert(report === "retry-report injected=1 failedTasks=1")
@@ -382,6 +425,17 @@ class FileOpsSpec extends SparkSpec {
     assert(rows.length === 10) // the ten tables
     assert(rows.forall(!_.getAs[Boolean]("is_dir")))
   }
+}
+
+/** [[FileOps.walk]] kept on its distributed arm (bound 0), as an RDD:
+  * an empty tree, which stays on the driver, comes back parallelized.
+  */
+object DistributedWalk {
+  def apply(spark: org.apache.spark.sql.SparkSession,
+      uri: String): org.apache.spark.rdd.RDD[FileOps.FileEntry] =
+    FileOps.walk(spark, uri, spark.sessionState.newHadoopConf(),
+      () => FileOps.shipConf(spark), localMaxEntries = 0)
+      .fold(spark.sparkContext.parallelize(_), identity)
 }
 
 /** Child-JVM body of the task-retry spec: a `local[4,2]` session (one
@@ -403,10 +457,11 @@ object PlanRetryMain {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.reason != org.apache.spark.Success) failed.incrementAndGet()
     })
-    val plan = FileOps.planMatched(FileOps.walk(spark, s"file:$src")
+    val plan = FileOps.planMatched(DistributedWalk(spark, s"file:$src")
       .filter(FileOps.matching("\\.dat$", basename = true)).map(_.path),
       "\\.dat$", dst, Some("out.dat"), enumerateAll = true)
-    FileOps.bulkCopy(spark, plan, "file:", "flaky:", 0, 0L, false)
+    FileOps.actOn(plan, FileOps.shipConf(spark))(
+      FileOps.copyFiles(_, "file:", "flaky:", 0, 0L, false))
     org.apache.spark.graftspec.Listeners.drain(sc)
     println(s"retry-report injected=${FlakyLocalFs.injected.get} failedTasks=${failed.get}")
     spark.stop()

@@ -159,11 +159,12 @@ class FtpSpec extends SparkSpec {
     val dir = Files.createDirectories(ftpRoot.resolve("bulkdel"))
     (0 until 40).foreach(i => Files.writeString(dir.resolve(f"d$i%02d.dat"), "x"))
     val t0 = System.nanoTime()
-    val code = graft.blueprints.Delete.run(spark, Array(
+    val code = graft.blueprints.Delete.runBounded(spark, Array(
       "--host", "127.0.0.1", "--port", server.port.toString,
       "--username", "u", "--password", "p",
       "--file-name-match-type", "regex_match",
-      "--source-file-name", "d[0-9]+\\.dat$", "--source-folder-name", "bulkdel"))
+      "--source-file-name", "d[0-9]+\\.dat$", "--source-folder-name", "bulkdel"),
+      localMaxEntries = 0)
     val secs = (System.nanoTime() - t0) / 1e9
     assert(code === 0)
     assert(Files.list(dir).count() === 0L)
@@ -230,8 +231,8 @@ class FtpSpec extends SparkSpec {
     val dstFile = outDir.resolve("big.bin")
     Files.write(dstFile, payload.take(15000))
     def resumed(t: FileOps.Transfer, srcUri: String, dstUri: String): Unit =
-      FileOps.bulkCopy(spark, spark.sparkContext.parallelize(Seq(t), 1),
-        srcUri, dstUri, 0, 0L, resume = true)
+      FileOps.actOn(spark.sparkContext.parallelize(Seq(t), 1), FileOps.shipConf(spark))(
+        FileOps.copyFiles(_, srcUri, dstUri, 0, 0L, resume = true))
     val before = server.restCount.get()
     resumed(FileOps.Transfer("/data/big.bin", dstFile.toString), ftpUri, "file:")
     assert(java.util.Arrays.equals(Files.readAllBytes(dstFile), payload),
@@ -266,12 +267,14 @@ class FtpSpec extends SparkSpec {
 
   test("download blueprint: regex match over FTP tree → distributed copy to local") {
     withGftp()
-    val entries = FileOps.walk(spark, ftpUri)
+    val entries = DistributedWalk(spark, ftpUri)
     val matched = entries.filter(FileOps.matching("\\.csv$", basename = true)).map(_.path)
     assert(matched.collect().sorted.toSeq === Seq("/data/one.csv", "/data/two.csv"))
     val dst = Files.createTempDirectory("graft_dl")
-    FileOps.bulkCopy(spark, FileOps.planMatched(matched, "\\.csv$", "got", None,
-      enumerateAll = true), ftpUri, s"file:$dst", 0, 0L, false)
+    val (from, to) = (ftpUri, s"file:$dst")
+    FileOps.actOn(FileOps.planMatched(matched, "\\.csv$", "got", None,
+      enumerateAll = true), FileOps.shipConf(spark))(
+      FileOps.copyFiles(_, from, to, 0, 0L, false))
     FileOps.unpersist(entries)
     assert(Files.readString(dst.resolve("got/one.csv")) === "id,v\n1,a\n2,b\n")
     assert(Files.readString(dst.resolve("got/two.csv")) === "id,v\n3,c\n")
@@ -283,8 +286,10 @@ class FtpSpec extends SparkSpec {
     Files.writeString(src.resolve("x.csv"), "a\n")
     Files.writeString(src.resolve("y.csv"), "b\n")
     val files = spark.sparkContext.parallelize(Seq(s"$src/y.csv", s"$src/x.csv"))
-    FileOps.bulkCopy(spark, FileOps.planMatched(files, "\\.csv$", "up/in",
-      Some("out.csv"), enumerateAll = true), s"file:$src", ftpUri, 0, 0L, false)
+    val (from, to) = (s"file:$src", ftpUri)
+    FileOps.actOn(FileOps.planMatched(files, "\\.csv$", "up/in",
+      Some("out.csv"), enumerateAll = true), FileOps.shipConf(spark))(
+      FileOps.copyFiles(_, from, to, 0, 0L, false))
     assert(Files.readString(ftpRoot.resolve("up/in/out_1.csv")) === "a\n")
     assert(Files.readString(ftpRoot.resolve("up/in/out_2.csv")) === "b\n")
   }

@@ -11,6 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
+  /** A source file's text with its comments stripped. */
+  private def code(p: java.nio.file.Path) = java.nio.file.Files.readString(p)
+    .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)(^|\\s)//.*$", "$1")
+
   test("no raw control bytes in src/**.scala or build.sbt") {
     val roots = Seq(
       java.nio.file.Paths.get("src"),
@@ -64,11 +68,9 @@ class SourceHygieneSpec extends AnyFunSuite {
     // path, checked in place of it; callers count in the program and in
     // the benchmark harness, with comments stripped
     import scala.jdk.CollectionConverters._
-    def code(p: java.nio.file.Path) = java.nio.file.Files.readString(p)
-      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)(^|\\s)//.*$", "$1")
     val fileOps = code(java.nio.file.Paths.get("src/main/scala/graft/sources/FileOps.scala"))
     val defs = "(?m)^  def (\\w+)".r.findAllMatchIn(fileOps).map(_.group(1)).toSeq.distinct
-    assert(defs.contains("bulkCopy"), s"FileOps defs not found: $defs")
+    assert(defs.contains("copyFiles"), s"FileOps defs not found: $defs")
     val callers = Seq("src/main", "perfbench/harness").map(java.nio.file.Paths.get(_))
       .filter(java.nio.file.Files.isDirectory(_))
       .flatMap(r => java.nio.file.Files.walk(r).iterator().asScala
@@ -78,6 +80,16 @@ class SourceHygieneSpec extends AnyFunSuite {
       callers.exists(use.findFirstIn(_).isDefined)
     }
     assert(uncalled.isEmpty, s"FileOps defs called only from specs: ${uncalled.mkString(", ")}")
+  }
+
+  test("sources/FileOps.scala orders and numbers a transfer plan at one site each") {
+    // the driver and distributed plans share the binary UTF-8 order and
+    // the name_N numbering, so the two arms cannot drift apart
+    val fileOps = code(java.nio.file.Paths.get("src/main/scala/graft/sources/FileOps.scala"))
+    for (site <- Seq("compareUnsigned", "determineDestinationFullPath")) {
+      val n = s"\\b$site\\b".r.findAllMatchIn(fileOps).size
+      assert(n === 1, s"$site appears at $n sites in FileOps.scala")
+    }
   }
 
   test("operators/Graph.scala reads relations to the driver in at most two places") {

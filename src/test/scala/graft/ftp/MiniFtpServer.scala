@@ -35,6 +35,11 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
     */
   val mlsdCount = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Logins accepted — lets specs count the control connections a
+    * client opened.
+    */
+  val loginCount = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** AUTH TLS upgrades served — lets specs assert the control
     * connection really was upgraded, not silently cleartext.
     */
@@ -147,7 +152,10 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
             reply("530 TLS required: issue AUTH TLS first")
           case "USER" => reply("331 password required")
           case "PASS" =>
-            if (requiredPassword.forall(_ == arg)) reply("230 logged in")
+            if (requiredPassword.forall(_ == arg)) {
+              loginCount.incrementAndGet()
+              reply("230 logged in")
+            }
             else reply("530 Login incorrect")
           case "SYST" => reply("215 UNIX Type: L8")
           case "FEAT" =>
