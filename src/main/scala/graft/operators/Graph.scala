@@ -336,17 +336,19 @@ object Graph {
       .orderBy(col("part"))
   }
 
-  /** Edge-relation bound under which the wedge-closing join
-    * BROADCASTS the canonical edge set instead of shuffling the
-    * O(m^1.5) wedge stream to it: 16-byte rows × 4M ≈ 64 MB plan-side
-    * — well inside executor broadcast budgets, and the wedge stream
-    * (the 100×-bigger side) then never leaves its map stage
-    * (measured at sf0.1: 486 → ~25 MB shuffled). Above the bound the
-    * join shuffles on the (lo, hi) pair key — the m^1.5 bound caps
-    * that volume, and a 100 TB edge set was never broadcastable.
-    * Dispatch is by edge COUNT — deterministic for a given graph,
-    * the q34 dispatch discipline. The same bound gates the driver-local
-    * arms: at or below it a cache fill builds the [[LocalGraph]].
+  /** Edge-count bound of the driver-local regime and of the
+    * distributed arms' broadcast hints. At or below it a cache fill
+    * ([[sized]]) builds the [[LocalGraph]] and every graph kernel runs
+    * on the driver over it: 16-byte edge rows × 4M ≈ 64 MB collected,
+    * inside the default `spark.driver.maxResultSize` (1 GB). Above it
+    * the distributed arms run, and kcore, coreLevels, hitsFixed and
+    * truss each BROADCAST their per-round alive set (nodes, hubs or
+    * surviving edges) when that relation is at most this many rows,
+    * and shuffle it otherwise. Dispatch is by COUNT — deterministic
+    * for a given graph, the q34 dispatch discipline. Triangle
+    * enumeration broadcasts no edge set: below the bound its wedges
+    * close in the [[LocalGraph]]'s adjacency merge, above it in a
+    * Bloom-screened shuffle join.
     */
   private[graft] val BroadcastEdgeMaxRows = 4000000L
 
@@ -936,8 +938,54 @@ object Graph {
       |CROSS JOIN n
       |ORDER BY ante, cons""".stripMargin
 
+  /** The co-purchase edge relation `pairs(lo, hi)` as the DuckDB
+    * oracles' first CTE — the twin of [[coPurchaseGraph]]'s edges.
+    */
+  private val PairsCte: String =
+    """WITH pairs AS MATERIALIZED (
+      |  SELECT DISTINCT a.pk AS lo, b.pk AS hi
+      |  FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+      |        FROM lineitem) a
+      |  JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+      |        FROM lineitem) b
+      |    ON a.ok = b.ok AND a.pk < b.pk
+      |)""".stripMargin
+
+  /** Degree-oriented triangle enumeration over an edge relation
+    * `edges(lo, hi)`: `deg<tag>(node, deg)`, `ori<tag>(src, dst)` and
+    * the triangles `tri<tag>(apex, lo, hi)`, each AS MATERIALIZED —
+    * the CTEs the q122, q127, q131 and q135 oracles share.
+    */
+  private def triangleCtes(edges: String, tag: String): String =
+    s"""deg$tag AS MATERIALIZED (
+       |  SELECT node, COUNT(*) AS deg FROM (
+       |    SELECT lo AS node FROM $edges
+       |    UNION ALL SELECT hi FROM $edges)
+       |  GROUP BY node
+       |), ori$tag AS MATERIALIZED (
+       |  SELECT
+       |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
+       |         THEN p.lo ELSE p.hi END AS src,
+       |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
+       |         THEN p.hi ELSE p.lo END AS dst
+       |  FROM $edges p
+       |  JOIN deg$tag dl ON dl.node = p.lo
+       |  JOIN deg$tag dh ON dh.node = p.hi
+       |), tri$tag AS MATERIALIZED (
+       |  SELECT x.src AS apex, x.dst AS lo, y.dst AS hi
+       |  FROM ori$tag x JOIN ori$tag y
+       |    ON x.src = y.src AND x.dst < y.dst
+       |  WHERE EXISTS (SELECT 1 FROM $edges p
+       |                WHERE p.lo = x.dst AND p.hi = y.dst)
+       |)""".stripMargin
+
+  /** q122's enumeration over the co-purchase edges, the prefix of the
+    * q122, q127 and q131 oracles.
+    */
+  private val TriangleCtes: String = s"""$PairsCte, ${triangleCtes("pairs", "")}"""
+
   /** DuckDB twin of [[q122]]. CTE hygiene is load-bearing at sf1:
-    * DuckDB INLINES plain CTEs per reference, so `tris` named three
+    * DuckDB INLINES plain CTEs per reference, so `tri` named three
     * times (the corners union) re-ran the whole wedge join three
     * times — 135+ CPU-minutes and a 78 GB spill that filled the disk.
     * `AS MATERIALIZED` on every multiply-referenced CTE plus a
@@ -947,36 +995,9 @@ object Graph {
     * swap).
     */
   val q122Sql: String =
-    """WITH pairs AS MATERIALIZED (
-      |  SELECT DISTINCT a.pk AS lo, b.pk AS hi
-      |  FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-      |        FROM lineitem) a
-      |  JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-      |        FROM lineitem) b
-      |    ON a.ok = b.ok AND a.pk < b.pk
-      |), deg AS MATERIALIZED (
-      |  SELECT node, COUNT(*) AS deg FROM (
-      |    SELECT lo AS node FROM pairs
-      |    UNION ALL SELECT hi FROM pairs)
-      |  GROUP BY node
-      |), oriented AS MATERIALIZED (
-      |  SELECT
-      |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-      |         THEN p.lo ELSE p.hi END AS src,
-      |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-      |         THEN p.hi ELSE p.lo END AS dst
-      |  FROM pairs p
-      |  JOIN deg dl ON dl.node = p.lo
-      |  JOIN deg dh ON dh.node = p.hi
-      |), tris AS MATERIALIZED (
-      |  SELECT x.src AS apex, x.dst AS lo, y.dst AS hi
-      |  FROM oriented x JOIN oriented y
-      |    ON x.src = y.src AND x.dst < y.dst
-      |  WHERE EXISTS (SELECT 1 FROM pairs p
-      |                WHERE p.lo = x.dst AND p.hi = y.dst)
-      |)
+    s"""$TriangleCtes
       |SELECT part, COUNT(*) AS triangles
-      |FROM (SELECT unnest([apex, lo, hi]) AS part FROM tris)
+      |FROM (SELECT unnest([apex, lo, hi]) AS part FROM tri)
       |GROUP BY part
       |ORDER BY part""".stripMargin
 
@@ -1037,36 +1058,9 @@ object Graph {
     * ×1e6 grid (`//` ≡ Spark `div` on positive int64).
     */
   val q131Sql: String =
-    """WITH pairs AS MATERIALIZED (
-      |  SELECT DISTINCT a.pk AS lo, b.pk AS hi
-      |  FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-      |        FROM lineitem) a
-      |  JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-      |        FROM lineitem) b
-      |    ON a.ok = b.ok AND a.pk < b.pk
-      |), deg AS MATERIALIZED (
-      |  SELECT node, COUNT(*) AS deg FROM (
-      |    SELECT lo AS node FROM pairs
-      |    UNION ALL SELECT hi FROM pairs)
-      |  GROUP BY node
-      |), oriented AS MATERIALIZED (
-      |  SELECT
-      |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-      |         THEN p.lo ELSE p.hi END AS src,
-      |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-      |         THEN p.hi ELSE p.lo END AS dst
-      |  FROM pairs p
-      |  JOIN deg dl ON dl.node = p.lo
-      |  JOIN deg dh ON dh.node = p.hi
-      |), tris AS MATERIALIZED (
-      |  SELECT x.src AS apex, x.dst AS lo, y.dst AS hi
-      |  FROM oriented x JOIN oriented y
-      |    ON x.src = y.src AND x.dst < y.dst
-      |  WHERE EXISTS (SELECT 1 FROM pairs p
-      |                WHERE p.lo = x.dst AND p.hi = y.dst)
-      |), tcnt AS MATERIALIZED (
+    s"""$TriangleCtes, tcnt AS MATERIALIZED (
       |  SELECT part, COUNT(*) AS triangles
-      |  FROM (SELECT unnest([apex, lo, hi]) AS part FROM tris)
+      |  FROM (SELECT unnest([apex, lo, hi]) AS part FROM tri)
       |  GROUP BY part
       |)
       |SELECT d.node AS part, d.deg,
@@ -1079,45 +1073,18 @@ object Graph {
 
   /** DuckDB twin of [[q127]]: q122's materialized wedge enumeration,
     * each triangle exploded to its three re-canonicalized edges (the
-    * corners union references `tris` three times — hence the
+    * corners union references `tri` three times — hence the
     * MATERIALIZED, q122Sql's documented pitfall), zero-support edges
     * kept by the left join, the Jaccard on the same ×1e6 integer
     * grid (`//` ≡ Spark `div` on positive int64).
     */
   val q127Sql: String =
-    """WITH pairs AS MATERIALIZED (
-      |  SELECT DISTINCT a.pk AS lo, b.pk AS hi
-      |  FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-      |        FROM lineitem) a
-      |  JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-      |        FROM lineitem) b
-      |    ON a.ok = b.ok AND a.pk < b.pk
-      |), deg AS MATERIALIZED (
-      |  SELECT node, COUNT(*) AS deg FROM (
-      |    SELECT lo AS node FROM pairs
-      |    UNION ALL SELECT hi FROM pairs)
-      |  GROUP BY node
-      |), oriented AS MATERIALIZED (
-      |  SELECT
-      |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-      |         THEN p.lo ELSE p.hi END AS src,
-      |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-      |         THEN p.hi ELSE p.lo END AS dst
-      |  FROM pairs p
-      |  JOIN deg dl ON dl.node = p.lo
-      |  JOIN deg dh ON dh.node = p.hi
-      |), tris AS MATERIALIZED (
-      |  SELECT x.src AS apex, x.dst AS lo, y.dst AS hi
-      |  FROM oriented x JOIN oriented y
-      |    ON x.src = y.src AND x.dst < y.dst
-      |  WHERE EXISTS (SELECT 1 FROM pairs p
-      |                WHERE p.lo = x.dst AND p.hi = y.dst)
-      |), corners AS (
-      |  SELECT least(apex, lo) AS lo, greatest(apex, lo) AS hi FROM tris
+    s"""$TriangleCtes, corners AS (
+      |  SELECT least(apex, lo) AS lo, greatest(apex, lo) AS hi FROM tri
       |  UNION ALL
-      |  SELECT least(apex, hi), greatest(apex, hi) FROM tris
+      |  SELECT least(apex, hi), greatest(apex, hi) FROM tri
       |  UNION ALL
-      |  SELECT lo, hi FROM tris
+      |  SELECT lo, hi FROM tri
       |), esupp AS (
       |  SELECT lo, hi, COUNT(*) AS common_cnt FROM corners GROUP BY 1, 2
       |)
@@ -2343,27 +2310,7 @@ object Graph {
     */
   val q135Sql: String = {
     def supportBlock(edges: String, tag: String): String =
-      s"""deg$tag AS MATERIALIZED (
-         |  SELECT node, COUNT(*) AS deg FROM (
-         |    SELECT lo AS node FROM $edges
-         |    UNION ALL SELECT hi FROM $edges)
-         |  GROUP BY node
-         |), ori$tag AS MATERIALIZED (
-         |  SELECT
-         |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-         |         THEN p.lo ELSE p.hi END AS src,
-         |    CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND p.lo < p.hi)
-         |         THEN p.hi ELSE p.lo END AS dst
-         |  FROM $edges p
-         |  JOIN deg$tag dl ON dl.node = p.lo
-         |  JOIN deg$tag dh ON dh.node = p.hi
-         |), tri$tag AS MATERIALIZED (
-         |  SELECT x.src AS apex, x.dst AS lo, y.dst AS hi
-         |  FROM ori$tag x JOIN ori$tag y
-         |    ON x.src = y.src AND x.dst < y.dst
-         |  WHERE EXISTS (SELECT 1 FROM $edges p
-         |                WHERE p.lo = x.dst AND p.hi = y.dst)
-         |), sup$tag AS MATERIALIZED (
+      s"""${triangleCtes(edges, tag)}, sup$tag AS MATERIALIZED (
          |  SELECT e.lo, e.hi, COALESCE(c.cnt, 0) AS supp
          |  FROM $edges e LEFT JOIN (
          |    SELECT lo, hi, COUNT(*) AS cnt FROM (
@@ -2382,14 +2329,7 @@ object Graph {
            |)""".stripMargin
       s"$survivors,\n${supportBlock(s"s$r", s"$r")}"
     }
-    s"""WITH pairs AS MATERIALIZED (
-       |  SELECT DISTINCT a.pk AS lo, b.pk AS hi
-       |  FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-       |        FROM lineitem) a
-       |  JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-       |        FROM lineitem) b
-       |    ON a.ok = b.ok AND a.pk < b.pk
-       |), ${supportBlock("pairs", "0")},
+    s"""$PairsCte, ${supportBlock("pairs", "0")},
        |thr AS MATERIALIZED (
        |  SELECT MIN(supp) AS t FROM (
        |    SELECT supp, SUM(c) OVER (ORDER BY supp) AS cum FROM (

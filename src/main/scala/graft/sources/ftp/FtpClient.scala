@@ -392,16 +392,19 @@ class FtpClient(host: String, port: Int, user: String, password: String,
   }
 
   /** Walk CWD through each segment, creating missing dirs — the
-    * reference's create_new_folders (upload_file.py:159).
+    * reference's create_new_folders (upload_file.py:159). True when
+    * the walk's last CWD entered `path`.
     */
-  def makeDirs(path: String): Unit = {
+  def makeDirs(path: String): Boolean = {
     val orig = pwd()
+    var entered = true
     path.split("/").filter(_.nonEmpty).foldLeft("") { (acc, seg) =>
       val cur = if (path.startsWith("/") || acc.nonEmpty) s"$acc/$seg" else seg
-      if (!cwd(cur)) { mkd(cur); cwd(cur) }
+      entered = cwd(cur) || { mkd(cur); cwd(cur) }
       cur
     }
     cwd(orig)
+    entered
   }
 
   override def close(): Unit = {

@@ -1,12 +1,9 @@
 package graft.sources.ftp
 
 import java.io.{FileNotFoundException, InputStream, OutputStream}
-import java.net.URI
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs._
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
+import graft.sources.ClientFileSystem
+import graft.sources.ClientFileSystem.{Meta, SeekableInput}
 
 /** Hadoop `FileSystem` adapter over [[FtpClient]] — graft's "custom
   * FTP connector". Registering it (`fs.gftp.impl` →
@@ -19,93 +16,66 @@ import org.apache.hadoop.util.Progressable
   *   retries = 0, backoffMs = 1000L, resume = false)(plan)
   * }}}
   *
-  * Each executor task builds its own instance (FileSystem.newInstance)
-  * → one FTP control connection per task, transfers stream directly
-  * between the data socket and Spark's readers. Credentials resolve
-  * from the URI userInfo or `fs.gftp.user` / `fs.gftp.password`.
+  * Transfers stream directly between the data socket and Spark's
+  * readers. The verbs, credentials and client lifetime are
+  * [[ClientFileSystem]]'s; this class holds the FTP commands only.
   *
   * Reference parity: this subsumes upload/download/move/delete
   * (ftp-blueprints *.py) as plain `FileSystem` verbs.
   */
-class GraftFtpFileSystem extends FileSystem {
-
-  private var uri: URI = _
-  protected var host: String = _
-  protected var port: Int = 21
-  protected var user: String = "anonymous"
-  protected var password: String = ""
-  private var workingDir: Path = new Path("/")
+class GraftFtpFileSystem extends ClientFileSystem[FtpClient](21) {
 
   override def getScheme: String = "gftp"
 
-  override def initialize(name: URI, conf: Configuration): Unit = {
-    super.initialize(name, conf)
-    setConf(conf)
-    val scheme = getScheme
-    host = name.getHost
-    port =
-      if (name.getPort > 0) name.getPort
-      else conf.getInt(s"fs.$scheme.port", 21)
-    Option(name.getUserInfo).foreach { ui =>
-      val parts = ui.split(":", 2)
-      user = parts(0)
-      if (parts.length > 1) password = parts(1)
-    }
-    user = conf.get(s"fs.$scheme.user", user)
-    password = conf.get(s"fs.$scheme.password", password)
-    // keep the full authority (incl. userinfo) — Path.checkPath
-    // compares authorities verbatim
-    uri = URI.create(s"$scheme://${name.getAuthority}")
-  }
-
-  override def getUri: URI = uri
-
   protected def client(): FtpClient = new FtpClient(host, port, user, password)
 
-  private def withClient[A](f: FtpClient => A): A = {
-    val c = client()
-    try f(c) finally c.close()
-  }
-
-  private def abs(p: Path): String = {
-    val q = if (p.isAbsolute) p else new Path(workingDir, p)
-    q.toUri.getPath match { case "" => "/"; case s => s }
-  }
-
-  /** A client handed to a stream that owns it: closed here only if
-    * building the stream fails.
+  /** One path's status from control-channel round trips only: SIZE
+    * (a file), else CWD (a directory), plus MDTM when the server
+    * answers it. Listing the parent instead would open a data
+    * connection and transfer every sibling — O(n²) control traffic
+    * over a directory of n files, and a listing that races the
+    * sibling deletes of a parallel regex delete.
     */
-  private def withStreamClient[A](f: FtpClient => A): A = {
-    val c = client()
-    try f(c) catch { case e: Throwable => c.close(); throw e }
+  protected def stat(c: FtpClient, path: String): Option[Meta] = {
+    val size = c.size(path)
+    if (size.isEmpty && !c.cwd(path)) None
+    else Some(Meta(size.getOrElse(0L), size.isEmpty, c.mdtm(path).getOrElse(0L)))
   }
 
-  /** A regular file's length, on the client that will transfer it. */
-  private def fileLen(c: FtpClient, p: Path): Long =
-    c.size(abs(p)).getOrElse {
-      if (c.cwd(abs(p))) throw new java.io.IOException(s"$p is a directory")
-      throw new FileNotFoundException(abs(p))
+  /** SIZE alone sizes a file for open and append: no MDTM. */
+  override protected def fileLen(c: FtpClient, path: String): Long =
+    c.size(path).getOrElse {
+      if (c.cwd(path)) throw new java.io.IOException(s"$path is a directory")
+      throw new FileNotFoundException(path)
     }
 
-  override def open(p: Path, bufferSize: Int): FSDataInputStream =
-    withStreamClient { c =>
-      val len = fileLen(c, p)
-      new FSDataInputStream(
-        new SeekableFtpInput(c.retrieveStream(abs(p)), c, abs(p), len))
-    }
+  protected def entries(c: FtpClient, dir: String): Seq[(String, Meta)] =
+    c.mlsd(dir).map(e => e.name -> Meta(e.size, e.isDir, e.modifyMs))
+
+  protected def remove(c: FtpClient, path: String, isDir: Boolean): Boolean =
+    if (isDir) c.rmd(path) else c.delete(path)
+  protected def makeDirs(c: FtpClient, dir: String): Boolean = c.makeDirs(dir)
+  protected def move(c: FtpClient, src: String, dst: String): Boolean =
+    c.rename(src, dst)
+
+  /** Create = STOR; append = STOR resumed at the current size via REST. */
+  protected def openOutput(c: FtpClient, path: String, at: Long): OutputStream =
+    c.storeStream(path, at)
+
+  protected def openInput(c: FtpClient, path: String, len: Long): SeekableInput =
+    new SeekableFtpInput(c.retrieveStream(path), c, path, len)
 
   /** Seekable wrapper: FTP streams are forward-only, so seek reopens
     * the transfer RESUMED AT THE TARGET via REST — O(1) in the offset
     * instead of a skip-read of `target` bytes. Parquet footer reads
     * over FTP are exactly this pattern (open → seek to EOF−8): with
     * skip-reads a footer probe streams the whole file; with REST it
-    * streams 8 bytes. A stream that ends short of the SIZE it opened
+    * streams 8 bytes. A positioned read is `FSInputStream`'s: seek,
+    * read, seek back. A stream that ends short of the SIZE it opened
     * with fails instead of passing a truncated file on.
     */
   private class SeekableFtpInput(var in: InputStream, var c: FtpClient,
-      path: String, len: Long)
-      extends InputStream with Seekable with PositionedReadable {
-    private var pos = 0L
+      path: String, len: Long) extends SeekableInput(path, len) {
     override def read(): Int = {
       val b = in.read(); if (b >= 0) pos += 1 else checkEnd(); b
     }
@@ -115,129 +85,11 @@ class GraftFtpFileSystem extends FileSystem {
     private def checkEnd(): Unit = if (pos < len)
       throw new java.io.EOFException(s"$path ended at byte $pos of $len")
     override def close(): Unit = try in.close() finally c.close()
-    override def getPos: Long = pos
-    override def seek(target: Long): Unit = {
-      if (target == pos) return
-      if (target > len)
-        throw new java.io.EOFException(s"seek past EOF in $path")
+    protected def moveTo(target: Long): Unit = {
       in.close(); c.close()
       c = client()
       in = c.retrieveStream(path, target)
-      pos = target
     }
-    override def seekToNewSource(targetPos: Long): Boolean = false
-    override def read(position: Long, buffer: Array[Byte], offset: Int,
-        length: Int): Int = {
-      val saved = pos
-      seek(position)
-      val n = read(buffer, offset, length)
-      seek(saved)
-      n
-    }
-    override def readFully(position: Long, buffer: Array[Byte], offset: Int,
-        length: Int): Unit = {
-      var done = 0
-      while (done < length) {
-        val n = read(position + done, buffer, offset + done, length - done)
-        if (n < 0) throw new java.io.EOFException(path)
-        done += n
-      }
-    }
-    override def readFully(position: Long, buffer: Array[Byte]): Unit =
-      readFully(position, buffer, 0, buffer.length)
-  }
-
-  override def create(p: Path, permission: FsPermission, overwrite: Boolean,
-      bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    if (!overwrite && exists(p))
-      throw new java.io.IOException(s"$p already exists")
-    val path = abs(p)
-    withStreamClient { c =>
-      val parent = path.take(path.lastIndexOf('/'))
-      if (parent.nonEmpty) c.makeDirs(parent)
-      outStream(c, c.storeStream(path), 0L)
-    }
-  }
-
-  /** Append = STOR resumed at the current size via REST — gives the
-    * Hadoop surface a real resume primitive (a partially-transferred
-    * upload continues from where it died instead of restarting).
-    */
-  override def append(p: Path, bufferSize: Int,
-      progress: Progressable): FSDataOutputStream = withStreamClient { c =>
-    val len = fileLen(c, p) // throws FileNotFoundException if absent
-    outStream(c, c.storeStream(abs(p), len), len)
-  }
-
-  /** A STOR stream that releases its client when closed. */
-  private def outStream(c: FtpClient, raw: OutputStream,
-      start: Long): FSDataOutputStream =
-    new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
-      override def write(b: Array[Byte], off: Int, len: Int): Unit =
-        out.write(b, off, len)
-      override def close(): Unit = { super.close(); c.close() }
-    }, statistics, start)
-
-  override def rename(src: Path, dst: Path): Boolean =
-    withClient(_.rename(abs(src), abs(dst)))
-
-  override def delete(p: Path, recursive: Boolean): Boolean = withClient { c =>
-    def del(path: String, isDir: Boolean): Boolean =
-      if (!isDir) c.delete(path)
-      else {
-        val children = c.mlsd(path)
-        if (children.nonEmpty && !recursive)
-          throw new java.io.IOException(s"$path not empty")
-        children.forall(e => del(s"$path/${e.name}", e.isDir)) && c.rmd(path)
-      }
-    try del(abs(p), status(c, p).isDirectory)
-    catch { case _: FileNotFoundException => false }
-  }
-
-  override def listStatus(p: Path): Array[FileStatus] = withClient(list(_, p))
-
-  /** Every path's listing on one control connection: one login for a
-    * whole batch, where Hadoop's default logs in once per path.
-    */
-  override def listStatus(ps: Array[Path]): Array[FileStatus] =
-    withClient(c => ps.flatMap(list(c, _)))
-
-  private def list(c: FtpClient, p: Path): Array[FileStatus] = {
-    val st = status(c, p)
-    if (!st.isDirectory) Array(st)
-    else c.mlsd(abs(p)).map { e =>
-      new FileStatus(e.size, e.isDir, 1, 65536, e.modifyMs,
-        new Path(makeQualified(p), e.name))
-    }.toArray
-  }
-
-  override def setWorkingDirectory(dir: Path): Unit = { workingDir = dir }
-  override def getWorkingDirectory: Path = workingDir
-
-  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
-    val path = abs(p)
-    if (path == "/") return true
-    withClient { c => c.makeDirs(path); c.cwd(path) }
-  }
-
-  override def getFileStatus(p: Path): FileStatus = withClient(status(_, p))
-
-  /** One path's status from control-channel round trips only: SIZE
-    * (a file), else CWD (a directory), plus MDTM when the server
-    * answers it. Listing the parent instead would open a data
-    * connection and transfer every sibling — O(n²) control traffic
-    * over a directory of n files, and a listing that races the
-    * sibling deletes of a parallel regex delete.
-    */
-  private def status(c: FtpClient, p: Path): FileStatus = {
-    val path = abs(p)
-    if (path == "/")
-      return new FileStatus(0, true, 1, 65536, 0, makeQualified(p))
-    val size = c.size(path)
-    if (size.isEmpty && !c.cwd(path)) throw new FileNotFoundException(path)
-    new FileStatus(size.getOrElse(0L), size.isEmpty, 1, 65536,
-      c.mdtm(path).getOrElse(0L), makeQualified(p))
   }
 }
 

@@ -1,12 +1,9 @@
 package graft.sources.ssh
 
-import java.io.{FileNotFoundException, IOException}
-import java.net.URI
+import java.io.OutputStream
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs._
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
+import graft.sources.ClientFileSystem
+import graft.sources.ClientFileSystem.{Meta, SeekableInput}
 
 /** Hadoop `FileSystem` adapter over [[SftpClient]] — the SFTP sibling
   * of `gftp://`/`gftps://`: register `fs.gsftp.impl` → this class and
@@ -19,70 +16,52 @@ import org.apache.hadoop.util.Progressable
   * Where the FTP adapter's `seek` re-opens the transfer with REST,
   * SFTP reads are natively random-access (`READ handle offset len`) —
   * a parquet footer probe is one 8-byte read on the SAME connection,
-  * no reconnect at all. Credentials from URI userInfo or
-  * `fs.gsftp.user` / `fs.gsftp.password`; pin the server's host key
-  * with `fs.gsftp.hostkey` (base64 ssh-ed25519 blob, the
-  * known_hosts posture) — unset accepts any (loopback tooling).
+  * no reconnect at all. The verbs, credentials and client lifetime
+  * are [[ClientFileSystem]]'s; pin the server's host key with
+  * `fs.gsftp.hostkey` (base64 ssh-ed25519 blob, the known_hosts
+  * posture) — unset accepts any (loopback tooling).
   */
-class GraftSftpFileSystem extends FileSystem {
+class GraftSftpFileSystem extends ClientFileSystem[SftpClient](22) {
 
-  private var uri: URI = _
-  private var host: String = _
-  private var port: Int = 22
-  private var user: String = "anonymous"
-  private var password: String = ""
-  private var workingDir: Path = new Path("/")
-  private var pinnedKey: Option[Array[Byte]] = None
+  private lazy val pinnedKey: Option[Array[Byte]] =
+    Option(getConf.get("fs.gsftp.hostkey")).map(java.util.Base64.getDecoder.decode)
 
   override def getScheme: String = "gsftp"
 
-  override def initialize(name: URI, conf: Configuration): Unit = {
-    super.initialize(name, conf)
-    setConf(conf)
-    host = name.getHost
-    port = if (name.getPort > 0) name.getPort else conf.getInt("fs.gsftp.port", 22)
-    Option(name.getUserInfo).foreach { ui =>
-      val parts = ui.split(":", 2)
-      user = parts(0)
-      if (parts.length > 1) password = parts(1)
-    }
-    user = conf.get("fs.gsftp.user", user)
-    password = conf.get("fs.gsftp.password", password)
-    pinnedKey = Option(conf.get("fs.gsftp.hostkey"))
-      .map(java.util.Base64.getDecoder.decode)
-    uri = URI.create(s"gsftp://${name.getAuthority}")
-  }
-
-  override def getUri: URI = uri
-
-  private def client(): SftpClient =
+  protected def client(): SftpClient =
     new SftpClient(host, port, user, password, pinnedKey)
 
-  private def withClient[A](f: SftpClient => A): A = {
-    val c = client()
-    try f(c) finally c.close()
-  }
+  private def meta(a: SftpProto.Attrs): Meta =
+    Meta(a.size.getOrElse(0L), a.isDir, a.mtimeSec.getOrElse(0L) * 1000L)
 
-  private def abs(p: Path): String = {
-    val q = if (p.isAbsolute) p else new Path(workingDir, p)
-    q.toUri.getPath match { case "" => "/"; case s => s }
-  }
+  protected def stat(c: SftpClient, path: String): Option[Meta] =
+    c.stat(path).map(meta)
 
-  /** A client handed to a stream that owns it: closed here only if
-    * building the stream fails.
-    */
-  private def withStreamClient[A](f: SftpClient => A): A = {
-    val c = client()
-    try f(c) catch { case e: Throwable => c.close(); throw e }
-  }
+  protected def entries(c: SftpClient, dir: String): Seq[(String, Meta)] =
+    c.readDir(dir).map { case (name, a) => name -> meta(a) }
 
-  override def open(p: Path, bufferSize: Int): FSDataInputStream =
-    withStreamClient { c =>
-      val a = c.stat(abs(p)).getOrElse(throw new FileNotFoundException(abs(p)))
-      if (a.isDir) throw new IOException(s"cannot open directory $p")
-      new FSDataInputStream(
-        new SftpSeekableInput(c, abs(p), a.size.getOrElse(0L)))
+  protected def remove(c: SftpClient, path: String, isDir: Boolean): Boolean =
+    if (isDir) c.rmdir(path) else c.remove(path)
+  protected def move(c: SftpClient, src: String, dst: String): Boolean =
+    c.rename(src, dst)
+
+  /** Create each missing ancestor of `dir` and `dir` itself, root-down. */
+  protected def makeDirs(c: SftpClient, dir: String): Boolean = {
+    var cur = ""
+    dir.split("/").filter(_.nonEmpty).forall { seg =>
+      cur = s"$cur/$seg"
+      c.stat(cur) match {
+        case None => c.mkdir(cur); true
+        case Some(a) => a.isDir
+      }
     }
+  }
+
+  protected def openOutput(c: SftpClient, path: String, at: Long): OutputStream =
+    c.outputStream(path, append = at > 0, appendAt = at)
+
+  protected def openInput(c: SftpClient, path: String, len: Long): SeekableInput =
+    new SftpSeekableInput(c, path, len)
 
   /** Sequential reads stream through the client's pipelined reader
     * ([[SftpClient.inputStream]], a window of READs in flight), opened
@@ -91,8 +70,7 @@ class GraftSftpFileSystem extends FileSystem {
     * handle of their own — a parquet footer probe is one 8-byte read.
     */
   private class SftpSeekableInput(c: SftpClient, path: String, len: Long)
-      extends java.io.InputStream with Seekable with PositionedReadable {
-    private var pos = 0L
+      extends SeekableInput(path, len) {
     private var seq: java.io.InputStream = null // reader at `pos`
     private var h: Array[Byte] = null // handle for positioned reads
     override def read(): Int = {
@@ -111,12 +89,7 @@ class GraftSftpFileSystem extends FileSystem {
     override def close(): Unit = {
       try { dropReader(); if (h != null) c.closeHandle(h) } finally c.close()
     }
-    override def getPos: Long = pos
-    override def seek(target: Long): Unit = {
-      if (target > len) throw new java.io.EOFException(s"seek past EOF")
-      if (target != pos) { dropReader(); pos = target }
-    }
-    override def seekToNewSource(targetPos: Long): Boolean = false
+    protected def moveTo(target: Long): Unit = dropReader()
     override def read(position: Long, buffer: Array[Byte], offset: Int,
         length: Int): Int = {
       if (h == null) h = c.openRead(path)
@@ -125,109 +98,6 @@ class GraftSftpFileSystem extends FileSystem {
           System.arraycopy(d, 0, buffer, offset, d.length); d.length
         case _ => -1
       }
-    }
-    override def readFully(position: Long, buffer: Array[Byte], offset: Int,
-        length: Int): Unit = {
-      var done = 0
-      while (done < length) {
-        val n = read(position + done, buffer, offset + done, length - done)
-        if (n < 0) throw new java.io.EOFException("sftp readFully past EOF")
-        done += n
-      }
-    }
-    override def readFully(position: Long, buffer: Array[Byte]): Unit =
-      readFully(position, buffer, 0, buffer.length)
-  }
-
-  override def create(p: Path, permission: FsPermission, overwrite: Boolean,
-      bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    if (!overwrite && exists(p))
-      throw new IOException(s"$p already exists")
-    withStreamClient { c =>
-      Option(p.getParent).foreach(makeDirs(c, _))
-      outStream(c, c.outputStream(abs(p)), 0L)
-    }
-  }
-
-  override def append(p: Path, bufferSize: Int,
-      progress: Progressable): FSDataOutputStream = withStreamClient { c =>
-    val a = c.stat(abs(p)).getOrElse(throw new FileNotFoundException(abs(p)))
-    if (a.isDir) throw new IOException(s"cannot append to dir $p")
-    val len = a.size.getOrElse(0L)
-    outStream(c, c.outputStream(abs(p), append = true, appendAt = len), len)
-  }
-
-  /** A write stream that releases its client when closed. */
-  private def outStream(c: SftpClient, raw: java.io.OutputStream,
-      start: Long): FSDataOutputStream =
-    new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
-      override def write(b: Array[Byte], off: Int, len: Int): Unit =
-        out.write(b, off, len)
-      override def close(): Unit = { super.close(); c.close() }
-    }, statistics, start)
-
-  override def rename(src: Path, dst: Path): Boolean =
-    withClient(_.rename(abs(src), abs(dst)))
-
-  override def delete(p: Path, recursive: Boolean): Boolean = withClient { c =>
-    def del(path: String, isDir: Boolean): Boolean =
-      if (!isDir) c.remove(path)
-      else {
-        val children = c.readDir(path)
-        if (children.nonEmpty && !recursive)
-          throw new IOException(s"$path not empty")
-        children.forall(e =>
-          del(s"$path/${e._1}", e._2.isDir)) && c.rmdir(path)
-      }
-    try del(abs(p), status(c, p).isDirectory)
-    catch { case _: FileNotFoundException => false }
-  }
-
-  override def listStatus(p: Path): Array[FileStatus] = withClient(list(_, p))
-
-  /** Every path's listing in one SSH session, where Hadoop's default
-    * opens one per path.
-    */
-  override def listStatus(ps: Array[Path]): Array[FileStatus] =
-    withClient(c => ps.flatMap(list(c, _)))
-
-  private def list(c: SftpClient, p: Path): Array[FileStatus] = {
-    val st = status(c, p)
-    if (!st.isDirectory) Array(st)
-    else c.readDir(abs(p)).map { case (name, a) =>
-      new FileStatus(a.size.getOrElse(0L), a.isDir, 1, 65536,
-        a.mtimeSec.getOrElse(0L) * 1000L, new Path(makeQualified(p), name))
-    }.toArray
-  }
-
-  override def setWorkingDirectory(dir: Path): Unit = { workingDir = dir }
-  override def getWorkingDirectory: Path = workingDir
-
-  override def mkdirs(p: Path, permission: FsPermission): Boolean =
-    withClient(makeDirs(_, p))
-
-  /** Create each missing ancestor of `p` and `p` itself, root-down. */
-  private def makeDirs(c: SftpClient, p: Path): Boolean = {
-    var cur = ""
-    abs(p).split("/").filter(_.nonEmpty).foreach { seg =>
-      cur = s"$cur/$seg"
-      if (c.stat(cur).isEmpty) c.mkdir(cur)
-    }
-    true
-  }
-
-  override def getFileStatus(p: Path): FileStatus = withClient(status(_, p))
-
-  private def status(c: SftpClient, p: Path): FileStatus = {
-    val path = abs(p)
-    if (path == "/")
-      return new FileStatus(0, true, 1, 65536, 0, makeQualified(p))
-    c.stat(path) match {
-      case Some(a) =>
-        new FileStatus(a.size.getOrElse(0L), a.isDir, 1, 65536,
-          a.mtimeSec.getOrElse(0L) * 1000L, makeQualified(p))
-      case None => throw new FileNotFoundException(path)
     }
   }
 }

@@ -42,7 +42,7 @@ import SftpProto._
 final class SftpClient(host: String, port: Int = 22, user: String,
     password: String, expectedHostKey: Option[Array[Byte]] = None,
     rekeyBytes: Long = 1L << 30,
-    identity: Option[java.security.KeyPair] = None) {
+    identity: Option[java.security.KeyPair] = None) extends AutoCloseable {
 
   private val sock = new Socket(host, port)
   sock.setTcpNoDelay(true)
@@ -288,13 +288,6 @@ final class SftpClient(host: String, port: Int = 22, user: String,
   }
 
   // ---- operations ----------------------------------------------------
-
-  def realpath(path: String): String = {
-    val (rt, r) = rpc(Realpath)(_.text(path))
-    require(rt == Name, s"REALPATH answered $rt")
-    r.u32() // count
-    r.text()
-  }
 
   def stat(path: String): Option[Attrs] = {
     val (rt, r) = rpc(Stat)(_.text(path))

@@ -92,6 +92,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
   }
 
+  test("sources/ defines the remote FileSystem skeleton in one file") {
+    // the gftp, gftps and gsftp adapters share one skeleton; a second
+    // definition of any of these is a second copy of it, where a
+    // change (a connection pool) would have to be made twice
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/sources"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toSeq
+    for (d <- Seq("def initialize(", "def withClient[", "def withStreamClient[", "def listStatus(")) {
+      val in = files.collect { case (p, text) if text.contains(d) => p }
+      assert(in.size === 1, s"$d is defined in ${in.size} files: ${in.mkString(", ")}")
+    }
+  }
+
   test("operators/Graph.scala reads relations to the driver in at most two places") {
     // LocalGraph's edge read and trussLocal's triangle read: every
     // driver-local graph kernel runs over the one LocalGraph a cache
