@@ -3,12 +3,16 @@ package graft.sources
 import java.io.{EOFException, FileNotFoundException, IOException, OutputStream}
 import java.net.URI
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
-import ClientFileSystem.{Meta, SeekableInput}
+import ClientFileSystem.{MaxIdleMs, Meta, SeekableInput}
 
 /** The Hadoop `FileSystem` skeleton of graft's remote adapters
   * (`gftp://`, `gftps://`, `gsftp://`): URI and credential parsing,
@@ -18,13 +22,20 @@ import ClientFileSystem.{Meta, SeekableInput}
   * `fs.<scheme>.{user,password}`, the port from the URI or
   * `fs.<scheme>.port`, else `defaultPort`.
   *
-  * Client lifetime: every FS call opens its own client (an FTP login
-  * or an SSH session) and closes it before it returns; a stream owns
-  * its client until the stream is closed; a batched
-  * `listStatus(Array[Path])` shares one client across its paths.
-  * ROADMAP direction 2's pool (one client per partition) changes
-  * this here, in `withClient` and `withStreamClient`, for every
-  * protocol at once.
+  * Client lifetime: each instance keeps a pool of idle clients (FTP
+  * logins or SSH sessions). An FS call checks one out, or opens one
+  * when none is idle, and returns it when the call ends; a stream
+  * holds its client until it is closed. The reference passes one
+  * ftplib client to every per-file call the same way
+  * (download_file.py:187), and since `FileOps` opens one instance per
+  * step or task, each step or partition runs on one connection. A
+  * call that fails, or a stream whose close fails, closes its client
+  * instead: a `421`, a short RETR's `426` or an aborted transfer
+  * never reaches the next caller. A missing path
+  * (`FileNotFoundException`) is an answer, not a failure, and keeps
+  * the client. A client idle for more than [[ClientFileSystem.MaxIdleMs]]
+  * is closed rather than reused, and `close()` closes every idle one.
+  * Clients are never shared: two threads each get their own.
   */
 abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
     extends FileSystem {
@@ -89,17 +100,67 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
     q.toUri.getPath match { case "" => "/"; case s => s }
   }
 
-  private def withClient[A](f: C => A): A = {
-    val c = client()
-    try f(c) finally c.close()
+  /** False once the client closed itself (an aborted transfer). */
+  protected def isOpen(c: C): Boolean = true
+
+  // idle clients, the most recently returned first, each with the
+  // System.nanoTime it was returned at
+  private val idle = new java.util.ArrayDeque[(C, Long)]()
+  private var closed = false
+
+  /** An idle client, else a new one; idle clients past the age limit close. */
+  private def checkout(): C = {
+    val now = System.nanoTime()
+    val stale = ArrayBuffer.empty[C]
+    val reused = idle.synchronized {
+      while (!idle.isEmpty && now - idle.peekLast._2 > MaxIdleMs * 1000000L)
+        stale += idle.pollLast()._1
+      Option(idle.pollFirst()).map(_._1)
+    }
+    stale.foreach(discard)
+    reused.getOrElse(client())
   }
 
-  /** A client handed to a stream that owns it: closed here only if
-    * building the stream fails.
+  private def checkin(c: C): Unit = {
+    val kept = isOpen(c) && idle.synchronized {
+      !closed && { idle.addFirst((c, System.nanoTime())); true }
+    }
+    if (!kept) discard(c)
+  }
+
+  private def discard(c: C): Unit =
+    try c.close() catch { case NonFatal(_) => () }
+
+  /** Runs `end`, then returns `c` to the pool; closes `c` instead when
+    * `end` fails with anything but a missing path.
     */
-  private def withStreamClient[A](f: C => A): A = {
-    val c = client()
-    try f(c) catch { case e: Throwable => c.close(); throw e }
+  protected def release[A](c: C)(end: => A): A = {
+    val a = try end catch {
+      case e: FileNotFoundException => checkin(c); throw e
+      case e: Throwable => discard(c); throw e
+    }
+    checkin(c)
+    a
+  }
+
+  private def withClient[A](f: C => A): A = { val c = checkout(); release(c)(f(c)) }
+
+  /** A client handed to the stream `f` builds, which [[release]]s it
+    * when closed; released here only if building the stream fails.
+    */
+  protected def withStreamClient[A](f: C => A): A = {
+    val c = checkout()
+    try f(c) catch { case e: Throwable => release(c)(throw e) }
+  }
+
+  override def close(): Unit = try super.close() finally {
+    val all = idle.synchronized {
+      closed = true
+      val cs = idle.asScala.map(_._1).toList
+      idle.clear()
+      cs
+    }
+    all.foreach(discard)
   }
 
   private def fileStatus(m: Meta, q: Path): FileStatus =
@@ -114,12 +175,6 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
   }
 
   override def listStatus(p: Path): Array[FileStatus] = withClient(list(_, p))
-
-  /** Every path's listing on one client: one login or SSH session for
-    * a whole batch, where Hadoop's default opens one per path.
-    */
-  override def listStatus(ps: Array[Path]): Array[FileStatus] =
-    withClient(c => ps.flatMap(list(c, _)))
 
   private def list(c: C, p: Path): Array[FileStatus] = {
     val st = status(c, p)
@@ -177,17 +232,31 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
     outStream(c, openOutput(c, path, len), len)
   }
 
-  /** A write stream that releases its client when closed. */
+  /** A write stream that releases its client when closed; a write
+    * that failed closes the client instead.
+    */
   private def outStream(c: C, raw: OutputStream,
       start: Long): FSDataOutputStream =
     new FSDataOutputStream(new java.io.FilterOutputStream(raw) {
+      private var held = true
       override def write(b: Array[Byte], off: Int, len: Int): Unit =
-        out.write(b, off, len)
-      override def close(): Unit = { super.close(); c.close() }
+        try out.write(b, off, len)
+        catch { case e: Throwable => held = false; discard(c); throw e }
+      override def close(): Unit = if (held) {
+        held = false
+        release(c)(super.close())
+      } else try super.close() catch { case NonFatal(_) => () }
     }, statistics, start)
 }
 
 object ClientFileSystem {
+
+  /** Longest a client sits idle before it is closed instead of reused:
+    * well under common server idle timeouts (vsftpd and ProFTPD drop a
+    * control connection idle for 300 s), so a reused client is one the
+    * server still holds open.
+    */
+  val MaxIdleMs = 30000L
 
   /** What a stat or a directory entry says of one path. */
   final case class Meta(len: Long, isDir: Boolean, mtimeMs: Long)

@@ -2,12 +2,16 @@ package graft.sources
 
 import java.net.URI
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
 
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -21,7 +25,10 @@ import org.apache.spark.storage.StorageLevel
   * `org.apache.hadoop.fs.FileSystem`, so one implementation serves
   * file://, hdfs://, s3a://, and graft's own FTP connector. Each verb
   * (copy, move, delete) has one per-file body over an iterator of
-  * files and a plain Hadoop conf, opening one FS handle per call.
+  * files and a plain Hadoop conf, opening one FS handle per call; over
+  * FTP and SFTP a handle keeps one pooled connection for all its files
+  * ([[ClientFileSystem]]), so a body call logs in once per remote side,
+  * as the reference passes one ftplib client to every per-file call.
   * A tree of at most [[LocalMaxEntries]] entries (and, for a copy, at
   * most [[LocalMaxBytes]] matched bytes) is walked, planned and acted
   * on by the driver, in one call of that body and no Spark job, as
@@ -56,34 +63,48 @@ object FileOps {
   /** Most entries (files and directories) a walk lists on the driver
     * before it hands off to the executors, and so the most a regex
     * step plans and acts on there. Set at the smallest crossover of a
-    * regex Upload or Download over FTP or SFTP (CHANGES.md has the
-    * table; a 4-vCPU VM): SFTP Download, where the driver's serial
-    * per-file sessions cost more than the distributed arm's 3-5 Spark
-    * jobs from about 9 files on.
+    * regex Upload or Download of n 16 KB files over FTP or SFTP
+    * (CHANGES.md has the table; a 4-vCPU VM, `local[4]`; the spec
+    * tree's `graft.TransferCrossover` reproduces it): FTP
+    * Download, where the driver's serial transfers on one pooled
+    * connection cost more than the distributed arm's 3-5 Spark jobs
+    * from about 136 files on.
     */
-  val LocalMaxEntries = 8L
+  val LocalMaxEntries = 128L
 
-  /** Most matched bytes a copy streams on the driver: about what one
-    * driver SFTP stream (~100 MB/s on the same VM) moves in the
-    * distributed arm's ~100 ms of job latency. Above it the files
-    * stream in parallel on the executors.
+  /** Most matched bytes a copy streams on the driver: the smallest
+    * crossover of a regex Upload or Download of 4 files over FTP or
+    * SFTP, measured the same way. SFTP Upload and Download cross
+    * between 40 and 48 MB, where one driver SFTP stream no longer
+    * beats the executors' parallel streams plus the job latency.
     */
-  val LocalMaxBytes = 8L << 20
-
-  /** Directories one listing call covers in a walk's level task: one
-    * connection per call on the FTP and SFTP adapters, and a bound on
-    * the statuses a task holds at once.
-    */
-  private val ListBatch = 256
+  val LocalMaxBytes = 40L << 20
 
   case class FileEntry(path: String, size: Long, mtime: Long, is_dir: Boolean)
 
+  /** A new FS handle for `uri`. A `file:` one is a [[LocalFs]]: no
+    * checksum wrapper, so no `.crc` sidecars and a plain append.
+    */
   private def fs(uri: String, conf: Configuration): FileSystem = {
-    val f = FileSystem.newInstance(new URI(uri), conf)
-    // no .crc sidecars from ChecksumFileSystem wrappers (local fs)
-    f.setWriteChecksum(false)
-    f.setVerifyChecksum(false)
-    f
+    val u = new URI(uri)
+    if (u.getScheme != "file") FileSystem.newInstance(u, conf)
+    else { val f = new LocalFs; f.initialize(u, conf); f }
+  }
+
+  /** Hadoop's raw local filesystem with a permission change that starts
+    * no process: without the native Hadoop library, `setPermission`
+    * (which every `create` runs) forks `chmod`, ~5 ms a file. The mode
+    * set is the same, Hadoop's umask-applied one; a filesystem without
+    * POSIX modes, or a mode with a sticky bit, takes Hadoop's own path.
+    */
+  private class LocalFs extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val bits = permission.toShort
+      if ((bits & ~0x1ff) != 0) super.setPermission(p, permission)
+      else try Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermission.values
+        .filter(m => (bits & (0x100 >> m.ordinal)) != 0).toSet.asJava)
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+    }
   }
 
   private def hadoopConf(spark: SparkSession): Configuration =
@@ -156,8 +177,7 @@ object FileOps {
       val level = frontier.mapPartitions { paths =>
         val f = fs(rootUri, conf.value.value)
         TaskContext.get().addTaskCompletionListener[Unit](_ => f.close())
-        paths.grouped(ListBatch).flatMap(b => f.listStatus(b.map(new Path(_)).toArray))
-          .map(st => (st.getPath.toString, entry(st)))
+        paths.flatMap(p => f.listStatus(new Path(p))).map(st => (st.getPath.toString, entry(st)))
       }.persist(StorageLevel.MEMORY_AND_DISK)
       levels += level
       val nextDirs = level.filter(_._2.is_dir).map(_._1)
@@ -341,8 +361,8 @@ object FileOps {
     * (fresh source/destination streams each attempt; `create`
     * overwrites, so a half-written destination is replaced, making
     * per-file retry idempotent). The FS handles are per-call; a
-    * connection-level failure surfaces on the next stream open and is
-    * retried the same way.
+    * connection that failed is closed, never pooled, so the retry runs
+    * on a fresh one.
     *
     * `resume = true` picks transfers up where they died instead of
     * restarting: a destination already at the source's size is
@@ -382,13 +402,7 @@ object FileOps {
           val in = sfs.open(new Path(t.src))
           try {
             in.seek(dstLen) // REST offset over gftp, O(1)
-            // ChecksumFileSystem (local) can't append; its raw fs can
-            val afs = dfs match {
-              case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-                c.getRawFileSystem
-              case f => f
-            }
-            val out = afs.append(dst)
+            val out = dfs.append(dst)
             try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
             finally out.close()
           } finally in.close()
@@ -439,7 +453,10 @@ object FileOps {
         var sum = 0L
         while (it.hasNext) {
           val st = it.next()
-          if (!st.getPath.getName.startsWith("_")) sum += st.getLen
+          // Spark's own rule for data files: no `_` or `.` prefix
+          // (markers, `.crc` sidecars)
+          val name = st.getPath.getName
+          if (!name.startsWith("_") && !name.startsWith(".")) sum += st.getLen
         }
         sum
       }

@@ -9,7 +9,7 @@ import graft.sources.QuickAck
 /** Minimal RFC 959 FTP client over raw sockets — the transport under
   * graft's FTP connector (the reference drives Python's ftplib; graft
   * speaks the same protocol surface: USER/PASS, TYPE I, PASV, RETR,
-  * STOR, NLST, MLSD, DELE, RNFR/RNTO, MKD, CWD, PWD, SIZE, MDTM — see
+  * STOR, NLST, MLSD, DELE, RNFR/RNTO, MKD, CWD, SIZE, MDTM — see
   * ftp-blueprints download_file.py:210, upload_file.py:196).
   *
   * Passive mode only (the reference also forces PASV,
@@ -120,10 +120,21 @@ class FtpClient(host: String, port: Int, user: String, password: String,
   private def secureData(plain: Socket): Socket =
     if (!tls) plain else upgrade(plain)
 
+  /** False once this client closed, itself included (an aborted
+    * transfer, a 421).
+    */
+  def isOpen: Boolean = !control.isClosed
+
   private def readReply(): FtpReply = {
     val first = in.readLine()
     if (first == null) throw new java.io.IOException("FTP control closed")
     val code = first.take(3).toInt
+    // 421: the server is closing the control connection (RFC 959
+    // §4.2); no later command on it can succeed
+    if (code == 421) {
+      control.close()
+      throw new java.io.IOException(s"FTP service closing: $first")
+    }
     var text = first.drop(4)
     if (first.length > 3 && first.charAt(3) == '-') {
       // multiline: read until "NNN " terminator
@@ -386,24 +397,19 @@ class FtpClient(host: String, port: Int, user: String, password: String,
 
   def cwd(path: String): Boolean = cmd(s"CWD $path").ok
 
-  def pwd(): String = {
-    val r = expect(cmd("PWD"), 257)
-    "\"(.*)\"".r.findFirstMatchIn(r.text).map(_.group(1)).getOrElse("/")
-  }
-
-  /** Walk CWD through each segment, creating missing dirs — the
-    * reference's create_new_folders (upload_file.py:159). True when
-    * the walk's last CWD entered `path`.
+  /** Make `path` (absolute) and each missing ancestor — the
+    * reference's create_new_folders (upload_file.py:159). One CWD when
+    * `path` exists; else a CWD, or an MKD and a CWD, per segment from
+    * the root. True when the last CWD entered `path`. The working
+    * directory is left wherever the last CWD went.
     */
-  def makeDirs(path: String): Boolean = {
-    val orig = pwd()
+  def makeDirs(path: String): Boolean = cwd(path) || {
     var entered = true
     path.split("/").filter(_.nonEmpty).foldLeft("") { (acc, seg) =>
-      val cur = if (path.startsWith("/") || acc.nonEmpty) s"$acc/$seg" else seg
+      val cur = s"$acc/$seg"
       entered = cwd(cur) || { mkd(cur); cwd(cur) }
       cur
     }
-    cwd(orig)
     entered
   }
 

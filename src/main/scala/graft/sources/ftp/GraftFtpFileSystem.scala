@@ -29,6 +29,8 @@ class GraftFtpFileSystem extends ClientFileSystem[FtpClient](21) {
 
   protected def client(): FtpClient = new FtpClient(host, port, user, password)
 
+  override protected def isOpen(c: FtpClient): Boolean = c.isOpen
+
   /** One path's status from control-channel round trips only: SIZE
     * (a file), else CWD (a directory), plus MDTM when the server
     * answers it. Listing the parent instead would open a data
@@ -84,11 +86,21 @@ class GraftFtpFileSystem extends ClientFileSystem[FtpClient](21) {
     }
     private def checkEnd(): Unit = if (pos < len)
       throw new java.io.EOFException(s"$path ended at byte $pos of $len")
-    override def close(): Unit = try in.close() finally c.close()
+    override def close(): Unit = if (c != null) {
+      val held = c
+      c = null
+      release(held)(in.close())
+    }
+    /** Closing mid-transfer aborts it, and the aborted client closes
+      * itself, so it is discarded rather than pooled.
+      */
     protected def moveTo(target: Long): Unit = {
-      in.close(); c.close()
-      c = client()
-      in = c.retrieveStream(path, target)
+      close()
+      in = withStreamClient { next =>
+        val s = next.retrieveStream(path, target)
+        c = next
+        s
+      }
     }
   }
 }

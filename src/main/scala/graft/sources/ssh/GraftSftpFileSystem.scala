@@ -45,16 +45,20 @@ class GraftSftpFileSystem extends ClientFileSystem[SftpClient](22) {
   protected def move(c: SftpClient, src: String, dst: String): Boolean =
     c.rename(src, dst)
 
-  /** Create each missing ancestor of `dir` and `dir` itself, root-down. */
-  protected def makeDirs(c: SftpClient, dir: String): Boolean = {
-    var cur = ""
-    dir.split("/").filter(_.nonEmpty).forall { seg =>
-      cur = s"$cur/$seg"
-      c.stat(cur) match {
-        case None => c.mkdir(cur); true
-        case Some(a) => a.isDir
+  /** One STAT when `dir` exists; else create each missing ancestor
+    * and `dir` itself, root-down.
+    */
+  protected def makeDirs(c: SftpClient, dir: String): Boolean = c.stat(dir) match {
+    case Some(a) => a.isDir
+    case None =>
+      var cur = ""
+      dir.split("/").filter(_.nonEmpty).forall { seg =>
+        cur = s"$cur/$seg"
+        c.stat(cur) match {
+          case None => c.mkdir(cur); true
+          case Some(a) => a.isDir
+        }
       }
-    }
   }
 
   protected def openOutput(c: SftpClient, path: String, at: Long): OutputStream =
@@ -86,8 +90,10 @@ class GraftSftpFileSystem extends ClientFileSystem[SftpClient](22) {
     }
     private def dropReader(): Unit =
       if (seq != null) { seq.close(); seq = null }
-    override def close(): Unit = {
-      try { dropReader(); if (h != null) c.closeHandle(h) } finally c.close()
+    private var held = true
+    override def close(): Unit = if (held) {
+      held = false
+      release(c) { dropReader(); if (h != null) c.closeHandle(h) }
     }
     protected def moveTo(target: Long): Unit = dropReader()
     override def read(position: Long, buffer: Array[Byte], offset: Int,

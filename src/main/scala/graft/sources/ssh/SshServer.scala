@@ -43,6 +43,11 @@ final class SshServer(root: Path, users: Map[String, String],
     */
   @volatile var stderrChatter: Int = 0
 
+  /** Sessions authenticated — lets specs count the SSH connections a
+    * client opened.
+    */
+  val sessionCount = new java.util.concurrent.atomic.AtomicLong(0)
+
   private val acceptor = new Thread(() => {
     while (running) {
       try {
@@ -69,6 +74,7 @@ final class SshServer(root: Path, users: Map[String, String],
       t.exchangeVersions()
       t.runKex(Some(hostKey))
       serviceAndAuth(t)
+      sessionCount.incrementAndGet()
       serveConnection(t)
     } catch {
       case e: Throwable => // connection dies; server lives
@@ -275,7 +281,8 @@ final class SshServer(root: Path, users: Map[String, String],
     private final class OpenFile(val raf: RandomAccessFile,
       val append: Boolean)
     private val files = mutable.Map[String, OpenFile]()
-    private val dirs = mutable.Map[String, Iterator[Path]]()
+    // an open directory handle: its listing, 64 names per READDIR
+    private val dirs = mutable.Map[String, Iterator[Seq[Path]]]()
 
     def closeAll(): Unit = {
       files.values.foreach(f => try f.raf.close() catch { case _: Throwable => () })
@@ -405,7 +412,7 @@ final class SshServer(root: Path, users: Map[String, String],
                   while (it.hasNext) b += it.next()
                   b.result()
                 } finally listing.close()
-              dirs(h) = entries.iterator
+              dirs(h) = entries.grouped(64)
               new SshWriter().u8(Handle).u32(id).text(h).bytes
             }
           case Readdir =>
@@ -414,7 +421,7 @@ final class SshServer(root: Path, users: Map[String, String],
               case None => status(id, StBadMessage, "bad handle")
               case Some(it) if !it.hasNext => status(id, StEof, "eof")
               case Some(it) =>
-                val batch = it.take(64).toSeq
+                val batch = it.next()
                 val w = new SshWriter().u8(Name).u32(id)
                   .u32(batch.length.toLong)
                 batch.foreach { p =>

@@ -75,6 +75,15 @@ class SftpSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("readDir lists a directory that spans several READDIR replies") {
+    val root = freshDir()
+    (0 until 150).foreach(i => Files.writeString(root.resolve(f"f$i%03d"), "x"))
+    val srv = startServer(root)
+    val c = connect(srv)
+    try assert(c.readDir("/").map(_._1).sorted === (0 until 150).map(i => f"f$i%03d"))
+    finally { c.close(); srv.close() }
+  }
+
   test("auth: wrong password is the exit-3 taxonomy; path jail holds; pinned host key mismatch rejects") {
     val root = freshDir()
     val srv = startServer(root)

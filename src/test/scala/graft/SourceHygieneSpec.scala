@@ -92,17 +92,32 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
   }
 
+  /** Every source file under sources/, with its comments stripped. */
+  private def sourcesCode: Seq[(java.nio.file.Path, String)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/sources"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toSeq
+  }
+
   test("sources/ defines the remote FileSystem skeleton in one file") {
     // the gftp, gftps and gsftp adapters share one skeleton; a second
     // definition of any of these is a second copy of it, where a
     // change (a connection pool) would have to be made twice
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/sources"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).map(p => p -> code(p)).toSeq
+    val files = sourcesCode
     for (d <- Seq("def initialize(", "def withClient[", "def withStreamClient[", "def listStatus(")) {
       val in = files.collect { case (p, text) if text.contains(d) => p }
       assert(in.size === 1, s"$d is defined in ${in.size} files: ${in.mkString(", ")}")
     }
+  }
+
+  test("sources/ opens a remote client at one site: the pool's checkout") {
+    // every FS call and stream takes its client from the adapter's
+    // pool; a second call of client() would open a connection the pool
+    // never reuses, or one it never closes
+    val sites = sourcesCode.flatMap { case (p, text) =>
+      "(?<!def )\\bclient\\(\\)".r.findAllMatchIn(text).map(_ => p.getFileName.toString)
+    }
+    assert(sites === Seq("ClientFileSystem.scala"), s"client() is called in ${sites.mkString(", ")}")
   }
 
   test("operators/Graph.scala reads relations to the driver in at most two places") {

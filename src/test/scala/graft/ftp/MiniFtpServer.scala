@@ -48,6 +48,26 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
   /** PROT P data connections served (data-channel TLS wraps). */
   val protDataCount = new java.util.concurrent.atomic.AtomicLong(0)
 
+  private val commands =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+
+  /** Commands served with this verb (`CWD`, `RETR`, ...), across all
+    * connections — lets specs count a client's round trips.
+    */
+  def commandCount(verb: String): Long =
+    Option(commands.get(verb)).fold(0L)(_.get)
+
+  /** Commands served, every verb. */
+  def commandCount: Long = commands.values().stream().mapToLong(_.get).sum
+
+  private val faultIn = new java.util.concurrent.atomic.AtomicLong(-1)
+
+  /** Fault mode: the command after the next `n` (server-wide) is
+    * answered `421` and its control connection closed, once — a server
+    * going away under a pooled client.
+    */
+  def fail421After(n: Long): Unit = faultIn.set(n)
+
   private val acceptor = new Thread(() => {
     while (running.get()) {
       try {
@@ -120,6 +140,11 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
         val (c, arg) =
           if (sp < 0) (line.toUpperCase, "")
           else (line.take(sp).toUpperCase, line.drop(sp + 1))
+        commands.computeIfAbsent(c, _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+        if (faultIn.getAndDecrement() == 0) {
+          reply("421 service closing control connection")
+          return
+        }
         c match {
           case "AUTH" if tlsContext.isDefined &&
               arg.equalsIgnoreCase("TLS") && !tlsActive =>
