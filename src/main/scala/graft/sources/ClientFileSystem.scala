@@ -2,8 +2,11 @@ package graft.sources
 
 import java.io.{EOFException, FileNotFoundException, IOException, OutputStream}
 import java.net.URI
+import java.nio.ByteBuffer
+import java.nio.channels.SocketChannel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -12,7 +15,7 @@ import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
-import ClientFileSystem.{MaxIdleMs, Meta, SeekableInput}
+import ClientFileSystem.{Meta, Pool, SeekableInput}
 
 /** The Hadoop `FileSystem` skeleton of graft's remote adapters
   * (`gftp://`, `gftps://`, `gsftp://`): URI and credential parsing,
@@ -22,20 +25,33 @@ import ClientFileSystem.{MaxIdleMs, Meta, SeekableInput}
   * `fs.<scheme>.{user,password}`, the port from the URI or
   * `fs.<scheme>.port`, else `defaultPort`.
   *
-  * Client lifetime: each instance keeps a pool of idle clients (FTP
-  * logins or SSH sessions). An FS call checks one out, or opens one
-  * when none is idle, and returns it when the call ends; a stream
-  * holds its client until it is closed. The reference passes one
-  * ftplib client to every per-file call the same way
-  * (download_file.py:187), and since `FileOps` opens one instance per
-  * step or task, each step or partition runs on one connection. A
-  * call that fails, or a stream whose close fails, closes its client
-  * instead: a `421`, a short RETR's `426` or an aborted transfer
-  * never reaches the next caller. A missing path
-  * (`FileNotFoundException`) is an answer, not a failure, and keeps
-  * the client. A client idle for more than [[ClientFileSystem.MaxIdleMs]]
-  * is closed rather than reused, and `close()` closes every idle one.
-  * Clients are never shared: two threads each get their own.
+  * Client lifetime: idle clients (FTP logins or SSH sessions) live in
+  * one pool per JVM, keyed by server identity: scheme, host, port,
+  * user, and a SHA-256 digest of the password and of every
+  * `fs.<scheme>.*` conf value as [[initialize]] reads it (so of every
+  * TLS or host-key setting `client()` reads; graft's callers hand each
+  * handle a conf copy nobody changes after). Each instance is a view on
+  * that pool, so every handle to the same identity (each step's, each
+  * task's, each Spark reader's) reuses the same few connections; the
+  * reference passes one ftplib client through a whole run the same
+  * way (download_file.py:187). An FS call checks a client out, or
+  * opens one when none is idle, and returns it when the call ends; a
+  * stream holds its client until it is closed. Clients are never
+  * shared: two threads each get their own.
+  *
+  * A call that fails, or a stream whose close fails, closes its client
+  * instead: a `421`, a short RETR's `426` or an aborted transfer never
+  * reaches the next caller. A missing path (`FileNotFoundException`)
+  * is an answer, not a failure, and keeps the client. A client that
+  * is not open is never pooled. Each identity keeps at most
+  * [[ClientFileSystem.MaxIdlePerKey]] idle clients; one idle for more
+  * than [[ClientFileSystem.MaxIdleMs]] is closed, at checkout and by a
+  * daemon reaper. Every idle client is checked before it is handed
+  * out, without a round trip or a wait (the server closed it, or wrote
+  * to it unasked: [[isQuiet]]); one that fails is closed and the next
+  * taken, so a restarted server costs a fresh login, not a failed call.
+  * `close()` ends the view only: the idle clients stay for the other
+  * views.
   */
 abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
     extends FileSystem {
@@ -46,9 +62,11 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
   protected var user: String = "anonymous"
   protected var password: String = ""
   private var workingDir: Path = new Path("/")
+  private var key: String = _
 
   /** A connected, logged-in client. */
   protected def client(): C
+
   /** One path's metadata; None when it does not exist. */
   protected def stat(c: C, path: String): Option[Meta]
   /** A directory's entries, without `.` and `..`. */
@@ -86,6 +104,8 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
     }
     user = conf.get(s"fs.$scheme.user", user)
     password = conf.get(s"fs.$scheme.password", password)
+    key = ClientFileSystem.identity(scheme, host, port, user, password +:
+      conf.getPropsWithPrefix(s"fs.$scheme.").asScala.toSeq.sorted.map { case (k, v) => s"$k=$v" })
     // keep the full authority (incl. userinfo) — Path.checkPath
     // compares authorities verbatim
     uri = URI.create(s"$scheme://${name.getAuthority}")
@@ -103,33 +123,28 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
   /** False once the client closed itself (an aborted transfer). */
   protected def isOpen(c: C): Boolean = true
 
-  // idle clients, the most recently returned first, each with the
-  // System.nanoTime it was returned at
-  private val idle = new java.util.ArrayDeque[(C, Long)]()
-  private var closed = false
+  /** False when the server closed an idle client or wrote to it
+    * unasked; checked with no round trip and no wait.
+    */
+  protected def isQuiet(c: C): Boolean = isOpen(c)
 
-  /** An idle client, else a new one; idle clients past the age limit close. */
-  private def checkout(): C = {
-    val now = System.nanoTime()
-    val stale = ArrayBuffer.empty[C]
-    val reused = idle.synchronized {
-      while (!idle.isEmpty && now - idle.peekLast._2 > MaxIdleMs * 1000000L)
-        stale += idle.pollLast()._1
-      Option(idle.pollFirst()).map(_._1)
-    }
-    stale.foreach(discard)
-    reused.getOrElse(client())
+  /** This view's pool identity. */
+  private[graft] def poolKey: String = key
+
+  /** An idle client of this identity, else a new one; an idle one
+    * that is no longer quiet closes, and the next is tried.
+    */
+  private def checkout(): C = Pool.take(key) match {
+    case Some(c) =>
+      val idle = c.asInstanceOf[C]
+      if (isQuiet(idle)) idle else { discard(idle); checkout() }
+    case None => client()
   }
 
-  private def checkin(c: C): Unit = {
-    val kept = isOpen(c) && idle.synchronized {
-      !closed && { idle.addFirst((c, System.nanoTime())); true }
-    }
-    if (!kept) discard(c)
-  }
+  private def checkin(c: C): Unit =
+    if (!isOpen(c) || !Pool.put(key, c)) discard(c)
 
-  private def discard(c: C): Unit =
-    try c.close() catch { case NonFatal(_) => () }
+  private def discard(c: C): Unit = Pool.close(c)
 
   /** Runs `end`, then returns `c` to the pool; closes `c` instead when
     * `end` fails with anything but a missing path.
@@ -151,16 +166,6 @@ abstract class ClientFileSystem[C <: AutoCloseable](defaultPort: Int)
   protected def withStreamClient[A](f: C => A): A = {
     val c = checkout()
     try f(c) catch { case e: Throwable => release(c)(throw e) }
-  }
-
-  override def close(): Unit = try super.close() finally {
-    val all = idle.synchronized {
-      closed = true
-      val cs = idle.asScala.map(_._1).toList
-      idle.clear()
-      cs
-    }
-    all.foreach(discard)
   }
 
   private def fileStatus(m: Meta, q: Path): FileStatus =
@@ -257,6 +262,88 @@ object ClientFileSystem {
     * server still holds open.
     */
   val MaxIdleMs = 30000L
+
+  /** Most idle clients one identity keeps: the task slots of a local
+    * session, so a stage of concurrent tasks returns every client.
+    */
+  val MaxIdlePerKey: Int = Runtime.getRuntime.availableProcessors
+
+  /** The pool key of one server identity; the password and the conf
+    * values enter it as a SHA-256 digest only.
+    */
+  private def identity(scheme: String, host: String, port: Int, user: String,
+      secrets: Seq[String]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    secrets.foreach(s => md.update(s"${s.length}:$s".getBytes(UTF_8)))
+    s"$scheme://$user@$host:$port#${md.digest().map(b => f"${b & 0xff}%02x").mkString}"
+  }
+
+  /** The JVM's idle clients: per identity the most recently returned
+    * first, each with the `System.nanoTime` it was returned at. An
+    * identity with no idle client has no entry.
+    */
+  private object Pool {
+    private type Idle = List[(AutoCloseable, Long)]
+    private val idle = new java.util.concurrent.ConcurrentHashMap[String, Idle]()
+
+    private lazy val reaper: Thread = {
+      val t = new Thread(() => while (true) {
+        Thread.sleep(MaxIdleMs / 2)
+        idle.keySet().forEach(k => drain(k, pop = false))
+      }, "graft-client-reaper")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+
+    /** Closes the clients of `key` idle past [[MaxIdleMs]], and with
+      * `pop` takes the most recently returned of the rest out of the
+      * pool; the key's entry goes once it keeps none.
+      */
+    private def drain(key: String, pop: Boolean): Option[AutoCloseable] = {
+      val now = System.nanoTime()
+      var got = Option.empty[AutoCloseable]
+      var stale: Idle = Nil
+      idle.computeIfPresent(key, (_, q) => {
+        val (fresh, old) = q.partition(now - _._2 <= MaxIdleMs * 1000000L)
+        stale = old
+        val rest = if (pop && fresh.nonEmpty) { got = Some(fresh.head._1); fresh.tail } else fresh
+        if (rest.isEmpty) null else rest
+      })
+      stale.foreach(e => close(e._1))
+      got
+    }
+
+    /** The most recently returned idle client of `key`; clients idle
+      * past [[MaxIdleMs]] close first.
+      */
+    def take(key: String): Option[AutoCloseable] = drain(key, pop = true)
+
+    /** False when `key` already keeps [[MaxIdlePerKey]] idle clients. */
+    def put(key: String, c: AutoCloseable): Boolean = {
+      reaper
+      var kept = false
+      idle.compute(key, (_, q) => {
+        val held = if (q == null) Nil else q
+        kept = held.size < MaxIdlePerKey
+        if (kept) (c, System.nanoTime()) :: held else held
+      })
+      kept
+    }
+
+    def close(c: AutoCloseable): Unit =
+      try c.close() catch { case NonFatal(_) => () }
+  }
+
+  /** True when the peer has neither closed `ch` nor sent on it, and no
+    * byte the client received waits `unread` in its buffers: one
+    * non-blocking read, no wait. For a client socket nobody is reading.
+    */
+  private[sources] def quiet(ch: SocketChannel)(unread: => Boolean): Boolean =
+    try !unread && ch.blockingLock().synchronized {
+      ch.configureBlocking(false)
+      try ch.read(ByteBuffer.allocate(1)) == 0 finally ch.configureBlocking(true)
+    } catch { case _: java.io.IOException => false }
 
   /** What a stat or a directory entry says of one path. */
   final case class Meta(len: Long, isDir: Boolean, mtimeMs: Long)

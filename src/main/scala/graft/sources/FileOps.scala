@@ -26,9 +26,11 @@ import org.apache.spark.storage.StorageLevel
   * file://, hdfs://, s3a://, and graft's own FTP connector. Each verb
   * (copy, move, delete) has one per-file body over an iterator of
   * files and a plain Hadoop conf, opening one FS handle per call; over
-  * FTP and SFTP a handle keeps one pooled connection for all its files
-  * ([[ClientFileSystem]]), so a body call logs in once per remote side,
-  * as the reference passes one ftplib client to every per-file call.
+  * FTP and SFTP every handle draws on one JVM-wide pool of logins and
+  * SSH sessions per server identity ([[ClientFileSystem]]), so the
+  * steps of a run, and the runs after it, reuse one connection per
+  * remote side, as the reference passes one ftplib client through a
+  * whole run.
   * A tree of at most [[LocalMaxEntries]] entries (and, for a copy, at
   * most [[LocalMaxBytes]] matched bytes) is walked, planned and acted
   * on by the driver, in one call of that body and no Spark job, as

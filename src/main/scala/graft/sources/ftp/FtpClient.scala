@@ -2,9 +2,10 @@ package graft.sources.ftp
 
 import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream}
 import java.net.{InetSocketAddress, Socket}
+import java.nio.channels.SocketChannel
 import java.nio.charset.StandardCharsets
 
-import graft.sources.QuickAck
+import graft.sources.{ClientFileSystem, QuickAck}
 
 /** Minimal RFC 959 FTP client over raw sockets — the transport under
   * graft's FTP connector (the reference drives Python's ftplib; graft
@@ -64,8 +65,10 @@ class FtpClient(host: String, port: Int, user: String, password: String,
     verifyHostname: Boolean = true) extends AutoCloseable {
   import FtpClient.{FtpEntry, FtpReply}
 
-  // the TCP socket, beneath TLS under FTPS
-  private val plainControl = new Socket()
+  // the TCP socket, beneath TLS under FTPS; a channel's, so an idle
+  // client can be checked without blocking (isQuiet)
+  private val controlChannel = SocketChannel.open()
+  private val plainControl = controlChannel.socket()
   plainControl.connect(new InetSocketAddress(host, port), timeoutMs)
   private var control: Socket = plainControl
   control.setSoTimeout(timeoutMs)
@@ -124,6 +127,12 @@ class FtpClient(host: String, port: Int, user: String, password: String,
     * transfer, a 421).
     */
   def isOpen: Boolean = !control.isClosed
+
+  /** For an idle client: false when the server closed the control
+    * connection or sent on it unasked (a `421` on its idle timeout).
+    * No round trip and no wait.
+    */
+  def isQuiet: Boolean = isOpen && ClientFileSystem.quiet(controlChannel)(in.ready())
 
   private def readReply(): FtpReply = {
     val first = in.readLine()

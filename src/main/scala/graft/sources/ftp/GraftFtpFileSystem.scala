@@ -30,6 +30,7 @@ class GraftFtpFileSystem extends ClientFileSystem[FtpClient](21) {
   protected def client(): FtpClient = new FtpClient(host, port, user, password)
 
   override protected def isOpen(c: FtpClient): Boolean = c.isOpen
+  override protected def isQuiet(c: FtpClient): Boolean = c.isQuiet
 
   /** One path's status from control-channel round trips only: SIZE
     * (a file), else CWD (a directory), plus MDTM when the server

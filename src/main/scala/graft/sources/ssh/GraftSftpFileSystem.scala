@@ -31,6 +31,8 @@ class GraftSftpFileSystem extends ClientFileSystem[SftpClient](22) {
   protected def client(): SftpClient =
     new SftpClient(host, port, user, password, pinnedKey)
 
+  override protected def isQuiet(c: SftpClient): Boolean = c.isQuiet
+
   private def meta(a: SftpProto.Attrs): Meta =
     Meta(a.size.getOrElse(0L), a.isDir, a.mtimeSec.getOrElse(0L) * 1000L)
 

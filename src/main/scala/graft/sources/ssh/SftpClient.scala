@@ -1,7 +1,8 @@
 package graft.sources.ssh
 
 import java.io.{ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
-import java.net.Socket
+import java.net.InetSocketAddress
+import java.nio.channels.SocketChannel
 
 import SftpProto._
 
@@ -44,7 +45,10 @@ final class SftpClient(host: String, port: Int = 22, user: String,
     rekeyBytes: Long = 1L << 30,
     identity: Option[java.security.KeyPair] = None) extends AutoCloseable {
 
-  private val sock = new Socket(host, port)
+  // a channel's socket, so an idle client can be checked without
+  // blocking (isQuiet)
+  private val channel = SocketChannel.open(new InetSocketAddress(host, port))
+  private val sock = channel.socket()
   sock.setTcpNoDelay(true)
   private val t = new SshTransport(sock, isServer = false,
     rekeyBytes = rekeyBytes)
@@ -131,6 +135,12 @@ final class SftpClient(host: String, port: Int = 22, user: String,
     if ((v(0) & 0xFF) != VersionMsg)
       throw new IOException("sftp INIT not acknowledged")
   }
+
+  /** For an idle client: false when the server closed the connection
+    * or sent on it unasked. No round trip and no wait.
+    */
+  def isQuiet: Boolean =
+    !sock.isClosed && graft.sources.ClientFileSystem.quiet(channel)(t.unread)
 
   def close(): Unit = {
     try {

@@ -48,6 +48,13 @@ final class SshServer(root: Path, users: Map[String, String],
     */
   val sessionCount = new java.util.concurrent.atomic.AtomicLong(0)
 
+  private val live = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
+
+  /** Connections open now — lets specs count the sessions clients
+    * hold, idle ones included.
+    */
+  def liveConnections: Int = live.size
+
   private val acceptor = new Thread(() => {
     while (running) {
       try {
@@ -61,14 +68,21 @@ final class SshServer(root: Path, users: Map[String, String],
   acceptor.setDaemon(true)
   acceptor.start()
 
+  /** Closes every live connection, as a server restart would. */
+  def dropConnections(): Unit =
+    live.removeIf { s => try s.close() catch { case _: IOException => () }; true }
+
+  /** Stops accepting and closes every live connection. */
   def close(): Unit = {
     running = false
     try ss.close() catch { case _: IOException => () }
+    dropConnections()
   }
 
   // ---- per-connection --------------------------------------------
 
   private def handle(sock: Socket): Unit = {
+    live.add(sock)
     val t = new SshTransport(sock, isServer = true)
     try {
       t.exchangeVersions()
@@ -81,7 +95,7 @@ final class SshServer(root: Path, users: Map[String, String],
         if (debug) Console.err.println(
           s"[graft-sshd] connection died: $e\n  " +
             e.getStackTrace.take(6).mkString("\n  "))
-    } finally t.close()
+    } finally { t.close(); live.remove(sock) }
   }
 
   private def serviceAndAuth(t: SshTransport): Unit = {

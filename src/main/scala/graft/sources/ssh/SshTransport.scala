@@ -72,6 +72,9 @@ final class SshTransport(sock: Socket, val isServer: Boolean,
 
   def close(): Unit = try sock.close() catch { case _: IOException => () }
 
+  /** True when a received byte waits unread, here or in the socket. */
+  def unread: Boolean = !deferred.isEmpty || in.available() > 0
+
   // ---- version exchange ------------------------------------------
 
   def exchangeVersions(): Unit = {

@@ -8,15 +8,16 @@ import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import graft.blueprints.Download
+import graft.blueprints.{Blueprints, Delete, Download, Move, Upload}
 import graft.ftp.MiniFtpServer
 import graft.sources.FileOps
 import graft.sources.ftp.GraftFtpFileSystem
 import graft.sources.ssh.{GraftSftpFileSystem, SshServer}
 
 /** The remote adapters' client pool and the local filesystem FileOps
-  * opens: one login or SSH session per FS handle, a failed client
-  * never reused, and creates that start no process.
+  * opens: one JVM-wide pool per server identity, whose logins and SSH
+  * sessions every FS handle and every step reuses, a failed or stale
+  * client never reused, and creates that start no process.
   */
 class ClientPoolSpec extends SparkSpec {
 
@@ -99,17 +100,46 @@ class ClientPoolSpec extends SparkSpec {
       val dst = Files.createTempDirectory("graft_pool_dl421_out")
       (Download.run(spark, downloadArgs(server.port, "ftp", dst, extra: _*)), dst)
     }
-    try {
-      // a clean run's commands end with the last file's RETR, then QUIT
+    /** The commands of a clean run on the warm pool: no login and no
+      * QUIT, so the last one is the last file's RETR.
+      */
+    def cleanWarmRun(): Long = {
+      assert(download()._1 === 0) // warms the pool
       val before = server.commandCount
       assert(download()._1 === 0)
-      val last = server.commandCount - before
-      server.fail421After(last - 2)
+      server.commandCount - before
+    }
+    try {
+      server.fail421After(cleanWarmRun() - 1)
       assert(download("--retries", "0")._1 !== 0, "a download the server cut off exited 0")
-      server.fail421After(last - 2)
+      server.fail421After(cleanWarmRun() - 1)
       val (code, dst) = download("--retries", "1", "--backoff-ms", "10")
       assert(code === 0)
       sameFiles(dst, files)
+    } finally server.stop()
+  }
+
+  test("a data connection dropped mid-RETR fails at --retries 0, heals at --retries 1, " +
+      "and its client is never pooled") {
+    val root = Files.createTempDirectory("graft_pool_drop")
+    val files = tree(root, 3)
+    val server = new MiniFtpServer(root)
+    def download(extra: String*): (Int, JPath) = {
+      val dst = Files.createTempDirectory("graft_pool_drop_out")
+      (Download.run(spark, downloadArgs(server.port, "ftp", dst, extra: _*)), dst)
+    }
+    try {
+      assert(download()._1 === 0) // warms the pool
+      server.dropDataAfter(500)
+      assert(download("--retries", "0")._1 !== 0, "a download whose data was cut exited 0")
+      assert(download()._1 === 0) // warms it again
+      val before = server.loginCount.get
+      server.dropDataAfter(500)
+      val (code, dst) = download("--retries", "1", "--backoff-ms", "10")
+      assert(code === 0)
+      sameFiles(dst, files)
+      // the retry logs in once: the cut client was closed, not reused
+      assert(server.loginCount.get - before === 1L)
     } finally server.stop()
   }
 
@@ -187,6 +217,168 @@ class ClientPoolSpec extends SparkSpec {
       assert(plain.toFile.mkdir())
       Seq(out.resolve("a"), dst).foreach(d => assert(mode(d) === mode(plain), d))
     } finally server.stop()
+  }
+
+  /** The benchmark's step sequence per protocol over a fixed tree: six
+    * small files in three directories go up, down, move and delete,
+    * then two large files go up and down.
+    */
+  private def transferPass(port: Int, protocol: String, src: JPath, root: JPath,
+      out: JPath): Unit = {
+    Seq(out.resolve("small"), out.resolve("large"), root.resolve("small"), root.resolve("large"))
+      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
+    def regex(pattern: String, from: String, to: String, name: String) = Seq(
+      "--source-file-name-match-type", "regex_match", "--source-file-name", pattern,
+      "--source-folder-name", from, "--destination-folder-name", to,
+      "--destination-file-name", name)
+    val steps = Seq(
+      Upload -> regex("\\.dat$", src.resolve("small").toString, "small/up", "f.dat"),
+      Download -> regex("^f_[0-9]+\\.dat$", "small/up", out.resolve("small").toString, "g.dat"),
+      Move -> regex("f_[0-9]+\\.dat$", "small/up", "small/moved", "m.dat"),
+      Delete -> Seq("--file-name-match-type", "regex_match", "--source-file-name",
+        "m_[0-9]+\\.dat$", "--source-folder-name", "small/moved"),
+      Upload -> regex("\\.bin$", src.resolve("large").toString, "large", "L.bin"),
+      Download -> regex("^L_[0-9]+\\.bin$", "large", out.resolve("large").toString, "K.bin"))
+    steps.foreach { case (blueprint, flags) =>
+      val argv = (Seq("--host", "127.0.0.1", "--port", port.toString, "--username", "u",
+        "--password", "p", "--protocol", protocol) ++ flags).toArray
+      assert(blueprint.run(spark, argv) === 0, s"$protocol ${flags.mkString(" ")}")
+    }
+    assert(Files.list(out.resolve("small")).count() === 6L)
+    assert(Files.list(out.resolve("large")).count() === 2L)
+  }
+
+  test("the transfer steps log in at most once per protocol cold, and never warm") {
+    val src = Files.createTempDirectory("graft_pool_pass_src")
+    Seq("a", "b", "c").zipWithIndex.foreach { case (d, i) =>
+      Files.createDirectories(src.resolve(s"small/$d"))
+      (0 until 2).foreach(j => Files.write(src.resolve(s"small/$d/s$i$j.dat"),
+        Array.tabulate[Byte](4000 + j)(k => (k * (i + 3)).toByte)))
+    }
+    Files.createDirectories(src.resolve("large"))
+    (0 until 2).foreach(j => Files.write(src.resolve(s"large/b$j.bin"),
+      Array.tabulate[Byte](300000)(k => (k * (j + 7)).toByte)))
+    val ftpRoot = Files.createTempDirectory("graft_pool_pass_ftp")
+    val sftpRoot = Files.createTempDirectory("graft_pool_pass_sftp")
+    val ftp = new MiniFtpServer(ftpRoot)
+    val ssh = new SshServer(sftpRoot, Map("u" -> "p"))
+    try {
+      for ((protocol, port, root, connections) <- Seq(("ftp", ftp.port, ftpRoot, ftp.loginCount),
+          ("sftp", ssh.port, sftpRoot, ssh.sessionCount))) {
+        val out = Files.createTempDirectory(s"graft_pool_pass_${protocol}_out")
+        val perPass = (0 until 3).map { _ =>
+          val before = connections.get
+          transferPass(port, protocol, src, root, out)
+          connections.get - before
+        }
+        info(s"$protocol logins per pass (cold, warm, warm): ${perPass.mkString(", ")}")
+        assert(perPass.head <= 1L, s"$protocol cold pass")
+        assert(perPass.tail === Seq(0L, 0L), s"$protocol warm passes")
+      }
+    } finally { ftp.stop(); ssh.close() }
+  }
+
+  test("spark.read.text over 200 files holds at most task slots + 1 connections, with no GC") {
+    val slots = spark.sparkContext.defaultParallelism
+    val ftpRoot = Files.createTempDirectory("graft_pool_read_ftp")
+    val sftpRoot = Files.createTempDirectory("graft_pool_read_sftp")
+    Seq(ftpRoot, sftpRoot).foreach { r =>
+      Files.createDirectories(r.resolve("lines"))
+      (0 until 200).foreach(i => Files.writeString(r.resolve(f"lines/part-$i%03d.txt"), s"line $i\n"))
+    }
+    val ftp = new MiniFtpServer(ftpRoot)
+    val ssh = new SshServer(sftpRoot, Map("u" -> "p"))
+    try {
+      for ((protocol, port, logins, live) <- Seq(
+          ("ftp", ftp.port, ftp.loginCount, () => ftp.liveConnections),
+          ("sftp", ssh.port, ssh.sessionCount, () => ssh.liveConnections))) {
+        // the conf a blueprint step sets: a new FS per getFileSystem call
+        val uri = Blueprints.ftpUri(spark, Blueprints.parse(Array("--host", "127.0.0.1",
+          "--port", port.toString, "--username", "u", "--password", "p",
+          "--protocol", protocol, "--source-file-name-match-type", "regex_match",
+          "--source-file-name", "x")))
+        val before = logins.get
+        assert(spark.read.text(s"$uri/lines").count() === 200L)
+        val opened = logins.get - before
+        assert(opened <= slots + 1L, s"$protocol: $opened logins for $slots task slots")
+        assert(live() <= slots + 1, s"$protocol: ${live()} connections open for $slots task slots")
+      }
+    } finally { ftp.stop(); ssh.close() }
+  }
+
+  test("two users, two passwords, or a pinned and an unpinned host key never share a client") {
+    val ftpRoot = Files.createTempDirectory("graft_pool_identity_ftp")
+    val sftpRoot = Files.createTempDirectory("graft_pool_identity_sftp")
+    Files.writeString(ftpRoot.resolve("a.txt"), "abc")
+    Files.writeString(sftpRoot.resolve("a.txt"), "abc")
+    val ftp = new MiniFtpServer(ftpRoot) // any user, any password
+    val ssh = new SshServer(sftpRoot, Map("u" -> "p", "v" -> "q"))
+    val pinned = new Configuration(false)
+    pinned.set("fs.gsftp.hostkey", java.util.Base64.getEncoder.encodeToString(ssh.hostKeyBlob))
+    def view(fs: FileSystem, uri: String, conf: Configuration = new Configuration(false)) = {
+      fs.initialize(new URI(uri), conf)
+      fs
+    }
+    /** The logins one call on each view makes, in turn. */
+    def logins(count: () => Long, views: FileSystem*): Seq[Long] = views.map { fs =>
+      val before = count()
+      assert(fs.getFileStatus(new Path("/a.txt")).getLen === 3L)
+      count() - before
+    }
+    val ftpAt = s"127.0.0.1:${ftp.port}"
+    val sshAt = s"127.0.0.1:${ssh.port}"
+    try {
+      // one identity through two views logs in once
+      assert(logins(() => ftp.loginCount.get, view(new GraftFtpFileSystem, s"gftp://u:p@$ftpAt"),
+        view(new GraftFtpFileSystem, s"gftp://u:p@$ftpAt")) === Seq(1L, 0L))
+      assert(logins(() => ftp.loginCount.get, view(new GraftFtpFileSystem, s"gftp://u2:p@$ftpAt"),
+        view(new GraftFtpFileSystem, s"gftp://u:p2@$ftpAt")) === Seq(1L, 1L))
+      assert(logins(() => ssh.sessionCount.get,
+        view(new GraftSftpFileSystem, s"gsftp://u:p@$sshAt"),
+        view(new GraftSftpFileSystem, s"gsftp://v:q@$sshAt"),
+        view(new GraftSftpFileSystem, s"gsftp://u:p@$sshAt", pinned),
+        view(new GraftSftpFileSystem, s"gsftp://u:p@$sshAt"),
+        view(new GraftSftpFileSystem, s"gsftp://u:p@$sshAt", pinned)) === Seq(1L, 1L, 1L, 0L, 0L))
+    } finally { ftp.stop(); ssh.close() }
+  }
+
+  test("after a server restart drops every idle client, the next call succeeds at once " +
+      "on one fresh login") {
+    for (protocol <- Seq("ftp", "sftp")) {
+      val root = Files.createTempDirectory(s"graft_pool_restart_$protocol")
+      val files = tree(root, 3)
+      val (port, logins, live, restart, stop) =
+        if (protocol == "ftp") {
+          val s = new MiniFtpServer(root)
+          (s.port, s.loginCount, () => s.liveConnections, () => s.dropConnections(), () => s.stop())
+        } else {
+          val s = new SshServer(root, Map("u" -> "p"))
+          (s.port, s.sessionCount, () => s.liveConnections, () => s.dropConnections(), () => s.close())
+        }
+      try {
+        // a view on the pool a Download step uses
+        val fs = FileSystem.newInstance(new URI(Blueprints.ftpUri(spark,
+          Blueprints.parse(downloadArgs(port, protocol, root)))), spark.sessionState.newHadoopConf())
+        /** Three clients at once, then three idle ones in the pool. */
+        def fill(): Unit = {
+          files.keys.map(n => fs.open(new Path(s"/dir/$n")))
+            .foreach(in => try in.readAllBytes() finally in.close())
+          assert(live() === 3, s"$protocol connections before the restart")
+        }
+        fill()
+        restart()
+        var before = logins.get
+        assert(fs.getFileStatus(new Path("/dir")).isDirectory)
+        assert(logins.get - before === 1L, s"$protocol logins after the restart")
+        fill()
+        restart()
+        before = logins.get
+        val dst = Files.createTempDirectory(s"graft_pool_restart_${protocol}_out")
+        assert(Download.run(spark, downloadArgs(port, protocol, dst, "--retries", "0")) === 0)
+        sameFiles(dst, files)
+        assert(logins.get - before === 1L, s"$protocol Download logins after the restart")
+      } finally stop()
+    }
   }
 
   test("50 local creates start no child process") {

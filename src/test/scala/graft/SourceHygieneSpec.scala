@@ -120,6 +120,38 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(sites === Seq("ClientFileSystem.scala"), s"client() is called in ${sites.mkString(", ")}")
   }
 
+  test("every fs.<scheme>.* key a remote adapter reads is part of its pool identity") {
+    // a pooled client is reused by every view with the same identity,
+    // so a conf value that shapes the client (a TLS or host-key
+    // setting) left out of the key would hand one identity's client to
+    // another
+    val adapters = sourcesCode.filter(_._1.getFileName.toString.endsWith("FileSystem.scala"))
+      .map(_._2)
+    val perScheme = adapters.flatMap("s\"fs\\.\\$scheme\\.([\\w.]+)\"".r.findAllMatchIn(_))
+      .map(_.group(1)).distinct
+    assert(perScheme.nonEmpty, "no fs.$scheme.* key found")
+    val named = adapters.flatMap("\"(fs\\.(gftps?|gsftp)\\.[\\w.]+)\"".r.findAllMatchIn(_))
+      .map(_.group(1))
+    assert(named.nonEmpty, "no adapter conf key found")
+    for ((scheme, fs) <- Seq[(String, () => graft.sources.ClientFileSystem[_])](
+        "gftp" -> (() => new graft.sources.ftp.GraftFtpFileSystem),
+        "gftps" -> (() => new graft.sources.ftp.GraftFtpsFileSystem),
+        "gsftp" -> (() => new graft.sources.ssh.GraftSftpFileSystem))) {
+      def key(set: Option[(String, String)]): String = {
+        val conf = new org.apache.hadoop.conf.Configuration(false)
+        set.foreach { case (k, v) => conf.set(k, v) }
+        val f = fs()
+        f.initialize(java.net.URI.create(s"$scheme://127.0.0.1"), conf)
+        f.poolKey
+      }
+      val keys = perScheme.map(k => s"fs.$scheme.$k") ++ named.filter(_.startsWith(s"fs.$scheme."))
+      for (k <- keys.distinct) {
+        assert(key(Some(k -> "7021")) !== key(None), s"$k is not part of the $scheme pool identity")
+        assert(key(Some(k -> "7021")) !== key(Some(k -> "7022")), s"$k's value is not part of it")
+      }
+    }
+  }
+
   test("operators/Graph.scala reads relations to the driver in at most two places") {
     // LocalGraph's edge read and trussLocal's triangle read: every
     // driver-local graph kernel runs over the one LocalGraph a cache

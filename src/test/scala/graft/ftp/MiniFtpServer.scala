@@ -68,6 +68,21 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
     */
   def fail421After(n: Long): Unit = faultIn.set(n)
 
+  private val dropIn = new java.util.concurrent.atomic.AtomicLong(-1)
+
+  /** Fault mode: the next RETR sends its first `n` bytes, then closes
+    * its data connection and answers `426`, once — a data connection
+    * dropped mid-transfer.
+    */
+  def dropDataAfter(n: Long): Unit = dropIn.set(n)
+
+  private val live = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
+
+  /** Control connections open now — lets specs count the connections
+    * clients hold, idle ones included.
+    */
+  def liveConnections: Int = live.size
+
   private val acceptor = new Thread(() => {
     while (running.get()) {
       try {
@@ -81,9 +96,19 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
   acceptor.setDaemon(true)
   acceptor.start()
 
-  def stop(): Unit = { running.set(false); server.close() }
+  /** Closes every live control connection, as a server restart would. */
+  def dropConnections(): Unit =
+    live.removeIf { s => try s.close() catch { case NonFatal(_) => () }; true }
+
+  /** Stops accepting and closes every live control connection. */
+  def stop(): Unit = { running.set(false); server.close(); dropConnections() }
 
   private def handle(sock0: Socket): Unit = {
+    live.add(sock0)
+    try serve(sock0) finally live.remove(sock0)
+  }
+
+  private def serve(sock0: Socket): Unit = {
     var sock: Socket = sock0
     var in = new BufferedReader(new InputStreamReader(
       sock.getInputStream, StandardCharsets.UTF_8))
@@ -236,9 +261,11 @@ class MiniFtpServer(root: Path, requiredPassword: Option[String] = None,
                       val n = in.skip(toSkip)
                       if (n <= 0) toSkip = 0 else toSkip -= n
                     }
-                    in.transferTo(d.getOutputStream)
+                    val cut = dropIn.getAndSet(-1)
+                    if (cut < 0) in.transferTo(d.getOutputStream)
+                    else d.getOutputStream.write(in.readNBytes(cut.toInt))
                     d.getOutputStream.flush()
-                    true
+                    cut < 0
                   } finally in.close()
                 } catch { case NonFatal(_) => false }
                 finally { try d.close() catch { case NonFatal(_) => () } }
