@@ -88,69 +88,33 @@ object Probe {
 
   /** q76 phases: variant emission vs pair emission vs rejoin+sort. */
   private def fuzzy(spark: SparkSession, dir: String): Unit = {
+    import graft.operators.Dedup
     warmup(spark, Seq("q76_fuzzy_match2"))
-    graft.functions.GraftFunctions.register(spark)
-    val nameDim = Tables.spread(Tables(spark, dir, "customer")
-        .select(col("c_name"))).distinct()
-      .select(col("c_name").as("name"), xxhash64(col("c_name")).as("nid"))
-      .localCheckpoint()
-    Console.err.println("  names = " + nameDim.count())
-    val pairsRel = graft.operators.Dedup.fastssPairs(spark, nameDim, 2, 1000)
+    val names = Dedup.nameDim(spark, dir).localCheckpoint()
+    Console.err.println("  names = " + names.count())
+    val pairsRel = Dedup.fastssPairs(names, 2, Dedup.DefaultDfCap)
     timed(spark, "fuzzy/fastss-pairs-noop")(noop(pairsRel))
     Console.err.println("  pairs = " + pairsRel.count())
-    timed(spark, "fuzzy/q76-full")(
-      graft.operators.Dedup.q76(spark, dir).count(): Unit)
+    timed(spark, "fuzzy/q76-full")(Dedup.q76(spark, dir).count(): Unit)
   }
 
-  /** fastssPairs stage split: variants, capped index, emission, min. */
+  /** [[graft.operators.Dedup.fastssPairs]]'s stages timed one by one:
+    * variants, capped index, emission, min.
+    */
   private def fuzzy2(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
+    import graft.operators.Dedup
     warmup(spark, Seq("q76_fuzzy_match2"))
-    graft.functions.GraftFunctions.register(spark)
-    val nameDim = Tables.spread(Tables(spark, dir, "customer")
-        .select(col("c_name"))).distinct()
-      .select(col("c_name").as("name"), xxhash64(col("c_name")).as("nid"))
-      .localCheckpoint()
-    val variants = nameDim.select(col("name"), col("nid"))
-      .as[(String, Long)]
-      .flatMap { case (n, id) =>
-        graft.operators.Dedup.variantHashes(n, 2)
-          .map { case (vh, meta) => (vh, id, meta) } }
-      .toDF("vh", "nid", "meta")
-      .select(col("vh"),
-        struct(col("nid").as("_1"), col("meta").as("_2")).as("e"))
+    val names = Dedup.nameDim(spark, dir).localCheckpoint()
+    val variants = Dedup.fastssVariants(names, 2)
     timed2(spark, "fuzzy2/variants-noop")(noop(variants))
-    val grouped = variants.groupBy(col("vh"))
-      .agg(expr(s"collect_capped(e, 1000)").as("dsr"))
-      .filter(col("dsr").isNotNull && size(col("dsr")) > 1)
-      .select(col("dsr"))
-    timed2(spark, "fuzzy2/capped-index-noop")(noop(grouped))
-    Console.err.println("  buckets = " + grouped.count())
-    val emitted = grouped.as[Seq[(Long, Long)]].flatMap { members =>
-      val arr = members.toArray
-      java.util.Arrays.sort(arr, Ordering.by((x: (Long, Long)) => x))
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      var i = 0
-      while (i < arr.length) {
-        val (ia, ma) = arr(i)
-        var j = i + 1
-        while (j < arr.length) {
-          val (ib, mb) = arr(j)
-          if (ia != ib) {
-            val dist = graft.operators.Dedup.witnessDist(ma, mb)
-            if (dist >= 1 && dist <= 2) out += ((ia, ib, dist))
-          }
-          j += 1
-        }
-        i += 1
-      }
-      out
-    }.toDF("ida", "idb", "dist")
+    val index = Dedup.fastssIndex(variants, Dedup.DefaultDfCap)
+    timed2(spark, "fuzzy2/capped-index-noop")(noop(index))
+    Console.err.println("  buckets = " + index.count())
+    val emitted = Dedup.fastssEmit(index, 2)
     timed2(spark, "fuzzy2/emit-noop")(noop(emitted))
     Console.err.println("  emitted = " + emitted.count())
     timed2(spark, "fuzzy2/min-groupBy-noop")(noop(
-      emitted.groupBy(col("ida"), col("idb"))
-        .agg(min(col("dist")).as("dist"))))
+      Dedup.fastssPairs(names, 2, Dedup.DefaultDfCap)))
   }
 
   private def one(spark: SparkSession, dir: String, q: String): Unit = {

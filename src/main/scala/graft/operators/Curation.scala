@@ -548,22 +548,13 @@ object Curation {
     * [[graft.SessionCaches]] — results bit-identical warm or cold,
     * fill seconds on the bench's honest-accounting ledger, the
     * tri-cache contract verbatim (inputs under a dir are
-    * session-immutable). Pinned via the wsym cache's count-then-
-    * dispatch (round 14): heap-resident at or below
-    * [[Graph.ResultPinMaxRows]] rows, parquet temp above it — a
-    * 100 TB corpus's verdict relation must never pin executor
+    * session-immutable). Pinned by [[graft.SessionCaches.pinCounted]]:
+    * a 100 TB corpus's verdict relation must never pin executor
     * storage just because it is narrow.
     */
   def q75(spark: SparkSession, dir: String): DataFrame =
     graft.SessionCaches.getOrBuild(spark, "verdicts", dir) {
-      val v = verdictChain(spark, dir).localCheckpoint()
-      val n = v.count()
-      if (n <= Graph.ResultPinMaxRows) v
-      else {
-        val spilled = Graph.pinByRows(v, n, 0L, "verdicts")
-        v.unpersist(blocking = false)
-        spilled
-      }
+      graft.SessionCaches.pinCounted(verdictChain(spark, dir), "verdicts")._1
     }.orderBy(col("doc_id"))
 
   private def verdictChain(spark: SparkSession, dir: String): DataFrame = {
@@ -772,9 +763,8 @@ object Curation {
     // q133 made it a two-consumer relation, the §7i trigger): the
     // 8-gram pass + pair emission run once per (session, dir, cap),
     // and what persists is ≤ |sources| rows. Keyed by dfCap so a
-    // non-default-cap caller never reads a default-cap cache. Same
-    // count-then-pin dispatch as the verdicts entry: heap-resident at
-    // web-host cardinalities seen here, parquet temp past the bound.
+    // non-default-cap caller never reads a default-cap cache. Pinned
+    // by SessionCaches.pinCounted, like the verdicts entry.
     val tiers = graft.SessionCaches.getOrBuild(spark, s"tiers-$dfCap",
         dir) {
       val src = Tables(spark, dir, "documents")
@@ -794,18 +784,10 @@ object Curation {
         .unionAll(edges.select(col("hi").as("source"), col("w")))
         .groupBy(col("source")).agg(sum(col("w")).as("wdeg"))
       val tot = wd.agg(sum(col("wdeg")).as("t"), count(lit(1)).as("n"))
-      val t = wd.crossJoin(broadcast(tot))
+      graft.SessionCaches.pinCounted(wd.crossJoin(broadcast(tot))
         .select(col("source"),
           when(col("wdeg") * col("n") >= col("t"), lit(2L))
-            .otherwise(lit(1L)).as("host_tier"))
-        .localCheckpoint()
-      val n = t.count()
-      if (n <= Graph.ResultPinMaxRows) t
-      else {
-        val spilled = Graph.pinByRows(t, n, 0L, "tiers")
-        t.unpersist(blocking = false)
-        spilled
-      }
+            .otherwise(lit(1L)).as("host_tier")), "tiers")._1
     }
     q75(spark, dir)
       .join(broadcast(tiers), Seq("source"), "left")

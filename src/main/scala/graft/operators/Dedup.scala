@@ -414,17 +414,10 @@ object Dedup {
     * Keyed on (dir, [[Tables.versionStamp]]): replacing the data
     * under a dir changes the stamp, so the next query re-counts and
     * takes the correct dispatch arm with no manual invalidation
-    * (spec-asserted). [[invalidateCorpusCounts]] remains as a
-    * belt-and-braces escape hatch.
+    * (spec-asserted).
     */
   private val corpusStats =
     new scala.collection.concurrent.TrieMap[(String, Long), (Long, Int)]
-
-  /** Drop cached corpus stats (data under a previously-seen dir
-    * changed). Usually unnecessary: the cache keys on a filesystem
-    * metadata stamp and self-invalidates on replace.
-    */
-  def invalidateCorpusCounts(): Unit = corpusStats.clear()
 
   /** Embedding-corpus (size, dims) for `dir`, memoized per content
     * version — one aggregate job per version, shared by every
@@ -720,11 +713,12 @@ object Dedup {
 
   /** q35: near-duplicate cluster assignment — connected components
     * over the exact-Jaccard pair graph (q31 edges), labels = min
-    * doc_id per component, plus cluster sizes. Below
-    * [[CcLocalMaxEdges]] the components come from a driver union-find;
-    * above it from [[ccLargeSmallStar]]'s star rounds (O(log n) rounds
-    * at any component diameter, the driver reading one checksum row
-    * per round, never data). Oracle: DuckDB recursive-CTE transitive
+    * doc_id per component, plus cluster sizes. At or below
+    * [[Graph.BroadcastEdgeMaxRows]] edges the components come from a
+    * union-find over the edge relation's [[Graph.LocalGraph]]; above
+    * it from [[ccLargeSmallStar]]'s star rounds (O(log n) rounds at
+    * any component diameter, the driver reading one checksum row per
+    * round, never data). Oracle: DuckDB recursive-CTE transitive
     * closure with MIN over reachable nodes.
     */
   def q35(spark: SparkSession, dir: String): DataFrame =
@@ -739,111 +733,85 @@ object Dedup {
     * tri/wsym caches already ride. The relation is deterministic for
     * a given dir (min-id labels, exact counts), so results are
     * bit-identical warm or cold; fill seconds accrue to the bench's
-    * honest-accounting ledger; pinned via the verdicts cache's
-    * count-then-dispatch so a 100 TB corpus's label relation never
-    * pins executor storage.
+    * honest-accounting ledger. The q31 edges and the labels are
+    * pinned by [[graft.SessionCaches.pinCounted]], and the edge count
+    * it returns picks the arm through [[Graph.sized]] — the dispatch
+    * every graph-family fill makes. The near-dup pair graph is TINY
+    * relative to the corpus (256 edges at sf0.1), and each star round
+    * is two aggregates + joins + checkpoints + a driver probe — pure
+    * job latency at that size. DedupSpec pins arm equality.
     */
-  /** Edge-count bound under which [[clusterLabels]] computes the
-    * components on the driver (union-find) instead of by distributed
-    * star rounds — the BPE/q34/q135 local-vs-distributed dispatch
-    * discipline. The near-dup pair graph is TINY relative to the
-    * corpus (256 edges at sf0.1), and each star round is two
-    * aggregates + joins + checkpoints + a driver probe — pure job
-    * latency at that size. Labels (min reachable doc_id) and sizes are
-    * identical by construction; DedupSpec pins arm equality.
-    */
-  private[graft] val CcLocalMaxEdges = 4000000L
-
   private[graft] def clusterLabels(spark: SparkSession,
       dir: String): DataFrame =
-    clusterLabelsBounded(spark, dir, CcLocalMaxEdges)
-
-  private[graft] def clusterLabelsBounded(spark: SparkSession,
-      dir: String, localMaxEdges: Long): DataFrame =
     graft.SessionCaches.getOrBuild(spark, "ccLabels", dir) {
-      val edges = q31(spark, dir).select(col("ia"), col("ib")).localCheckpoint()
-      val nEdges = edges.count()
-      if (nEdges <= localMaxEdges) ccLabelsLocal(spark, edges)
-      else ccLabelsStar(edges)
+      val (edges, n) = graft.SessionCaches.pinCounted(
+        q31(spark, dir).select(col("ia"), col("ib")), "ccEdges")
+      Graph.sized(edges, n, Graph.BroadcastEdgeMaxRows).local match {
+        case Some(g) => ccLabelsLocal(spark, g)
+        case None => ccLabelsStar(edges)
+      }
     }
 
-  /** Driver-local arm of [[clusterLabelsBounded]]: union-find with
-    * min-id roots — comp = min reachable node id, exactly the star
-    * rounds' labels. NOTE: no `return` inside the cache build
-    * closure (a non-local return would unwind through the lazy
-    * holder and void both the entry and the ledger record).
+  /** Driver-local arm of [[clusterLabels]]: union-find over `g`'s
+    * dense indices, uniting toward the smaller root. `g.ids` ascend,
+    * so a component's smallest index carries its smallest doc_id —
+    * exactly the star rounds' label. NOTE: no `return` here — this
+    * runs inside the cache build closure, and a non-local return would
+    * unwind through the lazy holder and void both the entry and the
+    * ledger record.
     */
   private[graft] def ccLabelsLocal(spark: SparkSession,
-      edges: DataFrame): DataFrame = {
-        val rows = edges.queryExecution.executedPlan.executeCollect()
-        val parent = new scala.collection.mutable.LongMap[Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        var k = 0
-        while (k < rows.length) {
-          val a = find(rows(k).getLong(0))
-          val b = find(rows(k).getLong(1))
-          if (a != b) {
-            // min id becomes the root so labels match the star rounds
-            if (a < b) parent(b) = a else parent(a) = b
-          }
-          k += 1
-        }
-        val nodes = scala.collection.mutable.LongMap.empty[Long]
-        k = 0
-        while (k < rows.length) {
-          nodes(rows(k).getLong(0)) = 0L
-          nodes(rows(k).getLong(1)) = 0L
-          k += 1
-        }
-        val compOf = scala.collection.mutable.LongMap.empty[Long]
-        val sizeOf = scala.collection.mutable.LongMap.empty[Long]
-        nodes.foreachKey { n =>
-          val c = find(n)
-          compOf(n) = c
-          sizeOf(c) = sizeOf.getOrElse(c, 0L) + 1L
-        }
-        val out = Vector.newBuilder[(Long, Long, Long)]
-        compOf.foreachEntry((n, c) => out += ((n, c, sizeOf(c))))
-        import spark.implicits._
-        spark.createDataset(out.result())
-          .toDF("doc_id", "cluster_id", "cluster_size")
-          .localCheckpoint()
+      g: Graph.LocalGraph): DataFrame = {
+    val parent = Array.tabulate(g.nNodes)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+    var u = 0
+    while (u < g.nNodes) {
+      var s = g.off(u)
+      while (s < g.off(u + 1)) {
+        val a = find(u)
+        val b = find(g.adj(s))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+        s += 1
+      }
+      u += 1
+    }
+    val size = new Array[Long](g.nNodes)
+    u = 0
+    while (u < g.nNodes) { size(find(u)) += 1L; u += 1 }
+    val out = Vector.tabulate(g.nNodes) { v =>
+      val r = find(v)
+      (g.ids(v), g.ids(r), size(r))
+    }
+    import spark.implicits._
+    spark.createDataset(out)
+      .toDF("doc_id", "cluster_id", "cluster_size")
+      .localCheckpoint()
   }
 
-  /** Distributed arm of [[clusterLabelsBounded]]: [[ccLargeSmallStar]]'s
-    * labels plus each component's size, pinned like the verdicts
-    * cache (heap at or below [[Graph.ResultPinMaxRows]] rows, a
-    * parquet temp above).
+  /** Distributed arm of [[clusterLabels]]: [[ccLargeSmallStar]]'s
+    * labels plus each component's size, pinned by
+    * [[graft.SessionCaches.pinCounted]].
     */
   private[graft] def ccLabelsStar(edges: DataFrame): DataFrame = {
     val labels = ccLargeSmallStar(edges)
     val wComp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("comp"))
-    val rel = labels
+    graft.SessionCaches.pinCounted(labels
       .withColumn("cluster_size", count(lit(1)).over(wComp))
       .select(col("node").as("doc_id"), col("comp").as("cluster_id"),
-        col("cluster_size"))
-      .localCheckpoint()
-    val n = rel.count()
-    if (n <= graft.operators.Graph.ResultPinMaxRows) rel
-    else {
-      val spilled = graft.operators.Graph.pinByRows(rel, n, 0L, "ccLabels")
-      rel.unpersist(blocking = false)
-      spilled
-    }
+        col("cluster_size")), "ccLabels")._1
   }
 
   /** Connected components by alternating large-star/small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC '14) — [[q35]]'s distributed arm above [[CcLocalMaxEdges]].
+    * SoCC '14) — [[q35]]'s distributed arm above
+    * [[Graph.BroadcastEdgeMaxRows]].
     * Min-label propagation would need diameter-many rounds; a deep
     * chain (rare but real in transitive near-dup graphs) blows
     * through any fixed cap. Star rounds contract components in
@@ -1718,20 +1686,42 @@ object Dedup {
     * canonical witness is hot while only a deeper witness survives;
     * DedupSpec quantifies recall at aggressive caps as before.
     */
-  private[graft] def fastssPairs(spark: SparkSession, nameDim: DataFrame,
-      d: Int, dfCap: Int): DataFrame = {
+  private[graft] def fastssPairs(nameDim: DataFrame, d: Int,
+      dfCap: Int): DataFrame =
+    fastssEmit(fastssIndex(fastssVariants(nameDim, d), dfCap), d)
+      .groupBy(col("ida"), col("idb"))
+      .agg(min(col("dist")).as("dist"))
+
+  /** [[fastssPairs]] stage 1: every name's variant hashes `vh` with the
+    * 16-byte payload `e = (nid, meta)` — the map side of the shuffle.
+    */
+  private[graft] def fastssVariants(nameDim: DataFrame, d: Int): DataFrame = {
+    val spark = nameDim.sparkSession
     import spark.implicits._
-    val variants = nameDim.select(col("name"), col("nid"))
+    nameDim.select(col("name"), col("nid"))
       .as[(String, Long)]
       .flatMap { case (n, id) => variantHashes(n, d).map { case (vh, meta) => (vh, id, meta) } }
       .toDF("vh", "nid", "meta")
       .select(col("vh"),
         struct(col("nid").as("_1"), col("meta").as("_2")).as("e"))
+  }
+
+  /** [[fastssPairs]] stage 2: the capped posting list `dsr` of every
+    * variant shared by two or more entries.
+    */
+  private[graft] def fastssIndex(variants: DataFrame, dfCap: Int): DataFrame =
     variants.groupBy(col("vh"))
       .agg(expr(s"collect_capped(e, $dfCap)").as("dsr"))
       .filter(col("dsr").isNotNull && size(col("dsr")) > 1)
       .select(col("dsr"))
-      .as[Seq[(Long, Long)]]
+
+  /** [[fastssPairs]] stage 3: each posting list's witness pairs
+    * `(ida, idb, dist)` at distance 1..d, before the per-pair `min`.
+    */
+  private[graft] def fastssEmit(index: DataFrame, d: Int): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    index.as[Seq[(Long, Long)]]
       .flatMap { members =>
         val arr = members.toArray
         java.util.Arrays.sort(arr, Ordering.by((x: (Long, Long)) => x))
@@ -1753,8 +1743,16 @@ object Dedup {
         out.iterator
       }
       .toDF("ida", "idb", "dist")
-      .groupBy(col("ida"), col("idb"))
-      .agg(min(col("dist")).as("dist"))
+  }
+
+  /** The distinct customer names [[q73]]/[[q76]] match, keyed by
+    * `nid = xxhash64(name)` — the dim every FastSS stage reads.
+    */
+  private[graft] def nameDim(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    Tables.spread(Tables(spark, dir, "customer").select(col("c_name")))
+      .distinct()
+      .select(col("c_name").as("name"), xxhash64(col("c_name")).as("nid"))
   }
 
   /** Candidate id-pairs for [[q73]]/[[q76]] — kept as the plan-spec
@@ -1762,14 +1760,8 @@ object Dedup {
     * hashes and packed longs, never strings.
     */
   private[graft] def fuzzyCandidates(spark: SparkSession, dir: String,
-      d: Int, dfCap: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val nameDim = Tables.spread(Tables(spark, dir, "customer")
-        .select(col("c_name"))).distinct()
-      .select(col("c_name").as("name"), xxhash64(col("c_name")).as("nid"))
-    fastssPairs(spark, nameDim, d, dfCap)
-      .select(col("ida"), col("idb"))
-  }
+      d: Int, dfCap: Int): DataFrame =
+    fastssPairs(nameDim(spark, dir), d, dfCap).select(col("ida"), col("idb"))
 
   /** Shared FastSS matcher at edit distance ≤ d — [[fastssPairs]]
     * with the (nid → name) dim joined back once per pair side; the
@@ -1778,16 +1770,12 @@ object Dedup {
     */
   private def fuzzyMatch(spark: SparkSession, dir: String, d: Int,
       dfCap: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // barrier: the name dim feeds the variant flatMap AND both pair
     // rejoin sides — one scan+distinct, not three (round 14)
-    val nameDim = Tables.spread(Tables(spark, dir, "customer")
-        .select(col("c_name"))).distinct()
-      .select(col("c_name").as("name"), xxhash64(col("c_name")).as("nid"))
-      .localCheckpoint()
-    fastssPairs(spark, nameDim, d, dfCap)
-      .join(nameDim.select(col("nid").as("ida"), col("name").as("na")), "ida")
-      .join(nameDim.select(col("nid").as("idb"), col("name").as("nb")), "idb")
+    val names = nameDim(spark, dir).localCheckpoint()
+    fastssPairs(names, d, dfCap)
+      .join(names.select(col("nid").as("ida"), col("name").as("na")), "ida")
+      .join(names.select(col("nid").as("idb"), col("name").as("nb")), "idb")
       // id order is hash order — re-canonicalize pairs lexicographically
       .select(least(col("na"), col("nb")).as("name_a"),
         greatest(col("na"), col("nb")).as("name_b"),

@@ -70,27 +70,29 @@ class DedupSpec extends SparkSpec {
   }
 
   test("clusterLabels arms agree: driver union-find bit-equals the star rounds") {
-    // below CcLocalMaxEdges the labels come from a driver union-find
-    // with min-id roots, above it from the distributed star rounds —
-    // pin bit-equality (doc_id, cluster_id, cluster_size) on the real
-    // near-dup graph, a planted multi-component graph and a 300-node
-    // chain (299 hops: deeper than any fixed propagation cap)
+    // at or below Graph.BroadcastEdgeMaxRows the labels come from a
+    // union-find over the edge relation's LocalGraph, above it from
+    // the distributed star rounds — pin bit-equality (doc_id,
+    // cluster_id, cluster_size) on the real near-dup graph, a planted
+    // multi-component graph and a 300-node chain (299 hops: deeper
+    // than any fixed propagation cap)
     val edges = Dedup.q31(spark, sf)
       .select(org.apache.spark.sql.functions.col("ia"),
         org.apache.spark.sql.functions.col("ib")).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows(Dedup.ccLabelsLocal(spark, edges)) ===
-      rows(Dedup.ccLabelsStar(edges)))
+    def local(e: org.apache.spark.sql.DataFrame) =
+      rows(Dedup.ccLabelsLocal(spark,
+        graft.operators.Graph.sized(e, Long.MaxValue).local.get))
+    assert(local(edges) === rows(Dedup.ccLabelsStar(edges)))
     import spark.implicits._
     val planted = Seq((7L, 3L), (3L, 9L), (12L, 15L), (20L, 21L),
       (21L, 22L), (22L, 20L)).toDF("ia", "ib").localCheckpoint()
-    assert(rows(Dedup.ccLabelsLocal(spark, planted)) ===
-      rows(Dedup.ccLabelsStar(planted)))
+    assert(local(planted) === rows(Dedup.ccLabelsStar(planted)))
     val chain = spark.range(299).selectExpr("id AS ia", "id + 1 AS ib")
       .localCheckpoint()
     val chainRows = rows(Dedup.ccLabelsStar(chain))
-    assert(chainRows === rows(Dedup.ccLabelsLocal(spark, chain)))
+    assert(chainRows === local(chain))
     assert(chainRows === (0L to 299L).map(n => (n, 0L, 300L)).toSet)
   }
 

@@ -263,7 +263,7 @@ class GraphSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
       s"below-bound arm should not join at all:\n$p")
     // force the above-bound arm on the same graph: results identical
-    val shuffled = Graph.trianglesOn(pairs, broadcastMaxRows = 0L)
+    val shuffled = Graph.trianglesOn(pairs, localMaxEdges = 0L)
     assert(shuffled.collect().map(_.toSeq).toSet ==
       bcast.collect().map(_.toSeq).toSet)
     assert(shuffled.collect().map(_.toSeq).toSet ==
@@ -271,7 +271,7 @@ class GraphSpec extends SparkSpec {
     // the shuffle arm screens wedges with the edge Bloom BEFORE the
     // exchange (round 10) — the screen must sit in the plan, and the
     // broadcast arm must NOT pay for it
-    val sp = Graph.trianglesOn(pairs, broadcastMaxRows = 0L,
+    val sp = Graph.trianglesOn(pairs, localMaxEdges = 0L,
       checkpointResult = false).queryExecution.executedPlan.toString
     assert(sp.contains("graft_bloom_contains_long"),
       s"shuffle arm lost its wedge Bloom screen:\n$sp")
@@ -541,7 +541,7 @@ class GraphSpec extends SparkSpec {
     }.filter(e => e._1 != e._2).distinct.toDF("lo", "hi")
       .localCheckpoint()
     assert(rows(Graph.edgeJaccardOn(rnd)) ===
-      rows(Graph.edgeJaccardOn(rnd, broadcastMaxRows = 0L)))
+      rows(Graph.edgeJaccardOn(rnd, localMaxEdges = 0L)))
   }
 
   test("q130 bit-equals a driver nested-ladder peel; every rung converged") {
@@ -694,7 +694,7 @@ class GraphSpec extends SparkSpec {
     }.filter(e => e._1 != e._2).distinct.toDF("lo", "hi")
       .localCheckpoint()
     assert(rows(Graph.clusteringOn(rnd)) ===
-      rows(Graph.clusteringOn(rnd, broadcastMaxRows = 0L)))
+      rows(Graph.clusteringOn(rnd, localMaxEdges = 0L)))
   }
 
   test("q126 dispatch: broadcast and shuffled arms bit-equal; broadcast arm moves less shuffle") {

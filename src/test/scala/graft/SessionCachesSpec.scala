@@ -1,9 +1,9 @@
 package graft
 
-/** The session-cache registry's three round-13 contracts: stable
-  * UUID keys per live session, eviction + temp sweeping on context
-  * stop, and the build-seconds ledger the bench's honest accounting
-  * reads.
+/** The session-cache registry's contracts: stable UUID keys per live
+  * session, eviction + temp sweeping on context stop, the
+  * build-seconds ledger the bench's honest accounting reads, and the
+  * pin rule every cache fill materializes its relation by.
   */
 class SessionCachesSpec extends SparkSpec {
 
@@ -104,5 +104,37 @@ class SessionCachesSpec extends SparkSpec {
     intercept[RuntimeException] { get() }
     assert(get().intValue() === 2, "failed build poisoned the entry")
     assert(get().intValue() === 2, "retry was not cached")
+  }
+
+  test("pin rule: a checkpoint at the default bound; at bound 0 a parquet temp with the same rows, swept on context stop") {
+    // the one keep-or-spill branch every cache fill (tri, wsym,
+    // ccLabels, verdicts, tiers-N) goes through; the fills run far
+    // below the default bound, so this is where the spill arm is run
+    import spark.implicits._
+    val df = (1L to 500L).map(i => (i, i * 7 % 13)).toDF("k", "v")
+    def plan(d: org.apache.spark.sql.DataFrame) = d.queryExecution.executedPlan.toString
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+    val (held, n) = SessionCaches.pinCounted(df, "spec-pin")
+    assert(n === 500L)
+    assert(plan(held).contains("ExistingRDD") && !plan(held).contains("FileScan parquet"),
+      s"default bound did not keep the checkpoint:\n${plan(held)}")
+    val base = java.nio.file.Files.createTempDirectory("graft-spec-pin")
+    def temps() = Option(base.toFile.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("graft-spec-pin-"))
+    spark.conf.set("graft.tmpDir", base.toString)
+    try {
+      val (spilled, m) = SessionCaches.pinCounted(df, "spec-pin", bound = 0L)
+      val byRows = SessionCaches.pinByRows(df, 500L, "spec-pin", bound = 0L)
+      assert(m === 500L)
+      for (d <- Seq(spilled, byRows)) {
+        assert(plan(d).contains("FileScan parquet"),
+          s"bound 0 did not read back a parquet temp:\n${plan(d)}")
+        assert(rows(d) === rows(held))
+      }
+      assert(temps().size === 2, s"temps: ${temps().mkString(", ")}")
+    } finally spark.conf.unset("graft.tmpDir")
+    SessionCaches.evictContext(spark.sparkContext)
+    assert(temps().isEmpty, s"temps not swept: ${temps().mkString(", ")}")
+    base.toFile.delete(): Unit
   }
 }

@@ -18,7 +18,7 @@ class SimilaritySpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     assert(graft.operators.Dedup.corpusSizeOf(spark, tmp) === 100L)
     assert(Similarity.numCells(spark, tmp) === 16) // MinCells floor
-    // REPLACE the corpus — no invalidateCorpusCounts() anywhere: the
+    // REPLACE the corpus — no manual invalidation anywhere: the
     // (dir, versionStamp) key must re-derive both numbers by itself
     (0L until 20480L).toDF("vec_id")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")

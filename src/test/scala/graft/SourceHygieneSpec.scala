@@ -164,4 +164,54 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(sites.size <= 2,
       s"executeCollect( at Graph.scala lines ${sites.mkString(", ")}")
   }
+
+  /** Every source file under src/main and src/test but this one, with
+    * its comments stripped.
+    */
+  private def allCode: Seq[(java.nio.file.Path, String)] = {
+    import scala.jdk.CollectionConverters._
+    Seq("src/main/scala", "src/test/scala").flatMap(r =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(r)).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "SourceHygieneSpec.scala")
+        .map(p => p -> code(p)))
+  }
+
+  test("the pin rule lives in SessionCaches: its bound, its pin forms and its spill branch") {
+    // every session-cached relation is counted and kept or spilled by
+    // SessionCaches.pinCounted / pinByRows; a copy of the rule
+    // elsewhere is a second place its bound and its temps must change
+    val (home, others) = allCode.filter(_._1.toString.contains("src/main"))
+      .partition(_._1.getFileName.toString == "SessionCaches.scala")
+    val markers = Seq("val ResultPinMaxRows", "def pinByRows", "def pinCounted",
+      "registerTemp(", "graft.tmpDir")
+    for (m <- markers) {
+      assert(home.exists(_._2.contains(m)), s"$m not found in SessionCaches.scala")
+      val in = others.collect { case (p, text) if text.contains(m) => p }
+      assert(in.isEmpty, s"$m outside SessionCaches: ${in.mkString(", ")}")
+    }
+    // the copied form: compare a count with the bound, keep or spill
+    val copied = others.collect {
+      case (p, text) if "ResultPinMaxRows\\)\\s*\\w+\\s+else\\b".r.findFirstIn(text).isDefined => p
+    }
+    assert(copied.isEmpty, s"a keep-or-spill branch outside SessionCaches: ${copied.mkString(", ")}")
+  }
+
+  test("a LocalGraph is built only by Graph.sized") {
+    // one driver-local graph per cached relation, sized by the one
+    // dispatch helper; a second build site is a second id-to-index map
+    // and a second dispatch count
+    val sites = allCode.flatMap { case (p, text) =>
+      "(?<!class |new )\\bLocalGraph\\(".r.findAllMatchIn(text).map { m =>
+        val enclosing = "def (\\w+)".r.findAllMatchIn(text.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption
+        s"${p.getFileName}:${enclosing.getOrElse("?")}"
+      }
+    }
+    assert(sites === Seq("Graph.scala:sized"), s"LocalGraph(...) built at ${sites.mkString(", ")}")
+    val news = allCode.flatMap { case (p, text) =>
+      "\\bnew LocalGraph\\(".r.findAllMatchIn(text).map(_ => p.getFileName.toString)
+    }
+    assert(news === Seq("Graph.scala"), s"new LocalGraph( in ${news.mkString(", ")}")
+  }
 }
