@@ -1,44 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProductD, Fingerprint64}
+import graft.functions.GraftFunctions
 
-/** Session extensions: registers graft's native expressions so plain
-  * SQL (`SELECT fingerprint64(text), dot_d(a, b)`) works on any
-  * session built with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
+/** Session extensions: registers graft's native expressions
+  * ([[graft.functions.GraftFunctions.all]]) so plain SQL
+  * (`SELECT fingerprint64(text), dot_d(a, b)`) works on any session
+  * built with `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("fingerprint64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[Fingerprint64].getName, "fingerprint64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Fingerprint64(exprs.head)))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("dot_d"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProductD].getName, "dot_d"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductD(exprs(0), exprs(1))))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("heavy_hitters"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.HeavyHitters].getName, "heavy_hitters"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.HeavyHitters(exprs(0), exprs(1))
-          .toAggregateExpression()))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("collect_capped"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.CollectCapped].getName, "collect_capped"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.CollectCapped(exprs(0), exprs(1))
-          .toAggregateExpression()))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.NfcNormalize(exprs.head)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }
 
 /** Canonical session builder: the configuration every graft driver

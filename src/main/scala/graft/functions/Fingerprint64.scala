@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -62,24 +61,4 @@ object Fingerprint64 {
     * a column-side key always join. */
   def of(s: String): Long =
     hash(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-}
-
-object GraftFunctions {
-  /** Idempotently registers graft's SQL functions on a session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fingerprint64", exprs => Fingerprint64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_d", exprs => DotProductD(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sigmoid_d", exprs => SigmoidD(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", exprs =>
-        HeavyHitters(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "collect_capped", exprs =>
-        CollectCapped(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-  }
 }

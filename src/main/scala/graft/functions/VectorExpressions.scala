@@ -15,42 +15,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * primitive loop (no allocation, stays inside whole-stage codegen) —
   * ~20× faster on the q34 all-pairs scan.
   */
-/** Bit-deterministic logistic sigmoid `1 / (1 + e^(−z))` over a DOUBLE.
-  *
-  * Spark's built-in `exp` codegens to `Math.exp`, whose HotSpot
-  * intrinsic may differ by ULPs from the interpreted path
-  * (`Math.exp` delegates to `StrictMath.exp` in source, but the JIT
-  * substitutes a faster non-fdlibm kernel). A closure twin calling
-  * `StrictMath.exp` therefore cannot be bit-equal the Catalyst arm.
-  * This expression pins BOTH eval paths to `StrictMath.exp`, which
-  * the JLS defines bit-exactly (fdlibm), so column-side and
-  * closure-side scores agree to the last bit — the contract
-  * [[graft.operators.QualityFilter]]'s batch/stream twins rely on.
-  */
-case class SigmoidD(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case DoubleType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"sigmoid_d needs a DOUBLE input, got $t")
-    }
-
-  override def nullSafeEval(z: Any): Any =
-    java.lang.Double.valueOf(
-      1.0 / (1.0 + java.lang.StrictMath.exp(-z.asInstanceOf[Double])))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      z => s"1.0 / (1.0 + java.lang.StrictMath.exp(-($z)))")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SigmoidD = copy(child = newChild)
-}
-
 case class DotProductD(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -255,27 +255,24 @@ object Bpe {
     syms.toSeq
   }
 
-  /** q98: tokenize the corpus with the q97-trained merge table — the
-    * APPLY step of the tokenizer pipeline. Per document: word count,
-    * BPE token count, distinct-token count, and the tokens-per-word
-    * compression ratio the vocabulary buys.
+  /** Tokenize `(doc_id, text)` documents with a learned merge table —
+    * the APPLY step of the tokenizer pipeline, for the batch corpus
+    * ([[q98]]) and for an ingest stream alike. Per document: word
+    * count, BPE token count, distinct-token count, and the
+    * tokens-per-word compression ratio the vocabulary buys.
     *
     * Scale shape: the merge table is KBs and ships inside the typed
-    * flatMap's closure (broadcast-by-serialization — no join, no
-    * shuffle on the corpus side); encoding is map-only with a
-    * per-partition word→tokens memo, so each DISTINCT word per
-    * partition is encoded once (word frequency is Zipfian — the memo
-    * hit rate climbs with partition size). The only shuffle is the
-    * final per-doc stats relation, rows already narrow.
-    * Deterministic but not SQL-expressible (the merge table is a
-    * training artifact) ⇒ rows-only; BpeSpec pins the semantics.
+    * map's closure (broadcast-by-serialization — no join, no shuffle,
+    * no state); encoding is map-only with a per-partition word→tokens
+    * memo, so each DISTINCT word per partition is encoded once (word
+    * frequency is Zipfian — the memo hit rate climbs with partition
+    * size).
     */
-  def q98(spark: SparkSession, dir: String): DataFrame = {
+  def tokenizeOn(docs: DataFrame,
+      merges: Seq[(Long, String, String, String, Long)]): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
-    val merges = trainCached(spark, dir, 30)
-    Tables.spread(Tables(spark, dir, "documents")
-        .select(col("doc_id"), col("text")))
-      .as[(Long, String)]
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         val memo = new java.util.HashMap[String, Array[String]]()
         it.map { case (id, text) =>
@@ -297,8 +294,18 @@ object Bpe {
       }
       .toDF("doc_id", "n_words", "n_tokens", "n_distinct_tokens",
         "tokens_per_word")
-      .orderBy(col("doc_id"))
   }
+
+  /** q98: tokenize the corpus with the q97-trained merge table
+    * ([[tokenizeOn]] over the spread corpus). Deterministic but not
+    * SQL-expressible (the merge table is a training artifact) ⇒
+    * rows-only; BpeSpec pins the semantics.
+    */
+  def q98(spark: SparkSession, dir: String): DataFrame =
+    tokenizeOn(Tables.spread(Tables(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))),
+      trainCached(spark, dir, 30))
+      .orderBy(col("doc_id"))
 
   /** Single-machine reference BPE over a (word → freq) map — the spec
     * oracle: same tie-break, same sentinel, no Spark.

@@ -11,7 +11,7 @@ import graft.Tables
   * char-n-gram Naive Bayes with the full nightly-train /
   * apply-at-ingest lifecycle the perplexity and quality filters
   * already have (train at corpus scale, persist a KB artifact, load
-  * and score map-only at ingest, streaming twin bit-equal batch).
+  * and score map-only at ingest with the batch apply, [[langIdOn]]).
   *
   * Determinism discipline: the ONLY floats live inside model
   * construction (`StrictMath.log` over exact int64 counts, floored
@@ -56,8 +56,8 @@ object LangId {
       unseen: Array[Long], grams: Map[String, Array[Long]])
       extends Serializable {
 
-    /** Score one document — the closure twin both the batch and the
-      * streaming arm run verbatim: per-lang int64 sums over the doc's
+    /** Score one document — the per-document kernel of
+      * [[langIdOn]]: per-lang int64 sums over the doc's
       * gram multiset, argmax with first-lang tie-break. Returns
       * `(predLang, margin)` where margin = best − runner-up (0 when
       * |langs| = 1).
@@ -189,19 +189,26 @@ object LangId {
 
   /** APPLY: score every document map-only, the model broadcast (a few
     * hundred KB — too big to ride every task closure, far too small
-    * for a join). `(doc_id, lang, pred_lang, correct, margin)`.
+    * for a join), for the batch corpus and an ingest stream alike.
+    * `(doc_id, lang, pred_lang, correct, margin)`; docs with no `lang`
+    * column (unlabelled arrivals) still score, with `lang` and
+    * `correct` null.
     */
   def langIdOn(docs: DataFrame, model: LangIdModel): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
-    docs.select(col("doc_id"), col("lang"), col("text"))
+    val lang =
+      if (docs.columns.contains("lang")) col("lang")
+      else lit(null).cast("string").as("lang")
+    docs.select(col("doc_id"), lang, col("text"))
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val m = bc.value
         it.map { case (id, lang, t) =>
           val (pred, margin) = m.score(t)
-          (id, lang, pred, if (pred == lang) 1 else 0, margin)
+          (id, lang, pred, Option(lang).map(l => if (pred == l) 1 else 0),
+            margin)
         }
       }
       .toDF("doc_id", "lang", "pred_lang", "correct", "margin")

@@ -61,9 +61,8 @@ import graft.functions.Fingerprint64
   * Lifecycle: [[persistLm]] writes the count table as the nightly
   * artifact (q97's merge-table pattern one level up); [[loadLm]]
   * compacts it (optionally count-pruned, CCNet-style) for
-  * [[graft.streaming.DocStreams.pplOn]], the map-only ingest-time
-  * scoring twin — bit-equal to the batch broadcast arm by
-  * construction (same [[scoreDoc]]).
+  * [[scoreOn]], the map-only scorer the batch broadcast arm also
+  * runs, so ingest-time scores are the batch scores.
   */
 object Perplexity {
 
@@ -238,9 +237,8 @@ object Perplexity {
   private def pplOf(n: Long, s: Double): java.lang.Double =
     if (n == 0) null else math.pow(10.0, -s / n)
 
-  /** Score one document against a compact LM — THE code path of the
-    * batch broadcast arm and the streaming twin alike, so the two are
-    * bit-equal by construction. */
+  /** Score one document against a compact LM — the per-document
+    * kernel of [[scoreOn]]. */
   private[graft] def scoreDoc(lm: Lm,
       text: String): (Long, Option[Double]) = {
     val toks = toksOf(text)
@@ -292,6 +290,23 @@ object Perplexity {
       limit: Long = BroadcastLmLimit): Lm =
     compactLm(spark.read.parquet(path), minCount, limit)
 
+  /** Score `(doc_id, text)` documents against a compact LM —
+    * `(doc_id, n_scored, ppl)`, map-only with the LM broadcast, no
+    * join, no shuffle, no state. The broadcast arm of
+    * [[perplexityOn]] and the ingest-time scorer over a [[loadLm]]
+    * artifact are this one function.
+    */
+  def scoreOn(docs: DataFrame, lm: Lm): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(lm)
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .map { case (id, text) =>
+        val (n, p) = scoreDoc(bc.value, text)
+        (id, n, p)
+      }.toDF("doc_id", "n_scored", "ppl")
+  }
+
   /** Score every document against an LM trained on `train`:
     * one row per doc, `(doc_id, n_scored, ppl)` (ppl null for empty
     * docs). Dispatches broadcast-map vs join on LM size — both arms
@@ -322,13 +337,7 @@ object Perplexity {
             .foreach { case (gk, c) => m.put(gk, c) }
           Lm(m, nTrain)
         }
-        val bc = spark.sparkContext.broadcast(lm)
-        Tables.spread(docs.select(col("doc_id"), col("text")))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            val (n, p) = scoreDoc(bc.value, text)
-            (id, n, p)
-          }.toDF("doc_id", "n_scored", "ppl")
+        scoreOn(Tables.spread(docs.select(col("doc_id"), col("text"))), lm)
       } else {
         // positional rows are ALL 8-byte columns — the gram text is
         // fingerprinted in the flatMap and never enters the exchange

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,8 +27,9 @@ import graft.Tables
   *    training sample; per-dimension gradient sums go through
   *    [[Similarity.trainSum]] (scale-dispatched int64 fixed-point /
   *    decimal — exact, associative), so trained weights are
-  *    bit-identical at any parallelism. The sigmoid is Math.exp —
-  *    one pure JVM call, identical on every executor.
+  *    bit-identical at any parallelism. The sigmoid is
+  *    StrictMath.exp — one bit-defined JVM call, identical on every
+  *    executor.
   *  - **Keep rule**: the paper's Pareto lottery made deterministic
   *    (the q106 md5-uniform trick): keep iff
   *    `u < (2 − score)^(−α)` with `u = md5(text)[0:6] / 2²⁴` —
@@ -36,19 +37,19 @@ import graft.Tables
   *    (2−s)^(−α)`, but reproducible under retries, repartitioning,
   *    and re-runs. Evaluated as `u · (2−s)⁹ < 1` with the power
   *    built by squaring (`((p²)²)² · p`) — plain IEEE multiplies in
-  *    a fixed order, so the Catalyst arm and the closure twin agree
-  *    bit-for-bit (`Math.pow`'s JIT intrinsic would not).
+  *    a fixed order, so every run flips the same verdicts
+  *    (`Math.pow`'s JIT intrinsic would not).
   *  - **Lifecycle**: [[trainQc]] → [[persistQc]] → [[loadQc]] →
-  *    [[qcOn]] / [[graft.streaming.DocStreams.qcOn]] — the
-  *    persistLm → loadLm → pplOn shape: train nightly at corpus
-  *    scale, filter at ingest with zero scan-back.
+  *    [[qcOn]] — the persistLm → loadLm → scoreOn shape: train
+  *    nightly at corpus scale, filter at ingest with zero scan-back,
+  *    the batch apply and the ingest apply being one function.
   *
   * Scale shape: training cost is iters × one scan of a SAMPLE capped
   * at [[TrainSampleCap]] by deterministic content-hash selection (a
   * quality classifier needs ~10⁵ docs, not 100 TB); the weight vector
   * is a KB artifact; APPLY is map-only — features, dot, sigmoid and
-  * the keep rule all evaluate per row in whole-stage codegen with the
-  * weights inlined as literals, no join, no shuffle.
+  * the keep rule all evaluate per row in one typed map with the
+  * weights in its closure, no join, no shuffle.
   */
 object QualityFilter {
 
@@ -82,10 +83,9 @@ object QualityFilter {
     */
   val ParetoAlpha = 9.0
 
-  /** The deterministic Pareto lottery, closure side: keep iff
-    * `u < (2−s)^(−9)` ⟺ `u · (2−s)⁹ < 1`, the power by squaring in a
-    * FIXED multiply order — [[keepCol]] mirrors this op-for-op, so
-    * both arms flip the same verdicts at the boundary.
+  /** The deterministic Pareto lottery: keep iff `u < (2−s)^(−9)` ⟺
+    * `u · (2−s)⁹ < 1`, the power by squaring in a FIXED multiply
+    * order, so the verdict at the boundary is reproducible.
     */
   def keepRule(s: Double, u: Double): Boolean = {
     val p = 2.0 - s
@@ -131,10 +131,8 @@ object QualityFilter {
 
   /** The trained artifact: weights per hash bucket + intercept. */
   final case class QcModel(w: Array[Double], b: Double) {
-    /** Closure scorer — the streaming/driver twin of [[scoreCol]]:
-      * index-order dot (the `dot_d` expression's exact summation
-      * order) then one Math.exp — bit-equal the Catalyst arm by
-      * construction.
+    /** Score one document — the per-document kernel of [[qcOn]]:
+      * index-order dot, then one StrictMath.exp.
       */
     def score(text: String): Double = {
       val x = featurize(text)
@@ -143,8 +141,7 @@ object QualityFilter {
       while (i < x.length) { z += w(i) * x(i); i += 1 }
       z += b
       // StrictMath, not Math: Math.exp's JIT intrinsic drifts ULPs
-      // from the interpreted path, while StrictMath is bit-defined —
-      // the sigmoid_d expression makes the same call (see SigmoidD)
+      // from the interpreted path, while StrictMath is bit-defined
       1.0 / (1.0 + java.lang.StrictMath.exp(-z))
     }
   }
@@ -259,51 +256,36 @@ object QualityFilter {
     QcModel((0 until QcDims).map(rows(_)).toArray, rows(-1))
   }
 
-  /** Catalyst scoring column over a feature column `x` — weights
-    * inlined as literals (KB plan), whole-stage codegen, the exact
-    * expression the closure twin mirrors.
-    */
-  private def scoreCol(model: QcModel, x: Column): Column =
-    call_function("sigmoid_d",
-      call_function("dot_d", array(model.w.map(lit(_)): _*), x)
-        + lit(model.b))
-
-  /** Catalyst side of [[keepRule]] — the same squaring chain as the
-    * closure, multiply-for-multiply.
-    */
-  private def keepCol(score: Column, u: Column): Column = {
-    val p = lit(2.0) - score
-    val p2 = p * p; val p4 = p2 * p2; val p8 = p4 * p4
-    u * p8 * p < lit(1.0)
-  }
-
-  /** APPLY: score + keep verdict for every document — map-only, the
-    * model rides the plan as literals. `(doc_id, score, kept)`;
-    * `kept` is the deterministic Pareto lottery (see the object doc).
+  /** APPLY: score + keep verdict for every document, for the batch
+    * corpus and an ingest stream alike — one typed map, the KB weight
+    * vector riding the closure; no join, no shuffle, no state.
+    * `(doc_id, score, kept)`; `kept` is the deterministic Pareto
+    * lottery (see the object doc), its `u` the first three md5 bytes
+    * of the text over 2²⁴.
     */
   def qcOn(docs: DataFrame, model: QcModel): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
-    val feats = docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, t) => (id, t, featurize(t)) }
-      .toDF("doc_id", "text", "x")
-    feats
-      .withColumn("score", scoreCol(model, col("x")))
-      .withColumn("u",
-        conv(substring(md5(col("text")), 1, 6), 16, 10).cast("long")
-          .cast("double") / lit((1L << 24).toDouble))
-      .withColumn("kept", keepCol(col("score"), col("u")))
-      .select(col("doc_id"), col("score"), col("kept"))
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        it.map { case (id, text) =>
+          val s = model.score(text)
+          val d = md.digest(text.getBytes("UTF-8"))
+          val u = ((d(0) & 0xff) << 16 | (d(1) & 0xff) << 8 | (d(2) & 0xff))
+            .toDouble / (1 << 24).toDouble
+          (id, s, keepRule(s, u))
+        }
+      }
+      .toDF("doc_id", "score", "kept")
   }
 
   /** q111: the self-contained train + apply pipeline per the query
     * contract — classifier trained against [[RefSource]] on this
     * corpus, every document scored and verdicted.
     * Training is a non-SQL artifact ⇒ rows-only; QualityFilterSpec
-    * pins separation, determinism, the keep rule, and the
-    * batch/stream bit-equality.
+    * pins separation, determinism, the keep rule, and the stream
+    * run of [[qcOn]].
     */
   def q111(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir, "documents")

@@ -362,11 +362,12 @@ object Rag {
     touched
   }
 
-  /** The UN-truncated batch chunk scorer — every (chunk, query)
-    * cosine, no cell pruning, no top-k: the reference relation the
-    * streaming twin ([[graft.streaming.DocStreams.ragOn]]) is
-    * spec-asserted bit-equal against, exactly as
-    * [[Search.bm25On]](topK = MaxValue) anchors stream_search.
+  /** The UN-truncated chunk scorer — every (chunk, query) cosine,
+    * no cell pruning, no top-k: `(doc_id, chunk_id, query_id,
+    * cosine)`. Chunking, embedding and the broadcast cross join with
+    * the query vectors are stateless, so the same function tags an
+    * ingest stream of documents with zero state; rank selection
+    * belongs to whoever consumes the scores.
     */
   def scoreAllChunks(docs: DataFrame,
       queries: Seq[(Long, String)] = RagQueries): DataFrame = {

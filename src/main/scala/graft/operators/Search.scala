@@ -947,7 +947,7 @@ object Search {
     * (round-8 verdict: [[bmStatsOf]] re-scanned the corpus for
     * numbers `buildBmIndex` had already persisted, leaving two
     * sources that could drift; the LM lifecycle got this right with
-    * persistLm → loadLm → pplOn, and this is its search twin:
+    * persistLm → loadLm → scoreOn, and this is its search twin:
     * buildBmIndex → bmStatsFromIndex → [[graft.streaming.DocStreams
     * .searchOn]]). N and total length come from the `_stats` row
     * ([[readBmStatsRow]], crash-healing); document frequencies are

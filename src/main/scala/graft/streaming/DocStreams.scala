@@ -4,11 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.operators.{Bpe, Curation, Dedup, Perplexity, Rag, Search}
+import graft.operators.{Curation, Dedup, Search}
 
-/** Structured Streaming twins of the document-curation operators — the
-  * shapes an ingest pipeline runs on documents as they ARRIVE, against
-  * artifacts a nightly batch job published from the standing corpus.
+/** Ingest-time document screens that read a nightly artifact — a
+  * Bloom sketch of the standing corpus or its BM25 index statistics —
+  * instead of the corpus itself: the shapes an ingest pipeline runs
+  * on documents as they ARRIVE. The trained-model applies (BPE
+  * tokenize, perplexity, RAG tagging, quality filter, lang-id) need
+  * no stream form of their own: [[graft.operators.Bpe.tokenizeOn]],
+  * [[graft.operators.Perplexity.scoreOn]],
+  * [[graft.operators.Rag.scoreAllChunks]],
+  * [[graft.operators.QualityFilter.qcOn]] and
+  * [[graft.operators.LangId.langIdOn]] are stateless and run on a
+  * [[source]] stream unchanged.
   */
 object DocStreams {
 
@@ -21,7 +29,7 @@ object DocStreams {
     spark.readStream.schema(schema).parquet(glob)
   }
 
-  /** Streaming duplicate-span coverage — the LIVE twin of
+  /** Streaming duplicate-span coverage — the ingest-time form of
     * [[Curation.q72]] (§7b): each arriving document is scored for the
     * fraction of its word 5-gram positions already present in the
     * STANDING corpus, against a broadcast Bloom sketch of the corpus
@@ -58,10 +66,10 @@ object DocStreams {
       .withColumn("flagged", col("dup_frac") > flagAt)
   }
 
-  /** Streaming exact-substring CUT SPANS — the LIVE twin of
-    * [[Curation.q100]] / [[Curation.cutSpansOn]]: each arriving
-    * document emits its duplicated-token intervals [start_pos,
-    * end_pos] (positions, not just a coverage score) against the
+  /** Streaming exact-substring CUT SPANS — the Bloom-screened
+    * counterpart of [[Curation.q100]] / [[Curation.cutSpansOn]]: each
+    * arriving document emits its duplicated-token intervals
+    * [start_pos, end_pos] (positions, not just a coverage score) against the
     * STANDING corpus's gram Bloom ([[Curation.corpusGramBloom]], the
     * same nightly artifact [[dupSpanOn]] uses) — the ingest-time form
     * of the Lee '21 cut step: decide what to strip from a doc BEFORE
@@ -111,7 +119,7 @@ object DocStreams {
       .toDF("doc_id", "start_pos", "end_pos", "span_tokens")
   }
 
-  /** Streaming MinHash near-dup screen — the LIVE twin of
+  /** Streaming MinHash near-dup screen — the ingest-time form of
     * [[graft.operators.Dedup.q32]] (ingest-time continuation of the
     * §7b streaming set): each arriving document's LSH band keys are
     * checked against a broadcast Bloom sketch of the STANDING corpus's
@@ -150,36 +158,7 @@ object DocStreams {
       .toDF("doc_id", "n_bands", "bands_hit", "near_dup")
   }
 
-  /** Streaming perplexity scoring — the LIVE twin of
-    * [[graft.operators.Perplexity.q102]]'s scoring stage: arriving
-    * documents score against a compact LM the nightly batch job
-    * published ([[Perplexity.persistLm]] → [[Perplexity.loadLm]],
-    * optionally count-pruned, CCNet's ship-the-pruned-KenLM shape).
-    * This closes the LM lifecycle exactly like the BPE family's
-    * (q97 → merges artifact → [[tokenizeOn]]): train nightly at
-    * corpus scale, score at ingest with zero scan-back.
-    *
-    * Scale shape: MAP-ONLY — the [[Perplexity.LongLongMap]]-backed
-    * LM (~34 B/row) rides the closure, no join, no shuffle, NO
-    * state; per-doc work is linear in tokens × order. Per-row
-    * outputs are bit-equal to the batch broadcast arm on the same
-    * doc by construction — both call [[Perplexity.scoreDoc]] — and
-    * spec-asserted against a batch run.
-    */
-  def pplOn(spark: SparkSession, src: DataFrame,
-      lm: Perplexity.Lm): DataFrame = {
-    import spark.implicits._
-    src.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val (n, p) = Perplexity.scoreDoc(lm, text)
-          (id, n, p)
-        }
-      }
-      .toDF("doc_id", "n_scored", "ppl")
-  }
-
-  /** Streaming BM25 relevance tagging — the LIVE twin of
+  /** Streaming BM25 relevance tagging — the ingest-time form of
     * [[graft.operators.Search.q105]]'s scoring stage: arriving
     * documents are scored against the STANDING query set using the
     * KB-sized index-statistics artifact derived from the nightly
@@ -187,7 +166,7 @@ object DocStreams {
     * length from the index's `_stats` row, query-term document
     * frequencies recounted from the pruned buckets — ONE source of
     * truth with [[Search.searchBmIndex]], the persistLm → loadLm →
-    * pplOn lifecycle shape; [[Search.bmStatsOf]] remains the
+    * scoreOn lifecycle shape; [[Search.bmStatsOf]] remains the
     * bootstrap for a corpus with no index yet). The production shape is
     * ingest-time relevance tagging / contamination screening: every
     * new doc is tagged with how strongly it matches each standing
@@ -213,147 +192,5 @@ object DocStreams {
           .map { case (qid, s) => (id, qid, s / 1e9) }
       }
       .toDF("doc_id", "query_id", "score")
-  }
-
-  /** Streaming DENSE relevance tagging — the ingest twin of the RAG
-    * retrieval stack ([[Rag.q109]]'s scoring stage), completing the
-    * ingest-twin family on the dense side the way [[searchOn]] does
-    * for BM25: each arriving document is CHUNKED (the same
-    * [[Curation.chunksOn]] Catalyst stage as batch — stateless
-    * generators work unchanged on a stream), feature-hash EMBEDDED,
-    * and cosine-scored against the standing query set. Emits one row
-    * per (chunk, query): `(doc_id, chunk_id, query_id, cosine)`.
-    *
-    * Scale shape: MAP-ONLY — queries embed once on the driver and
-    * ride the closure (no join, no shuffle, NO state); per-chunk work
-    * is dims × queries. Per-row cosines are bit-equal the batch
-    * [[Rag.scoreAllChunks]] relation by construction: same
-    * [[Rag.embedText]], and the closure's index-order dot is the
-    * `dot_d` expression's exact summation order (the `scoreDocBm25`
-    * precedent) — spec-asserted against the batch run. Rank/top-k
-    * selection belongs to the consumer, as with [[searchOn]].
-    */
-  def ragOn(spark: SparkSession, src: DataFrame,
-      queries: Seq[(Long, String)] = Rag.RagQueries): DataFrame = {
-    import spark.implicits._
-    val qs = queries.map { case (qid, t) =>
-      val qv = Rag.embedText(t)
-      (qid, qv, Rag.normOf(qv))
-    }
-    Curation.chunksOn(src.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), col("chunk_id"), col("text"))
-      .as[(Long, Long, String)]
-      .flatMap { case (d, c, t) =>
-        val v = Rag.embedText(t)
-        val nrm = Rag.normOf(v)
-        qs.map { case (qid, qv, qnrm) =>
-          var s = 0.0
-          var i = 0
-          while (i < v.length) { s += qv(i) * v(i); i += 1 }
-          (d, c, qid, s / (nrm * qnrm))
-        }
-      }
-      .toDF("doc_id", "chunk_id", "query_id", "cosine")
-  }
-
-  /** Streaming quality filtering — the LIVE twin of
-    * [[graft.operators.QualityFilter.q111]]'s apply stage: arriving
-    * documents are scored by a classifier the nightly batch job
-    * trained and published ([[QualityFilter.persistQc]] →
-    * [[QualityFilter.loadQc]]), and verdicted with the SAME
-    * deterministic Pareto keep rule. This closes the quality-filter
-    * lifecycle exactly like the LM's (persistLm → loadLm → pplOn):
-    * train nightly at corpus scale, filter at ingest with zero
-    * scan-back.
-    *
-    * Scale shape: MAP-ONLY — the KB weight vector rides the closure
-    * (no join, no shuffle, NO state); per-doc work is linear in
-    * tokens. Per-row scores are bit-equal the batch Catalyst arm by
-    * construction ([[QualityFilter.QcModel.score]] is its closure
-    * twin: index-order dot, one Math.exp) and the keep rule hashes
-    * the same md5 prefix — spec-asserted against a batch run.
-    */
-  def qcOn(spark: SparkSession, src: DataFrame,
-      model: graft.operators.QualityFilter.QcModel): DataFrame = {
-    import spark.implicits._
-    src.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, text) =>
-          val s = model.score(text)
-          md.reset()
-          val hex = md.digest(text.getBytes("UTF-8"))
-            .map(b => f"$b%02x").mkString
-          val u = java.lang.Long.parseLong(hex.take(6), 16).toDouble /
-            (1L << 24).toDouble
-          (id, s, graft.operators.QualityFilter.keepRule(s, u))
-        }
-      }
-      .toDF("doc_id", "score", "kept")
-  }
-
-  /** Streaming language ID — the LIVE twin of
-    * [[graft.operators.LangId.q134]]'s apply stage: arriving documents
-    * are scored with the char-n-gram Naive Bayes model the nightly
-    * batch job trained (the qc/ppl lifecycle shape). Map-only, the
-    * model broadcast, NO state; per-row predictions are bit-equal the
-    * batch arm by construction (same [[LangId.LangIdModel.score]]
-    * closure, pure int64 sums) — spec-asserted against a batch run.
-    */
-  def langIdOn(spark: SparkSession, src: DataFrame,
-      model: graft.operators.LangId.LangIdModel): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    src.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val m = bc.value
-        it.map { case (id, t) =>
-          val (pred, margin) = m.score(t)
-          (id, pred, margin)
-        }
-      }
-      .toDF("doc_id", "pred_lang", "margin")
-  }
-
-  /** Streaming BPE tokenization — the LIVE twin of
-    * [[graft.operators.Bpe.q98]]: arriving documents are encoded with
-    * a merge table the nightly batch job trained ([[Bpe.trainCached]]
-    * / q97, the published artifact), emitting the same per-doc token
-    * stats the batch APPLY step computes. This closes the tokenizer
-    * lifecycle: train nightly at corpus scale, apply at ingest with
-    * zero scan-back.
-    *
-    * Scale shape: identical to batch q98 — the KB-sized merge table
-    * rides the closure (no join, no shuffle, NO state), encode is
-    * map-only with a per-partition word→tokens memo (Zipfian hit
-    * rate). Per-row outputs are bit-equal to batch q98 on the same
-    * doc by construction (same `encodeWord`, same stats arithmetic) —
-    * spec-asserted against the batch run.
-    */
-  def tokenizeOn(spark: SparkSession, src: DataFrame,
-      merges: Seq[(Long, String, String, String, Long)]): DataFrame = {
-    import spark.implicits._
-    src.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val memo = new java.util.HashMap[String, Array[String]]()
-        it.map { case (id, text) =>
-          val words = text.trim.split("\\s+").filter(_.nonEmpty)
-          var nTok = 0L
-          val distinct = new java.util.HashSet[String]()
-          words.foreach { w =>
-            var toks = memo.get(w)
-            if (toks == null) {
-              toks = Bpe.encodeWord(w, merges).toArray
-              memo.put(w, toks)
-            }
-            nTok += toks.length
-            toks.foreach(distinct.add)
-          }
-          (id, words.length.toLong, nTok, distinct.size.toLong,
-            if (words.isEmpty) 0.0 else nTok.toDouble / words.length)
-        }
-      }
-      .toDF("doc_id", "n_words", "n_tokens", "n_distinct_tokens",
-        "tokens_per_word")
   }
 }

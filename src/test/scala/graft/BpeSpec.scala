@@ -95,15 +95,20 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.localTrain(symSeqs, 1000) === table.take(1000))
     // head bit-equal to the O(rounds×vocab) from-scratch reference
     assert(Bpe.referenceTrain(vocab, 200) === table.take(200))
-    // the 32k-entry table round-trips through the (batch-shaped)
-    // streaming tokenizer: losslessness and count consistency on
-    // docs drawn from the trained vocabulary
+    // the 32k-entry table round-trips through the tokenizer over a
+    // document stream: losslessness and count consistency on docs
+    // drawn from the trained vocabulary
     import spark.implicits._
     val sample = vocab.keys.toSeq.sorted.take(60)
-    val docs = sample.grouped(12).zipWithIndex
+    val streamDir = java.nio.file.Files.createTempDirectory("graft_bpe32k").toString
+    sample.grouped(12).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
       .toSeq.toDF("doc_id", "text")
-    val toked = graft.streaming.DocStreams.tokenizeOn(spark, docs, table)
+      .write.parquet(s"$streamDir/documents.parquet")
+    val src = graft.streaming.DocStreams.source(spark,
+      s"$streamDir/documents.parquet", s"$streamDir/documents*.parquet")
+    drainStateless(Bpe.tokenizeOn(src, table), "tok32k_out", "tokenize")
+    val toked = spark.sql("SELECT doc_id, n_words, n_tokens FROM tok32k_out")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2))).toMap
     sample.grouped(12).zipWithIndex.foreach { case (ws, i) =>

@@ -104,6 +104,16 @@ class LangIdSpec extends SparkSpec {
     Seq(1L, 2L, 3L).foreach(id => assert(got(id)._1 === "aa"))
     Seq(4L, 5L).foreach(id => assert(got(id)._1 === "zz"))
     (1L to 5L).foreach(id => assert(got(id)._3 > 0L))
+    // unlabelled docs (no `lang` column) score the same, with `lang`
+    // and `correct` null
+    val unlabelled = LangId.langIdOn(
+        Tables(spark, tmp, "documents").drop("lang"), model)
+      .collect().map(r => r.getLong(0) ->
+        (r.isNullAt(1), r.getString(2), r.isNullAt(3), r.getLong(4))).toMap
+    assert(unlabelled.keySet === got.keySet)
+    got.foreach { case (id, (pred, _, margin)) =>
+      assert(unlabelled(id) === ((true, pred, true, margin)), s"doc $id unlabelled")
+    }
   }
 
   test("retrain is bit-identical; persist/load round-trips the exact model; predictions unchanged") {
@@ -139,15 +149,7 @@ class LangIdSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (r.getString(2), r.getLong(4))).toMap
     val src = graft.streaming.DocStreams.source(spark,
       s"$sf/documents.parquet", s"$sf/documents*.parquet")
-    val q = graft.streaming.DocStreams.langIdOn(spark, src, model)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lid_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "lang-id stream must keep no state")
-    } finally q.stop()
+    drainStateless(LangId.langIdOn(src, model), "lid_out", "lang-id")
     val live = spark.sql("SELECT doc_id, pred_lang, margin FROM lid_out")
       .collect().map(r => r.getLong(0) ->
         (r.getString(1), r.getLong(2))).toMap

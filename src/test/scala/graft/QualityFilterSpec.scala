@@ -55,14 +55,25 @@ class QualityFilterSpec extends SparkSpec {
   }
 
   test("closure scorer is bit-equal the Catalyst arm on the real corpus") {
+    // the reference is the Catalyst arm q111 scored with before its
+    // apply became one typed map: `dot_d` over the weights inlined as
+    // literals, plus the intercept, then a StrictMath sigmoid
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, sf, "documents")
     val model = QualityFilter.trainQc(docs)
     val batch = QualityFilter.qcOn(docs, model).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
-    val texts = docs.select(col("doc_id"), col("text")).collect()
-      .map(r => r.getLong(0) -> r.getString(1))
-    texts.foreach { case (id, t) =>
-      assert(model.score(t) === batch(id)._1, s"score mismatch doc $id")
+    val catalyst = docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .map { case (id, t) => (id, QualityFilter.featurize(t)) }.toDF("doc_id", "x")
+      .select(col("doc_id"),
+        call_function("dot_d", array(model.w.map(lit(_)): _*), col("x"))
+          + lit(model.b))
+      .collect().map(r =>
+        r.getLong(0) -> 1.0 / (1.0 + java.lang.StrictMath.exp(-r.getDouble(1))))
+    assert(catalyst.map(_._1).toSet === batch.keySet)
+    catalyst.foreach { case (id, s) =>
+      assert(s === batch(id)._1, s"score mismatch doc $id")
     }
   }
 
@@ -116,7 +127,10 @@ class QualityFilterSpec extends SparkSpec {
     val loaded = QualityFilter.loadQc(spark, path)
     val batch = QualityFilter.qcOn(docs, model).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSet
-    val stream = DocStreams.qcOn(spark, docs, loaded).collect()
+    val src = DocStreams.source(spark,
+      s"$sf/documents.parquet", s"$sf/documents*.parquet")
+    drainStateless(QualityFilter.qcOn(src, loaded), "qc2_out", "quality-filter")
+    val stream = spark.sql("SELECT doc_id, score, kept FROM qc2_out").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSet
     assert(stream === batch)
   }

@@ -52,15 +52,8 @@ class Sf1SoakSpec extends SparkSpec {
     val src = DocStreams.source(spark,
       s"$streamDir/documents.parquet", s"$streamDir/documents*.parquet")
     val s0 = System.nanoTime()
-    val q = DocStreams.nearDupOn(spark, src, bloom)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sf1_ndup_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "near-dup stream must keep no state")
-    } finally q.stop()
+    drainStateless(DocStreams.nearDupOn(spark, src, bloom),
+      "sf1_ndup_out", "near-dup")
     val soakSecs = (System.nanoTime() - s0) / 1e9
     val rows = spark.sql(
       "SELECT doc_id, n_bands, bands_hit, near_dup FROM sf1_ndup_out")
@@ -222,15 +215,7 @@ class Sf1SoakSpec extends SparkSpec {
     val src = DocStreams.source(spark,
       s"$streamDir/documents.parquet", s"$streamDir/documents*.parquet")
     val s0 = System.nanoTime()
-    val q = DocStreams.tokenizeOn(spark, src, merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sf1_tok_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "tokenize stream must keep no state")
-    } finally q.stop()
+    drainStateless(Bpe.tokenizeOn(src, merges), "sf1_tok_out", "tokenize")
     val soakSecs = (System.nanoTime() - s0) / 1e9
     val live = spark.sql(
       "SELECT doc_id, n_words, n_tokens FROM sf1_tok_out").collect()

@@ -214,4 +214,36 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(news === Seq("Graph.scala"), s"new LocalGraph( in ${news.mkString(", ")}")
   }
+
+  test("each graft SQL function name is spelled at one site: the GraftFunctions table") {
+    // the session extension and register() both build from the one
+    // table; a name spelled anywhere else is a second list that can
+    // drift from it (calling a function by name is a use, not a list)
+    val main = allCode.filter(_._1.toString.contains("src/main"))
+    val names = graft.functions.GraftFunctions.all.map(_._1)
+    assert(names.contains("dot_d"), s"GraftFunctions names: $names")
+    for (n <- names) {
+      val literal = ("(?<!call_function\\()\"" + java.util.regex.Pattern.quote(n) + "\"").r
+      val sites = main.flatMap { case (p, text) =>
+        literal.findAllMatchIn(text).map(_ => p.getFileName.toString)
+      }
+      assert(sites === Seq("GraftFunctions.scala"), s""""$n" spelled in ${sites.mkString(", ")}""")
+    }
+    for (hook <- Seq("createOrReplaceTempFunction(", "injectFunction(")) {
+      val n = main.map(_._2.split(java.util.regex.Pattern.quote(hook), -1).length - 1).sum
+      assert(n === 1, s"$hook called at $n sites")
+    }
+  }
+
+  test("streaming/DocStreams.scala holds no copy of a batch operator's per-document kernel") {
+    // the trained-model applies (tokenize, perplexity, RAG, quality
+    // filter, lang-id) run on a stream as their batch functions; a
+    // reference to one of their kernels here is a copied apply
+    val text = code(java.nio.file.Paths.get("src/main/scala/graft/streaming/DocStreams.scala"))
+    assert(text.contains("def dupSpanOn"), "DocStreams.scala not found")
+    val kernels = Seq("encodeWord", "scoreDoc", "embedText", "featurize", "keepRule",
+      "LangIdModel")
+    val found = kernels.filter(k => s"\\b$k\\b".r.findFirstIn(text).isDefined)
+    assert(found.isEmpty, s"DocStreams.scala references ${found.mkString(", ")}")
+  }
 }

@@ -150,15 +150,8 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(s"$streamDir/documents.parquet")
     val src = graft.streaming.DocStreams.source(spark,
       s"$streamDir/documents.parquet", s"$streamDir/documents*.parquet")
-    val q = graft.streaming.DocStreams.dupSpanOn(spark, src, bloom)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dspan_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "dup-span stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.streaming.DocStreams.dupSpanOn(spark, src, bloom),
+      "dspan_out", "dup-span")
     val got = spark.sql(
       "SELECT doc_id, n_grams, dup_grams, dup_frac, flagged FROM dspan_out")
       .collect().map(r => r.getLong(0) ->
@@ -190,15 +183,8 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(s"$streamDir/documents.parquet")
     val src = graft.streaming.DocStreams.source(spark,
       s"$streamDir/documents.parquet", s"$streamDir/documents*.parquet")
-    val q = graft.streaming.DocStreams.cutSpanOn(spark, src, bloom)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("cut_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "cut-span stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.streaming.DocStreams.cutSpanOn(spark, src, bloom),
+      "cut_out", "cut-span")
     val got = spark.sql(
       "SELECT doc_id, start_pos, end_pos, span_tokens FROM cut_out")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -230,15 +216,8 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(s"$streamDir/documents.parquet")
     val src = graft.streaming.DocStreams.source(spark,
       s"$streamDir/documents.parquet", s"$streamDir/documents*.parquet")
-    val q = graft.streaming.DocStreams.nearDupOn(spark, src, bloom)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ndup_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "near-dup stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.streaming.DocStreams.nearDupOn(spark, src, bloom),
+      "ndup_out", "near-dup")
     val got = spark.sql(
       "SELECT doc_id, n_bands, bands_hit, near_dup FROM ndup_out")
       .collect().map(r => r.getLong(0) ->
@@ -256,15 +235,8 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val src = graft.streaming.DocStreams.source(spark,
       s"$sf/documents.parquet", s"$sf/documents*.parquet")
-    val q = graft.streaming.DocStreams.tokenizeOn(spark, src, merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("tok_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "tokenize stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.operators.Bpe.tokenizeOn(src, merges),
+      "tok_out", "tokenize")
     val live = spark.sql(
       "SELECT doc_id, n_words, n_tokens, n_distinct_tokens, " +
         "tokens_per_word FROM tok_out")
@@ -283,7 +255,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     // nightly artifact: the PERSISTED index is the single source of
     // truth — stats derive from it (round-9; the persistLm → loadLm →
-    // pplOn lifecycle shape), not from a second corpus scan
+    // scoreOn lifecycle shape), not from a second corpus scan
     val idxDir = java.nio.file.Files
       .createTempDirectory("graft_bmidx_stream").toString + "/bm"
     Search.buildBmIndex(spark, sf, idxDir)
@@ -298,15 +270,8 @@ class StreamingSpec extends SparkSpec {
       .toMap
     val src = graft.streaming.DocStreams.source(spark,
       s"$sf/documents.parquet", s"$sf/documents*.parquet")
-    val q = graft.streaming.DocStreams.searchOn(spark, src, stats)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("search_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "search stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.streaming.DocStreams.searchOn(spark, src, stats),
+      "search_out", "search")
     val live = spark.sql("SELECT query_id, doc_id, score FROM search_out")
       .collect().map(r => (r.getLong(1), r.getLong(0)) -> r.getDouble(2))
       .toMap
@@ -328,15 +293,8 @@ class StreamingSpec extends SparkSpec {
       .toMap
     val src = graft.streaming.DocStreams.source(spark,
       s"$sf/documents.parquet", s"$sf/documents*.parquet")
-    val q = graft.streaming.DocStreams.ragOn(spark, src)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("rag_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "dense tagging stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.operators.Rag.scoreAllChunks(src),
+      "rag_out", "dense tagging")
     val live = spark.sql(
       "SELECT doc_id, chunk_id, query_id, cosine FROM rag_out")
       .collect()
@@ -365,19 +323,13 @@ class StreamingSpec extends SparkSpec {
         (r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double]))).toMap
     val src = graft.streaming.DocStreams.source(spark,
       s"$sf/documents.parquet", s"$sf/documents*.parquet")
-    val q = graft.streaming.DocStreams.pplOn(spark, src, lm)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ppl_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "perplexity stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.operators.Perplexity.scoreOn(src, lm),
+      "ppl_out", "perplexity")
     val live = spark.sql("SELECT doc_id, n_scored, ppl FROM ppl_out")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double]))).toMap
-    // bit-equal (=== on doubles): same scoreDoc, same fingerprint keys
+    // bit-equal (=== on doubles): the stream runs the broadcast
+    // arm's own scoreOn
     assert(live.keySet === batch.keySet)
     live.foreach { case (id, v) =>
       assert(v === batch(id), s"doc $id diverges from batch scoring")
@@ -399,21 +351,13 @@ class StreamingSpec extends SparkSpec {
         r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
     val src = graft.streaming.DocStreams.source(spark,
       s"$sf/documents.parquet", s"$sf/documents*.parquet")
-    val q = graft.streaming.DocStreams.qcOn(spark, src, model)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("qc_out").start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty ||
-        q.lastProgress.stateOperators.forall(_.numRowsTotal == 0L),
-        "quality-filter stream must keep no state")
-    } finally q.stop()
+    drainStateless(graft.operators.QualityFilter.qcOn(src, model),
+      "qc_out", "quality-filter")
     val live = spark.sql("SELECT doc_id, score, kept FROM qc_out")
       .collect().map(r =>
         r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
     assert(live.keySet === batch.keySet)
-    // bit-equal (=== on doubles): shared featurize/StrictMath sigmoid
-    // on both arms, shared keepRule
+    // bit-equal (=== on doubles): the stream runs the batch qcOn
     live.foreach { case (id, v) =>
       assert(v === batch(id), s"doc $id diverges from batch scoring")
     }
