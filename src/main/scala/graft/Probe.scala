@@ -86,7 +86,10 @@ object Probe {
       s"pairsEmitted=${capped.map(d => d * (d - 1) / 2).sum}")
   }
 
-  /** q76 phases: variant emission vs pair emission vs rejoin+sort. */
+  /** q76 phases: variant emission vs pair emission vs rejoin+sort,
+    * then the whole query at the default driver-arm budget and at
+    * budget 0, which runs the distributed arm at any size.
+    */
   private def fuzzy(spark: SparkSession, dir: String): Unit = {
     import graft.operators.Dedup
     warmup(spark, Seq("q76_fuzzy_match2"))
@@ -96,6 +99,8 @@ object Probe {
     timed(spark, "fuzzy/fastss-pairs-noop")(noop(pairsRel))
     Console.err.println("  pairs = " + pairsRel.count())
     timed(spark, "fuzzy/q76-full")(Dedup.q76(spark, dir).count(): Unit)
+    timed(spark, "fuzzy/q76-full-distributed")(
+      Dedup.q76(spark, dir, localMaxBytes = 0L).count(): Unit)
   }
 
   /** [[graft.operators.Dedup.fastssPairs]]'s stages timed one by one:

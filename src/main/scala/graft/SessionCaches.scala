@@ -8,9 +8,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Registry for session-scoped derived-relation caches (`tri`,
-  * `wsym`, `ccLabels`, `verdicts`, `tiers-N`), the one pin rule their
-  * relations are materialized by, and the parquet temps that rule
-  * spills to.
+  * `wsym`, `ccLabels`, `verdicts`, `tiers-N`) and memos (Tables'
+  * schemas), the one pin rule their relations are materialized by,
+  * and the parquet temps that rule spills to.
   *
   * Lifetimes: keys are a per-session UUID held weakly by identity —
   * unique for the session's lifetime, unlike `identityHashCode`,
@@ -43,14 +43,16 @@ object SessionCaches {
     * build leaves the lazy uninitialized, so the next caller retries
     * it — the same re-attempt semantics computeIfAbsent had.
     */
-  private final class Holder(kind: String, dir: String,
+  private final class Holder(kind: String, dir: String, charged: Boolean,
       build: () => AnyRef) {
     lazy val value: AnyRef = {
       val t0 = System.nanoTime()
       val v = build()
       val secs = (System.nanoTime() - t0) / 1e9
-      buildSecs.merge(dir, secs, (a, b) => a + b)
-      buildSecsByKind.merge((dir, kind), secs, (a, b) => a + b)
+      if (charged) {
+        buildSecs.merge(dir, secs, (a, b) => a + b)
+        buildSecsByKind.merge((dir, kind), secs, (a, b) => a + b)
+      }
       v
     }
   }
@@ -99,10 +101,22 @@ object SessionCaches {
     * getOrBuild for another key.
     */
   def getOrBuild[T <: AnyRef](spark: SparkSession, kind: String,
-      dir: String)(build: => T): T = {
+      dir: String)(build: => T): T =
+    claim(spark, kind, dir, charged = true)(build)
+
+  /** [[getOrBuild]] for a value too small to charge the bench ledger
+    * with: a memo (Tables' schemas) that lives and is evicted like
+    * every other entry.
+    */
+  private[graft] def memo[T <: AnyRef](spark: SparkSession, kind: String,
+      key: String)(build: => T): T =
+    claim(spark, kind, key, charged = false)(build)
+
+  private def claim[T <: AnyRef](spark: SparkSession, kind: String,
+      dir: String, charged: Boolean)(build: => T): T = {
     ensureHooks(spark.sparkContext)
     val key = s"${sessionId(spark)} $kind $dir"
-    val fresh = Entry(new Holder(kind, dir, () => build), spark.sparkContext)
+    val fresh = Entry(new Holder(kind, dir, charged, () => build), spark.sparkContext)
     val claimed = entries.putIfAbsent(key, fresh) match {
       case null => fresh
       case prior => prior
@@ -200,6 +214,12 @@ object SessionCaches {
         it.remove()
       }
     }
+  }
+
+  /** How many entries `sc` owns — for specs. */
+  private[graft] def entriesOwnedBy(sc: SparkContext): Int = {
+    import scala.jdk.CollectionConverters._
+    entries.values().asScala.count(_.sc eq sc)
   }
 
   private def ensureHooks(sc: SparkContext): Unit = {

@@ -7,6 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every operator in graft takes `(SparkSession, sfDir)` and pulls its
   * inputs through here so the scan always goes through the DataFrame
   * reader (predicate/projection pushdown, vectorized parquet).
+  *
+  * Schema memo: parquet schema inference reads footers in a Spark job,
+  * so [[apply]] infers a table's schema once per (session, path,
+  * [[versionStamp]], parquet inference confs) and hands it to the reader
+  * afterwards — a repeated read starts no job. Rewriting the table
+  * changes its stamp and so misses the memo; entries are held by
+  * [[SessionCaches]] and evicted with the rest of the session's entries
+  * when its SparkContext stops. `events` keeps its own path.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -14,8 +22,20 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") events(spark, dir) else {
+      val path = s"$dir/$name.parquet"
+      val confs = InferenceConfs.map(spark.conf.getOption(_).orNull).mkString(",")
+      val schema = SessionCaches.memo(spark,
+          s"schema ${versionStamp(spark, dir, name)} $confs", path) {
+        spark.read.parquet(path).schema
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+
+  // session confs the inferred parquet schema depends on
+  private val InferenceConfs = Seq("spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
 
   /** Fan a narrow projection out to full core parallelism before
     * CPU-heavy per-row work (shingling, hashing, tokenization). On a

@@ -1593,29 +1593,39 @@ object Dedup {
   }
 
   /** [[annotatedVariants]] with the variant reduced to its hash at
-    * generation time: (bucket hash, packed deletion script). Saves
-    * ~2 substring + 1 UTF8 conversion per variant — at d=2 that is
-    * O(len²) string allocations per name gone from the hot map stage.
+    * generation time: `f(bucket hash, packed deletion script)` per
+    * variant, in [[annotatedVariants]]' order. No substring, UTF8
+    * conversion or tuple per variant — at d=2 that is O(len²)
+    * allocations per name gone from both FastSS arms' hot loop.
     */
-  private[graft] def variantHashes(n: String, d: Int): Iterator[(Long, Long)] = {
+  private[graft] def variantHashes(n: String, d: Int)(f: (Long, Long) => Unit): Unit = {
     require(n.length <= 4095,
       s"fastss fuzzy matching supports names up to 4095 code units, got ${n.length}")
-    val self = Iterator((skipCharHash(n, -1, -1), 0L))
-    val depth1 = if (d < 1) Iterator.empty else
-      (0 until n.length).iterator.map { p =>
-        (skipCharHash(n, p, -1),
-          (1L << 56) | (p.toLong << 44) | (n.charAt(p).toLong << 28))
+    f(skipCharHash(n, -1, -1), 0L)
+    var p1 = 0
+    while (d >= 1 && p1 < n.length) {
+      f(skipCharHash(n, p1, -1),
+        (1L << 56) | (p1.toLong << 44) | (n.charAt(p1).toLong << 28))
+      p1 += 1
+    }
+    p1 = 0
+    while (d >= 2 && p1 < n.length) {
+      var p2 = p1 + 1
+      while (p2 < n.length) {
+        f(skipCharHash(n, p1, p2),
+          (2L << 56) | (p1.toLong << 44) | (n.charAt(p1).toLong << 28) |
+            ((p2 - 1).toLong << 16) | n.charAt(p2).toLong)
+        p2 += 1
       }
-    val depth2 = if (d < 2) Iterator.empty else
-      (0 until n.length).iterator.flatMap { p1 =>
-        (p1 + 1 until n.length).iterator.map { p2 =>
-          (skipCharHash(n, p1, p2),
-            (2L << 56) | (p1.toLong << 44) | (n.charAt(p1).toLong << 28) |
-              ((p2 - 1).toLong << 16) | n.charAt(p2).toLong)
-        }
-      }
-    self ++ depth1 ++ depth2
+      p1 += 1
+    }
   }
+
+  /** How many entries [[variantHashes]] emits for a name of `len`
+    * UTF-16 units: Σ C(len, k) for k ≤ d.
+    */
+  private def variantCount(len: Int, d: Int): Long =
+    1L + (if (d >= 1) len else 0) + (if (d >= 2) len.toLong * (len - 1) / 2 else 0L)
 
   /** Exact edit distance witnessed by one shared variant, or -1 when
     * this witness defers to a shallower one. Two names a, b meeting at
@@ -1665,6 +1675,45 @@ object Dedup {
     ka + kb - m
   }
 
+  /** One witness bucket's pairs, for both FastSS arms: the first `n`
+    * entries `(nid(i), meta(i))` are ordered by (nid, meta) through
+    * `ord` (scratch of length ≥ n; the caller's arrays stay put), then
+    * `emit(p, q, dist)` gets every entry pair p before q of distinct
+    * ids whose [[witnessDist]] lies in 1..d, as positions in the
+    * caller's arrays. An `emit` returning false stops the bucket, and
+    * the call returns false. A bucket is at most the `collect_capped`
+    * cap, so the insertion sort is no costlier than the pair loop.
+    */
+  private[graft] def emitBucket(nid: Array[Long], meta: Array[Long], n: Int,
+      d: Int, ord: Array[Int])(emit: (Int, Int, Int) => Boolean): Boolean = {
+    var i = 0
+    while (i < n) {
+      val x = i
+      var j = i
+      while (j > 0 && (nid(ord(j - 1)) > nid(x) ||
+          (nid(ord(j - 1)) == nid(x) && meta(ord(j - 1)) > meta(x)))) {
+        ord(j) = ord(j - 1); j -= 1
+      }
+      ord(j) = x
+      i += 1
+    }
+    i = 0
+    while (i < n) {
+      val p = ord(i)
+      var j = i + 1
+      while (j < n) {
+        val q = ord(j)
+        if (nid(p) != nid(q)) { // multi-witness entries of one name skip themselves
+          val dist = witnessDist(meta(p), meta(q))
+          if (dist >= 1 && dist <= d && !emit(p, q, dist)) return false
+        }
+        j += 1
+      }
+      i += 1
+    }
+    true
+  }
+
   /** (ida, idb, dist) pairs for [[q73]]/[[q76]] — FastSS (Bocek et
     * al. '07) with the deletion scripts carried next to each variant,
     * so the per-witness logic of [[witnessDist]] computes the EXACT
@@ -1700,7 +1749,11 @@ object Dedup {
     import spark.implicits._
     nameDim.select(col("name"), col("nid"))
       .as[(String, Long)]
-      .flatMap { case (n, id) => variantHashes(n, d).map { case (vh, meta) => (vh, id, meta) } }
+      .flatMap { case (n, id) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+        variantHashes(n, d)((vh, meta) => out += ((vh, id, meta)))
+        out.iterator
+      }
       .toDF("vh", "nid", "meta")
       .select(col("vh"),
         struct(col("nid").as("_1"), col("meta").as("_2")).as("e"))
@@ -1723,34 +1776,27 @@ object Dedup {
     import spark.implicits._
     index.as[Seq[(Long, Long)]]
       .flatMap { members =>
-        val arr = members.toArray
-        java.util.Arrays.sort(arr, Ordering.by((x: (Long, Long)) => x))
+        val n = members.length
+        val nid = new Array[Long](n)
+        val meta = new Array[Long](n)
+        var k = 0
+        members.foreach { case (id, m) => nid(k) = id; meta(k) = m; k += 1 }
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-        var i = 0
-        while (i < arr.length) {
-          val (ia, ma) = arr(i)
-          var j = i + 1
-          while (j < arr.length) {
-            val (ib, mb) = arr(j)
-            if (ia != ib) { // multi-witness entries of one name skip themselves
-              val dist = witnessDist(ma, mb)
-              if (dist >= 1 && dist <= d) out += ((ia, ib, dist))
-            }
-            j += 1
-          }
-          i += 1
+        emitBucket(nid, meta, n, d, new Array[Int](n)) { (p, q, dist) =>
+          out += ((nid(p), nid(q), dist)); true
         }
         out.iterator
       }
       .toDF("ida", "idb", "dist")
   }
 
-  /** The distinct customer names [[q73]]/[[q76]] match, keyed by
-    * `nid = xxhash64(name)` — the dim every FastSS stage reads.
+  /** The distinct non-null customer names [[q73]]/[[q76]] match, keyed
+    * by `nid = xxhash64(name)` — the dim every FastSS stage reads.
     */
   private[graft] def nameDim(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    Tables.spread(Tables(spark, dir, "customer").select(col("c_name")))
+    Tables.spread(Tables(spark, dir, "customer").select(col("c_name"))
+        .filter(col("c_name").isNotNull))
       .distinct()
       .select(col("c_name").as("name"), xxhash64(col("c_name")).as("nid"))
   }
@@ -1763,36 +1809,231 @@ object Dedup {
       d: Int, dfCap: Int): DataFrame =
     fastssPairs(nameDim(spark, dir), d, dfCap).select(col("ida"), col("idb"))
 
-  /** Shared FastSS matcher at edit distance ≤ d — [[fastssPairs]]
-    * with the (nid → name) dim joined back once per pair side; the
-    * witness-computed distance IS the levenshtein distance (see
-    * [[witnessDist]]), so no verification pass runs.
+  /** Byte budget of [[q73]]/[[q76]]'s driver arm ([[fuzzyLocal]]); the
+    * arm also stays within `spark.driver.maxResultSize` and a quarter
+    * of the driver heap. Sized on a crossover probe (4 vCPU, local[4],
+    * each arm end to end into a noop sink, warm, 3–5 runs):
+    *
+    * {{{
+    *   query  sf     names   working set  driver arm   distributed arm
+    *   q76    0.001    150       1.5 MB   0.13–0.16 s  0.54–0.77 s
+    *   q76    0.01   1 500      18.5 MB   0.26–0.38 s  1.30–2.44 s
+    *   q73    0.1   15 000      22.7 MB   0.33–0.42 s  1.73–2.00 s
+    *   q76    0.1   15 000       237 MB   2.76–3.72 s  9.29–11.31 s
+    * }}}
+    *
+    * On 4 cores the driver arm wins at every size measured, but only
+    * the distributed arm's kernel scales with cores: on 8 or 32 it
+    * should win at q76 sf0.1's size (not measured here), so the budget
+    * stays well below 237 MB and `graft.Bench` at sf0.1 still runs
+    * distributed q76.
     */
-  private def fuzzyMatch(spark: SparkSession, dir: String, d: Int,
-      dfCap: Int): DataFrame = {
-    // barrier: the name dim feeds the variant flatMap AND both pair
-    // rejoin sides — one scan+distinct, not three (round 14)
-    val names = nameDim(spark, dir).localCheckpoint()
-    fastssPairs(names, d, dfCap)
-      .join(names.select(col("nid").as("ida"), col("name").as("na")), "ida")
-      .join(names.select(col("nid").as("idb"), col("name").as("nb")), "idb")
-      // id order is hash order — re-canonicalize pairs lexicographically
-      .select(least(col("na"), col("nb")).as("name_a"),
-        greatest(col("na"), col("nb")).as("name_b"),
-        col("dist").cast("long").as("dist"))
-      .orderBy(col("name_a"), col("name_b"))
+  val FuzzyLocalMaxBytes: Long = 64L << 20
+
+  // the driver arm's working-set charges in bytes: a collected name
+  // row (3 × its UTF-8 bytes come on top: the row's copy and the
+  // UTF-16 string), a deletion variant (hash, script, owner, group
+  // slot, bucket offset and member) and an emitted witness pair (a
+  // packed long, its builder's doubling slack and the sorted copy)
+  private val NameRowBytes = 128L
+  private val VariantBytes = 48L
+  private val PairBytes = 24L
+
+  /** FastSS's answer computed on the driver: the distinct names in
+    * Spark's binary string order, so a name's index is its rank, the
+    * pairs as packed `lo << 33 | hi << 2 | dist` longs over those
+    * ranks, ascending — `(name_a, name_b)` order, each pair once at its
+    * minimal distance — and the working-set bytes the arm ran in.
+    */
+  private[graft] final case class FuzzyLocal(names: Array[String],
+      pairs: Array[Long], bytes: Long)
+
+  /** The driver arm of [[fuzzyMatch]], or None when its working set
+    * does not fit `localMaxBytes` (capped by `spark.driver.maxResultSize`
+    * and a quarter of the heap). One `limit` job collects at most N+1
+    * raw names, N = budget / [[NameRowBytes]], since more rows cannot
+    * fit. The names' bytes and their Σ(1 + L + C(L,2)) variants are
+    * charged before any variant is built, the emitted pairs as they are
+    * emitted, so a refused arm never holds more than the budget.
+    */
+  private[graft] def fuzzyLocal(spark: SparkSession, dir: String, d: Int,
+      dfCap: Int, localMaxBytes: Long): Option[FuzzyLocal] = {
+    val maxResult = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val budget = Seq(localMaxBytes, if (maxResult > 0) maxResult else Long.MaxValue,
+      Runtime.getRuntime.maxMemory / 4).min
+    val maxRows = math.min(budget / NameRowBytes, Int.MaxValue - 1L).toInt
+    if (maxRows == 0) return None // budget 0: the distributed arm, no probe job
+    val rows =Tables(spark, dir, "customer").select(col("c_name"))
+      .filter(col("c_name").isNotNull)
+      .select(col("c_name"), xxhash64(col("c_name")))
+      .limit(maxRows + 1)
+      .queryExecution.executedPlan.executeCollect()
+    if (rows.length > maxRows) return None
+    var bytes = 0L
+    val byName = rows.map { r =>
+      bytes += NameRowBytes + 3L * r.getUTF8String(0).numBytes
+      (r.getUTF8String(0), r.getLong(1))
+    }.sortWith((a, b) => a._1.binaryCompare(b._1) < 0)
+    val ranked = byName.indices.filter(i => i == 0 || byName(i)._1 != byName(i - 1)._1)
+    val names = ranked.map(i => byName(i)._1.toString).toArray
+    val nid = ranked.map(i => byName(i)._2).toArray
+    var nV = 0L
+    names.foreach(n => nV += variantCount(n.length, d))
+    bytes += nV * VariantBytes
+    if (bytes > budget || nV > (1 << 29)) return None
+    fastssLocal(names, nid, nV.toInt, d, dfCap, (budget - bytes) / PairBytes)
+      .map { case (pairs, emitted) => FuzzyLocal(names, pairs, bytes + emitted * PairBytes) }
   }
 
+  /** [[fastssPairs]]' stages on the driver over primitive arrays, with
+    * its rules: variants grouped by hash (open addressing; a hash's
+    * first entry names its bucket), a bucket of more than `dfCap`
+    * entries dropped as `collect_capped` tombstones it, every other
+    * bucket through [[emitBucket]], and the per-pair `min` as a sort
+    * of the packed pairs keeping each pair's first. `names` are
+    * distinct and in rank order, `nid` their ids, `nV` their variant
+    * count. Returns the pairs ([[FuzzyLocal]]'s form) and how many
+    * witness pairs were emitted, or None once that passes `maxPairs`.
+    */
+  private def fastssLocal(names: Array[String], nid: Array[Long], nV: Int,
+      d: Int, dfCap: Int, maxPairs: Long): Option[(Array[Long], Long)] = {
+    val vh = new Array[Long](nV)
+    val meta = new Array[Long](nV)
+    val owner = new Array[Int](nV)
+    var e = 0
+    var i = 0
+    while (i < names.length) {
+      val o = i
+      variantHashes(names(i), d) { (h, m) => vh(e) = h; meta(e) = m; owner(e) = o; e += 1 }
+      i += 1
+    }
+    val mask = (Integer.highestOneBit(math.max(2 * nV - 1, 1)) << 1) - 1
+    val slot = Array.fill(mask + 1)(-1)
+    val rep = new Array[Int](nV)
+    e = 0
+    while (e < nV) {
+      var s = (vh(e) ^ (vh(e) >>> 32)).toInt & mask
+      while (slot(s) >= 0 && vh(slot(s)) != vh(e)) s = (s + 1) & mask
+      if (slot(s) < 0) slot(s) = e
+      rep(e) = slot(s)
+      e += 1
+    }
+    // counting sort by bucket: afterwards bucket r is
+    // members(off(r - 1) until off(r)), with off(-1) read as 0
+    val off = new Array[Int](nV + 1)
+    e = 0
+    while (e < nV) { off(rep(e) + 1) += 1; e += 1 }
+    var r = 0
+    while (r < nV) { off(r + 1) += off(r); r += 1 }
+    val members = new Array[Int](nV)
+    e = 0
+    while (e < nV) { members(off(rep(e))) = e; off(rep(e)) += 1; e += 1 }
+    var maxB = 0
+    r = 0
+    while (r < nV) {
+      val s = off(r) - (if (r == 0) 0 else off(r - 1))
+      if (s <= dfCap) maxB = math.max(maxB, s)
+      r += 1
+    }
+    val bn = new Array[Long](maxB)
+    val bm = new Array[Long](maxB)
+    val bo = new Array[Int](maxB)
+    val ord = new Array[Int](maxB)
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    var emitted = 0L
+    var within = true
+    r = 0
+    while (within && r < nV) {
+      val lo = if (r == 0) 0 else off(r - 1)
+      val s = off(r) - lo
+      if (s >= 2 && s <= dfCap) {
+        var k = 0
+        while (k < s) {
+          val m = members(lo + k)
+          bn(k) = nid(owner(m)); bm(k) = meta(m); bo(k) = owner(m)
+          k += 1
+        }
+        within = emitBucket(bn, bm, s, d, ord) { (p, q, dist) =>
+          val a = math.min(bo(p), bo(q)).toLong
+          val b = math.max(bo(p), bo(q)).toLong
+          out += (a << 33 | b << 2 | dist)
+          emitted += 1
+          emitted <= maxPairs
+        }
+      }
+      r += 1
+    }
+    if (!within) return None
+    val ps = out.result()
+    java.util.Arrays.sort(ps)
+    var u = 0
+    var k = 0
+    while (k < ps.length) {
+      if (u == 0 || (ps(k) >>> 2) != (ps(u - 1) >>> 2)) { ps(u) = ps(k); u += 1 }
+      k += 1
+    }
+    Some((java.util.Arrays.copyOf(ps, u), emitted))
+  }
+
+  /** The driver arm's rows, returned the way [[Graph]]'s adjacency
+    * merge returns its triangles: names and packed pairs broadcast
+    * once, one `range` stage decodes them. Ranges are contiguous and
+    * the pairs ascend, so rows leave in `(name_a, name_b)` order with
+    * no sort.
+    */
+  private def fuzzyRows(spark: SparkSession, l: FuzzyLocal): DataFrame = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast((l.names, l.pairs))
+    spark.range(0L, l.pairs.length.toLong, 1L, spark.sparkContext.defaultParallelism)
+      .as[Long]
+      .mapPartitions { ks =>
+        val (names, pairs) = bc.value
+        ks.map { k =>
+          val p = pairs(k.toInt)
+          (names((p >>> 33).toInt), names(((p >>> 2) & 0x7FFFFFFFL).toInt), p & 3L)
+        }
+      }
+      .toDF("name_a", "name_b", "dist")
+  }
+
+  /** Shared FastSS matcher at edit distance ≤ d. One dispatch: the
+    * driver arm ([[fuzzyLocal]]) when its working set fits
+    * `localMaxBytes`, else [[fastssPairs]] with the (nid → name) dim
+    * joined back once per pair side. Either way the witness-computed
+    * distance IS the levenshtein distance (see [[witnessDist]]), so no
+    * verification pass runs.
+    */
+  private def fuzzyMatch(spark: SparkSession, dir: String, d: Int,
+      dfCap: Int, localMaxBytes: Long): DataFrame =
+    fuzzyLocal(spark, dir, d, dfCap, localMaxBytes) match {
+      case Some(l) => fuzzyRows(spark, l)
+      case None =>
+        // barrier: the name dim feeds the variant flatMap AND both pair
+        // rejoin sides — one scan+distinct, not three (round 14)
+        val names = nameDim(spark, dir).localCheckpoint()
+        fastssPairs(names, d, dfCap)
+          .join(names.select(col("nid").as("ida"), col("name").as("na")), "ida")
+          .join(names.select(col("nid").as("idb"), col("name").as("nb")), "idb")
+          // id order is hash order — re-canonicalize pairs lexicographically
+          .select(least(col("na"), col("nb")).as("name_a"),
+            greatest(col("na"), col("nb")).as("name_b"),
+            col("dist").cast("long").as("dist"))
+          .orderBy(col("name_a"), col("name_b"))
+    }
+
   def q73(spark: SparkSession, dir: String,
-      dfCap: Int = DefaultDfCap): DataFrame =
-    fuzzyMatch(spark, dir, d = 1, dfCap)
+      dfCap: Int = DefaultDfCap,
+      localMaxBytes: Long = FuzzyLocalMaxBytes): DataFrame =
+    fuzzyMatch(spark, dir, d = 1, dfCap, localMaxBytes)
 
   /** q76: [[q73]] at edit distance ≤ 2 — two-deletion neighborhoods,
-    * same narrow-shuffle machinery, same brute-force DuckDB oracle.
+    * same dispatch and arms, same brute-force DuckDB oracle.
     */
   def q76(spark: SparkSession, dir: String,
-      dfCap: Int = DefaultDfCap): DataFrame =
-    fuzzyMatch(spark, dir, d = 2, dfCap)
+      dfCap: Int = DefaultDfCap,
+      localMaxBytes: Long = FuzzyLocalMaxBytes): DataFrame =
+    fuzzyMatch(spark, dir, d = 2, dfCap, localMaxBytes)
 
   val q73Sql: String =
     """WITH n AS (SELECT DISTINCT c_name AS name FROM customer)

@@ -452,8 +452,11 @@ class DedupSpec extends SparkSpec {
       "ααβγ", "abcdeg", "xabcdef")
     val byString = sample.flatMap(n =>
       Dedup.annotatedVariants(n, 2).map { case (v, meta) => (n, meta) -> v })
-    val byHash = sample.flatMap(n =>
-      Dedup.variantHashes(n, 2).map { case (h, meta) => (n, meta) -> h })
+    val byHash = sample.flatMap { n =>
+      val vs = Seq.newBuilder[((String, Long), Long)]
+      Dedup.variantHashes(n, 2)((h, meta) => vs += ((n, meta) -> h))
+      vs.result()
+    }
     assert(byString.map(_._1) === byHash.map(_._1),
       "generators disagree on (name, script) enumeration")
     val v2h = byString.map(_._2).zip(byHash.map(_._2))
@@ -513,6 +516,58 @@ class DedupSpec extends SparkSpec {
       info(f"df-cap=$cap%d recall vs uncapped: " +
         f"${capped.size}/${uncapped.size} = ${capped.size.toDouble / uncapped.size}%.2f")
     }
+  }
+
+  test("fuzzy-match arms agree: the driver arm and budget 0's distributed arm give equal " +
+      "rows for q73 and q76, at sf and on a planted set, at every cap") {
+    import spark.implicits._
+    // planted: exact duplicate rows, names of length 0 and 1, a null
+    // name (both arms skip it, as the oracle's levenshtein does), a
+    // dense one-letter-apart cluster that small caps tombstone, and
+    // "Ａb" / "😀b", whose UTF-16 order (U+D83D < U+FF21) is the
+    // reverse of their UTF-8 byte order (0xEF < 0xF0)
+    val names = Seq("", "", "a", "b", "ab", "abc", "abc", "abd", "abcd", "abed",
+      "aaaa", "aaab", "aaba", "abaa", "baaa", "aabb", "bbaa", "xb",
+      "\uFF21b", "\uD83D\uDE00b", "zzzzzz", null)
+    val planted = java.nio.file.Files.createTempDirectory("graft_fuzzy_arms").toString
+    names.toDF("c_name").write.parquet(s"$planted/customer.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Long)] =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    for {
+      dir <- Seq(sf, planted)
+      cap <- Seq(2, 5, 20, Dedup.DefaultDfCap, Int.MaxValue)
+      (q, run) <- Seq[(String, (Int, Long) => org.apache.spark.sql.DataFrame)](
+        "q73" -> ((c, b) => Dedup.q73(spark, dir, c, b)),
+        "q76" -> ((c, b) => Dedup.q76(spark, dir, c, b)))
+    } {
+      val driver = rows(run(cap, Dedup.FuzzyLocalMaxBytes))
+      val distributed = rows(run(cap, 0L))
+      assert(driver === distributed, s"$q at cap $cap on $dir: arms disagree")
+    }
+    assert("\uD83D\uDE00b".compareTo("\uFF21b") < 0, "the planted pair no longer splits the orders")
+    val q76 = rows(Dedup.q76(spark, planted))
+    assert(q76.contains(("\uFF21b", "\uD83D\uDE00b", 2L)),
+      s"name_a/name_b must follow Spark's binary order: $q76")
+    assert(q76.contains(("", "a", 1L)) && q76.contains(("", "ab", 2L)), q76)
+  }
+
+  test("fuzzy-match dispatch: just above the byte budget the plan holds the variant exchange; " +
+      "at or below it, no exchange at all") {
+    import org.apache.spark.sql.execution.SerializeFromObjectExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val w = Dedup.fuzzyLocal(spark, sf, 2, Dedup.DefaultDfCap, Long.MaxValue).get.bytes
+    def exchanges(budget: Long) = {
+      val plan = Dedup.q76(spark, sf, localMaxBytes = budget).queryExecution.executedPlan
+      val all = plan.collect { case e: ShuffleExchangeExec => e }
+      (all.size, all.count(_.child.find(_.isInstanceOf[SerializeFromObjectExec]).isDefined))
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(exchanges(w) === ((0, 0)), s"at the working set ($w B) the driver arm must run")
+      assert(exchanges(w + 1) === ((0, 0)))
+      val (_, variant) = exchanges(w - 1)
+      assert(variant >= 1, s"one byte under the working set ($w B) the variant exchange must run")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("q99 SemDeDup verdicts equal a driver-side greedy recomputation per cell") {

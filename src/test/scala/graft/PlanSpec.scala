@@ -89,8 +89,10 @@ class PlanSpec extends SparkSpec {
   test("q73: fuzzy match is candidate-driven — no nested-loop or cartesian join") {
     // the whole point of FastSS is replacing the oracle's O(n²) cross
     // join; a BroadcastNestedLoopJoin/CartesianProduct anywhere means
-    // the plan regressed to all-pairs
-    val p = plan(graft.operators.Dedup.q73(spark, sf))
+    // the plan regressed to all-pairs. Budget 0 runs the distributed
+    // arm: the driver arm's plan is one range stage and would pass
+    // whatever the distributed arm did
+    val p = plan(graft.operators.Dedup.q73(spark, sf, localMaxBytes = 0L))
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
   }

@@ -235,6 +235,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
   }
 
+  test("both FastSS arms emit pairs through one function: witnessDist( is called only in emitBucket") {
+    // the driver arm and the distributed emission stage share one
+    // per-bucket sort and witness loop; a second caller is a copy
+    val sites = allCode.flatMap { case (p, text) =>
+      "(?<!def )\\bwitnessDist\\(".r.findAllMatchIn(text).map { m =>
+        val enclosing = "def (\\w+)".r.findAllMatchIn(text.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption
+        s"${p.getFileName}:${enclosing.getOrElse("?")}"
+      }
+    }
+    assert(sites === Seq("Dedup.scala:emitBucket"), s"witnessDist( called at ${sites.mkString(", ")}")
+  }
+
   test("streaming/DocStreams.scala holds no copy of a batch operator's per-document kernel") {
     // the trained-model applies (tokenize, perplexity, RAG, quality
     // filter, lang-id) run on a stream as their batch functions; a
